@@ -324,8 +324,9 @@ object SparkEntry {
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity),2) AS sum_qty,
-        | round(sum(l_extendedprice),2) AS sum_base_price,
-        | round(sum(l_extendedprice*(1.0-l_discount)),2) AS sum_disc_price,
+        | round(sum(CAST(l_extendedprice AS DECIMAL(15,2))),2)::DOUBLE AS sum_base_price,
+        | round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+        |   *(1-CAST(l_discount AS DECIMAL(15,2)))),2)::DOUBLE AS sum_disc_price,
         | round(avg(l_quantity),4) AS avg_qty,
         | round(avg(l_discount),6) AS avg_disc,
         | count(*) AS count_order

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
  */
 object Relational {
 
+  /** Money as whole cents in a Long (cents x discount percent is money in
+    * 1e-4 units): the exact sum rounds a half-cent group sum the same in
+    * every order, unlike a double sum, at the double sum's cost. */
+  private def cents(c: Column): Column = floor(c * 100 + 0.5)
+
   /** Grouped multi-aggregate with a pushed-down date filter (TPC-H Q1 shape). */
   def q1PricingSummary(spark: SparkSession, dir: String): DataFrame = {
     Tables.lineitem(spark, dir)
@@ -24,8 +29,9 @@ object Relational {
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
+        (sum(cents(col("l_extendedprice"))) / 100).as("sum_base_price"),
+        round(sum(cents(col("l_extendedprice")) * (lit(100) - cents(col("l_discount"))))
+          .cast("decimal(38,0)") / 10000, 2).cast("double").as("sum_disc_price"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         round(avg(col("l_discount")), 6).as("avg_disc"),
         count(lit(1)).as("count_order"))

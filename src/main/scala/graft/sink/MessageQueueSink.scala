@@ -176,6 +176,7 @@ object MessageQueueSink {
         val queueId = org.apache.spark.TaskContext.getPartitionId()
         val spills = scala.collection.mutable.Map.empty[String, java.io.BufferedWriter]
         val paths = scala.collection.mutable.Map.empty[String, java.nio.file.Path]
+        val lines = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
         rows.foreach { row =>
           val asMap = fieldNames.zip(row.toSeq).toMap
           val topic = selector.getTopic(asMap)
@@ -189,6 +190,7 @@ object MessageQueueSink {
               p.toFile, java.nio.charset.StandardCharsets.UTF_8))
           })
           w.write(TopicLog.renderLine(m)); w.newLine()
+          lines(topic) += 1L
         }
         val out = paths.keys.toSeq.sorted.flatMap { topic =>
           spills(topic).close()
@@ -205,7 +207,7 @@ object MessageQueueSink {
               EpochLedger.truncateQueue(rootDir, topic, queueId, cb)
               val spillBytes = java.nio.file.Files.size(p)
               TopicLog.appendRendered(rootDir, topic, queueId, p)
-              Some((topic, queueId, cl + countLines(p), cb + spillBytes))
+              Some((topic, queueId, cl + lines(topic), cb + spillBytes))
             }
           java.nio.file.Files.deleteIfExists(p)
           res
@@ -240,21 +242,6 @@ object MessageQueueSink {
   private def anyLedger(rootDir: String): Boolean =
     graft.source.TopicLog.listTopics(rootDir).exists(t =>
       java.nio.file.Files.exists(graft.source.EpochLedger.file(rootDir, t)))
-
-  private def countLines(p: java.nio.file.Path): Long = {
-    val in = new java.io.FileInputStream(p.toFile)
-    try {
-      val buf = new Array[Byte](64 * 1024)
-      var lines = 0L
-      var n = in.read(buf)
-      while (n > 0) {
-        var i = 0
-        while (i < n) { if (buf(i) == '\n') lines += 1; i += 1 }
-        n = in.read(buf)
-      }
-      lines
-    } finally in.close()
-  }
 
   private def commitsFile(rootDir: String): java.nio.file.Path =
     java.nio.file.Paths.get(rootDir, "_committed_batches")

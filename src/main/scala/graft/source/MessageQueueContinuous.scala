@@ -1,44 +1,10 @@
 package graft.source
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.read.InputPartition
-import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, ContinuousStream, Offset, PartitionOffset}
+import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReaderFactory, ContinuousStream, Offset, PartitionOffset}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.GraftOptions
-
-/**
- * Column-pruned Message→InternalRow projection shared by the micro-batch
- * and continuous readers: one extractor per REQUIRED column only.
- */
-class QueueRowProjector(topic: String, queueId: Int, requiredSchema: StructType)
-    extends Serializable {
-  private val extractors: Array[(Long, Message) => Any] =
-    requiredSchema.fieldNames.map {
-      case "topic" => (_: Long, _: Message) => UTF8String.fromString(topic)
-      case "queue_id" => (_: Long, _: Message) => queueId
-      case "offset" => (o: Long, _: Message) => o
-      case "born_ts" => (_: Long, m: Message) => m.bornTs * 1000L // millis → micros
-      case "msg_key" => (_: Long, m: Message) => UTF8String.fromString(m.key)
-      case "tag" => (_: Long, m: Message) => UTF8String.fromString(m.tag)
-      case "properties" => (_: Long, m: Message) => {
-        val keys = new Array[Any](m.properties.size)
-        val vals = new Array[Any](m.properties.size)
-        var i = 0
-        m.properties.foreach { case (k, v) =>
-          keys(i) = UTF8String.fromString(k); vals(i) = UTF8String.fromString(v); i += 1
-        }
-        ArrayBasedMapData(keys, vals)
-      }
-      case "body" => (_: Long, m: Message) => UTF8String.fromString(m.body)
-      case other => throw new IllegalArgumentException(s"unknown column: $other")
-    }
-
-  def toRow(offset: Long, m: Message): InternalRow =
-    InternalRow.fromSeq(extractors.map(_(offset, m)).toIndexedSeq)
-}
 
 /** Continuous-mode position of one queue reader: the NEXT offset to read. */
 final case class QueuePartitionOffset(queueId: Int, offset: Long) extends PartitionOffset
@@ -110,8 +76,7 @@ class MessageQueueContinuousStream(opts: GraftOptions,
   }
 
   override def createContinuousReaderFactory(): ContinuousPartitionReaderFactory =
-    new ContinuousQueueReaderFactory(opts.rootDir, opts.tag, opts.propertyFilter,
-      requiredSchema, opts.continuousPollMs)
+    new QueueReaderFactory(opts, requiredSchema)
 
   override def needsReconfiguration(): Boolean = listQueues() != plannedQueues
 
@@ -130,69 +95,26 @@ class MessageQueueContinuousStream(opts: GraftOptions,
   override def stop(): Unit = ()
 }
 
-class ContinuousQueueReaderFactory(rootDir: String, tag: String,
-    propertyFilter: Map[String, String], requiredSchema: StructType, pollMs: Long)
-    extends ContinuousPartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : ContinuousPartitionReader[InternalRow] = {
-    val split = partition.asInstanceOf[ContinuousQueueSplit]
-    new ContinuousQueueReader(rootDir, tag, propertyFilter, requiredSchema, split, pollMs)
-  }
-}
-
 /**
- * Long-running tail reader for one queue: `next()` BLOCKS until a record is
- * available, re-polling the log's max offset every `pollMs` while drained —
- * the reference's poll loop re-expressed as a DSv2 continuous reader. The
- * engine runs this on a dedicated thread and interrupts it at query stop;
- * the InterruptedException from the poll sleep is the intended shutdown
- * path. Filtered-out messages (tag/property selector) still advance the
- * position, exactly like the micro-batch reader's offset accounting.
+ * Long-running tail reader for one queue: the bounded reader with a stop
+ * line that follows the log. `next()` BLOCKS until a record is available,
+ * re-polling the log's max offset every `continuousPollMs` while drained
+ * (the reference's poll loop as a DSv2 continuous reader); the cursor
+ * holds its position across polls, so a poll reads only what was appended
+ * since. The engine interrupts this thread at query stop; the
+ * InterruptedException from the poll sleep is the intended shutdown path.
  */
-class ContinuousQueueReader(rootDir: String, tagFilter: String,
-    propertyFilter: Map[String, String], requiredSchema: StructType,
-    split: ContinuousQueueSplit, pollMs: Long)
-    extends ContinuousPartitionReader[InternalRow] {
-
-  private val acceptedTags: Set[String] =
-    if (tagFilter == null || tagFilter == "*" || tagFilter.isEmpty) null
-    else tagFilter.split("\\|\\|").map(_.trim).toSet
-
-  private val projector = new QueueRowProjector(split.topic, split.queueId, requiredSchema)
-
-  private var nextOffset: Long = split.startOffset
-  private var chunk: TopicLog.RangeIterator = null
-  private var current: InternalRow = _
+class ContinuousQueueReader(opts: GraftOptions, requiredSchema: StructType,
+    split: ContinuousQueueSplit)
+    extends QueuePartitionReader(opts, requiredSchema, split.topic, split.queueId,
+      split.startOffset, split.startOffset) {
 
   override def next(): Boolean = {
-    while (true) {
-      if (chunk != null && chunk.hasNext) {
-        val (offset, m) = chunk.next()
-        nextOffset = offset + 1
-        val tagOk = acceptedTags == null || acceptedTags.contains(m.tag)
-        val propsOk = propertyFilter.isEmpty ||
-          propertyFilter.forall { case (k, v) => m.properties.get(k).contains(v) }
-        if (tagOk && propsOk) {
-          current = projector.toRow(offset, m)
-          return true
-        }
-      } else {
-        if (chunk != null) { chunk.close(); chunk = null }
-        val max = TopicLog.maxOffset(rootDir, split.topic, split.queueId)
-        if (max > nextOffset)
-          chunk = TopicLog.readRange(rootDir, split.topic, split.queueId, nextOffset, max)
-        else Thread.sleep(pollMs) // throws InterruptedException at query stop
-      }
+    while (!super.next()) {
+      val max = TopicLog.maxOffset(opts.rootDir, split.topic, split.queueId)
+      if (!cursor.extendTo(max))
+        Thread.sleep(opts.continuousPollMs) // throws InterruptedException at query stop
     }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = current
-
-  override def getOffset: PartitionOffset =
-    QueuePartitionOffset(split.queueId, nextOffset)
-
-  override def close(): Unit = {
-    if (chunk != null) { chunk.close(); chunk = null }
+    true
   }
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, MicroBatchStream, Offset, PartitionOffset, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -217,67 +218,95 @@ class MessageQueueBatch(opts: GraftOptions,
     MessageQueueSource.resolveSplits(opts, batchDefaultEarliest = true).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new QueueReaderFactory(opts.rootDir, opts.tag, opts.propertyFilter, requiredSchema)
+    new QueueReaderFactory(opts, requiredSchema)
 }
 
-class QueueReaderFactory(rootDir: String, tag: String,
-    propertyFilter: Map[String, String] = Map.empty,
-    requiredSchema: StructType = MessageQueueTable.Schema) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new QueuePartitionReader(rootDir, tag, propertyFilter, requiredSchema,
-      partition.asInstanceOf[QueueSplit])
+/** One reader factory for every read mode: a [[QueueSplit]] (batch and
+  * micro-batch) gets a bounded reader, a [[ContinuousQueueSplit]] a
+  * tailing one. */
+class QueueReaderFactory(opts: GraftOptions, requiredSchema: StructType)
+    extends ContinuousPartitionReaderFactory {
+  override def createReader(partition: InputPartition): ContinuousPartitionReader[InternalRow] =
+    partition match {
+      case s: QueueSplit =>
+        new QueuePartitionReader(opts, requiredSchema, s.topic, s.queueId,
+          s.startingOffset, s.stoppingOffset)
+      case s: ContinuousQueueSplit =>
+        new ContinuousQueueReader(opts, requiredSchema, s)
+    }
 }
 
 /**
- * Reads one queue's offset range into rows; tag filtering happens here so
- * non-matching messages never leave the scan (reference reader poll loop:
- * source/reader/RocketMQPartitionSplitReader.java:90-180).
+ * Reads one queue's offset range [start, stop) into rows. Lines before
+ * `start` are skipped by bytes, never decoded. The one message selector
+ * of every read mode lives here: the accepted tag set and the
+ * equality-conjunction property filter (the reference consumer's tag and
+ * SQL92 property selectors, reference: example/PropertyFilterExamples.java:33)
+ * drop non-matching messages before a row is built (reference reader poll
+ * loop: source/reader/RocketMQPartitionSplitReader.java:90-180), and every
+ * message read is counted in the `graft_*` read metrics. Its position, the
+ * next offset to read, is what the continuous subclass reports.
  */
-class QueuePartitionReader(rootDir: String, tagFilter: String,
-    propertyFilter: Map[String, String], requiredSchema: StructType, split: QueueSplit)
-    extends PartitionReader[InternalRow] {
+class QueuePartitionReader(opts: GraftOptions, requiredSchema: StructType,
+    topic: String, queueId: Int, start: Long, stop: Long)
+    extends ContinuousPartitionReader[InternalRow] {
 
+  protected val cursor =
+    new TopicLog.LineCursor(TopicLog.queueFile(opts.rootDir, topic, queueId), start, stop)
   private val acceptedTags: Set[String] =
-    if (tagFilter == null || tagFilter == "*" || tagFilter.isEmpty) null
-    else tagFilter.split("\\|\\|").map(_.trim).toSet
-
-  private val iter = TopicLog.readRange(
-    rootDir, split.topic, split.queueId, split.startingOffset, split.stoppingOffset)
+    if (opts.tag == null || opts.tag == "*" || opts.tag.isEmpty) null
+    else opts.tag.split("\\|\\|").map(_.trim).toSet
+  // column pruning: one extractor per REQUIRED column only
+  private val extractors: Array[(Long, Message) => Any] =
+    requiredSchema.fieldNames.map {
+      case "topic" => (_: Long, _: Message) => UTF8String.fromString(topic)
+      case "queue_id" => (_: Long, _: Message) => queueId
+      case "offset" => (o: Long, _: Message) => o
+      case "born_ts" => (_: Long, m: Message) => m.bornTs * 1000L // millis → micros
+      case "msg_key" => (_: Long, m: Message) => UTF8String.fromString(m.key)
+      case "tag" => (_: Long, m: Message) => UTF8String.fromString(m.tag)
+      case "properties" => (_: Long, m: Message) => {
+        val keys = new Array[Any](m.properties.size)
+        val vals = new Array[Any](m.properties.size)
+        var i = 0
+        m.properties.foreach { case (k, v) =>
+          keys(i) = UTF8String.fromString(k); vals(i) = UTF8String.fromString(v); i += 1
+        }
+        ArrayBasedMapData(keys, vals)
+      }
+      case "body" => (_: Long, m: Message) => UTF8String.fromString(m.body)
+      case other => throw new IllegalArgumentException(s"unknown column: $other")
+    }
   private var current: InternalRow = _
   private var messagesRead = 0L
   private var messagesFiltered = 0L
   private var bytesRead = 0L
 
   override def next(): Boolean = {
-    while (iter.hasNext) {
-      val (offset, m) = iter.next()
-      val tagOk = acceptedTags == null || acceptedTags.contains(m.tag)
-      // equality-conjunction property selector, applied before the row is
-      // materialized (reference: example/PropertyFilterExamples.java:33)
-      val propsOk = propertyFilter.isEmpty ||
-        propertyFilter.forall { case (k, v) => m.properties.get(k).contains(v) }
+    while (cursor.advance()) {
+      val m = cursor.message()
       bytesRead += Metrics.utf8Length(m.body)
-      if (tagOk && propsOk) {
+      if ((acceptedTags == null || acceptedTags.contains(m.tag)) &&
+          opts.propertyFilter.forall { case (k, v) => m.properties.get(k).contains(v) }) {
         messagesRead += 1
-        current = toRow(offset, m)
+        current = InternalRow.fromSeq(extractors.map(_(cursor.offset, m)).toIndexedSeq)
         return true
       } else messagesFiltered += 1
     }
     false
   }
 
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+  override def get(): InternalRow = current
+
+  override def getOffset: PartitionOffset =
+    QueuePartitionOffset(queueId, math.max(cursor.next, start))
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
     Array(Metrics.Value(Metrics.MessagesRead, messagesRead),
       Metrics.Value(Metrics.MessagesFiltered, messagesFiltered),
       Metrics.Value(Metrics.BytesRead, bytesRead))
 
-  // column-pruned projection, shared with the continuous reader
-  private val projector = new QueueRowProjector(split.topic, split.queueId, requiredSchema)
-  private def toRow(offset: Long, m: Message): InternalRow = projector.toRow(offset, m)
-
-  override def get(): InternalRow = current
-  override def close(): Unit = iter.close()
+  override def close(): Unit = cursor.close()
 }
 
 /** Micro-batch offsets: queueId → next offset to read, JSON-encoded. */
@@ -418,7 +447,7 @@ class MessageQueueMicroBatchStream(opts: GraftOptions,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new QueueReaderFactory(opts.rootDir, opts.tag, opts.propertyFilter, requiredSchema)
+    new QueueReaderFactory(opts, requiredSchema)
 
   /** Persist the group's progress so external tooling sees lag, mirroring
     * the reference's commit-on-checkpoint-complete

@@ -1,8 +1,10 @@
 package graft.source
 
-import java.io.{BufferedReader, BufferedWriter, File, FileReader, FileWriter}
+import java.io.{BufferedWriter, File, FileWriter}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Paths, StandardOpenOption}
 
 /** One message in the file-backed queue log: the graft stand-in for a broker
   * message (bornTs/key/tag/properties/body — the same fields the reference's
@@ -164,9 +166,9 @@ object TopicLog {
   /** Earliest available offset (our logs never truncate). */
   def minOffset(root: String, topic: String, queueId: Int): Long = 0L
 
-  /** (bytes counted up to the last seen newline, complete lines seen).
-    * Keyed by absolute path; append-only logs only ever grow, so a cached
-    * prefix stays valid and each maxOffset() call scans just the appended
+  /** (complete lines, bytes up to the last newline) already counted per
+    * log, keyed by absolute path. Append-only logs only ever grow, so a
+    * cached prefix stays valid and each call scans just the appended
     * suffix. Without this, every streaming latestOffset() tick re-read the
     * whole log — linear per tick, quadratic over a stream's lifetime. */
   private val lineCountCache =
@@ -182,115 +184,166 @@ object TopicLog {
     * exactly-once reader boundary). Otherwise it is the count of COMPLETE
     * (newline-terminated) lines — a partial tail from a concurrent append
     * is not yet readable. */
-  def maxOffset(root: String, topic: String, queueId: Int): Long = {
+  def maxOffset(root: String, topic: String, queueId: Int): Long =
     EpochLedger.read(root, topic) match {
-      case Some(state) => return state.committed(queueId)._1
-      case None =>
+      case Some(state) => state.committed(queueId)._1
+      case None => sizeInfo(root, topic, queueId)._1
     }
-    val file = queueFile(root, topic, queueId)
-    if (!file.exists()) return 0L
-    val key = file.getAbsolutePath
-    val fileLen = file.length()
-    val (countedBytes, cachedLines) = lineCountCache.getOrDefault(key, (0L, 0L))
-    // a shorter file means the log was deleted and recreated — rescan
-    val (from, base) = if (fileLen < countedBytes) (0L, 0L) else (countedBytes, cachedLines)
-    if (fileLen == from) return base
-    val in = new java.io.FileInputStream(file)
-    try {
-      var skipped = 0L
-      while (skipped < from) skipped += in.skip(from - skipped)
-      val buf = new Array[Byte](64 * 1024)
-      var lines = base
-      var pos = from
-      var lastNl = from
-      var n = in.read(buf)
-      while (n > 0) {
-        var i = 0
-        while (i < n) {
-          if (buf(i) == '\n') { lines += 1; lastNl = pos + i + 1 }
-          i += 1
-        }
-        pos += n
-        n = in.read(buf)
-      }
-      lineCountCache.put(key, (lastNl, lines))
-      lines
-    } finally in.close()
-  }
 
-  /** (complete lines, bytes up to the last newline) of a queue log by full
-    * scan — what the first ledger-managed write uses to ADOPT pre-existing
-    * raw content as committed instead of shadowing it. */
+  /** (complete lines, bytes up to the last newline) of a queue log, from
+    * the cached count plus a scan of the suffix appended since. The raw
+    * branch of [[maxOffset]], and what the first ledger-managed write uses
+    * to ADOPT pre-existing raw content as committed instead of shadowing
+    * it. */
   private[graft] def sizeInfo(root: String, topic: String, queueId: Int): (Long, Long) = {
     val file = queueFile(root, topic, queueId)
-    if (!file.exists()) return (0L, 0L)
-    val in = new java.io.FileInputStream(file)
+    val key = file.getAbsolutePath
+    val cached = lineCountCache.getOrDefault(key, (0L, 0L))
+    val fileLen = file.length()
+    // a shorter file means the log was deleted (or recreated) — rescan
+    val (lines, bytes) = if (fileLen < cached._2) (0L, 0L) else cached
+    if (fileLen == bytes) return (lines, bytes)
+    val c = new LineCursor(file, lines, Long.MaxValue, lines, bytes)
     try {
-      val buf = new Array[Byte](64 * 1024)
-      var lines = 0L
-      var pos = 0L
-      var lastNl = 0L
-      var n = in.read(buf)
-      while (n > 0) {
-        var i = 0
-        while (i < n) {
-          if (buf(i) == '\n') { lines += 1; lastNl = pos + i + 1 }
-          i += 1
-        }
-        pos += n
-        n = in.read(buf)
-      }
-      (lines, lastNl)
-    } finally in.close()
+      while (c.advance()) {}
+      val counted = (c.next, c.nextByte)
+      lineCountCache.put(key, counted)
+      counted
+    } finally c.close()
   }
 
   /** First offset whose bornTs >= ts; maxOffset if none (logs are
-    * time-ordered per queue, like broker commit logs). Capped at
-    * maxOffset: the raw scan sees lines past a ledgered topic's committed
-    * high-water mark (and a torn tail line), and an endTimeMs-bounded read
-    * using this as its stop offset must not expose either. */
+    * time-ordered per queue, like broker commit logs). The scan stops at
+    * maxOffset, so it never reads past a ledgered topic's committed
+    * high-water mark or into a torn tail line, and an endTimeMs-bounded
+    * read using this as its stop offset cannot expose either. */
   def searchOffset(root: String, topic: String, queueId: Int, ts: Long): Long = {
-    val file = queueFile(root, topic, queueId)
-    if (!file.exists()) return 0L
-    val in = new BufferedReader(new FileReader(file, StandardCharsets.UTF_8))
-    val found = try {
-      var offset = 0L
-      var line = in.readLine()
-      var res = -1L
-      while (line != null && res < 0) {
-        if (line.substring(0, line.indexOf('\t')).toLong >= ts) res = offset
-        else { offset += 1; line = in.readLine() }
+    val stop = maxOffset(root, topic, queueId)
+    val c = new LineCursor(queueFile(root, topic, queueId), 0L, stop)
+    try {
+      while (c.advance()) if (c.bornTs() >= ts) return c.offset
+      stop
+    } finally c.close()
+  }
+
+  /** Index of the first '\n' in buf[from, until), or -1: the one newline
+    * scan of every queue-log read. Its own small method so the JIT keeps
+    * it a tight loop: offset checks inside it made a skip several times slower. */
+  private def indexOfNewline(buf: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until) {
+      if (buf(i) == '\n') return i
+      i += 1
+    }
+    -1
+  }
+
+  /** Forward cursor over the complete lines of one queue log, opened at a
+    * known (line, byte) position. Line ends are found in raw bytes and a
+    * line is decoded only when asked ([[bornTs]] or [[message]]), so a
+    * skipped line costs a newline search, not a UTF-8 decode. [[advance]]
+    * yields only lines with `from <= offset < stop` (`stop`: the caller's
+    * ledger mark or complete-line count), never an unterminated tail. A
+    * missing file reads as empty. */
+  private[source] final class LineCursor(file: File, from: Long, private var stop: Long,
+      line: Long = 0L, byte: Long = 0L) extends AutoCloseable {
+    private var ch: FileChannel = null
+    private var buf = new Array[Byte](64 * 1024)
+    private var pos = 0 // start of the next unconsumed line in buf
+    private var lim = 0 // end of the bytes read into buf
+    private var scanned = 0 // buf[pos, scanned) holds no newline
+    private var lineStart = 0
+    private var lineEnd = 0
+
+    private var nextLine = line
+    private var nextPos = byte
+    /** Offset and byte position of the next line to consume. */
+    def next: Long = nextLine
+    def nextByte: Long = nextPos
+
+    /** Offset of the line the last successful [[advance]] yielded. */
+    def offset: Long = nextLine - 1
+
+    /** Move to the next complete line in [from, stop); false when there
+      * is none (yet). Lines below `from` are consumed undecoded. */
+    def advance(): Boolean = {
+      if (from >= stop) return false // empty range: skip nothing
+      while (nextLine < stop) {
+        var nl = indexOfNewline(buf, scanned, lim)
+        while (nl < 0) {
+          scanned = lim
+          if (!fill()) return false
+          nl = indexOfNewline(buf, scanned, lim)
+        }
+        lineStart = pos; lineEnd = nl
+        pos = nl + 1; scanned = pos
+        nextLine += 1; nextPos += pos - lineStart
+        if (nextLine > from) return true
       }
-      if (res < 0) offset else res
-    } finally in.close()
-    math.min(found, maxOffset(root, topic, queueId))
+      false
+    }
+
+    /** Read more of the file after buf(lim), first moving the unconsumed
+      * bytes to the front (and doubling buf when one line fills it);
+      * false at end of file. */
+    private def fill(): Boolean = {
+      if (ch == null) {
+        if (!file.exists()) return false
+        ch = FileChannel.open(file.toPath, StandardOpenOption.READ)
+        ch.position(nextPos)
+      }
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        lim -= pos; scanned -= pos; pos = 0
+      }
+      if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      val n = ch.read(ByteBuffer.wrap(buf, lim, buf.length - lim))
+      if (n > 0) lim += n
+      n > 0
+    }
+
+    /** Raise the stop line to follow a growing log; false if `newStop`
+      * is not past it. Read-ahead past the next line is dropped and
+      * re-read: bytes beyond a ledger mark may have been rewritten by a
+      * repair since they were buffered. */
+    def extendTo(newStop: Long): Boolean = newStop > stop && {
+      stop = newStop
+      lim = pos; scanned = pos
+      if (ch != null) ch.position(nextPos)
+      true
+    }
+
+    /** The bornTs prefix of the current line. */
+    def bornTs(): Long = {
+      var end = lineStart
+      while (end < lineEnd && buf(end) != '\t') end += 1
+      java.lang.Long.parseLong(new String(buf, lineStart, end - lineStart, StandardCharsets.US_ASCII))
+    }
+
+    /** The current line, fully decoded. */
+    def message(): Message =
+      parseLine(new String(buf, lineStart, lineEnd - lineStart, StandardCharsets.UTF_8))
+
+    override def close(): Unit = if (ch != null) { ch.close(); ch = null }
   }
 
   /** Iterator over a queue range that can be closed before exhaustion
-    * (a LIMITed scan stops early; the reader must not leak the handle). */
+    * (a LIMITed scan stops early; the reader must not leak the handle).
+    * Lines before `startOffset` are skipped by bytes; only the range is
+    * decoded. */
   final class RangeIterator(file: File, startOffset: Long, stopOffset: Long)
       extends Iterator[(Long, Message)] with AutoCloseable {
-    private val in =
-      if (!file.exists() || startOffset >= stopOffset) null
-      else new BufferedReader(new FileReader(file, StandardCharsets.UTF_8))
-    private var offset = -1L
-    private var nextLine: String = if (in == null) null else advance()
-
-    private def advance(): String = {
-      var line = in.readLine()
-      offset += 1
-      while (line != null && offset < startOffset) { line = in.readLine(); offset += 1 }
-      if (line == null || offset >= stopOffset) { in.close(); null } else line
-    }
-    override def hasNext: Boolean = nextLine != null
+    private val cursor = new LineCursor(file, startOffset, stopOffset)
+    private def step(): Boolean = cursor.advance() || { cursor.close(); false }
+    private var ready = step()
+    override def hasNext: Boolean = ready
     override def next(): (Long, Message) = {
-      val out = (offset, parseLine(nextLine))
-      nextLine = advance()
+      if (!ready) throw new NoSuchElementException("end of queue range")
+      val out = (cursor.offset, cursor.message())
+      ready = step()
       out
     }
-    override def close(): Unit = {
-      if (in != null && nextLine != null) { in.close(); nextLine = null }
-    }
+    override def close(): Unit = { ready = false; cursor.close() }
   }
 
   /** Read messages with offsets in [startOffset, stopOffset). */

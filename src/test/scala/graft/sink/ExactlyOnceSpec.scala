@@ -143,6 +143,20 @@ class ExactlyOnceSpec extends SparkSpec {
     assert(TopicLog.searchOffset(root, "eo", 0, 0L) === 0L)
   }
 
+  test("a torn fragment past the committed hwm is never searched or read") {
+    val root = Files.createTempDirectory("graft-eo-torn").toString
+    epoch(root, 0, Seq("committed"))
+    // a crashed append left a bare bornTs past the mark: no tab, no newline
+    val out = new java.io.FileOutputStream(TopicLog.queueFile(root, "eo", 0), true)
+    try out.write("1700000000000".getBytes) finally out.close()
+    assert(TopicLog.searchOffset(root, "eo", 0, Long.MaxValue) === 1L)
+    val future = spark.read.format("graft-mq")
+      .option("topic", "eo").option("consumerGroup", "g").option("rootDir", root)
+      .option("startTimeMs", (System.currentTimeMillis() + 86400000L).toString)
+      .load()
+    assert(future.count() === 0L)
+  }
+
   test("ledger publish is atomic and round-trips state") {
     val root = Files.createTempDirectory("graft-eo-led").toString
     val st = EpochLedger.State("query id with spaces", 7L,

@@ -105,4 +105,60 @@ class ContinuousSpec extends SparkSpec {
       assert(got === Set("b-0", "b-2"))
     } finally q.stop()
   }
+
+  test("continuous reader: batch-equal graft_* metrics, and it resumes at its held position") {
+    val root = freshRoot()
+    val topic = "cont3"
+    // tags a/b/c and env prod/dev mixed; the last message is accepted, so
+    // both readers stop right after it
+    def gen(from: Int, until: Int): Seq[Message] = (from until until).map { i =>
+      Message(1000L + i, s"k$i", Seq("a", "b", "c")(i % 3),
+        Map("env" -> (if (i % 4 == 3) "dev" else "prod")), s"body-$i-" + "é" * (i % 5))
+    }
+    TopicLog.append(root, topic, 0, gen(0, 13).iterator)
+    val opts = graft.config.GraftOptions.parse(Map(
+      "topic" -> topic, "consumerGroup" -> "cg3", "rootDir" -> root,
+      "tag" -> "a||b", "propertyFilter" -> "env=prod", "continuousPollMs" -> "5"))
+    def accepted(m: Message) = m.tag != "c" && m.properties("env") == "prod"
+    val schema = MessageQueueTable.Schema
+    def drain(r: org.apache.spark.sql.connector.read.PartitionReader[
+        org.apache.spark.sql.catalyst.InternalRow], n: Int): Seq[(Long, String)] =
+      (0 until n).map { _ =>
+        assert(r.next())
+        val row = r.get()
+        (row.getLong(2), row.getUTF8String(7).toString)
+      }
+    def metrics(r: org.apache.spark.sql.connector.read.PartitionReader[_]): Map[String, Long] =
+      r.currentMetricsValues().map(m => m.name() -> m.value()).toMap
+
+    val first = gen(0, 13).zipWithIndex.collect { case (m, i) if accepted(m) => (i.toLong, m.body) }
+    assert(accepted(gen(0, 13).last))
+    val batch = new MessageQueueBatch(opts, schema).createReaderFactory()
+      .createReader(QueueSplit(topic, MessageQueueSource.Broker, 0, 0, 13))
+    val cont = new MessageQueueContinuousStream(opts, schema).createContinuousReaderFactory()
+      .createReader(ContinuousQueueSplit(topic, 0, 0))
+    // a reader that stops yielding blocks in its poll loop: interrupt it
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    try TimeLimits.failAfter(30.seconds) {
+      assert(drain(batch, first.size) === first)
+      assert(!batch.next())
+      assert(drain(cont, first.size) === first)
+      val expected = metrics(batch)
+      assert(expected(Metrics.MessagesRead) === first.size)
+      assert(expected(Metrics.MessagesFiltered) === 13 - first.size)
+      assert(expected(Metrics.BytesRead) === gen(0, 13).map(m => Metrics.utf8Length(m.body)).sum)
+      assert(metrics(cont) === expected)
+      assert(cont.getOffset === QueuePartitionOffset(0, 13))
+
+      // append between polls: exactly the appended accepted rows, in order
+      TopicLog.append(root, topic, 0, gen(13, 26).iterator)
+      val second = gen(13, 26).zipWithIndex
+        .collect { case (m, i) if accepted(m) => (13L + i, m.body) }
+      assert(drain(cont, second.size) === second)
+      assert(cont.getOffset === QueuePartitionOffset(0, 13 + gen(13, 26).lastIndexWhere(accepted) + 1))
+      assert(metrics(cont)(Metrics.MessagesRead) === first.size + second.size)
+    } finally { batch.close(); cont.close() }
+  }
 }

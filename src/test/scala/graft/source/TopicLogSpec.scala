@@ -107,4 +107,44 @@ class TopicLogSpec extends AnyFunSuite {
     TopicLog.append(root, "t", 0, (1 to 2).map(i => msg(i, "y")).iterator)
     assert(TopicLog.maxOffset(root, "t", 0) === 2)
   }
+
+  test("searchOffset stops at the last complete line of a torn tail") {
+    val root = tmpRoot()
+    TopicLog.append(root, "t", 0, Seq(10L, 20L, 30L).map(ts => msg(ts, "b")).iterator)
+    // a writer died mid-line: a bare bornTs, no tab and no newline
+    val out = new java.io.FileOutputStream(TopicLog.queueFile(root, "t", 0), true)
+    try out.write("1700000000000".getBytes) finally out.close()
+    assert(TopicLog.searchOffset(root, "t", 0, Long.MaxValue) === 3)
+    assert(TopicLog.searchOffset(root, "t", 0, 25) === 2)
+    assert(TopicLog.readRange(root, "t", 0, 0, 100).map(_._1).toSeq === Seq(0L, 1L, 2L))
+  }
+
+  test("lines longer than the read buffer round-trip and are skipped by bytes") {
+    val root = tmpRoot()
+    val big = "x" * (200 * 1024) // several times the cursor's 64 KB buffer
+    val msgs = (0 until 6).map(i => msg(i.toLong, if (i % 2 == 0) big + i else s"small$i"))
+    TopicLog.append(root, "t", 0, msgs.iterator)
+    assert(TopicLog.maxOffset(root, "t", 0) === 6)
+    assert(TopicLog.readRange(root, "t", 0, 0, 6).toSeq ===
+      msgs.zipWithIndex.map { case (m, i) => (i.toLong, m) })
+    assert(TopicLog.readRange(root, "t", 0, 3, 5).toSeq === Seq((3L, msgs(3)), (4L, msgs(4))))
+    assert(TopicLog.searchOffset(root, "t", 0, 5) === 5)
+  }
+
+  test("a cursor following a growing log re-reads what lies past its old stop") {
+    val root = tmpRoot()
+    TopicLog.append(root, "t", 0, Seq(msg(1, "a"), msg(2, "b"), msg(3, "stale")).iterator)
+    val f = TopicLog.queueFile(root, "t", 0)
+    val c = new TopicLog.LineCursor(f, 0L, 2L)
+    try {
+      assert(c.advance() && c.advance() && !c.advance()) // "stale" sits in the read-ahead
+      // a ledger repair cuts the line past the mark and a replay appends another
+      val ch = java.nio.channels.FileChannel.open(f.toPath, java.nio.file.StandardOpenOption.WRITE)
+      try ch.truncate(c.nextByte) finally ch.close()
+      TopicLog.append(root, "t", 0, Iterator(msg(3, "fresh")))
+      assert(c.extendTo(3) && c.advance())
+      assert((c.offset, c.message().body) === ((2L, "fresh")))
+      assert(!c.extendTo(3))
+    } finally c.close()
+  }
 }
