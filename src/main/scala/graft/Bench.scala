@@ -29,20 +29,22 @@ object Bench {
       taskMillis += s.stageInfo.taskMetrics.executorRunTime
   }
 
-  def main(args: Array[String]): Unit = {
+  // SPARK_GRAFT_BENCH_FORCE_DISTRIBUTED=1: every size-adaptive fast path
+  // reports ineligible (graft.util.FastPaths), so this run measures the
+  // DISTRIBUTED plans — the 100 TB path — on the same data. Results land
+  // in *_distributed sidecars, never clobbering the default board.
+  def main(args: Array[String]): Unit =
+    graft.util.FastPaths.forcedIf(
+      sys.env.get("SPARK_GRAFT_BENCH_FORCE_DISTRIBUTED").contains("1"))(bench())
+
+  private def bench(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     // timings measure the operators, not the correctness harness — the
     // approximate entries skip their eager recall-assertion jobs under bench
     sys.props("graft.bench") = "1"
-    // SPARK_GRAFT_BENCH_FORCE_DISTRIBUTED=1: every size-adaptive fast path
-    // reports ineligible (graft.util.FastPaths), so this run measures the
-    // DISTRIBUTED plans — the 100 TB path — on the same data. Results land
-    // in *_distributed sidecars, never clobbering the default board.
-    val forceDistributed =
-      sys.env.get("SPARK_GRAFT_BENCH_FORCE_DISTRIBUTED").contains("1")
-    if (forceDistributed) sys.props("graft.force.distributed") = "1"
+    val forceDistributed = graft.util.FastPaths.forceDistributed
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -33,7 +33,10 @@ object MemLane {
   val Keys: Seq[String] = (ScaleCheck.ForcedDistributedKeys.map(_._1) ++
     Seq("heavy_hitters", "dedup_simhash", "corpus_clean")).distinct
 
-  def main(args: Array[String]): Unit = {
+  // the 100 TB plans, no fast paths
+  def main(args: Array[String]): Unit = graft.util.FastPaths.forced(memLane())
+
+  private def memLane(): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_MEM_DIR", "testdata-gen/sf1")
     // SPARK_GRAFT_MEM_KEYS=a,b,c runs a subset (the engaged-escalation
     // point lane — round 18: the sf1 full lane runs where the table law is
@@ -62,7 +65,6 @@ object MemLane {
     require(partitions.toIntOption.exists(_ > 0),
       s"SPARK_GRAFT_MEM_PARTITIONS must be a positive integer, got '$partitions'")
     sys.props("graft.bench") = "1" // measure the operators, not the eager gates
-    sys.props("graft.force.distributed") = "1" // the 100 TB plans, no fast paths
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", partitions)

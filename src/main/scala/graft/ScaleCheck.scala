@@ -239,8 +239,8 @@ object ScaleCheck {
   }
 
   /** The growth-lane keys whose DEFAULT plan flips at the broadcast
-    * probe-index byte ceiling ([[graft.operators.Dedup.probeIndexEstBytes]]
-    * vs the 256 MB [[graft.operators.Dedup.DefaultProbeIndexMaxBytes]]):
+    * probe-index gate ([[graft.util.FastPaths.probeIndex]], 256 MB
+    * [[graft.util.FastPaths.ProbeIndexBytes]]):
     * under it the corpus dedups through one fused broadcast-index stage,
     * above it through the banded equi-join. Both plans are linear, but a
     * growth step whose SMALL side is under the ceiling and BIG side above
@@ -256,14 +256,16 @@ object ScaleCheck {
   val ProbeIndexFlipKeys: Set[String] =
     Set("dedup_minhash", "dedup_minhash_keep", "dedup_minhash_best", "ngram_jaccard")
 
-  /** Whether the probe-index fast path is eligible (census under the byte
-    * ceiling) for the documents corpus at `dir` — the same census the
-    * operators run (bands 16 × hashes 64, live rows only). */
+  /** Whether the probe-index fast path is eligible for the documents
+    * corpus at `dir` — the operators' own gate (byte ceiling, integral and
+    * unique ids) over the same census (bands 16 × hashes 64, live rows
+    * only). */
   def probeIndexEligible(spark: SparkSession, dir: String): Boolean = {
     import org.apache.spark.sql.functions.col
-    graft.operators.Dedup.probeIndexEstBytes(
-      spark.read.parquet(s"$dir/documents.parquet").filter(col("text").isNotNull)
-    ) <= graft.operators.Dedup.DefaultProbeIndexMaxBytes
+    graft.util.FastPaths.probeIndex("scalecheck.probe_index",
+        spark.read.parquet(s"$dir/documents.parquet").filter(col("text").isNotNull),
+        "text", "doc_id", graft.operators.Dedup.probeIndexBytesFor(_, _, 16, 64))(())
+      .isDefined
   }
 
   /** Run `keys` at both SFs and report growth. Small SF runs first and also
@@ -292,12 +294,11 @@ object ScaleCheck {
         s"$table does not grow from $small to $big (ratio $ratio) — " +
           "pick SFs with a real data step or the growth check is vacuous")
       val flip = stepFlips && ProbeIndexFlipKeys(k)
-      if (flip) sys.props("graft.force.distributed") = "1"
-      val (ts, tb) = try {
+      val (ts, tb) = graft.util.FastPaths.forcedIf(flip) {
         val ts = time(spark, k, small, iters)
         println(f"[scale] $k $small ${ts}%.1fs; running $big ...")
         (ts, time(spark, k, big, iters))
-      } finally if (flip) sys.props.remove("graft.force.distributed")
+      }
       val (ls, lb) = live.getOrElse(table, (cs, cb))
       val r = Result(k, ts, tb, tb / ts, ratio * escalationFactor(k, ls, lb) * SlackFactor,
         diagnosis = if (flip) Some("plan_flip: probe-index census crosses the 256MB " +
@@ -451,8 +452,7 @@ object ScaleCheck {
     // group the SKEW lane runs FIRST — same end-of-run-inflation reason
     // that hoisted the default skew lane to the top of main (round 17's
     // skew_forced/ngram_jaccard 4.84× did not reproduce isolated: 0.97×).
-    sys.props("graft.force.distributed") = "1"
-    val (forced, secondForced, thirdForced, skewForced, thirdBanded) = try {
+    val (forced, secondForced, thirdForced, skewForced, thirdBanded) = graft.util.FastPaths.forced {
       val sf = checkSkew(spark, lane(SkewKeys).filter(k =>
         ForcedDistributedKeys.map(_._1).contains(k._1)))
       // BANDED third decade (round 18): the two disk-excluded LSH pair
@@ -483,7 +483,7 @@ object ScaleCheck {
           case _ => Seq.empty
         },
         sf, banded)
-    } finally sys.props.remove("graft.force.distributed")
+    }
     val skewDir = sys.env.get("SPARK_GRAFT_SCALE_SKEW")
     val skewBase = sys.env.get("SPARK_GRAFT_SCALE_SKEW_BASE")
     val secondJson = big2.map(b2 =>

@@ -4,17 +4,19 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
+  // SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED=1: same switch as Bench's — every
+  // size-adaptive fast path reports ineligible (graft.util.FastPaths), so
+  // the dump exercises the DISTRIBUTED plans and the DuckDB compare gates
+  // the 100 TB path, not just the under-ceiling one.
+  def main(args: Array[String]): Unit =
+    graft.util.FastPaths.forcedIf(
+      sys.env.get("SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED").contains("1"))(verify(args))
+
+  private def verify(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED=1: same switch as Bench's —
-    // every size-adaptive fast path reports ineligible (graft.util
-    // .FastPaths), so the dump exercises the DISTRIBUTED plans and the
-    // DuckDB compare gates the 100 TB path, not just the under-ceiling one.
-    if (sys.env.get("SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED").contains("1")) {
-      sys.props("graft.force.distributed") = "1"
+    if (graft.util.FastPaths.forceDistributed)
       println("[verify] forced-distributed: every size-adaptive fast path ineligible")
-    }
     // SPARK_GRAFT_VERIFY_NO_GATES=1: skip the eager APPROXIMATION-QUALITY
     // gates (recall / keep-agreement floors, calibrated at the correctness
     // SFs) while keeping the oracle dump itself — used to hash-verify the

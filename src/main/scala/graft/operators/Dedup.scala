@@ -314,8 +314,7 @@ object Dedup {
   def ngramJaccard(
       docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 4, threshold: Double = 0.5,
-      numHashes: Int = 64, numBands: Int = -1, seed: Long = 42L,
-      probeIndexMaxBytes: Long = DefaultProbeIndexMaxBytes): DataFrame = {
+      numHashes: Int = 64, numBands: Int = -1, seed: Long = 42L): DataFrame = {
     val b = if (numBands > 0) numBands else bandsForThreshold(threshold)
     // a NULL text is an absent document: it can never pair. The distributed
     // plan drops it naturally (null join keys / exploded null bands never
@@ -328,40 +327,20 @@ object Dedup {
     // → four wide attach joins) dwarfs the corpus; under the ceiling the
     // whole (bands, sigs, shingles) index broadcasts and every pair is
     // proposed AND verified inside one narrow probe stage — bit-identical
-    // output (suite-pinned equality against the join plan below). The corpus
-    // re-spreads across cores first: a ceiling-sized corpus often arrives in
-    // one parquet split, which would serialize every kernel pass
-    // eligibility also requires an integral id (the index is keyed by
-    // primitive Long; see [[HistoryProbeIndex]]) — and the probe-path ids
-    // cast back to the input id type below, so plan selection never
-    // changes the result schema. The ceiling decision runs the census ONCE
-    // (one aggregate job at call time — this operator is no longer a fully
-    // lazy builder when the fast path is enabled) and the index build
-    // reuses that answer instead of re-scanning the spread frame.
+    // output (suite-pinned equality against the join plan below). The gated
+    // builder ([[buildHistoryProbeIndexFused]]) runs the census ONCE (one
+    // aggregate job at call time — this operator is no longer a fully lazy
+    // builder when the fast path is enabled) and builds the index in one
+    // collect; the probe-path ids cast back to the input id type, so plan
+    // selection never changes the result schema.
     val idDt = docs.schema(idCol).dataType
-    val effMaxBytes = graft.util.FastPaths.ceiling(probeIndexMaxBytes)
-    // census = (rows, chars, distinct ids): one agg gates the byte ceiling
-    // AND the unique-id precondition — duplicate ids fall through to the
-    // banded join plan, which tolerates them (lane-parity, not corruption)
-    lazy val (cnDocs, cnChars, cnIds) = probeIndexCensus(livedocs, textCol, idCol)
-    if (effMaxBytes > 0 && graft.util.IdTypes.integral(idDt) &&
-        probeIndexBytesFor(cnDocs, cnChars, b, numHashes) <= effMaxBytes &&
-        cnIds == cnDocs) {
-      val sc = docs.sparkSession.sparkContext
-      // no checkpoint (round 21): the index collect is the ONLY consumer of
-      // the spread scan now — the probe stage below runs off the collected
-      // index itself instead of re-scanning (id, text)
-      val spread = graft.util.Spread.ifNarrow(livedocs.select(col(idCol), col(textCol)))
-      // fused ONE-collect index build (round 20): the previous shape paid a
-      // signature checkpoint plus three sequential collects for per-row-
-      // derivable values — four driver job rounds collapsed into one
-      val idx = collectProbeIndexFused(
-        spread, textCol, idCol, b, numHashes, shingleN, seed)
-      val bc = sc.broadcast(idx)
-      return selfPairsFromIndex(docs.sparkSession, bc, threshold)
-        .select(col("doc_a").cast(idDt).as("doc_a"),
-          col("doc_b").cast(idDt).as("doc_b"), col("jaccard"))
-    }
+    buildHistoryProbeIndexFused(livedocs, textCol, idCol, b, numHashes, shingleN, seed)
+      .foreach { idx =>
+        val bc = docs.sparkSession.sparkContext.broadcast(idx)
+        return selfPairsFromIndex(docs.sparkSession, bc, threshold)
+          .select(col("doc_a").cast(idDt).as("doc_a"),
+            col("doc_b").cast(idDt).as("doc_b"), col("jaccard"))
+      }
     // Materialize.cut, not cache(): each call would otherwise pin a plan in
     // the session CacheManager forever (never unpersisted — a lazy
     // DataFrame-returning operator has no afterwards to unpersist in);
@@ -442,48 +421,28 @@ object Dedup {
   def crossNearDups(newDocs: DataFrame, oldDocs: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 4, threshold: Double = 0.7,
-      numHashes: Int = 64, numBands: Int = 16, seed: Long = 42L,
-      probeIndexMaxBytes: Long = DefaultProbeIndexMaxBytes): DataFrame = {
+      numHashes: Int = 64, numBands: Int = 16, seed: Long = 42L): DataFrame = {
     // null text = absent document on BOTH sides (see ngramJaccard): the
     // probe kernel indexes collected arrays, so filter before either lane
     val liveNew = newDocs.filter(col(textCol).isNotNull)
     val liveOld = oldDocs.filter(col(textCol).isNotNull)
-    // broadcast-ceiling fast path, same contract as [[ngramJaccard]]'s: the
-    // history side indexes once and the batch probes it in one narrow stage
-    // (both sides re-spread — ceiling-bounded corpora often arrive in one
-    // parquet split, serializing every kernel pass)
-    // same eligibility + census-once + output-cast contract as
-    // [[ngramJaccard]]'s fast path; both id columns must be integral (the
-    // index and the probe kernel are keyed by primitive Long)
+    // broadcast-ceiling fast path, same gated builder as [[ngramJaccard]]'s:
+    // the history side indexes once and the batch probes it in one narrow
+    // stage. Both id columns must be integral (the index and the probe
+    // kernel are keyed by primitive Long); the builder checks the history
+    // side, the batch side is checked here.
     val newDt = newDocs.schema(idCol).dataType
     val oldDt = oldDocs.schema(idCol).dataType
-    val effMaxBytes = graft.util.FastPaths.ceiling(probeIndexMaxBytes)
-    // history-side census gates bytes AND unique ids in one agg — duplicate
-    // old_ids fall through to the signature-join plan (tolerates them)
-    lazy val (cnDocs, cnChars, cnIds) = probeIndexCensus(liveOld, textCol, idCol)
-    if (effMaxBytes > 0 && graft.util.IdTypes.integral(newDt) &&
-        graft.util.IdTypes.integral(oldDt) &&
-        probeIndexBytesFor(cnDocs, cnChars, numBands, numHashes) <= effMaxBytes &&
-        cnIds == cnDocs) {
-      val sc = oldDocs.sparkSession.sparkContext
-      // fused ONE-collect index build (round 21 — the [[ngramJaccard]] fast
-      // path's round-20 shape, applied to the cross/history side): the
-      // previous chain paid an eager spread checkpoint, an eager signature
-      // checkpoint, and TWO sequential collects (sigs+bands, then shingles)
-      // for values that are all pure per-row functions of the history text.
-      // Content is identical by construction (same kernels, same
-      // hash(slice(sig,…)) band formula, same sorted layout — see
-      // [[collectProbeIndexFused]]); no later consumer reads the spread or
-      // the signatures, so nothing needs a checkpoint at all.
-      val spreadOld = graft.util.Spread.ifNarrow(liveOld.select(col(idCol), col(textCol)))
-      val idx = collectProbeIndexFused(
-        spreadOld, textCol, idCol, numBands, numHashes, shingleN, seed)
-      val bc = sc.broadcast(idx)
-      return crossNearDupsWithProbeIndex(liveNew, bc, textCol, idCol, shingleN,
-          threshold, numHashes, numBands, seed, probePartitions = sc.defaultParallelism)
-        .select(col("new_id").cast(newDt).as("new_id"),
-          col("old_id").cast(oldDt).as("old_id"), col("jaccard"))
-    }
+    if (graft.util.IdTypes.integral(newDt))
+      buildHistoryProbeIndexFused(liveOld, textCol, idCol, numBands, numHashes, shingleN, seed)
+        .foreach { idx =>
+          val sc = oldDocs.sparkSession.sparkContext
+          return crossNearDupsWithProbeIndex(liveNew, sc.broadcast(idx), textCol, idCol,
+              shingleN, threshold, numHashes, numBands, seed,
+              probePartitions = sc.defaultParallelism)
+            .select(col("new_id").cast(newDt).as("new_id"),
+              col("old_id").cast(oldDt).as("old_id"), col("jaccard"))
+        }
     val oldSigs = minHashSignatures(liveOld, textCol, idCol, numHashes, shingleN, seed)
       .cutLineage()
     crossNearDupsWithHistorySigs(liveNew, liveOld, oldSigs,
@@ -543,13 +502,6 @@ object Dedup {
         .select(col(idCol).as("old_id"), col("band"), col("band_hash")),
       idCol, numBands, numHashes)
 
-  /** Ceiling (estimated serialized bytes) under which the history side of an
-    * ingestion loop broadcasts as a [[HistoryProbeIndex]] — the same role
-    * `spark.sql.autoBroadcastJoinThreshold` plays for a dim table, sized for
-    * executor memory, not bench convenience. Estimate: ~8 B per shingle
-    * (≈ one per text char) + sig/band overhead per doc. */
-  val DefaultProbeIndexMaxBytes: Long = 256L << 20
-
   /**
    * The broadcast form of a history MinHash index: band buckets, signatures
    * and exact shingle sets as in-memory maps. This is the micro-batch analog
@@ -582,7 +534,7 @@ object Dedup {
     // boxed-key map costs 2–4× the payload in entry objects and boxed
     // longs, so a near-ceiling index could blow a default driver heap that
     // the byte estimate said was safe. With flat long arrays the real heap
-    // tracks [[probeIndexEstBytes]] (8 B per shingle/sig cell + one array
+    // tracks [[probeIndexBytesFor]] (8 B per shingle/sig cell + one array
     // header per doc), and lookups are binary searches — O(log n) with no
     // allocation, cache-friendlier than a hash map's pointer chase.
     def postingsFor(band: Int, bandHash: Int): Array[Long] = {
@@ -607,82 +559,49 @@ object Dedup {
     (band.toLong << 32) | (bandHash.toLong & 0xffffffffL)
 
   /** Collect the history index for [[crossNearDupsWithProbeIndex]], or None
-    * when its estimated size exceeds `maxBytes` (broadcast-join semantics:
-    * past the ceiling, stay on the distributed plan). One narrow agg sizes
-    * it; three bounded collects build it — each a documented census capped
-    * by `maxBytes`, never corpus-scale. */
+    * when the probe-index gate ([[graft.util.FastPaths.probeIndex]]: one
+    * census agg for size, integral ids and unique ids) says the history
+    * belongs on the distributed join plan — broadcast-join semantics. The
+    * build is three bounded collects, each capped by the gate's ceiling. */
   def buildHistoryProbeIndex(
       oldDocs: DataFrame, oldSigs: DataFrame, bands: HistoryBands,
-      textCol: String = "text", shingleN: Int = 4,
-      maxBytes: Long = DefaultProbeIndexMaxBytes): Option[HistoryProbeIndex] = {
-    // non-integral ids can't key the primitive-Long index — report
-    // ineligible (the caller stays on the distributed join plan) rather
-    // than collecting nulls that would NPE inside the probe kernel
-    if (!graft.util.IdTypes.integral(oldDocs.schema(bands.idCol).dataType)) return None
-    val effMaxBytes = graft.util.FastPaths.ceiling(maxBytes)
-    if (effMaxBytes <= 0) return None
-    val (nDocs, nChars, nIds) = probeIndexCensus(oldDocs, textCol, bands.idCol)
-    val estBytes = probeIndexBytesFor(nDocs, nChars, bands.numBands, bands.numHashes)
-    // duplicate ids are INELIGIBLE, not silently corrupting: the index is a
-    // sorted primitive-Long layout where binarySearch would attach
-    // sigs/shingles to an arbitrary twin — wrong pairs, no error. The
-    // distributed join plan tolerates duplicates, so the caller falls
-    // through to it and both lanes keep one answer contract.
-    if (estBytes > effMaxBytes || nIds != nDocs) None
-    else Some(collectProbeIndex(oldDocs, oldSigs, bands, textCol, shingleN))
-  }
+      textCol: String = "text", shingleN: Int = 4): Option[HistoryProbeIndex] =
+    graft.util.FastPaths.probeIndex("dedup.probe_index", oldDocs, textCol, bands.idCol,
+        probeIndexBytesFor(_, _, bands.numBands, bands.numHashes)) {
+      collectProbeIndex(oldDocs, oldSigs, bands, textCol, shingleN)
+    }
 
   /** [[buildHistoryProbeIndex]] with the fused ONE-collect build (round 21):
-    * same gates (byte ceiling, integral id, unique ids — one census agg),
-    * then [[collectProbeIndexFused]] computes signatures, shingles and band
-    * hashes in a single projection + collect where the signature-frame form
-    * pays an extra signature materialization and two sequential collects.
-    * For callers that derive the signatures themselves with these exact
-    * params; a caller holding custom-seed signatures stays on
-    * [[buildHistoryProbeIndex]]. Content identical by construction (same
-    * kernels, same hash(slice(sig,…)) band formula, same sorted layout). */
+    * same gate, then [[collectProbeIndexFused]] computes signatures,
+    * shingles and band hashes in a single projection + collect where the
+    * signature-frame form pays an extra signature materialization and two
+    * sequential collects. The census runs on `oldDocs` as given; the build
+    * re-spreads it across cores first ([[graft.util.Spread.ifNarrow]] — a
+    * ceiling-sized corpus often arrives in one parquet split, which would
+    * serialize every kernel pass). For callers that derive the signatures
+    * themselves with these exact params; a caller holding custom-seed
+    * signatures stays on [[buildHistoryProbeIndex]]. Content identical by
+    * construction (same kernels, same hash(slice(sig,…)) band formula, same
+    * sorted layout). */
   def buildHistoryProbeIndexFused(
       oldDocs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       numBands: Int = 16, numHashes: Int = 64, shingleN: Int = 4,
-      seed: Long = 42L,
-      maxBytes: Long = DefaultProbeIndexMaxBytes): Option[HistoryProbeIndex] = {
-    if (!graft.util.IdTypes.integral(oldDocs.schema(idCol).dataType)) return None
-    val effMaxBytes = graft.util.FastPaths.ceiling(maxBytes)
-    if (effMaxBytes <= 0) return None
-    val (nDocs, nChars, nIds) = probeIndexCensus(oldDocs, textCol, idCol)
-    val estBytes = probeIndexBytesFor(nDocs, nChars, numBands, numHashes)
-    if (estBytes > effMaxBytes || nIds != nDocs) None
-    else Some(collectProbeIndexFused(
-      oldDocs, textCol, idCol, numBands, numHashes, shingleN, seed))
-  }
+      seed: Long = 42L): Option[HistoryProbeIndex] =
+    graft.util.FastPaths.probeIndex("dedup.probe_index", oldDocs, textCol, idCol,
+        probeIndexBytesFor(_, _, numBands, numHashes)) {
+      collectProbeIndexFused(
+        graft.util.Spread.ifNarrow(oldDocs.select(col(idCol), col(textCol))),
+        textCol, idCol, numBands, numHashes, shingleN, seed)
+    }
 
-  /** Estimated in-memory bytes of the [[HistoryProbeIndex]] over `docs` —
-    * the broadcast-ceiling gate, one cheap census agg. */
-  def probeIndexEstBytes(docs: DataFrame, textCol: String = "text",
-      numBands: Int = 16, numHashes: Int = 64): Long = {
-    import docs.sparkSession.implicits._
-    val (nDocs, nChars) = docs
-      .agg(count(lit(1)), coalesce(sum(length(col(textCol))), lit(0L)))
-      .as[(Long, Long)].head()
-    probeIndexBytesFor(nDocs, nChars, numBands, numHashes)
-  }
-
-  private def probeIndexBytesFor(nDocs: Long, nChars: Long,
+  /** Estimated in-memory bytes of a [[HistoryProbeIndex]] over `nDocs`
+    * documents of `nChars` text chars in total: ~8 B per shingle (≈ one per
+    * text char) + sig/band overhead per doc. */
+  private[graft] def probeIndexBytesFor(nDocs: Long, nChars: Long,
       numBands: Int, numHashes: Int): Long =
     // 28 B/band/doc: 24 for the (bandKey, id) posting layout + 4 for the
     // per-doc band-hash row the self-pair probe reads (round 21)
     8L * nChars + (8L * numHashes + 28L * numBands + 64L) * nDocs
-
-  /** ONE census agg serving both probe-index gates: (rows, chars, distinct
-    * ids). Sizes the index and checks the unique-id precondition in the
-    * same job — the precondition is enforced, not just documented. */
-  private def probeIndexCensus(docs: DataFrame, textCol: String,
-      idCol: String): (Long, Long, Long) = {
-    import docs.sparkSession.implicits._
-    docs.agg(count(lit(1)), coalesce(sum(length(col(textCol))), lit(0L)),
-        count_distinct(col(idCol)))
-      .as[(Long, Long, Long)].head()
-  }
 
   private def collectProbeIndex(
       oldDocs: DataFrame, oldSigs: DataFrame, bands: HistoryBands,
@@ -708,8 +627,8 @@ object Dedup {
           hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*).as("_3"))
       .as[(Long, Array[Long], Array[Int])].collect().sortBy(_._1)
     val ids = sigPairs.map(_._1)
-    // the unique-id precondition is gate-checked upstream (probeIndexCensus
-    // at every eligibility site); this adjacent scan over the already-sorted
+    // the unique-id precondition is gate-checked upstream (the census of
+    // [[graft.util.FastPaths.probeIndex]]); this adjacent scan over the already-sorted
     // collected ids is the zero-cost fail-fast against a direct caller —
     // duplicates would make every binarySearch attach data to an arbitrary
     // twin: wrong pairs, no error
@@ -1330,57 +1249,53 @@ object Dedup {
    * lineage. Returns (doc_id, cluster_id = smallest reachable id) for
    * every doc that appears in a pair.
    *
-   * Below `smallGraphEdges` the whole pair graph collects to the driver
-   * and union-find computes the same fixpoint in one pass (see the plan
-   * note in the body); pass 0 to force the distributed loop.
+   * Under [[graft.util.FastPaths.GraphEdges]] the whole pair graph
+   * collects to the driver and union-find computes the same fixpoint in one
+   * pass (see [[graphPlan]]).
    */
-  /** Edge-count ceiling for [[nearDupClusters]]' driver fast path: 1M edges
-    * is ~16 MB of id pairs — comfortably a "small side" by Spark's own
-    * broadcast standards, and union-find closes it in milliseconds. */
-  val DefaultSmallGraphEdges: Long = 1000000L
+  def nearDupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    graphPlan("dedup.clusters", pairs, "doc_a", "doc_b", Seq("doc_id", "cluster_id"))(
+      smallGraphClusters(pairs.sparkSession, _),
+      distributedNearDupClusters(_, maxIter))
 
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 20,
-      smallGraphEdges: Long = DefaultSmallGraphEdges): DataFrame = {
-    // size-based plan selection, the connected-components analog of a
-    // broadcast join: a VERIFIED near-dup pair graph is duplicate-density-
-    // sized — orders of magnitude smaller than the corpus that produced it
-    // — and below the ceiling the one bounded collect is strictly cheaper
-    // than even a single distributed iteration (each of which is a
-    // multi-job round trip; the full loop runs O(log diameter) of them).
-    // The collected edges feed union-find on the driver, which computes the
-    // IDENTICAL min-id fixpoint (suite-pinned against the distributed
-    // path). The driver kernel indexes by primitive Long, so eligibility
-    // additionally requires an integral id type (string/decimal ids run
-    // the type-agnostic distributed loop), and the output ids cast back to
-    // the INPUT id type — plan selection never changes the result schema.
-    // The edge pipeline (often LSH + verify) checkpoints ONCE and serves
-    // the ceiling probe, the fast-path collect AND the distributed loop's
-    // edge table; the probe itself is a count over the checkpointed id
-    // pairs — no bytes haul to the driver on the fall-through path.
-    val idDt = pairs.schema("doc_a").dataType
-    val effEdges = graft.util.FastPaths.ceiling(smallGraphEdges)
-    if (effEdges > 0 && graft.util.IdTypes.integral(idDt) &&
-        pairs.schema("doc_b").dataType == idDt) {
-      val p = graft.util.Materialize.cut(
-        pairs.select(col("doc_a").cast("long").as("doc_a"),
-          col("doc_b").cast("long").as("doc_b")))
-      val clustered =
-        if (p.count() <= effEdges)
-          smallGraphClusters(pairs.sparkSession,
-            p.collect().map(r => (r.getLong(0), r.getLong(1))))
-        else distributedNearDupClusters(p, maxIter)
-      return clustered.select(col("doc_id").cast(idDt).as("doc_id"),
-        col("cluster_id").cast(idDt).as("cluster_id"))
-    }
-    // non-integral ids (and the forced-distributed lane) get the same
-    // one-pass materialization the integral branch's probe produced: the
-    // pair pipeline (often LSH + verify) feeds BOTH union branches of the
-    // edge table and would otherwise derive twice. Eager, like the probe.
-    distributedNearDupClusters(graft.util.Materialize.cut(pairs), maxIter)
+  /** The edge gate shared by the driver graph kernels ([[nearDupClusters]],
+    * [[PageRank.pageRank]]) — size-based plan selection, the graph analog
+    * of a broadcast join: a VERIFIED near-dup pair graph (or a kNN edge
+    * list) is orders of magnitude smaller than the corpus that produced it,
+    * and under the edge ceiling one bounded collect is strictly cheaper than
+    * even a single distributed iteration (each a multi-job round trip). The
+    * collected edges feed `driver`, which computes the IDENTICAL fixpoint
+    * (suite-pinned against `distributed`). The driver kernels index by
+    * primitive Long, so eligibility additionally requires integral,
+    * same-typed id columns (others run the type-agnostic `distributed`
+    * plan), and the `idCols` of either plan's output cast back to the INPUT
+    * id type — plan selection never changes the result schema. The edge
+    * pipeline (often LSH + verify, or a kNN graph) checkpoints ONCE, as
+    * (src, dst), and serves the census, the collect AND the distributed
+    * loop's scans; the census is a count over the checkpoint — no edge
+    * bytes haul to the driver on the fall-through path. */
+  private[operators] def graphPlan(site: String, edges: DataFrame, a: String, b: String,
+      idCols: Seq[String])(driver: Array[(Long, Long)] => DataFrame,
+      distributed: DataFrame => DataFrame): DataFrame = {
+    val idDt = edges.schema(a).dataType
+    val out =
+      if (graft.util.IdTypes.integral(idDt) && edges.schema(b).dataType == idDt) {
+        val p = graft.util.Materialize.cut(
+          edges.select(col(a).cast("long").as("src"), col(b).cast("long").as("dst")))
+        import p.sparkSession.implicits._
+        graft.util.FastPaths.collect(site,
+            p.select(col("src").as("_1"), col("dst").as("_2")).as[(Long, Long)],
+            graft.util.FastPaths.GraphEdges, census = p.count())
+          .fold(distributed(p))(driver)
+      } else distributed(graft.util.Materialize.cut(
+        edges.select(col(a).as("src"), col(b).as("dst"))))
+    out.select(out.columns.toIndexedSeq.map(c =>
+      if (idCols.contains(c)) col(c).cast(idDt).as(c) else col(c)): _*)
   }
 
-  /** The pointer-jumping distributed plan of [[nearDupClusters]] — the
-    * 100 TB path, type-agnostic over the pair id columns. */
+  /** The pointer-jumping distributed plan of [[nearDupClusters]] over the
+    * checkpointed (src, dst) pairs — the 100 TB path, type-agnostic over
+    * the id columns. */
   private def distributedNearDupClusters(pairs: DataFrame, maxIter: Int): DataFrame = {
     // Materialize.cut, not cache(): the edge table is read every iteration,
     // but a cache() in an operator that returns before unpersisting pins
@@ -1390,8 +1305,7 @@ object Dedup {
     // the at-scale lane — executor loss must recompute, not fail the query)
     // and localCheckpoint in local mode.
     val edges = graft.util.Materialize.cut(pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+      .union(pairs.select(col("dst").as("src"), col("src").as("dst"))))
     var labels = graft.util.Materialize.cut(
       edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
@@ -1487,9 +1401,8 @@ object Dedup {
 
   /** Keep decision per duplicate-cluster member: keep only the smallest id.
     * (doc_id, cluster_id, keep). Docs in no pair are implicitly kept. */
-  def nearDupKeepDecisions(pairs: DataFrame, maxIter: Int = 20,
-      smallGraphEdges: Long = DefaultSmallGraphEdges): DataFrame =
-    nearDupClusters(pairs, maxIter, smallGraphEdges)
+  def nearDupKeepDecisions(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    nearDupClusters(pairs, maxIter)
       .withColumn("keep", col("doc_id") === col("cluster_id"))
 
   /** Keep/drop verdicts at the confident-duplicate threshold — dropping a

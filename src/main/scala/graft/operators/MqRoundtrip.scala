@@ -637,8 +637,9 @@ object MqRoundtrip {
     // executors ONCE and each micro-batch dedups in a single narrow stage —
     // the broadcast-join regime of an ingestion tick (per-batch cost at
     // bench SFs is otherwise ~1s of pure join planning + exchange rounds).
-    // History re-spreads across cores first: a ceiling-sized history often
-    // arrives in one parquet split, serializing the sign/shingle kernels.
+    // The builder re-spreads history across cores after its census: a
+    // ceiling-sized history often arrives in one parquet split, serializing
+    // the sign/shingle kernels.
     // Cached per JVM like the topic itself: the history (and so its index)
     // is a pure function of `dir`, and reusing the built index across
     // invocations is exactly the production deployment — the parquet-
@@ -649,9 +650,7 @@ object MqRoundtrip {
       // agg, an eager spread checkpoint, an eager signature checkpoint and
       // two sequential collects (6 driver job rounds) — collapses to census
       // + one collect. Default-seed signatures, same index by construction.
-      val spread = graft.util.Spread.ifNarrow(
-        history.select(col("doc_id"), col("text")))
-      Dedup.buildHistoryProbeIndexFused(spread)
+      Dedup.buildHistoryProbeIndexFused(history.select(col("doc_id"), col("text")))
         .map(spark.sparkContext.broadcast(_))
     })
     // the JOIN plan's history index: signed AND banded once, reused by every

@@ -35,44 +35,18 @@ object PageRank {
    * a source or destination. Damping 0.85 as num/den integers.
    */
   def pageRank(edges: DataFrame, srcCol: String = "src_id", dstCol: String = "dst_id",
-      iters: Int = 10, dampNum: Int = 85, dampDen: Int = 100,
-      smallGraphEdges: Long = Dedup.DefaultSmallGraphEdges): DataFrame = {
+      iters: Int = 10, dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iteration count out of range: $iters")
-    // size-based plan selection, as [[Dedup.nearDupClusters]]: below the
-    // edge ceiling one bounded collect replaces iters × (join + agg)
-    // distributed rounds, and the all-integer recurrence replays bit-exactly
-    // on the driver (suite-pinned against the distributed loop). Similarity
-    // graphs at corpus scale run the distributed loop, unchanged. Same
-    // eligibility contract as nearDupClusters: integral same-typed id
-    // columns only (the driver kernel indexes by primitive Long), output
-    // ids cast back to the input type, and the (often knnGraph-derived)
-    // edge pipeline checkpoints ONCE to serve the count-only ceiling
-    // probe, the fast-path collect and the distributed loop alike — the
-    // fall-through path hauls no edge bytes to the driver.
-    val srcDt = edges.schema(srcCol).dataType
-    val effEdges = graft.util.FastPaths.ceiling(smallGraphEdges)
-    if (effEdges > 0 && graft.util.IdTypes.integral(srcDt) &&
-        edges.schema(dstCol).dataType == srcDt) {
-      val p = graft.util.Materialize.cut(
-        edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst")))
-      val ranked =
-        if (p.count() <= effEdges)
-          smallGraphPageRank(edges.sparkSession,
-            p.collect().map(r => (r.getLong(0), r.getLong(1))), iters, dampNum, dampDen)
-        else distributedPageRank(p, iters, dampNum, dampDen)
-      return ranked.select(col("id").cast(srcDt).as("id"), col("pr"))
-    }
-    // non-integral ids (and the forced-distributed lane) take the same
-    // one-pass materialization the over-ceiling path gets: the edge
-    // pipeline is often join-derived (e.g. a kNN graph) and the
-    // distributed plan scans it three ways (nodes, outdeg, withDeg) —
-    // without the cut each scan would re-derive it. Eager, like the
-    // ceiling probe above.
-    distributedPageRank(
-      graft.util.Materialize.cut(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))),
-      iters, dampNum, dampDen)
+    // size-based plan selection through the edge gate shared with
+    // [[Dedup.nearDupClusters]] ([[Dedup.graphPlan]]): under the edge
+    // ceiling one bounded collect replaces iters × (join + agg) distributed
+    // rounds, and the all-integer recurrence replays bit-exactly on the
+    // driver (suite-pinned against the distributed loop). The (often
+    // knnGraph-derived) edge pipeline checkpoints once; the distributed plan
+    // scans it three ways (nodes, outdeg, withDeg) without re-deriving it.
+    Dedup.graphPlan("pagerank", edges, srcCol, dstCol, Seq("id"))(
+      smallGraphPageRank(edges.sparkSession, _, iters, dampNum, dampDen),
+      distributedPageRank(_, iters, dampNum, dampDen))
   }
 
   /** The per-iteration join/agg distributed plan of [[pageRank]] — the

@@ -553,108 +553,97 @@ object Similarity {
       numCentroids: Int = 16, nprobe: Int = 16,
       lloydIters: Int = 0,
       quantizer: (DataFrame, Int) => Array[Array[Double]] = sampleCentroids,
-      exhaustiveKernelMaxRows: Long = 65536L,
-      knownLiveCount: Long = -1L): DataFrame = {
-    // size-based plan selection for the EXHAUSTIVE regime only (nprobe >=
-    // numCentroids, where the cell join provably equals brute force): below
-    // the row ceiling (~64 MB of vectors) the corpus broadcasts and the
-    // N x N scan runs as one fused kernel pass — the cell join's 6M+
-    // materialized candidate rows (two dim-length arrays each) were ~15x
-    // the arithmetic. Pruned probes (nprobe < numCentroids) and corpora
-    // past the ceiling keep the IVF cell-join shape below, unchanged.
-    // eligibility additionally requires an integral id (the kernel indexes
-    // by primitive Long); the kernel's ids cast back to the input id type,
-    // so plan selection never changes the result schema. The ceiling probe
-    // is a COUNT over the (column-pruned, limit-stopped) corpus scan —
-    // cheap either way, and the fall-through path hauls no vector bytes
+      knownLiveCount: Long = -1L): DataFrame =
+    knnPlan(corpus, None, k, numCentroids, nprobe, lloydIters, quantizer, knownLiveCount)
+      .toDF("src_id", "neighbor_id", "sim")
+
+  /**
+   * The one plan body of [[knnGraph]] and [[hardNegatives]]: the top-`k`
+   * cosine neighbors of every live vector, restricted to neighbors of a
+   * DIFFERENT label when `labelCol` is set. Returns (src_id, dst_id,
+   * [dst_label,] sim) in the input id/label types. Four branches, each
+   * excluding self the same way (by id; by label when label-filtered —
+   * self always carries its own label):
+   *  - exhaustive nprobe (>= numCentroids, where the cell join provably
+   *    equals brute force), corpus under [[graft.util.FastPaths.KernelRows]]:
+   *    the corpus broadcasts and the N x N scan runs as one fused kernel
+   *    pass ([[exhaustiveKernel]]) — the cell join's 6M+ materialized
+   *    candidate rows (two dim-length arrays each) were ~15x the arithmetic;
+   *  - exhaustive nprobe past the ceiling (or forced distributed): the
+   *    BLOCKED pair enumeration ([[knnBlockedDistributed]]), not the cell
+   *    join — at exhaustive nprobe the cells partition the corpus, so the
+   *    generic join materializes N² rows each dragging two dim-length arrays
+   *    through codegen (measured 158s at 20k vectors vs ~8s blocked);
+   *  - pruned nprobe under the ceiling: [[prunedCellKernel]] — identical
+   *    candidates and cosines to the cell join, suite-pinned.
+   *    `knownLiveCount` (a caller's adaptive-K census, e.g. knnGraphProbe's)
+   *    serves as the gate's census without a second count job;
+   *  - otherwise the IVF cell join + per-source window below.
+   * The kernel branches need integral id (and label) columns — they index
+   * by primitive Long — and cast their output back to the input types, so
+   * plan selection never changes the result schema. A NULL embedding is an
+   * absent vector (same contract as the dedup operators' null text): it is
+   * filtered once so every branch sees the same corpus.
+   */
+  private def knnPlan(corpus: DataFrame, labelCol: Option[String], k: Int,
+      numCentroids: Int, nprobe: Int, lloydIters: Int,
+      quantizer: (DataFrame, Int) => Array[Array[Double]],
+      knownLiveCount: Long): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
     val idDt = corpus.schema("vec_id").dataType
-    // a NULL embedding is an absent vector (same contract as the dedup
-    // operators' null text): filter once so BOTH lanes see the same corpus
+    val labelDt = labelCol.map(corpus.schema(_).dataType)
+    val labelFiltered = labelCol.isDefined
+    val site = if (labelFiltered) "hard_negatives" else "knn"
     val live = corpus.filter(col("emb").isNotNull)
-    val effRows = graft.util.FastPaths.ceiling(exhaustiveKernelMaxRows)
-    if (nprobe >= numCentroids && graft.util.IdTypes.integral(idDt)) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val cap = math.min(effRows + 1, Int.MaxValue.toLong).toInt
-      if (effRows > 0 && live.limit(cap).count() <= effRows) {
-        // keep limit(cap) on the collect too: the probe and the collect are
-        // two separate jobs over a non-checkpointed frame, so the bound must
-        // hold by construction even if the source mutates between them
-        val rows = live.select(col("vec_id").cast("long").as("_1"), col("emb").as("_2"))
-          .limit(cap).as[(Long, Array[Double])].collect()
-        return knnExhaustiveKernel(spark, rows, k)
-          .select(col("src_id").cast(idDt).as("src_id"),
-            col("neighbor_id").cast(idDt).as("neighbor_id"), col("sim"))
-      }
-      // past the ceiling (or forced distributed): the BLOCKED pair
-      // enumeration, not the cell join — at exhaustive nprobe the cells
-      // partition the corpus, so the generic join materializes N² rows
-      // each dragging two dim-length arrays through codegen (measured
-      // 158s at 20k vectors vs ~8s blocked). The blocked plan replicates
-      // O(√tasks) corpus copies through one narrow shuffle and runs the
-      // same fused loop as the kernel on flat primitive arrays.
-      val survivors = knnBlockedDistributed(
-        live.select(col("vec_id").cast("long").as("_1"), col("emb").as("_2"),
-          lit(0L).as("_3")).as[(Long, Array[Double], Long)],
-        k, labelFiltered = false)
-      val w2 = Window.partitionBy(col("src_id")).orderBy(col("sim").desc, col("dst_id"))
-      return survivors
-        .toDF("src_id", "dst_id", "dst_label", "sim")
-        .withColumn("sim", round(col("sim"), 4))
-        .withColumn("rn", row_number().over(w2))
+    val rows = live.select(col("vec_id").cast("long").as("_1"), col("emb").as("_2"),
+        labelCol.fold(lit(0L))(col(_).cast("long")).as("_3"))
+      .as[(Long, Array[Double], Long)]
+    val kernelEligible =
+      graft.util.IdTypes.integral(idDt) && labelDt.forall(graft.util.IdTypes.integral)
+    // the kernels' raw (src_id, dst_id, dst_label, sim) candidates: the
+    // authoritative 4-dp round + rank run as the same Column/window
+    // expressions as the cell join's, then the ids cast back
+    def ranked(raw: DataFrame): DataFrame = {
+      val w = Window.partitionBy(col("src_id")).orderBy(col("sim").desc, col("dst_id"))
+      raw.withColumn("sim", round(col("sim"), 4))
+        .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k)
-        .select(col("src_id").cast(idDt).as("src_id"),
-          col("dst_id").cast(idDt).as("neighbor_id"), col("sim"))
+        .select(Seq(col("src_id").cast(idDt).as("src_id"), col("dst_id").cast(idDt).as("dst_id")) ++
+          labelDt.map(col("dst_label").cast(_).as("dst_label")) :+ col("sim"): _*)
     }
+    if (nprobe >= numCentroids && kernelEligible)
+      return ranked(graft.util.FastPaths.collect(s"$site.exhaustive", rows,
+          graft.util.FastPaths.KernelRows)
+        .fold(knnBlockedDistributed(rows, k, labelFiltered).toDF())(
+          all => exhaustiveKernel(spark, KernelCorpus(all), k, labelFiltered))
+        .toDF("src_id", "dst_id", "dst_label", "sim"))
     val sampled = quantizer(live, numCentroids)
     val centroids =
       if (lloydIters > 0) lloydRefine(live.select("vec_id", "emb"), "emb", sampled, lloydIters)
       else sampled
     val probeN = math.max(1, math.min(nprobe, centroids.length)) // floor 1: zero centroids <=> empty corpus (ivfAssign then yields no cells)
-    // pruned-regime fused kernel (round 20, [[prunedCellKernel]]): under
-    // the same ceiling as the exhaustive kernel, the cell join + window
-    // collapse into one broadcast kernel pass — identical candidates and
-    // cosines, suite-pinned. knownLiveCount (a caller's adaptive-K census,
-    // e.g. knnGraphProbe's) gates eligibility without a second count job.
-    if (effRows > 0 && probeN < centroids.length &&
-        graft.util.IdTypes.integral(idDt)) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val cap = math.min(effRows + 1, Int.MaxValue.toLong).toInt
-      val nKnown = if (knownLiveCount >= 0L) knownLiveCount
-        else live.limit(cap).count()
-      if (nKnown <= effRows) {
-        val rows = live.select(col("vec_id").cast("long").as("_1"),
-            col("emb").as("_2"), lit(0L).as("_3"))
-          .limit(cap).as[(Long, Array[Double], Long)].collect()
-        // round-21 advice: a stale caller census (knownLiveCount) must not
-        // silently truncate the corpus — cap = effRows+1 makes an over-full
-        // collect detectable; fall through to the distributed plan then
-        if (rows.length <= effRows) {
-          val w2 = Window.partitionBy(col("src_id"))
-            .orderBy(col("sim").desc, col("dst_id"))
-          return prunedCellKernel(spark, rows, centroids, probeN, k,
-              labelFiltered = false)
-            .withColumn("sim", round(col("sim"), 4))
-            .withColumn("rn", row_number().over(w2))
-            .filter(col("rn") <= k)
-            .select(col("src_id").cast(idDt).as("src_id"),
-              col("dst_id").cast(idDt).as("neighbor_id"), col("sim"))
-        }
-      }
-    }
-    val indexed = assignCells(live.select("vec_id", "emb"), "emb", centroids)
+    if (probeN < centroids.length && kernelEligible)
+      graft.util.FastPaths.collect(s"$site.pruned", rows, graft.util.FastPaths.KernelRows,
+          census = knownLiveCount)
+        .foreach(all => return ranked(
+          prunedCellKernel(spark, KernelCorpus(all), centroids, probeN, k, labelFiltered)))
+    val labels = labelCol.toSeq.map(col)
+    val indexed = assignCells(live.select(col("vec_id") +: col("emb") +: labels: _*),
+      "emb", centroids)
     val probeCells = live
-      .select(col("vec_id").as("src_id"), col("emb").as("q_emb"))
+      .select(Seq(col("vec_id").as("src_id"), col("emb").as("q_emb")) ++
+        labels.map(_.as("src_label")): _*)
       .withColumn("centroid_id", explode(
         graft.functions.GraftFunctions.ivfAssign(col("q_emb"), centroids, probeN)))
     val w = Window.partitionBy(col("src_id")).orderBy(col("sim").desc, col("vec_id"))
     indexed.join(probeCells.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("src_id"))
+      .filter(labelCol.fold(col("vec_id") =!= col("src_id"))(col(_) =!= col("src_label")))
       .withColumn("sim", round(cosine(col("emb"), col("q_emb")), 4))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .select(col("src_id"), col("vec_id").as("neighbor_id"), col("sim"))
+      .select(Seq(col("src_id"), col("vec_id").as("dst_id")) ++
+        labelCol.map(col(_).as("dst_label")) :+ col("sim"): _*)
   }
 
   /** The raw cosine loop shared by the fused brute-force kernels — the
@@ -715,7 +704,7 @@ object Similarity {
 
   /**
    * Distributed exhaustive brute-force kNN — the over-ceiling sibling of
-   * [[knnExhaustiveKernel]] with NO driver collect and NO whole-corpus
+   * [[exhaustiveKernel]] with NO driver collect and NO whole-corpus
    * broadcast. The corpus packs into G ≈ √(4·parallelism) blocks of flat
    * primitive arrays; every (probe block, corpus block) pair becomes one
    * kernel task (G² tasks), so total data movement is G corpus copies —
@@ -727,8 +716,8 @@ object Similarity {
    * the caller's authoritative round + rank (the same Column/window
    * expressions as every other lane) reconstruct the exact answer.
    * `labelFiltered` keeps only different-label candidates ([[hardNegatives]]
-   * semantics) with the eligible-count guard mirrored from its fused
-   * kernel. Survivor volume is N·G·(k+ε) — linear in N at fixed G.
+   * semantics); self is excluded exactly as in [[exhaustiveKernel]].
+   * Survivor volume is N·G·(k+ε) — linear in N at fixed G.
    */
   private def knnBlockedDistributed(
       rows: org.apache.spark.sql.Dataset[(Long, Array[Double], Long)],
@@ -791,8 +780,7 @@ object Similarity {
           var j = 0
           while (j < cn) {
             val idb = cb.ids(j)
-            val ok = idb != ida && (!labelFiltered || cb.labels(j) != la)
-            if (ok) {
+            if (if (labelFiltered) cb.labels(j) != la else idb != ida) {
               eligible += 1
               var dot = 0.0
               var d = 0
@@ -804,20 +792,13 @@ object Similarity {
               val denom = na * cbN(j)
               val s = if (denom == 0.0) 0.0 else dot / denom
               sims(j) = s
-              if (s > top(top.length - 1)) {
-                var p = top.length - 1
-                while (p > 0 && top(p - 1) < s) { top(p) = top(p - 1); p -= 1 }
-                top(p) = s
-              }
-            } else sims(j) = Double.NegativeInfinity
+              offerTop(top, s)
+            } else sims(j) = Double.NaN
             j += 1
           }
-          val cut = (if (eligible < k) Double.NegativeInfinity else top(k - 1)) - 1e-4
-          Iterator.range(0, cn)
-            .filter { j =>
-              cb.ids(j) != ida && (!labelFiltered || cb.labels(j) != la) &&
-                sims(j) >= cut
-            }
+          val cut = emitCut(top, eligible, k)
+          // ineligible slots hold NaN, which never passes the cut
+          Iterator.range(0, cn).filter(j => sims(j) >= cut)
             .map(j => (ida, cb.ids(j), cb.labels(j), sims(j)))
         }
       }
@@ -922,9 +903,56 @@ object Similarity {
     out.toDF("vec_a", "vec_b", "sim")
   }
 
+  /** A collected kernel corpus in primitive columns (the [[VecBlock]]
+    * layout, one array per vector): the pair loops read ids, labels and
+    * norms from flat arrays instead of unboxing tuple fields per pair. Dims
+    * are checked and norms paid ONCE per vector on the driver (bounded by
+    * the kernel ceiling), not once per pair — see [[sqrtNorm]]. */
+  private final case class KernelCorpus(ids: Array[Long], labels: Array[Long],
+      vecs: Array[Array[Double]], norms: Array[Double])
+
+  private object KernelCorpus {
+    def apply(rows: Array[(Long, Array[Double], Long)]): KernelCorpus = {
+      rows.foreach { r =>
+        if (r._2.length != rows(0)._2.length)
+          throw new IllegalArgumentException(
+            s"cosine_sim: dimension mismatch ${rows(0)._2.length} vs ${r._2.length} — " +
+              "a silent min-length similarity would be plausible but wrong")
+      }
+      KernelCorpus(rows.map(_._1), rows.map(_._3), rows.map(_._2), rows.map(r => sqrtNorm(r._2)))
+    }
+  }
+
+  /** Raw top-k insertion shared by the kNN pair loops: `top` holds the
+    * best sims seen so far, descending. */
+  @inline private def offerTop(top: Array[Double], s: Double): Unit =
+    if (s > top(top.length - 1)) {
+      var p = top.length - 1
+      while (p > 0 && top(p - 1) < s) { top(p) = top(p - 1); p -= 1 }
+      top(p) = s
+    }
+
+  /** The emit threshold of a kNN pair loop: candidates within 1e-4 of the
+    * k-th best raw sim (4-dp HALF_UP moves a value by < 5e-5, so nothing
+    * outside that band can enter the ROUNDED top-k); everything when fewer
+    * than k candidates were eligible. */
+  @inline private def emitCut(top: Array[Double], eligible: Int, k: Int): Double =
+    (if (eligible < k) Double.NegativeInfinity else top(k - 1)) - 1e-4
+
+  /** The collected corpus' row order for the kernels' source slices,
+    * hash-scrambled so every task draws a mix of rows, parallelized
+    * directly — a createDataset(order).repartition(slices) paid a whole
+    * map stage + exchange to distribute n integers (guide §2.4). */
+  private def sourceRows(spark: SparkSession, n: Int): org.apache.spark.sql.Dataset[Int] = {
+    import spark.implicits._
+    val order = (0 until n).sortBy(i => (i * 2654435761L) & 0xffffffffL)
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism * 4, n))
+    spark.createDataset(spark.sparkContext.parallelize(order, slices))
+  }
+
   /**
    * Pruned-nprobe fused kernel (round 20): the under-ceiling sibling of
-   * [[knnExhaustiveKernel]] for nprobe < numCentroids — the
+   * [[exhaustiveKernel]] for nprobe < numCentroids — the
    * knn_graph_probe / hard_negatives_probe regime, where the generic plan
    * (cell equi-join + per-source window) materializes every
    * (probe, cell-member) candidate as a row dragging two dim-length
@@ -936,39 +964,34 @@ object Similarity {
    * scans only its probed cells' members in one flat loop — identical
    * candidate set, cosines in [[cosineRaw]]'s accumulation order with
    * per-vector norms hoisted ([[sqrtNorm]]), 1e-4-slack top-k pre-cut,
-   * and the authoritative round + rank run as the same Column/window
-   * expressions — bit-identical to the join plan (suite-pinned).
-   * `labelFiltered` keeps only different-label candidates
+   * and the authoritative round + rank run by the caller as the same
+   * Column/window expressions — bit-identical to the join plan
+   * (suite-pinned). `labelFiltered` keeps only different-label candidates
    * ([[hardNegatives]] semantics — self is excluded by its own label).
    */
-  private def prunedCellKernel(spark: SparkSession,
-      rows: Array[(Long, Array[Double], Long)],
+  private def prunedCellKernel(spark: SparkSession, c: KernelCorpus,
       centroids: Array[Array[Double]], probeN: Int, k: Int,
       labelFiltered: Boolean): DataFrame = {
     import spark.implicits._
     val inv = graft.functions.IvfAssign.invNorms(centroids)
-    val n = rows.length
+    val n = c.ids.length
     val builders = Array.fill(math.max(centroids.length, 1))(
       scala.collection.mutable.ArrayBuilder.make[Int])
     var i = 0
     while (i < n) {
-      val h = graft.functions.IvfAssign.assign(centroids, inv, 1, rows(i)._2)
+      val h = graft.functions.IvfAssign.assign(centroids, inv, 1, c.vecs(i))
       if (h.nonEmpty) builders(h(0)) += i
       i += 1
     }
-    val cellIdx: Array[Array[Int]] = builders.map(_.result())
-    val bc = spark.sparkContext.broadcast(rows)
-    val bcN = spark.sparkContext.broadcast(rows.map(r => sqrtNorm(r._2)))
-    val bcCells = spark.sparkContext.broadcast(cellIdx)
-    val order = (0 until n).sortBy(i => (i * 2654435761L) & 0xffffffffL)
-    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism * 4, n))
-    spark.createDataset(
-        spark.sparkContext.parallelize(order, slices)).mapPartitions { it =>
-      val all = bc.value
-      val ns = bcN.value
+    val bc = spark.sparkContext.broadcast(c)
+    val bcCells = spark.sparkContext.broadcast(builders.map(_.result()))
+    sourceRows(spark, n).mapPartitions { it =>
+      val KernelCorpus(ids, labels, vecs, ns) = bc.value
       val cells = bcCells.value
       it.flatMap { i =>
-        val (ida, ea, la) = all(i)
+        val ida = ids(i)
+        val la = labels(i)
+        val ea = vecs(i)
         val na = ns(i)
         val dim = ea.length
         val probe = graft.functions.IvfAssign.assign(centroids, inv, probeN, ea)
@@ -982,11 +1005,9 @@ object Similarity {
           var m = 0
           while (m < ms.length) {
             val j = ms(m)
-            val ok =
-              if (labelFiltered) all(j)._3 != la else all(j)._1 != ida
-            if (ok) {
+            if (if (labelFiltered) labels(j) != la else ids(j) != ida) {
               eligible += 1
-              val eb = all(j)._2
+              val eb = vecs(j)
               var dot = 0.0
               var d = 0
               while (d < dim) { dot += ea(d) * eb(d); d += 1 }
@@ -994,91 +1015,66 @@ object Similarity {
               val s = if (denom == 0.0) 0.0 else dot / denom
               cand += j
               sims += s
-              if (s > top(top.length - 1)) {
-                var p = top.length - 1
-                while (p > 0 && top(p - 1) < s) { top(p) = top(p - 1); p -= 1 }
-                top(p) = s
-              }
+              offerTop(top, s)
             }
             m += 1
           }
           pi += 1
         }
-        val cut = (if (eligible < k) Double.NegativeInfinity else top(k - 1)) - 1e-4
+        val cut = emitCut(top, eligible, k)
         val cs = cand.result()
         val ss = sims.result()
         Iterator.range(0, cs.length).filter(x => ss(x) >= cut)
-          .map(x => (ida, all(cs(x))._1, all(cs(x))._3, ss(x)))
+          .map(x => (ida, ids(cs(x)), labels(cs(x)), ss(x)))
       }
     }.toDF("src_id", "dst_id", "dst_label", "sim")
   }
 
-  /** Exhaustive-kNN fast path of [[knnGraph]]: per source row, one fused
+  /** Exhaustive-nprobe fast path of [[knnPlan]]: per source row, one fused
     * scan over the broadcast corpus keeps a raw top-k and emits only the
-    * candidates within 1e-4 of the k-th best (4-dp HALF_UP moves a value
-    * by < 5e-5, so nothing outside that band can enter the ROUNDED top-k);
-    * the authoritative round + rank then run as the SAME Column/window
+    * candidates within 1e-4 of the k-th best ([[emitCut]]); the caller's
+    * authoritative round + rank then run as the SAME Column/window
     * expressions as the cell-join path — bit-identical results, candidate
-    * volume n·(k+ε) instead of n². */
-  private def knnExhaustiveKernel(spark: SparkSession,
-      rows: Array[(Long, Array[Double])], k: Int): DataFrame = {
+    * volume n·(k+ε) instead of n². Self is excluded by id (so a repeated
+    * id never neighbors its twin, as in every other branch), or by label
+    * when `labelFiltered`. */
+  private def exhaustiveKernel(spark: SparkSession, c: KernelCorpus, k: Int,
+      labelFiltered: Boolean): DataFrame = {
     import spark.implicits._
-    // dims checked + norms paid ONCE per vector on the driver (bounded by
-    // the kernel ceiling), not once per pair in the loop — see [[sqrtNorm]]
-    rows.foreach { r =>
-      if (r._2.length != rows(0)._2.length)
-        throw new IllegalArgumentException(
-          s"cosine_sim: dimension mismatch ${rows(0)._2.length} vs ${r._2.length} — " +
-            "a silent min-length similarity would be plausible but wrong")
-    }
-    val bc = spark.sparkContext.broadcast(rows)
-    val bcN = spark.sparkContext.broadcast(rows.map(r => sqrtNorm(r._2)))
-    val n = rows.length
-    val order = (0 until n).sortBy(i => (i * 2654435761L) & 0xffffffffL)
-    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism * 4, n))
-    // parallelize slices the (already hash-scrambled) index list directly —
-    // the previous createDataset(order).repartition(slices) paid a whole
-    // map stage + exchange to distribute n integers (guide §2.4)
-    val raw = spark.createDataset(
-        spark.sparkContext.parallelize(order, slices)).mapPartitions { it =>
-      val all = bc.value
-      val ns = bcN.value
+    val bc = spark.sparkContext.broadcast(c)
+    val n = c.ids.length
+    sourceRows(spark, n).mapPartitions { it =>
+      val KernelCorpus(ids, labels, vecs, ns) = bc.value
       it.flatMap { i =>
-        val (ida, ea) = all(i)
+        val ida = ids(i)
+        val la = labels(i)
+        val ea = vecs(i)
         val na = ns(i)
         val dim = ea.length
-        val sims = new Array[Double](all.length)
+        val sims = new Array[Double](n)
         val top = Array.fill(math.max(k, 1))(Double.NegativeInfinity)
+        var eligible = 0
         var j = 0
-        while (j < all.length) {
-          if (j != i) {
-            val eb = all(j)._2
+        while (j < n) {
+          if (if (labelFiltered) labels(j) != la else ids(j) != ida) {
+            eligible += 1
+            val eb = vecs(j)
             var dot = 0.0
             var d = 0
             while (d < dim) { dot += ea(d) * eb(d); d += 1 }
             val denom = na * ns(j)
             val s = if (denom == 0.0) 0.0 else dot / denom
             sims(j) = s
-            if (s > top(top.length - 1)) {
-              var p = top.length - 1
-              while (p > 0 && top(p - 1) < s) { top(p) = top(p - 1); p -= 1 }
-              top(p) = s
-            }
-          } else sims(j) = Double.NegativeInfinity
+            offerTop(top, s)
+          } else sims(j) = Double.NaN
           j += 1
         }
-        val cut =
-          (if (all.length - 1 < k) Double.NegativeInfinity else top(k - 1)) - 1e-4
-        Iterator.range(0, all.length)
-          .filter(j => j != i && sims(j) >= cut)
-          .map(j => (ida, all(j)._1, sims(j)))
+        val cut = emitCut(top, eligible, k)
+        // ineligible slots hold NaN, which never passes the cut
+        Iterator.range(0, n).filter(j => sims(j) >= cut)
+          .map(j => (ida, ids(j), labels(j), sims(j)))
       }
-    }.toDF("src_id", "vec_id", "sim")
-    val w = Window.partitionBy(col("src_id")).orderBy(col("sim").desc, col("vec_id"))
-    raw.withColumn("sim", round(col("sim"), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("src_id"), col("vec_id").as("neighbor_id"), col("sim"))
+    }.toDF("src_id", "dst_id", "dst_label", "sim")
   }
 
   /** Query entry (oracle-checked): the full 5-NN graph with nprobe =
@@ -1165,164 +1161,10 @@ object Similarity {
       numCentroids: Int = 16, nprobe: Int = 16,
       lloydIters: Int = 0,
       quantizer: (DataFrame, Int) => Array[Array[Double]] = sampleCentroids,
-      exhaustiveKernelMaxRows: Long = 65536L,
-      knownLiveCount: Long = -1L): DataFrame = {
-    // same size-based fast path as [[knnGraph]]'s exhaustive regime, with
-    // the label inequality applied inside the kernel scan. Same eligibility
-    // contract too, extended to the label column (the kernel compares
-    // labels as primitive longs): non-integral ids OR labels run the
-    // type-agnostic cell join, and the kernel's id/label columns cast back
-    // to the input types. Count-only ceiling probe — the fall-through
-    // path hauls no vector bytes.
-    val idDt = corpus.schema("vec_id").dataType
-    val labelDt = corpus.schema("label").dataType
-    // a NULL embedding is an absent vector (same contract as the dedup
-    // operators' null text): filter once so BOTH lanes see the same corpus
-    val live = corpus.filter(col("emb").isNotNull)
-    val effRows = graft.util.FastPaths.ceiling(exhaustiveKernelMaxRows)
-    if (nprobe >= numCentroids &&
-        graft.util.IdTypes.integral(idDt) && graft.util.IdTypes.integral(labelDt)) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val cap = math.min(effRows + 1, Int.MaxValue.toLong).toInt
-      if (effRows <= 0 || live.limit(cap).count() > effRows) {
-        // past the ceiling (or forced distributed): the blocked pair
-        // enumeration with the label filter fused in-kernel — the cell
-        // join at exhaustive nprobe is the same N²-wide-row trap knnGraph
-        // documents (and hard negatives carry a third column through it)
-        val survivors = knnBlockedDistributed(
-          live.select(col("vec_id").cast("long").as("_1"), col("emb").as("_2"),
-            col("label").cast("long").as("_3")).as[(Long, Array[Double], Long)],
-          k, labelFiltered = true)
-        val wb = Window.partitionBy(col("anchor_id")).orderBy(col("sim").desc, col("vec_id"))
-        return survivors
-          .toDF("anchor_id", "vec_id", "negative_label", "sim")
-          .withColumn("sim", round(col("sim"), 4))
-          .withColumn("rn", row_number().over(wb))
-          .filter(col("rn") <= k)
-          .select(col("anchor_id").cast(idDt).as("anchor_id"),
-            col("vec_id").cast(idDt).as("negative_id"),
-            col("negative_label").cast(labelDt).as("negative_label"), col("sim"))
-      }
-      locally {
-        // under the ceiling: the fused broadcast kernel. limit(cap) bounds
-        // the haul even if the source changes between the probe job and
-        // the collect job (two jobs, one logical snapshot)
-        val rows = live.select(col("vec_id").cast("long").as("_1"),
-            col("emb").as("_2"), col("label").cast("long").as("_3"))
-          .limit(cap).as[(Long, Array[Double], Long)].collect()
-        // dim check + norms once per vector (driver-side, ceiling-bounded),
-        // index list parallelized directly — the [[knnExhaustiveKernel]]
-        // optimizations, label-filtered variant
-        rows.foreach { r =>
-          if (r._2.length != rows(0)._2.length)
-            throw new IllegalArgumentException(
-              s"cosine_sim: dimension mismatch ${rows(0)._2.length} vs ${r._2.length} — " +
-                "a silent min-length similarity would be plausible but wrong")
-        }
-        val bc = spark.sparkContext.broadcast(rows)
-        val bcN = spark.sparkContext.broadcast(rows.map(r => sqrtNorm(r._2)))
-        val n = rows.length
-        val order = (0 until n).sortBy(i => (i * 2654435761L) & 0xffffffffL)
-        val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism * 4, n))
-        val raw = spark.createDataset(
-            spark.sparkContext.parallelize(order, slices)).mapPartitions { it =>
-          val all = bc.value
-          val ns = bcN.value
-          it.flatMap { i =>
-            val (ida, ea, la) = all(i)
-            val na = ns(i)
-            val dim = ea.length
-            val sims = new Array[Double](all.length)
-            val top = Array.fill(math.max(k, 1))(Double.NegativeInfinity)
-            var eligible = 0
-            var j = 0
-            while (j < all.length) {
-              if (all(j)._3 != la) {
-                eligible += 1
-                val eb = all(j)._2
-                var dot = 0.0
-                var d = 0
-                while (d < dim) { dot += ea(d) * eb(d); d += 1 }
-                val denom = na * ns(j)
-                val s = if (denom == 0.0) 0.0 else dot / denom
-                sims(j) = s
-                if (s > top(top.length - 1)) {
-                  var p = top.length - 1
-                  while (p > 0 && top(p - 1) < s) { top(p) = top(p - 1); p -= 1 }
-                  top(p) = s
-                }
-              } else sims(j) = Double.NegativeInfinity
-              j += 1
-            }
-            val cut = (if (eligible < k) Double.NegativeInfinity else top(k - 1)) - 1e-4
-            Iterator.range(0, all.length)
-              .filter(j => all(j)._3 != la && sims(j) >= cut)
-              .map(j => (ida, all(j)._1, all(j)._3, sims(j)))
-          }
-        }.toDF("anchor_id", "vec_id", "negative_label", "sim")
-        val w = Window.partitionBy(col("anchor_id")).orderBy(col("sim").desc, col("vec_id"))
-        return raw.withColumn("sim", round(col("sim"), 4))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k)
-          .select(col("anchor_id").cast(idDt).as("anchor_id"),
-            col("vec_id").cast(idDt).as("negative_id"),
-            col("negative_label").cast(labelDt).as("negative_label"), col("sim"))
-      }
-    }
-    val sampled = quantizer(live, numCentroids)
-    val centroids =
-      if (lloydIters > 0) lloydRefine(live.select("vec_id", "emb"), "emb", sampled, lloydIters)
-      else sampled
-    val probeN = math.max(1, math.min(nprobe, centroids.length)) // floor 1: zero centroids <=> empty corpus (ivfAssign then yields no cells)
-    // pruned-regime fused kernel — the [[knnGraph]] round-20 path with the
-    // label filter in-kernel (self excluded by its own label, exactly the
-    // join plan's label =!= anchor_label condition)
-    if (graft.util.FastPaths.ceiling(exhaustiveKernelMaxRows) > 0 &&
-        probeN < centroids.length &&
-        graft.util.IdTypes.integral(idDt) && graft.util.IdTypes.integral(labelDt)) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val effR = graft.util.FastPaths.ceiling(exhaustiveKernelMaxRows)
-      val cap = math.min(effR + 1, Int.MaxValue.toLong).toInt
-      val nKnown = if (knownLiveCount >= 0L) knownLiveCount
-        else live.limit(cap).count()
-      if (nKnown <= effR) {
-        val rows = live.select(col("vec_id").cast("long").as("_1"),
-            col("emb").as("_2"), col("label").cast("long").as("_3"))
-          .limit(cap).as[(Long, Array[Double], Long)].collect()
-        // round-21 advice: over-full collect (stale knownLiveCount) falls
-        // through to the distributed plan instead of truncating at cap
-        if (rows.length <= effR) {
-          val w2 = Window.partitionBy(col("anchor_id"))
-            .orderBy(col("sim").desc, col("vec_id"))
-          return prunedCellKernel(spark, rows, centroids, probeN, k,
-              labelFiltered = true)
-            .toDF("anchor_id", "vec_id", "negative_label", "sim")
-            .withColumn("sim", round(col("sim"), 4))
-            .withColumn("rn", row_number().over(w2))
-            .filter(col("rn") <= k)
-            .select(col("anchor_id").cast(idDt).as("anchor_id"),
-              col("vec_id").cast(idDt).as("negative_id"),
-              col("negative_label").cast(labelDt).as("negative_label"), col("sim"))
-        }
-      }
-    }
-    val indexed = assignCells(live.select("vec_id", "emb", "label"), "emb", centroids)
-    val probes = live
-      .select(col("vec_id").as("anchor_id"), col("emb").as("q_emb"),
-        col("label").as("anchor_label"))
-      .withColumn("centroid_id", explode(
-        graft.functions.GraftFunctions.ivfAssign(col("q_emb"), centroids, probeN)))
-    val w = Window.partitionBy(col("anchor_id")).orderBy(col("sim").desc, col("vec_id"))
-    indexed.join(probes.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("label") =!= col("anchor_label"))
-      .withColumn("sim", round(cosine(col("emb"), col("q_emb")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("anchor_id"), col("vec_id").as("negative_id"),
-        col("label").as("negative_label"), col("sim"))
-  }
+      knownLiveCount: Long = -1L): DataFrame =
+    knnPlan(corpus, Some("label"), k, numCentroids, nprobe, lloydIters, quantizer,
+        knownLiveCount)
+      .toDF("anchor_id", "negative_id", "negative_label", "sim")
 
   /** Query entry (oracle-checked): exhaustive-nprobe hard negatives ≡ the
     * brute-force label-filtered graph. */
@@ -2157,8 +1999,7 @@ object Similarity {
   def embeddingNearDups(
       corpus: DataFrame, threshold: Double = 0.95,
       numTables: Int = 8, bitsPerTable: Int = -1, seed: Long = 42L,
-      kernelVerifyMaxRows: Long = 65536L, probeFlips: Int = 0,
-      knownLiveCount: Long = -1L): DataFrame = {
+      probeFlips: Int = 0, knownLiveCount: Long = -1L): DataFrame = {
     // a NULL embedding is an absent vector (same contract as the dedup
     // operators' null text): filter once so BOTH lanes see the same corpus
     val live = corpus.filter(col("emb").isNotNull)
@@ -2223,24 +2064,19 @@ object Similarity {
     // paths are bit-identical (suite-pinned)
     // fused-path eligibility follows the knnGraph contract: integral
     // vec_id only (the broadcast lookup is keyed by primitive Long), pair
-    // ids cast back to the input type, count-only ceiling probe so the
-    // fall-through path hauls no vector bytes
+    // ids cast back to the input type. The adaptive-bits census (nLive,
+    // when taken) serves as the gate's census — no second count job; the
+    // gate's over-full guard keeps a stale caller census from dropping rows
+    // the collision multiset still references
     val idDt = corpus.schema("vec_id").dataType
-    val effVerifyRows = graft.util.FastPaths.ceiling(kernelVerifyMaxRows)
-    val fused: Option[DataFrame] = if (effVerifyRows > 0 &&
-        graft.util.IdTypes.integral(idDt)) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val cap = math.min(effVerifyRows + 1, Int.MaxValue.toLong).toInt
-      // the adaptive-bits census already counted live rows — reuse it
-      // instead of paying a second limit-count job (same decision: nLive
-      // is the exact count the capped probe approximates)
-      if (if (nLive >= 0) nLive <= effVerifyRows
-          else live.limit(cap).count() <= effVerifyRows) {
-        // limit(cap) keeps the collect bounded by construction (probe and
-        // collect are separate jobs over a non-checkpointed frame)
-        val rows = live.select(col("vec_id").cast("long").as("_1"), col("emb").as("_2"))
-          .limit(cap).as[(Long, Array[Double])].collect()
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val fused: Option[DataFrame] =
+      if (!graft.util.IdTypes.integral(idDt)) None
+      else graft.util.FastPaths.collect("embed_neardup.verify",
+          live.select(col("vec_id").cast("long").as("_1"), col("emb").as("_2"))
+            .as[(Long, Array[Double])],
+          graft.util.FastPaths.VerifyRows, census = nLive).map { rows =>
         val bc = spark.sparkContext.broadcast(rows.toMap)
         // the collision MULTISET feeds the kernel directly — a pair
         // colliding in d tables costs d extra dot products (cheap) instead
@@ -2261,7 +2097,7 @@ object Similarity {
         // placement. Unconditional by design: the uniform-case overhead is
         // the cheap pair shuffle, the skew case is what the operator must
         // survive at 100 TB.
-        Some(collisions.select(col("vec_a").cast("long"), col("vec_b").cast("long"))
+        collisions.select(col("vec_a").cast("long"), col("vec_b").cast("long"))
           .repartition(col("vec_a"), col("vec_b"))
           .as[(Long, Long)]
           .mapPartitions { it =>
@@ -2287,9 +2123,8 @@ object Similarity {
           .filter(col("sim") >= threshold - 1e-4)
           .dropDuplicates("vec_a", "vec_b")
           .select(col("vec_a").cast(idDt).as("vec_a"),
-            col("vec_b").cast(idDt).as("vec_b"), col("sim")))
-      } else None
-    } else None
+            col("vec_b").cast(idDt).as("vec_b"), col("sim"))
+      }
     // over the ceiling (or forced distributed): the verify KEEPS the
     // pre-verify distinct (one cosine per pair), then — for integral ids —
     // runs the BLOCKED grid kernel: the generic per-pair array-attach join
@@ -2299,8 +2134,6 @@ object Similarity {
     // type-agnostic join shape.
     fused.getOrElse {
       if (graft.util.IdTypes.integral(idDt)) {
-        val spark = corpus.sparkSession
-        import spark.implicits._
         // the blocked path DISTINCTs the multiset before the grid (round 18
         // — the 4 GiB memory lane at the engaged-table-law point found the
         // opposite choice OOMs): unlike the fused path (where the multiset
@@ -2390,7 +2223,7 @@ object Similarity {
       .limit((maxExactRows.min(Int.MaxValue.toLong)).toInt)
       .as[(Long, Array[Double])].collect()
     // dim check + norms once per vector (driver-side, guard-bounded), index
-    // list parallelized directly — the [[knnExhaustiveKernel]] optimizations
+    // list parallelized directly — the [[exhaustiveKernel]] optimizations
     rows.foreach { r =>
       if (r._2.length != rows(0)._2.length)
         throw new IllegalArgumentException(

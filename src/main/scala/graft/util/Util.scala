@@ -199,20 +199,3 @@ object Materialize {
     def cutLineageLazy(): org.apache.spark.sql.Dataset[T] = cutAtFirstAction(ds)
   }
 }
-
-/** Process-wide diagnostic switch that forces every size-adaptive fast
-  * path (driver union-find / integer PageRank replay, fused broadcast
-  * kernels, broadcast probe indexes) to report INELIGIBLE, so the
-  * distributed plans — the ones the 100 TB story rests on — run and can be
-  * measured even on corpora under the ceilings. Enabled by
-  * `-Dgraft.force.distributed=1` (Bench sets it from
-  * `SPARK_GRAFT_BENCH_FORCE_DISTRIBUTED=1` to produce the committed
-  * distributed-lane side-board). Default off; results are identical either
-  * way (the parity suites pin that), only the plan changes. */
-object FastPaths {
-  def forceDistributed: Boolean =
-    sys.props.get("graft.force.distributed").contains("1")
-  /** The effective ceiling: `default` normally, 0 (= never eligible) when
-    * the distributed lane is forced. */
-  def ceiling(default: Long): Long = if (forceDistributed) 0L else default
-}

@@ -31,14 +31,14 @@ class ContractHardeningSpec extends SparkSpec {
       (3L, s"$base went home very quickly")
     ).toDF("doc_id", "text")
     val fastLane = Dedup.ngramJaccard(docs, threshold = 0.3) // gate must detect dups
-    val joinLane = Dedup.ngramJaccard(docs, threshold = 0.3, probeIndexMaxBytes = 0L)
+    val joinLane = graft.util.FastPaths.forced(Dedup.ngramJaccard(docs, threshold = 0.3))
     assert(fastLane.collect().toSet === joinLane.collect().toSet)
     // and with unique ids the same corpus still takes the fast lane
     // producing the join-lane answer (the gate didn't just disable it)
     val uniq = docs.withColumn("doc_id",
       when(col("text").startsWith("completely"), lit(9L)).otherwise(col("doc_id")))
     assert(Dedup.ngramJaccard(uniq, threshold = 0.3).collect().toSet ===
-      Dedup.ngramJaccard(uniq, threshold = 0.3, probeIndexMaxBytes = 0L).collect().toSet)
+      graft.util.FastPaths.forced(Dedup.ngramJaccard(uniq, threshold = 0.3).collect().toSet))
   }
 
   test("crossNearDups: duplicate history ids fall through to the join plan and match it") {
@@ -46,7 +46,7 @@ class ContractHardeningSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val batch = Seq((10L, s"$base stayed put today")).toDF("doc_id", "text")
     val fast = Dedup.crossNearDups(batch, hist, threshold = 0.3)
-    val join = Dedup.crossNearDups(batch, hist, threshold = 0.3, probeIndexMaxBytes = 0L)
+    val join = graft.util.FastPaths.forced(Dedup.crossNearDups(batch, hist, threshold = 0.3))
     assert(fast.collect().toSet === join.collect().toSet)
     // the join plan emits per history ROW — both duplicate-id rows can pair
     assert(fast.filter(col("old_id") === 1L).count() === join.filter(col("old_id") === 1L).count())

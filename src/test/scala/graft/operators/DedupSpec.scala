@@ -242,10 +242,10 @@ class DedupSpec extends SparkSpec {
     // iterations; with path halving the worst label reaches the root
     // in O(log) steps — 10 iterations must suffice
     val pairs = (1L until 65L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    // smallGraphEdges = 0 forces the DISTRIBUTED loop — this test pins the
+    // FastPaths.forced runs the DISTRIBUTED loop — this test pins the
     // pointer jumping itself, which the driver fast path would bypass
-    val clusters = Dedup.nearDupClusters(pairs, maxIter = 10, smallGraphEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val clusters = graft.util.FastPaths.forced(Dedup.nearDupClusters(pairs, maxIter = 10)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(clusters.size === 65)
     assert(clusters.values.forall(_ === 1L), s"unconverged labels: ${clusters.filter(_._2 != 1L)}")
   }
@@ -258,8 +258,8 @@ class DedupSpec extends SparkSpec {
       (100L until 120L).map(i => (i + 1, i))).toDF("doc_a", "doc_b")
     val fast = Dedup.nearDupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val distributed = Dedup.nearDupClusters(pairs, smallGraphEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val distributed = graft.util.FastPaths.forced(Dedup.nearDupClusters(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(fast === distributed)
     assert(fast(50L) === 3L && fast(7L) === 3L && fast(90L) === 12L && fast(119L) === 100L)
   }
@@ -356,8 +356,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fused === joined)
     assert(fused.nonEmpty)
-    // a tiny ceiling refuses to build (the distributed plan's regime)
-    assert(Dedup.buildHistoryProbeIndex(history, sigs, bands, maxBytes = 1024).isEmpty)
     // param mismatch fails fast, same contract as the historyBands guard
     val e = intercept[IllegalArgumentException] {
       Dedup.crossNearDupsWithProbeIndex(newDocs, bc, numBands = 32)
@@ -367,11 +365,12 @@ class DedupSpec extends SparkSpec {
 
   test("ngramJaccard fused probe plan equals the banded-join plan") {
     val docs = Tables.documents(spark, sfDir)
-    def run(maxBytes: Long) =
-      Dedup.ngramJaccard(docs, threshold = 0.5, probeIndexMaxBytes = maxBytes)
+    def run(forced: Boolean) = graft.util.FastPaths.forcedIf(forced) {
+      Dedup.ngramJaccard(docs, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fused = run(Dedup.DefaultProbeIndexMaxBytes)
-    val joined = run(0L) // ceiling 0 forces the distributed join plan
+    }
+    val fused = run(forced = false)
+    val joined = run(forced = true) // the distributed join plan
     assert(fused === joined)
     assert(fused.nonEmpty)
   }
@@ -389,11 +388,12 @@ class DedupSpec extends SparkSpec {
       (4L, null.asInstanceOf[String]), // absent document
       (5L, "a completely different document about distributed dedup")
     ).toDF("doc_id", "text")
-    def run(maxBytes: Long) =
-      Dedup.ngramJaccard(docs, threshold = 0.5, probeIndexMaxBytes = maxBytes)
+    def run(forced: Boolean) = graft.util.FastPaths.forcedIf(forced) {
+      Dedup.ngramJaccard(docs, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fused = run(Dedup.DefaultProbeIndexMaxBytes)
-    assert(fused === run(0L))
+    }
+    val fused = run(forced = false)
+    assert(fused === run(forced = true))
     assert(fused === Set((1L, 2L, 1.0)))
   }
 

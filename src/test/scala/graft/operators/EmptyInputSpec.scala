@@ -26,27 +26,26 @@ class EmptyInputSpec extends SparkSpec {
     .toDF("vec_id", "emb")
 
   test("nearDupClusters: empty pair graph, both lanes") {
-    for (ceiling <- Seq(Dedup.DefaultSmallGraphEdges, 0L)) {
-      val out = Dedup.nearDupClusters(emptyPairs, smallGraphEdges = ceiling)
+    for (forced <- Seq(false, true)) graft.util.FastPaths.forcedIf(forced) {
+      val out = Dedup.nearDupClusters(emptyPairs)
       assert(out.columns.toSeq === Seq("doc_id", "cluster_id"))
-      assert(out.count() === 0, s"ceiling=$ceiling")
+      assert(out.count() === 0, s"forced=$forced")
     }
   }
 
   test("pageRank: empty edge table, both lanes") {
-    for (ceiling <- Seq(Dedup.DefaultSmallGraphEdges, 0L)) {
-      val out = PageRank.pageRank(
-        Seq.empty[(Long, Long)].toDF("src_id", "dst_id"), smallGraphEdges = ceiling)
+    for (forced <- Seq(false, true)) graft.util.FastPaths.forcedIf(forced) {
+      val out = PageRank.pageRank(Seq.empty[(Long, Long)].toDF("src_id", "dst_id"))
       assert(out.columns.toSeq === Seq("id", "pr"))
-      assert(out.count() === 0, s"ceiling=$ceiling")
+      assert(out.count() === 0, s"forced=$forced")
     }
   }
 
   test("ngramJaccard: empty corpus, both lanes") {
-    for (ceiling <- Seq(Dedup.DefaultProbeIndexMaxBytes, 0L)) {
-      val out = Dedup.ngramJaccard(emptyDocs, probeIndexMaxBytes = ceiling)
+    for (forced <- Seq(false, true)) graft.util.FastPaths.forcedIf(forced) {
+      val out = Dedup.ngramJaccard(emptyDocs)
       assert(out.columns.toSeq === Seq("doc_a", "doc_b", "jaccard"))
-      assert(out.count() === 0, s"ceiling=$ceiling")
+      assert(out.count() === 0, s"forced=$forced")
     }
   }
 
@@ -75,10 +74,9 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("knnGraph: empty corpus, both lanes") {
-    for (ceiling <- Seq(65536L, 0L)) {
-      val out = Similarity.knnGraph(emptyEmb, k = 3, numCentroids = 2, nprobe = 2,
-        exhaustiveKernelMaxRows = ceiling)
-      assert(out.count() === 0, s"ceiling=$ceiling")
+    for (forced <- Seq(false, true)) graft.util.FastPaths.forcedIf(forced) {
+      val out = Similarity.knnGraph(emptyEmb, k = 3, numCentroids = 2, nprobe = 2)
+      assert(out.count() === 0, s"forced=$forced")
     }
   }
 

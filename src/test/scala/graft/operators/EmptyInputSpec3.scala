@@ -28,9 +28,9 @@ class EmptyInputSpec3 extends SparkSpec {
   }
 
   test("embeddingNearDups: empty corpus, both lanes") {
-    for (ceiling <- Seq(65536L, 0L)) {
-      val out = Similarity.embeddingNearDups(emptyEmb, kernelVerifyMaxRows = ceiling)
-      assert(out.count() === 0, s"ceiling=$ceiling")
+    for (forced <- Seq(false, true)) graft.util.FastPaths.forcedIf(forced) {
+      val out = Similarity.embeddingNearDups(emptyEmb)
+      assert(out.count() === 0, s"forced=$forced")
     }
   }
 

@@ -34,7 +34,7 @@ class FastPathTypeGateSpec extends SparkSpec {
     val pairs = pairGraph.select(
       col("doc_a").cast("int").as("doc_a"), col("doc_b").cast("int").as("doc_b"))
     val fast = Dedup.nearDupClusters(pairs)
-    val dist = Dedup.nearDupClusters(pairs, smallGraphEdges = 0)
+    val dist = graft.util.FastPaths.forced(Dedup.nearDupClusters(pairs))
     assert(fast.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(fast.schema("doc_id").dataType === IntegerType)
@@ -44,7 +44,7 @@ class FastPathTypeGateSpec extends SparkSpec {
   test("pageRank: int ids — fast path and forced-distributed agree on schema and values") {
     val edges = Seq((1, 2), (2, 3), (3, 1), (2, 1)).toDF("src_id", "dst_id")
     val fast = PageRank.pageRank(edges, iters = 5)
-    val dist = PageRank.pageRank(edges, iters = 5, smallGraphEdges = 0)
+    val dist = graft.util.FastPaths.forced(PageRank.pageRank(edges, iters = 5))
     assert(fast.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(fast.schema("id").dataType === IntegerType)
@@ -58,8 +58,7 @@ class FastPathTypeGateSpec extends SparkSpec {
   test("knnGraph: int vec_id — kernel and cell-join paths agree on schema and values") {
     val emb = smallEmb.select(col("vec_id").cast("int").as("vec_id"), col("emb"))
     val fast = Similarity.knnGraph(emb, k = 3, numCentroids = 4, nprobe = 4)
-    val dist = Similarity.knnGraph(emb, k = 3, numCentroids = 4, nprobe = 4,
-      exhaustiveKernelMaxRows = 0)
+    val dist = graft.util.FastPaths.forced(Similarity.knnGraph(emb, k = 3, numCentroids = 4, nprobe = 4))
     assert(fast.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(fast.schema("src_id").dataType === IntegerType)
@@ -71,8 +70,7 @@ class FastPathTypeGateSpec extends SparkSpec {
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("emb"),
         col("label").cast("long").as("label"))
     val fast = Similarity.hardNegatives(emb, k = 5, numCentroids = 16, nprobe = 16)
-    val dist = Similarity.hardNegatives(emb, k = 5, numCentroids = 16, nprobe = 16,
-      exhaustiveKernelMaxRows = 0)
+    val dist = graft.util.FastPaths.forced(Similarity.hardNegatives(emb, k = 5, numCentroids = 16, nprobe = 16))
     assert(fast.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(fast.collect().toSet === dist.collect().toSet)

@@ -191,9 +191,9 @@ class MultiProbeSpec extends SparkSpec {
       "flips>0 must be a superset of the home-bucket pair set")
     assert(probed.count() >= base.count())
     // and both lanes of the probed plan agree (fused kernel vs join verify)
-    val forced = Similarity.embeddingNearDups(emb, threshold = 0.2,
-      numTables = 4, bitsPerTable = 5, probeFlips = 2, kernelVerifyMaxRows = 0)
-      .select("vec_a", "vec_b")
+    val forced = graft.util.FastPaths.forced(Similarity.embeddingNearDups(emb, threshold = 0.2,
+      numTables = 4, bitsPerTable = 5, probeFlips = 2)
+      .select("vec_a", "vec_b"))
     assert(probed.except(forced).count() === 0)
     assert(forced.except(probed).count() === 0)
   }

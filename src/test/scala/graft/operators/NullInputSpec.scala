@@ -59,12 +59,11 @@ class NullInputSpec extends SparkSpec {
       (1L, Array(1.0, 0.0)), (2L, null.asInstanceOf[Array[Double]]),
       (3L, Array(0.9, 0.1)), (4L, Array(0.0, 1.0))
     ).toDF("vec_id", "emb")
-    for (ceiling <- Seq(65536L, 0L)) {
-      val out = Similarity.knnGraph(emb, k = 2, numCentroids = 2, nprobe = 2,
-        exhaustiveKernelMaxRows = ceiling)
+    for (forced <- Seq(false, true)) graft.util.FastPaths.forcedIf(forced) {
+      val out = Similarity.knnGraph(emb, k = 2, numCentroids = 2, nprobe = 2)
       assert(out.filter(col("src_id") === 2L || col("neighbor_id") === 2L)
-        .count() === 0, s"ceiling=$ceiling")
-      assert(out.filter(col("src_id") === 1L).count() > 0, s"ceiling=$ceiling")
+        .count() === 0, s"forced=$forced")
+      assert(out.filter(col("src_id") === 1L).count() > 0, s"forced=$forced")
     }
   }
 
@@ -78,8 +77,8 @@ class NullInputSpec extends SparkSpec {
     ).toDF("vec_id", "emb")
     val fast = Similarity.knnGraph(emb, k = 2, numCentroids = 2, nprobe = 2)
       .collect().toSet
-    val dist = Similarity.knnGraph(emb, k = 2, numCentroids = 2, nprobe = 2,
-      exhaustiveKernelMaxRows = 0).collect().toSet
+    val dist = graft.util.FastPaths.forced(Similarity.knnGraph(emb, k = 2, numCentroids = 2, nprobe = 2)
+      .collect().toSet)
     assert(fast === dist)
     assert(fast.forall(r => !r.getDouble(2).isNaN))
     assert(fast.filter(_.getLong(0) == 2L).forall(_.getDouble(2) == 0.0))

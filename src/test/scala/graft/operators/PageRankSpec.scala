@@ -33,15 +33,16 @@ class PageRankSpec extends SparkSpec {
 
   test("bit-identical under adversarial partitionings (the determinism contract)") {
     import spark.implicits._
-    // smallGraphEdges = 0 forces the DISTRIBUTED loop — partitioning only
+    // FastPaths.forced runs the DISTRIBUTED loop — partitioning only
     // exists there
     val e = diamond.toDF("src_id", "dst_id")
-    val a = PageRank.pageRank(e.repartition(7), iters = 5, smallGraphEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = PageRank.pageRank(e.repartitionByRange(3, col("dst_id")), iters = 5,
-        smallGraphEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a === b)
+    graft.util.FastPaths.forced {
+      val a = PageRank.pageRank(e.repartition(7), iters = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val b = PageRank.pageRank(e.repartitionByRange(3, col("dst_id")), iters = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(a === b)
+    }
   }
 
   test("driver fast path is bit-equal to the distributed loop") {
@@ -52,8 +53,8 @@ class PageRankSpec extends SparkSpec {
     Seq(1, 4, 10).foreach { iters =>
       val fast = PageRank.pageRank(e, iters = iters)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = PageRank.pageRank(e, iters = iters, smallGraphEdges = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = graft.util.FastPaths.forced(PageRank.pageRank(e, iters = iters)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(fast === dist, s"iters=$iters")
       assert(fast === ref(g, iters), s"iters=$iters vs reference")
     }

@@ -68,7 +68,5 @@ class ProbeIndexLayoutSpec extends SparkSpec {
           s"postings mismatch for band=$b")
       }
     }
-    // both gated builders refuse the same oversized input
-    assert(Dedup.buildHistoryProbeIndexFused(docs, maxBytes = 1L).isEmpty)
   }
 }

@@ -21,7 +21,7 @@ object ProfNgramMain {
     t("warm_fused") { Dedup.ngramJaccard(docs, threshold = 0.5).count() }
     for (i <- 1 to 2) t(s"fused_$i") { Dedup.ngramJaccard(docs, threshold = 0.5).count() }
     for (i <- 1 to 2) t(s"join_$i") {
-      Dedup.ngramJaccard(docs, threshold = 0.5, probeIndexMaxBytes = 0).count()
+      graft.util.FastPaths.forced(Dedup.ngramJaccard(docs, threshold = 0.5).count())
     }
     // phase decomposition of the fused path
     val sigs = t("sign") { val s = Dedup.minHashSignatures(docs).localCheckpoint(); s.count(); s }

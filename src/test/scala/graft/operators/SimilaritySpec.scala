@@ -317,9 +317,9 @@ class SimilaritySpec extends SparkSpec {
     val fused = Similarity.embeddingNearDups(embeddings, threshold = 0.3,
         numTables = 16, bitsPerTable = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val joined = Similarity.embeddingNearDups(embeddings, threshold = 0.3,
-        numTables = 16, bitsPerTable = 4, kernelVerifyMaxRows = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val joined = graft.util.FastPaths.forced(Similarity.embeddingNearDups(embeddings, threshold = 0.3,
+        numTables = 16, bitsPerTable = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     assert(fused === joined)
     assert(fused.nonEmpty)
   }
@@ -391,8 +391,8 @@ class SimilaritySpec extends SparkSpec {
     // is the BLOCKED pair enumeration (grid-decomposed flat blocks through
     // one narrow shuffle), not the cell join — the cell join at exhaustive
     // nprobe materialized N² rows each dragging two dim-length arrays.
-    val exactBlocked = Similarity.knnGraph(emb, k = 5, numCentroids = 16, nprobe = 16,
-      exhaustiveKernelMaxRows = 0)
+    val exactBlocked = graft.util.FastPaths.forced(
+      Similarity.knnGraph(emb, k = 5, numCentroids = 16, nprobe = 16))
     assert(exactBlocked.exceptAll(exact).isEmpty && exact.exceptAll(exactBlocked).isEmpty,
       "blocked exhaustive path differs from the fused kernel path")
     // plan shape: the kernel runs as an object map over packed blocks, and
@@ -414,6 +414,42 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.5, f"pruned-graph recall $recall%.3f below 0.5")
   }
 
+  test("a repeated vec_id never neighbors its twin: default plan equals forced, knn + hard negatives") {
+    // every branch excludes self by id (by label when label-filtered); an
+    // exhaustive kernel that excluded by row index paired the two rows of
+    // id 7 at sim 1.0 while the blocked distributed plan did not
+    import spark.implicits._
+    val emb = Seq((1L, Array(1.0, 0.0), 0L), (7L, Array(0.9, 0.1), 1L),
+      (7L, Array(0.9, 0.1), 2L), (3L, Array(0.0, 1.0), 0L),
+      (4L, Array(0.5, 0.5), 1L), (5L, Array(0.2, 0.8), 2L)).toDF("vec_id", "emb", "label")
+    def knn() = Similarity.knnGraph(emb.drop("label"), k = 2, numCentroids = 2, nprobe = 2)
+      .collect().toSet
+    val fast = knn()
+    assert(fast === graft.util.FastPaths.forced(knn()))
+    assert(!fast.exists(r => r.getLong(0) == r.getLong(1)), fast)
+    assert(fast.exists(_.getLong(0) == 7L))
+    def hard() = Similarity.hardNegatives(emb, k = 2, numCentroids = 2, nprobe = 2)
+      .collect().toSet
+    assert(hard() === graft.util.FastPaths.forced(hard()))
+  }
+
+  test("embeddingNearDups: a stale knownLiveCount never truncates the fused verify") {
+    // just past the verify ceiling, every vector with an identical twin: a
+    // row the capped collect drops always has its twin pair in the
+    // collision multiset, so a truncated lookup map fails the kernel. The
+    // gate's over-full collect falls through to the distributed verify.
+    val n = graft.util.FastPaths.VerifyRows / 2 + 1
+    val emb = spark.range(n)
+      .select(explode(array(col("id") * 2, col("id") * 2 + 1)).as("vec_id"),
+        array((0 until 16).map(d => sin(col("id") * (0.7 * (d + 1)) + d)): _*).as("emb"))
+    def run() = Similarity.embeddingNearDups(emb, numTables = 1, bitsPerTable = 16,
+        knownLiveCount = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val got = run()
+    assert(got === graft.util.FastPaths.forced(run()))
+    assert((0L until n).forall(i => got.contains((2 * i, 2 * i + 1, 1.0))))
+  }
+
   test("pruned-regime fused kernel == pruned cell-join plan (knn + hard negatives)") {
     // round-20 internals change: under the kernel ceiling the pruned
     // nprobe < numCentroids regime runs a broadcast kernel over home-cell
@@ -423,16 +459,16 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("emb"))
     val kern = Similarity.knnGraph(emb, k = 5, numCentroids = 16, nprobe = 4,
       quantizer = Similarity.knuthCentroids)
-    val join = Similarity.knnGraph(emb, k = 5, numCentroids = 16, nprobe = 4,
-      quantizer = Similarity.knuthCentroids, exhaustiveKernelMaxRows = 0)
+    val join = graft.util.FastPaths.forced(Similarity.knnGraph(emb, k = 5, numCentroids = 16, nprobe = 4,
+      quantizer = Similarity.knuthCentroids))
     assert(kern.exceptAll(join).isEmpty && join.exceptAll(kern).isEmpty,
       "pruned fused kernel differs from the pruned cell-join plan")
     assert(kern.count() > 0)
     val lab = emb.withColumn("label", col("vec_id") % 7)
     val hkern = Similarity.hardNegatives(lab, k = 5, numCentroids = 16, nprobe = 4,
       quantizer = Similarity.knuthCentroids)
-    val hjoin = Similarity.hardNegatives(lab, k = 5, numCentroids = 16, nprobe = 4,
-      quantizer = Similarity.knuthCentroids, exhaustiveKernelMaxRows = 0)
+    val hjoin = graft.util.FastPaths.forced(Similarity.hardNegatives(lab, k = 5, numCentroids = 16, nprobe = 4,
+      quantizer = Similarity.knuthCentroids))
     assert(hkern.exceptAll(hjoin).isEmpty && hjoin.exceptAll(hkern).isEmpty,
       "pruned label-filtered kernel differs from the pruned cell-join plan")
     assert(hkern.count() > 0)

@@ -51,14 +51,14 @@ class Round11PlanShapesSpec extends SparkSpec {
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("emb"),
         col("label").cast("long").as("label"))
-    // force the distributed path (exhaustiveKernelMaxRows = 0): below the
+    // force the distributed path (FastPaths.forced): below the
     // ceiling the entry picks the fused exhaustive kernel. Since round 15
     // the over-ceiling exhaustive plan is the BLOCKED pair enumeration
     // (packed flat blocks, one narrow shuffle, label filter in-kernel) —
     // the cell join at exhaustive nprobe was an N²-wide-row trap. The
     // invariant: an object-map kernel over blocks, nothing corpus-sized
     // broadcast, no nested loop.
-    val p = plan(Similarity.hardNegatives(emb, k = 5, exhaustiveKernelMaxRows = 0))
+    val p = graft.util.FastPaths.forced(plan(Similarity.hardNegatives(emb, k = 5)))
     assert(p.contains("MapPartitions"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoop") && !p.contains("CartesianProduct"))
     assert(!p.contains("BroadcastHashJoin"), p.take(2000))

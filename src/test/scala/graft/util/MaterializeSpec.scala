@@ -74,10 +74,10 @@ class MaterializeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-cc")
     try {
       sc.setCheckpointDir(dir.toString)
-      // force the distributed loop (smallGraphEdges = 0) so every
+      // force the distributed loop (FastPaths.forced) so every
       // Materialize.cut in it takes the reliable-checkpoint branch
-      val got = graft.operators.Dedup.nearDupClusters(pairs, smallGraphEdges = 0L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val got = FastPaths.forced(graft.operators.Dedup.nearDupClusters(pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
       assert(got === expected)
     } finally {
       sc.setCheckpointDir(null)
