@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, MicroBatchStream, Offset, PartitionOffset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, MicroBatchStream, Offset, PartitionOffset, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -237,8 +237,10 @@ class QueueReaderFactory(opts: GraftOptions, requiredSchema: StructType)
 }
 
 /**
- * Reads one queue's offset range [start, stop) into rows. Lines before
- * `start` are skipped by bytes, never decoded. The one message selector
+ * Reads one queue's offset range [start, stop) into rows. The cursor
+ * opens at the log's index entry at or below `start`, and the lines
+ * between are skipped by bytes, never decoded (their count is the
+ * `graft_lines_skipped` metric). The one message selector
  * of every read mode lives here: the accepted tag set and the
  * equality-conjunction property filter (the reference consumer's tag and
  * SQL92 property selectors, reference: example/PropertyFilterExamples.java:33)
@@ -252,7 +254,7 @@ class QueuePartitionReader(opts: GraftOptions, requiredSchema: StructType,
     extends ContinuousPartitionReader[InternalRow] {
 
   protected val cursor =
-    new TopicLog.LineCursor(TopicLog.queueFile(opts.rootDir, topic, queueId), start, stop)
+    TopicLog.cursor(TopicLog.queueFile(opts.rootDir, topic, queueId), start, stop)
   private val acceptedTags: Set[String] =
     if (opts.tag == null || opts.tag == "*" || opts.tag.isEmpty) null
     else opts.tag.split("\\|\\|").map(_.trim).toSet
@@ -304,7 +306,8 @@ class QueuePartitionReader(opts: GraftOptions, requiredSchema: StructType,
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     Array(Metrics.Value(Metrics.MessagesRead, messagesRead),
       Metrics.Value(Metrics.MessagesFiltered, messagesFiltered),
-      Metrics.Value(Metrics.BytesRead, bytesRead))
+      Metrics.Value(Metrics.BytesRead, bytesRead),
+      Metrics.Value(Metrics.LinesSkipped, cursor.linesSkipped))
 
   override def close(): Unit = cursor.close()
 }
@@ -335,7 +338,7 @@ object QueueOffsets {
  */
 class MessageQueueMicroBatchStream(opts: GraftOptions,
     requiredSchema: StructType = MessageQueueTable.Schema)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   private def queues: Seq[Int] = TopicLog.listQueues(opts.rootDir, opts.topic)
 
@@ -343,8 +346,28 @@ class MessageQueueMicroBatchStream(opts: GraftOptions,
     * even while producers keep appending. */
   private var availableNowTarget: Option[Map[Int, Long]] = None
 
-  private def currentMax: Map[Int, Long] =
-    queues.map(q => q -> TopicLog.maxOffset(opts.rootDir, opts.topic, q)).toMap
+  /** The log ends the last [[currentMax]] saw: what lag is measured against. */
+  @volatile private var lastMax: Map[Int, Long] = Map.empty
+
+  private def currentMax: Map[Int, Long] = {
+    lastMax = queues.map(q => q -> TopicLog.maxOffset(opts.rootDir, opts.topic, q)).toMap
+    lastMax
+  }
+
+  /** Consumer lag in `StreamingQueryProgress.sources(i).metrics`: the
+    * largest and the total per-queue distance from the consumed offset to
+    * the log end this trigger planned against (Kafka's
+    * `maxOffsetsBehindLatest`, plus the sum). It reuses the ends
+    * [[currentMax]] already read, so reporting scans no log. */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] =
+    if (latestConsumedOffset.isEmpty) java.util.Collections.emptyMap()
+    else {
+      val consumed = latestConsumedOffset.get.asInstanceOf[QueueOffsets].offsets
+      val lags = lastMax.map { case (q, end) => math.max(0L, end - consumed.getOrElse(q, 0L)) }
+      scala.jdk.CollectionConverters.MapHasAsJava(Map(
+        "maxOffsetsBehindLatest" -> lags.maxOption.getOrElse(0L).toString,
+        "sumOffsetsBehindLatest" -> lags.sum.toString)).asJava
+    }
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(currentMax)

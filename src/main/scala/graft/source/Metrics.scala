@@ -13,6 +13,7 @@ object Metrics {
   final val MessagesRead = "graft_messages_read"
   final val MessagesFiltered = "graft_messages_filtered"
   final val BytesRead = "graft_bytes_read"
+  final val LinesSkipped = "graft_lines_skipped"
   final val MessagesWritten = "graft_messages_written"
   final val BytesWritten = "graft_bytes_written"
 
@@ -28,6 +29,10 @@ object Metrics {
     override def name(): String = BytesRead
     override def description(): String = "message body bytes read"
   }
+  final class LinesSkippedMetric extends CustomSumMetric {
+    override def name(): String = LinesSkipped
+    override def description(): String = "lines walked undecoded below a read's first offset"
+  }
   final class MessagesWrittenMetric extends CustomSumMetric {
     override def name(): String = MessagesWritten
     override def description(): String = "messages written"
@@ -38,7 +43,8 @@ object Metrics {
   }
 
   def readMetrics: Array[CustomMetric] =
-    Array(new MessagesReadMetric, new MessagesFilteredMetric, new BytesReadMetric)
+    Array(new MessagesReadMetric, new MessagesFilteredMetric, new BytesReadMetric,
+      new LinesSkippedMetric)
 
   def writeMetrics: Array[CustomMetric] =
     Array(new MessagesWrittenMetric, new BytesWrittenMetric)

@@ -24,6 +24,11 @@ final case class Message(
  * Line format (tab-separated): `bornTs \t key \t tag \t k=v;k=v \t body`,
  * with backslash/tab/newline/CR escaped inside every field, so arbitrary
  * bodies round-trip. Append-only; one writer per queue (MQ semantics).
+ *
+ * Reads seek: each log has an in-memory [[PositionIndex]] (an entry every
+ * [[Stride]] lines, built by the cursors that walk the log), so a read
+ * opens at the entry at or below its first offset and walks fewer than
+ * [[Stride]] lines, and [[searchOffset]] scans at most one stride.
  */
 object TopicLog {
 
@@ -163,19 +168,101 @@ object TopicLog {
     n
   }
 
-  /** Earliest available offset (our logs never truncate). */
+  /** Earliest available offset: always 0. A log is never trimmed at its
+    * head (a ledger repair only cuts an uncommitted tail), so an offset is
+    * a stable line number and a [[PositionIndex]] entry below the
+    * committed end stays valid as the log grows. */
   def minOffset(root: String, topic: String, queueId: Int): Long = 0L
 
-  /** (complete lines, bytes up to the last newline) already counted per
-    * log, keyed by absolute path. Append-only logs only ever grow, so a
-    * cached prefix stays valid and each call scans just the appended
-    * suffix. Without this, every streaming latestOffset() tick re-read the
-    * whole log — linear per tick, quadratic over a stream's lifetime. */
-  private val lineCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+  /** Lines between two [[PositionIndex]] entries: a seek walks fewer. */
+  private[graft] final val Stride = 1024
+
+  /** A position in a queue log: line `line` starts at byte `byte`, and
+    * `maxTs` is the largest bornTs of the lines before it (a line whose
+    * bornTs does not parse counts as Long.MaxValue). */
+  private[graft] final case class Mark(line: Long, byte: Long, maxTs: Long)
+
+  private[source] val Start = Mark(0L, 0L, Long.MinValue)
+
+  /**
+   * Sparse in-memory position index of one queue log (the analog of a
+   * broker's offset index, e.g. RocketMQ's ConsumeQueue): entry k is the
+   * [[Mark]] of line k * [[Stride]], and `end` is the complete-line end the
+   * last [[sizeInfo]] counted. Every [[LineCursor]] records each stride
+   * boundary it passes, so a full walk (the first `sizeInfo` of a raw log,
+   * or a cold read) builds the index, and later reads open at the entry
+   * below their first offset instead of at line 0. A cursor only passes
+   * complete lines below its stop, so no entry lies past a ledger mark or
+   * in a torn tail.
+   *
+   * Derived data, never written to disk: a copy on disk would have
+   * torn-write and staleness cases of its own, to save one walk per JVM
+   * per log. It is dropped when the log is repaired
+   * ([[EpochLedger.truncateQueue]] → [[invalidateCache]]) or deleted
+   * ([[deleteTopic]]), when the file is shorter than `end`, when a cursor
+   * opened at a mark finds no '\n' just before it, and when a cursor
+   * reaches an entry's line at another byte.
+   */
+  private[graft] final class PositionIndex(key: String) {
+    private var bytes = new Array[Long](16)
+    private var maxTs = new Array[Long](16)
+    private var n = 1 // entry 0 is Start
+    maxTs(0) = Long.MinValue
+    @volatile var end: Mark = Start
+
+    private def entry(k: Long): Mark = Mark(k * Stride, bytes(k.toInt), maxTs(k.toInt))
+
+    /** Where a read of lines from `from` opens: the last entry at or below it. */
+    def seekPoint(from: Long): Mark = synchronized(entry(math.min(math.max(from, 0L) / Stride, n - 1L)))
+
+    /** Where a search for the first bornTs >= ts below `stop` opens: the
+      * last entry at or below `stop` whose earlier lines all have bornTs <
+      * ts, found by binary search (maxTs never decreases along the log).
+      * The answer lies in the stride after it, or past the last entry. */
+    def searchPoint(ts: Long, stop: Long): Mark = synchronized {
+      var lo = 0L
+      var hi = math.min(stop / Stride, n - 1L)
+      while (lo < hi) {
+        val mid = (lo + hi + 1) >>> 1
+        if (maxTs(mid.toInt) < ts) lo = mid else hi = mid - 1
+      }
+      entry(lo)
+    }
+
+    /** A cursor reached line k * Stride at `byte`, `max` the bornTs maximum
+      * below it: record the next entry, or drop the index if the entry
+      * already there disagrees. */
+    def pass(k: Long, byte: Long, max: Long): Unit = synchronized {
+      if (k == n) {
+        if (n == bytes.length) {
+          bytes = java.util.Arrays.copyOf(bytes, n * 2)
+          maxTs = java.util.Arrays.copyOf(maxTs, n * 2)
+        }
+        bytes(n) = byte; maxTs(n) = max; n += 1
+      } else if (k < n && bytes(k.toInt) != byte) drop()
+    }
+
+    def entries: Seq[Mark] = synchronized((0 until n).map(k => entry(k.toLong)))
+
+    def drop(): Unit = { positionIndexes.remove(key, this); () }
+  }
+
+  /** One [[PositionIndex]] per queue log, keyed by absolute path. */
+  private val positionIndexes =
+    new java.util.concurrent.ConcurrentHashMap[String, PositionIndex]()
+
+  private[graft] def indexOf(file: File): PositionIndex =
+    positionIndexes.computeIfAbsent(file.getAbsolutePath, k => new PositionIndex(k))
 
   private[graft] def invalidateCache(file: File): Unit = {
-    lineCountCache.remove(file.getAbsolutePath); ()
+    positionIndexes.remove(file.getAbsolutePath); ()
+  }
+
+  /** A cursor over lines [from, stop) opened at the index entry at or
+    * below `from`: the one place a read chooses where to start. */
+  private[source] def cursor(file: File, from: Long, stop: Long): LineCursor = {
+    val index = indexOf(file)
+    new LineCursor(file, from, stop, index, index.seekPoint(from))
   }
 
   /** One past the last offset. For a ledger-managed topic this is the
@@ -190,36 +277,41 @@ object TopicLog {
       case None => sizeInfo(root, topic, queueId)._1
     }
 
-  /** (complete lines, bytes up to the last newline) of a queue log, from
-    * the cached count plus a scan of the suffix appended since. The raw
-    * branch of [[maxOffset]], and what the first ledger-managed write uses
-    * to ADOPT pre-existing raw content as committed instead of shadowing
-    * it. */
+  /** (complete lines, bytes up to the last newline) of a queue log: the
+    * index's `end` plus a walk of the suffix appended since, which extends
+    * the index. Append-only logs only grow, so without new bytes this is
+    * one stat; a streaming latestOffset() tick never rereads the log. The
+    * raw branch of [[maxOffset]], and what the first ledger-managed write
+    * uses to ADOPT pre-existing raw content as committed instead of
+    * shadowing it. */
   private[graft] def sizeInfo(root: String, topic: String, queueId: Int): (Long, Long) = {
     val file = queueFile(root, topic, queueId)
-    val key = file.getAbsolutePath
-    val cached = lineCountCache.getOrDefault(key, (0L, 0L))
     val fileLen = file.length()
-    // a shorter file means the log was deleted (or recreated) — rescan
-    val (lines, bytes) = if (fileLen < cached._2) (0L, 0L) else cached
-    if (fileLen == bytes) return (lines, bytes)
-    val c = new LineCursor(file, lines, Long.MaxValue, lines, bytes)
+    val end = indexOf(file).end
+    if (fileLen == end.byte) return (end.line, end.byte)
+    // a shorter file means the log was deleted, recreated or cut: re-index
+    if (fileLen < end.byte) invalidateCache(file)
+    val index = indexOf(file)
+    val c = new LineCursor(file, 0L, Long.MaxValue, index, index.end)
     try {
       while (c.advance()) {}
-      val counted = (c.next, c.nextByte)
-      lineCountCache.put(key, counted)
-      counted
+      c.index.end = c.mark
+      (c.next, c.nextByte)
     } finally c.close()
   }
 
-  /** First offset whose bornTs >= ts; maxOffset if none (logs are
-    * time-ordered per queue, like broker commit logs). The scan stops at
-    * maxOffset, so it never reads past a ledgered topic's committed
-    * high-water mark or into a torn tail line, and an endTimeMs-bounded
-    * read using this as its stop offset cannot expose either. */
+  /** First offset whose bornTs >= ts; maxOffset if none — the answer of a
+    * linear scan, also when bornTs is out of order, found from the
+    * index's bornTs maxima and a scan of at most one stride past the last
+    * entry below it. The scan stops at maxOffset, so it never reads past
+    * a ledgered topic's committed high-water mark or into a torn tail
+    * line, and an endTimeMs-bounded read using this as its stop offset
+    * cannot expose either. */
   def searchOffset(root: String, topic: String, queueId: Int, ts: Long): Long = {
     val stop = maxOffset(root, topic, queueId)
-    val c = new LineCursor(queueFile(root, topic, queueId), 0L, stop)
+    val file = queueFile(root, topic, queueId)
+    val index = indexOf(file)
+    val c = new LineCursor(file, 0L, stop, index, index.searchPoint(ts, stop))
     try {
       while (c.advance()) if (c.bornTs() >= ts) return c.offset
       stop
@@ -239,14 +331,18 @@ object TopicLog {
   }
 
   /** Forward cursor over the complete lines of one queue log, opened at a
-    * known (line, byte) position. Line ends are found in raw bytes and a
-    * line is decoded only when asked ([[bornTs]] or [[message]]), so a
-    * skipped line costs a newline search, not a UTF-8 decode. [[advance]]
+    * [[Mark]] of its [[PositionIndex]] at or below `from`. Line ends are
+    * found in raw bytes and a line is decoded only when asked ([[bornTs]]
+    * or [[message]]), so a skipped line costs a newline search and a
+    * bornTs parse, not a UTF-8 decode. [[advance]]
     * yields only lines with `from <= offset < stop` (`stop`: the caller's
-    * ledger mark or complete-line count), never an unterminated tail. A
-    * missing file reads as empty. */
+    * ledger mark or complete-line count), never an unterminated tail, and
+    * records every stride boundary it passes in the index. A cursor opened
+    * past byte 0 first checks that the byte before its mark is '\n'; if
+    * not, the log changed under the index, which is dropped, and the
+    * cursor restarts at line 0. A missing file reads as empty. */
   private[source] final class LineCursor(file: File, from: Long, private var stop: Long,
-      line: Long = 0L, byte: Long = 0L) extends AutoCloseable {
+      private[source] var index: PositionIndex, at: Mark) extends AutoCloseable {
     private var ch: FileChannel = null
     private var buf = new Array[Byte](64 * 1024)
     private var pos = 0 // start of the next unconsumed line in buf
@@ -255,14 +351,21 @@ object TopicLog {
     private var lineStart = 0
     private var lineEnd = 0
 
-    private var nextLine = line
-    private var nextPos = byte
+    private var openLine = at.line
+    private var nextLine = at.line
+    private var nextPos = at.byte
+    private var maxTs = at.maxTs // bornTs maximum of the lines before nextLine
     /** Offset and byte position of the next line to consume. */
     def next: Long = nextLine
     def nextByte: Long = nextPos
+    /** The position of the next line to consume, as an index mark. */
+    def mark: Mark = Mark(nextLine, nextPos, maxTs)
 
     /** Offset of the line the last successful [[advance]] yielded. */
     def offset: Long = nextLine - 1
+
+    /** Lines consumed undecoded below `from`: the seek cost of this read. */
+    def linesSkipped: Long = math.max(0L, math.min(nextLine, from) - openLine)
 
     /** Move to the next complete line in [from, stop); false when there
       * is none (yet). Lines below `from` are consumed undecoded. */
@@ -277,7 +380,9 @@ object TopicLog {
         }
         lineStart = pos; lineEnd = nl
         pos = nl + 1; scanned = pos
+        maxTs = math.max(maxTs, indexedBornTs())
         nextLine += 1; nextPos += pos - lineStart
+        if (nextLine % Stride == 0) index.pass(nextLine / Stride, nextPos, maxTs)
         if (nextLine > from) return true
       }
       false
@@ -290,6 +395,11 @@ object TopicLog {
       if (ch == null) {
         if (!file.exists()) return false
         ch = FileChannel.open(file.toPath, StandardOpenOption.READ)
+        if (nextPos > 0 && !followsNewline(nextPos)) {
+          index.drop()
+          index = indexOf(file)
+          openLine = 0L; nextLine = 0L; nextPos = 0L; maxTs = Long.MinValue
+        }
         ch.position(nextPos)
       }
       if (pos > 0) {
@@ -300,6 +410,13 @@ object TopicLog {
       val n = ch.read(ByteBuffer.wrap(buf, lim, buf.length - lim))
       if (n > 0) lim += n
       n > 0
+    }
+
+    /** Whether the byte before `byte` is a line end: the one read that
+      * checks an index mark still fits the file. */
+    private def followsNewline(byte: Long): Boolean = {
+      val one = ByteBuffer.allocate(1)
+      ch.read(one, byte - 1) == 1 && one.get(0) == '\n'
     }
 
     /** Raise the stop line to follow a growing log; false if `newStop`
@@ -320,6 +437,12 @@ object TopicLog {
       java.lang.Long.parseLong(new String(buf, lineStart, end - lineStart, StandardCharsets.US_ASCII))
     }
 
+    /** The current line's bornTs as the index folds it: Long.MaxValue when
+      * it does not parse, so a search lands in that line's stride and its
+      * strict [[bornTs]] fails there, as a linear scan would. */
+    private def indexedBornTs(): Long =
+      try bornTs() catch { case _: NumberFormatException => Long.MaxValue }
+
     /** The current line, fully decoded. */
     def message(): Message =
       parseLine(new String(buf, lineStart, lineEnd - lineStart, StandardCharsets.UTF_8))
@@ -329,13 +452,15 @@ object TopicLog {
 
   /** Iterator over a queue range that can be closed before exhaustion
     * (a LIMITed scan stops early; the reader must not leak the handle).
-    * Lines before `startOffset` are skipped by bytes; only the range is
-    * decoded. */
+    * It opens at the index entry at or below `startOffset`; the lines
+    * between are skipped by bytes, and only the range is decoded. */
   final class RangeIterator(file: File, startOffset: Long, stopOffset: Long)
       extends Iterator[(Long, Message)] with AutoCloseable {
-    private val cursor = new LineCursor(file, startOffset, stopOffset)
+    private val cursor = TopicLog.cursor(file, startOffset, stopOffset)
     private def step(): Boolean = cursor.advance() || { cursor.close(); false }
     private var ready = step()
+    /** Lines walked undecoded below `startOffset`. */
+    def linesSkipped: Long = cursor.linesSkipped
     override def hasNext: Boolean = ready
     override def next(): (Long, Message) = {
       if (!ready) throw new NoSuchElementException("end of queue range")
@@ -355,9 +480,9 @@ object TopicLog {
   def deleteTopic(root: String, topic: String): Unit = {
     val dir = Paths.get(root, topic)
     graft.util.Fs.deleteRecursively(dir)
-    // drop cached line counts for the deleted logs — a recreated log of
-    // exactly the cached byte length would otherwise reuse a stale count
+    // drop the deleted logs' indexes — a recreated log of exactly the
+    // indexed byte length would otherwise reuse a stale end and marks
     val prefix = dir.toAbsolutePath.toString + File.separator
-    lineCountCache.keySet().removeIf(k => k.startsWith(prefix))
+    positionIndexes.keySet().removeIf(k => k.startsWith(prefix))
   }
 }

@@ -157,6 +157,48 @@ class ExactlyOnceSpec extends SparkSpec {
     assert(future.count() === 0L)
   }
 
+  test("reads after a truncateQueue repair and re-append see the replayed lines") {
+    val root = Files.createTempDirectory("graft-eo-reidx").toString
+    val S = TopicLog.Stride
+    val committed = (0 until 2 * S + 100).map(i => s"c$i")
+    epoch(root, 0, committed)
+    // a crashed epoch-1 attempt appends past the mark; readers index only
+    // below it
+    val w = writer(root, 0, 1)
+    (0 until S).foreach(i => w.write(row(s"crashed-attempt-$i")))
+    w.commit()
+    assert(bodies(root) === committed)
+    val f = TopicLog.queueFile(root, "eo", 0)
+    assert(TopicLog.indexOf(f).entries.map(_.line) === Seq(0L, S.toLong, 2L * S))
+    // the replay repairs the tail and appends lines of other lengths
+    val replayed = (0 until S).map(i => s"r$i")
+    epoch(root, 1, replayed)
+    val all = committed ++ replayed
+    assert(bodies(root) === all)
+    for (a <- Seq(S - 1, 2 * S, 2 * S + 99, 2 * S + 100, 2 * S + 101, 3 * S - 1, 3 * S, 3 * S + 1)) {
+      val got = TopicLog.readRange(root, "eo", 0, a, math.min(all.size, a + 5)).map(_._2.body).toSeq
+      assert(got === all.slice(a, a + 5), s"from $a")
+    }
+    assert(TopicLog.indexOf(f).entries.map(_.line) === (0 to 3).map(_.toLong * S))
+  }
+
+  test("a torn tail past the ledger mark is never indexed or read") {
+    val root = Files.createTempDirectory("graft-eo-tornidx").toString
+    val S = TopicLog.Stride
+    epoch(root, 0, (0 until S + 10).map(i => s"c$i"))
+    val mark = EpochLedger.read(root, "eo").get.committed(0)
+    val f = TopicLog.queueFile(root, "eo", 0)
+    // complete uncommitted lines reaching the next stride, then a torn one
+    val out = new java.io.FileOutputStream(f, true)
+    try out.write(((0 until S).map(i => s"9\tk\tt\t\tuncommitted-$i\n").mkString +
+      "1700000000000\tk\tt\t\ttorn").getBytes) finally out.close()
+    assert(bodies(root) === (0 until S + 10).map(i => s"c$i"))
+    assert(TopicLog.searchOffset(root, "eo", 0, Long.MaxValue) === S + 10L)
+    val entries = TopicLog.indexOf(f).entries
+    assert(entries.map(_.line) === Seq(0L, S.toLong))
+    assert(entries.forall(e => e.line <= mark._1 && e.byte <= mark._2))
+  }
+
   test("ledger publish is atomic and round-trips state") {
     val root = Files.createTempDirectory("graft-eo-led").toString
     val st = EpochLedger.State("query id with spaces", 7L,

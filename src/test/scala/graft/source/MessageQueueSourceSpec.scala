@@ -251,6 +251,26 @@ class MessageQueueSourceSpec extends SparkSpec {
     assert(out.select("queue_id", "offset").distinct().count() === 100)
   }
 
+  test("StreamingQueryProgress reports per-queue lag from the planned log ends") {
+    val root = freshRoot()
+    seed(root, "lag1", queues = 2, perQueue = 50)
+    val q = spark.readStream.format("graft-mq")
+      .option("topic", "lag1").option("consumerGroup", "g").option("rootDir", root)
+      .option("offsetResetTo", "earliest")
+      .option("maxRowsPerTrigger", "20")
+      .load()
+      .writeStream.format("memory").queryName("mq_lag_" + System.nanoTime())
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(60000)
+    val lags = q.recentProgress.filter(_.numInputRows > 0).map { p =>
+      val m = p.sources.head.metrics
+      (m.get("maxOffsetsBehindLatest").toLong, m.get("sumOffsetsBehindLatest").toLong)
+    }.toSeq
+    // each batch takes 10 rows per queue from a 50-row queue
+    assert(lags === Seq((40L, 80L), (30L, 60L), (20L, 40L), (10L, 20L), (0L, 0L)))
+  }
+
   test("capAdvance splits the budget across queues proportionally to lag") {
     val stream = new MessageQueueMicroBatchStream(
       graft.config.GraftOptions("t", "g", freshRoot()))

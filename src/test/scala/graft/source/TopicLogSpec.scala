@@ -135,7 +135,7 @@ class TopicLogSpec extends AnyFunSuite {
     val root = tmpRoot()
     TopicLog.append(root, "t", 0, Seq(msg(1, "a"), msg(2, "b"), msg(3, "stale")).iterator)
     val f = TopicLog.queueFile(root, "t", 0)
-    val c = new TopicLog.LineCursor(f, 0L, 2L)
+    val c = TopicLog.cursor(f, 0L, 2L)
     try {
       assert(c.advance() && c.advance() && !c.advance()) // "stale" sits in the read-ahead
       // a ledger repair cuts the line past the mark and a replay appends another
@@ -146,5 +146,127 @@ class TopicLogSpec extends AnyFunSuite {
       assert((c.offset, c.message().body) === ((2L, "fresh")))
       assert(!c.extendTo(3))
     } finally c.close()
+  }
+
+  // ---- position index ----
+
+  private val S = TopicLog.Stride
+
+  /** The whole log read cold, line by line, with the line parser: the
+    * linear reference every indexed read is compared against. */
+  private def coldLog(root: String, topic: String): Vector[Message] = {
+    val text = new String(Files.readAllBytes(TopicLog.queueFile(root, topic, 0).toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+    text.substring(0, text.lastIndexOf('\n') + 1).split("\n", -1).dropRight(1)
+      .map(TopicLog.parseLine).toVector
+  }
+
+  private def linearSearch(log: Vector[Message], ts: Long): Long = {
+    val i = log.indexWhere(_.bornTs >= ts)
+    if (i < 0) log.size.toLong else i.toLong
+  }
+
+  private def entries(root: String, topic: String): Seq[TopicLog.Mark] =
+    TopicLog.indexOf(TopicLog.queueFile(root, topic, 0)).entries
+
+  test("a 1,000-message read at the tail of a 100k-line log skips fewer than a stride") {
+    val root = tmpRoot()
+    TopicLog.append(root, "t", 0, (0 until 100000).iterator.map(i => msg(i.toLong, s"b$i")))
+    val max = TopicLog.maxOffset(root, "t", 0) // a raw log's first count walks it once
+    assert(max === 100000L)
+    val it = TopicLog.readRange(root, "t", 0, max - 1000, max)
+    assert(it.map(_._1).toSeq === (max - 1000 until max))
+    assert(it.linesSkipped < S)
+    // the DSv2 reader reports the same count as graft_lines_skipped
+    val opts = graft.config.GraftOptions("t", "g", root)
+    val r = new QueuePartitionReader(opts, MessageQueueTable.Schema, "t", 0, max - 1000, max)
+    try {
+      var n = 0
+      while (r.next()) n += 1
+      assert(n === 1000)
+      val skipped = r.currentMetricsValues().find(_.name() == Metrics.LinesSkipped).get.value()
+      assert(skipped < S && skipped === it.linesSkipped)
+    } finally r.close()
+  }
+
+  test("indexed readRange and searchOffset equal a cold linear scan (seeded logs)") {
+    for (seed <- Seq(1L, 7L, 42L, 2024L)) {
+      val rnd = new scala.util.Random(seed)
+      val root = tmpRoot()
+      val n = 4 * S + rnd.nextInt(S)
+      // bornTs mostly rises but jumps back and ahead, and repeats; a few
+      // bodies are longer than the cursor's 64 KB buffer
+      var ts = 1000L
+      val log = (0 until n).map { i =>
+        ts += rnd.nextInt(5) - 1
+        val born = if (rnd.nextInt(50) == 0) ts + rnd.nextInt(4000) - 2000 else ts
+        val body = if (rnd.nextInt(400) == 0) "L" * (65 * 1024 + rnd.nextInt(70000)) else s"b$i"
+        msg(born, body)
+      }
+      TopicLog.append(root, "t", 0, log.iterator)
+      assert(coldLog(root, "t") === log.toVector)
+      val starts = (1 to n / S).flatMap(k => Seq(k * S - 1, k * S, k * S + 1)) ++
+        Seq.fill(20)(rnd.nextInt(n)) :+ 0 :+ (n - 1)
+      val probes = Seq(Long.MinValue, Long.MaxValue, 0L) ++ Seq.fill(40)(log(rnd.nextInt(n)).bornTs) ++
+        Seq.fill(20)(800L + rnd.nextInt(4000))
+      def checkAll(): Unit = {
+        starts.foreach { a =>
+          val b = math.min(n, a + 1 + rnd.nextInt(3 * S))
+          val got = TopicLog.readRange(root, "t", 0, a, b).toSeq
+          assert(got === (a until b).map(i => (i.toLong, log(i))), s"seed $seed range [$a, $b)")
+        }
+        probes.foreach { p =>
+          assert(TopicLog.searchOffset(root, "t", 0, p) === linearSearch(log.toVector, p),
+            s"seed $seed ts $p")
+        }
+      }
+      // once from a cold index, which the range reads build as they go,
+      // then from the index that the first count builds
+      TopicLog.invalidateCache(TopicLog.queueFile(root, "t", 0))
+      checkAll()
+      TopicLog.invalidateCache(TopicLog.queueFile(root, "t", 0))
+      assert(TopicLog.maxOffset(root, "t", 0) === n.toLong)
+      assert(entries(root, "t").size === n / S + 1)
+      checkAll()
+      assert(entries(root, "t").size === n / S + 1)
+    }
+  }
+
+  test("a log recreated shorter after deleteTopic is read from its own lines") {
+    val root = tmpRoot()
+    TopicLog.append(root, "t", 0, (0 until 3 * S).iterator.map(i => msg(i.toLong, s"old$i")))
+    assert(TopicLog.maxOffset(root, "t", 0) === 3L * S)
+    assert(TopicLog.readRange(root, "t", 0, 2 * S + 5, 2 * S + 6).toSeq.head._2.body === s"old${2 * S + 5}")
+    TopicLog.deleteTopic(root, "t")
+    val fresh = (0 until S + S / 2).map(i => msg(i.toLong, s"new-$i-" + "x" * (i % 7)))
+    TopicLog.append(root, "t", 0, fresh.iterator)
+    assert(TopicLog.readRange(root, "t", 0, S + 3, S + 9).toSeq ===
+      (S + 3 until S + 9).map(i => (i.toLong, fresh(i))))
+    assert(TopicLog.maxOffset(root, "t", 0) === fresh.size.toLong)
+    assert(TopicLog.searchOffset(root, "t", 0, S + 10L) === S + 10L)
+  }
+
+  test("a raw rewrite that moves line boundaries is caught by the newline check") {
+    val root = tmpRoot()
+    val f = TopicLog.queueFile(root, "t", 0)
+    TopicLog.append(root, "t", 0, (0 until 3 * S).iterator.map(i => msg(i.toLong, "a")))
+    assert(TopicLog.maxOffset(root, "t", 0) === 3L * S)
+    val stale = entries(root, "t")
+    assert(stale.size === 4)
+    // rewritten in place, outside truncateQueue: longer, with longer lines
+    val next = (0 until 5 * S).map(i => msg(10L * i, s"rewritten-$i"))
+    Files.write(f.toPath, next.map(m => TopicLog.renderLine(m) + "\n").mkString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val bytes = Files.readAllBytes(f.toPath)
+    // the stale marks and end now point into the middle of lines
+    (stale.tail :+ TopicLog.indexOf(f).end).foreach(m => assert(bytes((m.byte - 1).toInt) != '\n'))
+    assert(TopicLog.readRange(root, "t", 0, 2 * S + 7, 2 * S + 9).toSeq ===
+      Seq((2L * S + 7, next(2 * S + 7)), (2L * S + 8, next(2 * S + 8))))
+    assert(TopicLog.maxOffset(root, "t", 0) === 5L * S)
+    assert(TopicLog.searchOffset(root, "t", 0, 10L * (4 * S + 3)) === 4L * S + 3)
+    // the index was rebuilt from the new lines
+    val starts = (bytes.indices :+ bytes.length).filter(i => i == 0 || bytes(i - 1) == '\n')
+    assert(entries(root, "t").map(m => (m.line, m.byte)) ===
+      (0 to 5).map(k => (k.toLong * S, starts(k * S).toLong)))
   }
 }
