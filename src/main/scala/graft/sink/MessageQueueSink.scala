@@ -1,19 +1,27 @@
 package graft.sink
 
-import graft.source.{Message, TopicLog}
-import graft.util.Retry
+import graft.source.{EpochLedger, Message, TopicLog}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions.col
 
-/** Flush discipline for the writer (reference: legacy/RocketMQSink.java:60-150:
-  * batch mode buffers and flushes on size/checkpoint; async fires per message
-  * with retries). */
-sealed trait FlushMode
-object FlushMode {
-  /** Buffer `batchSize` messages per queue, then append in one IO. */
-  final case class Batch(batchSize: Int = 32) extends FlushMode
-  /** Append each message as it arrives (per-record IO, lowest latency). */
-  case object Async extends FlushMode
+/** A task's rendered lines on their way to one queue log: a private temp
+  * file (O(1) heap), which [[graft.source.EpochLedger.commitTask]] appends
+  * and deletes. An attempt that dies before its commit leaves the queue log
+  * untouched. */
+private[sink] final class Spill(prefix: String) {
+  val path: java.nio.file.Path = java.nio.file.Files.createTempFile(prefix, ".spill")
+  private val out = new java.io.BufferedWriter(new java.io.FileWriter(
+    path.toFile, java.nio.charset.StandardCharsets.UTF_8))
+  private var n = 0L
+  def lines: Long = n
+
+  /** Spill one message; returns its rendered line (no terminator). */
+  def write(m: Message): String = {
+    val line = TopicLog.renderLine(m)
+    out.write(line); out.newLine(); n += 1L
+    line
+  }
+  def close(): Unit = out.close()
+  def discard(): Unit = { out.close(); java.nio.file.Files.deleteIfExists(path); () }
 }
 
 /**
@@ -23,28 +31,29 @@ object FlushMode {
  * each task owns exactly one queue file — single-writer-per-queue, which is
  * the broker's own invariant and what makes appends safe under any
  * parallelism. At 100 TB this is one shuffle to align producers to queues,
- * then pure sequential appends.
+ * then pure sequential appends. Each task spills its rows per routed topic
+ * and commits each topic through the [[graft.source.EpochLedger]] protocol;
+ * the driver then publishes each topic's marks.
  *
  * The single-writer invariant assumes one live attempt per partition. With
  * speculative execution (spark.speculation=true) or a zombie task racing
- * its retry, two attempts of the same partition can append to the same
- * queue file concurrently and interleave partial lines (corruption, not
- * just duplication) — so `write` REFUSES to run with speculation enabled;
- * use the DSv2 writer (`df.write.format("graft-mq")`), whose per-attempt
- * spill + commit-coordinated append is retry-safe.
+ * its retry, two attempts of the same partition can repair and append to
+ * the same queue file concurrently and interleave partial lines
+ * (corruption, not just duplication) — so these paths REFUSE to run with
+ * speculation enabled; use the DSv2 writer (`df.write.format("graft-mq")`),
+ * whose commit-coordinated append is retry-safe.
  *
- * Topic routing goes through a [[TopicSelector]] (constant or field-driven),
- * retries through [[graft.util.Retry]] with the reference's backoff.
+ * Topic routing goes through a [[TopicSelector]] (constant or field-driven).
  */
 object MessageQueueSink {
 
   /**
-   * Refuses to run the legacy append path when speculative execution is on:
-   * two live attempts of one partition would both hold the same queue file
-   * and interleave partial lines. The DSv2 writer tolerates speculation
-   * because attempts spill privately and only the commit-coordinated winner
-   * appends (reference: legacy/RocketMQSink.java:60-150 single-writer
-   * semantics).
+   * Refuses to run the task-routed append paths when speculative execution
+   * is on: two live attempts of one partition would both hold the same
+   * queue file and interleave partial lines. The DSv2 writer tolerates
+   * speculation because attempts spill privately and only the
+   * commit-coordinated winner appends (reference:
+   * legacy/RocketMQSink.java:60-150 single-writer semantics).
    */
   private[sink] def assertNoSpeculation(conf: org.apache.spark.SparkConf): Unit =
     require(
@@ -54,208 +63,89 @@ object MessageQueueSink {
         "interleave appends). Disable spark.speculation or use the retry-safe " +
         "DSv2 writer: df.write.format(\"graft-mq\")")
 
+  /** A batch append: rows land after the marks of a ledger-managed topic
+    * and advance them (so they are visible and later repairs keep them); a
+    * raw topic is appended to as it is. */
   def write(
       df: DataFrame,
       rootDir: String,
       selector: TopicSelector[Map[String, Any]],
       converter: RowMessageConverter,
-      numQueues: Int = 8,
-      flushMode: FlushMode = FlushMode.Batch(32)): Unit = {
-    assertNoSpeculation(df.sparkSession.sparkContext.getConf)
-    val schema = df.schema
-    val fieldNames = schema.fieldNames
-    df.repartition(numQueues).foreachPartition { (rows: Iterator[Row]) =>
-      val queueId = org.apache.spark.TaskContext.getPartitionId()
-      // queue -> (topic, buffered messages)
-      val buffers = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Message]]
-      val batchSize = flushMode match {
-        case FlushMode.Batch(n) => n
-        case FlushMode.Async => 1
-      }
-      def flush(topic: String): Unit = {
-        val buf = buffers(topic)
-        if (buf.nonEmpty) {
-          Retry.call(s"append to $topic/queue-$queueId") {
-            TopicLog.append(rootDir, topic, queueId, buf.iterator)
-          }
-          buf.clear()
-        }
-      }
-      rows.foreach { row =>
-        val asMap = fieldNames.zip(row.toSeq).toMap
-        val topic = selector.getTopic(asMap)
-        val tag = selector.getTag(asMap)
-        val m0 = converter.convert(row)
-        val m = if (m0.tag.isEmpty && tag.nonEmpty) m0.copy(tag = tag) else m0
-        val buf = buffers.getOrElseUpdate(topic, scala.collection.mutable.ArrayBuffer.empty)
-        buf += m
-        if (buf.length >= batchSize) flush(topic)
-      }
-      buffers.keys.foreach(flush)
-    }
-  }
+      numQueues: Int = 8): Unit =
+    appendEpoch(df, None, rootDir, selector, converter, numQueues, "")
 
   /**
    * Streaming sink: `df.writeStream.foreachBatch(MessageQueueSink.foreachBatch(...))`.
    *
-   * EXACTLY-ONCE via the [[graft.source.EpochLedger]] protocol (default):
-   * each task renders its queue's rows to a private spill, then per topic —
-   * if the topic's ledger already covers this batchId the task appends
-   * nothing (post-commit replay); otherwise it truncate-repairs the queue
-   * to the committed high-water mark (discarding whatever a crashed attempt
-   * left) and appends the spill. The driver then publishes the new marks +
-   * batchId per topic in one atomic rename. Readers only see lines below
-   * the mark, so every crash window either replays onto a repaired file or
-   * skips a covered batch — no duplicates, no loss. This upgrades the
-   * reference's pendingOffsetsToCommit bookkeeping, which is at-least-once
-   * at the marker boundary (reference:
-   * legacy/RocketMQSourceFunction.java:150, RocketMQSink.java:60-150).
+   * EXACTLY-ONCE via the [[graft.source.EpochLedger]] protocol, with the
+   * batchId as the epoch: a batch the topic's ledger already covers
+   * appends nothing (post-commit replay); otherwise each task
+   * truncate-repairs its queue to the committed high-water mark
+   * (discarding whatever a crashed attempt left) and appends its spill,
+   * and the driver publishes the new marks + batchId per topic in one
+   * atomic rename. Readers only see lines below the mark, so every crash
+   * window either replays onto a repaired file or skips a covered batch —
+   * no duplicates, no loss. This upgrades the reference's
+   * pendingOffsetsToCommit bookkeeping, which is at-least-once at the
+   * marker boundary (reference: legacy/RocketMQSourceFunction.java:150,
+   * RocketMQSink.java:60-150).
    *
-   * The repair step makes the same single-live-attempt assumption as
-   * `write` (two racing attempts of one queue could interleave), so this
-   * path also refuses `spark.speculation=true`. `writerId` is the ledger's
-   * transaction identity: keep it stable across restarts of the same
-   * pipeline (the default is fine for one pipeline per destination), and
-   * give each pipeline its own id if several ever write the same topic
-   * root — a new id takes over committed marks without skipping batches.
-   * `flushMode` only applies to the legacy `exactlyOnce = false` path (the
-   * epoch path always spills per task and appends once on commit).
-   *
-   * A batchId already recorded in the legacy committed-batch marker is
-   * skipped on the exactly-once path UNTIL the first ledger exists under
-   * the root — that closes the one-time replay window when an existing
-   * marker-based pipeline upgrades to the ledger protocol mid-stream (its
-   * last marked batch would otherwise be adopted as committed AND
-   * re-appended), without letting a stale marker from a retired pipeline
-   * swallow a new pipeline's early batches forever.
-   *
-   * `exactlyOnce = false` keeps the legacy behavior: whole-batch append +
-   * committed-batch marker, at-least-once across the data/marker window and
-   * within a batch under task retry.
+   * `writerId` is the ledger's transaction identity: keep it stable across
+   * restarts of the same pipeline (the default is fine for one pipeline per
+   * destination), and give each pipeline its own id if several ever write
+   * the same topic root — a new id takes over committed marks without
+   * skipping batches.
    */
   def foreachBatch(
       rootDir: String,
       selector: TopicSelector[Map[String, Any]],
       converter: RowMessageConverter,
       numQueues: Int = 8,
-      flushMode: FlushMode = FlushMode.Batch(32),
-      exactlyOnce: Boolean = true,
       writerId: String = "foreachBatch"): (Dataset[Row], Long) => Unit =
-    (batch: Dataset[Row], batchId: Long) => {
-      if (exactlyOnce) {
-        assertNoSpeculation(batch.sparkSession.sparkContext.getConf)
-        val preUpgradeReplay = !anyLedger(rootDir) && isCommitted(rootDir, batchId)
-        if (!preUpgradeReplay)
-          writeEpoch(batch.toDF(), batchId, rootDir, selector, converter, numQueues,
-            writerId)
-      } else if (!isCommitted(rootDir, batchId)) {
-        write(batch.toDF(), rootDir, selector, converter, numQueues, flushMode)
-        markCommitted(rootDir, batchId)
-      }
-    }
+    (batch: Dataset[Row], batchId: Long) =>
+      appendEpoch(batch.toDF(), Some(batchId), rootDir, selector, converter, numQueues,
+        writerId)
 
-  /** One exactly-once epoch append: tasks spill → repair → append and
-    * report absolute (topic, queue, lines, bytes); the driver merges and
-    * atomically publishes each topic's ledger. Data never moves through the
-    * driver — only O(topics x queues) counters do. */
-  private[sink] def writeEpoch(
+  /** The task body `write` and `foreachBatch` share: each task spills its
+    * queue's rows per routed topic, then runs
+    * [[graft.source.EpochLedger.commitTask]] for each topic and reports the
+    * new (topic, queue, lines, bytes); the driver runs
+    * [[graft.source.EpochLedger.commitDriver]] per topic. Data never moves
+    * through the driver — only O(topics x queues) counters do. */
+  private def appendEpoch(
       df: DataFrame,
-      epochId: Long,
+      epoch: Option[Long],
       rootDir: String,
       selector: TopicSelector[Map[String, Any]],
       converter: RowMessageConverter,
       numQueues: Int,
-      writerId: String = "foreachBatch"): Unit = {
-    import graft.source.{EpochLedger, Message, TopicLog}
-    val schema = df.schema
-    val fieldNames = schema.fieldNames
+      writerId: String): Unit = {
+    assertNoSpeculation(df.sparkSession.sparkContext.getConf)
+    val fieldNames = df.schema.fieldNames
     val session = df.sparkSession
     import session.implicits._
-    val stats: Array[(String, Int, Long, Long)] =
+    val ends: Array[(String, Int, Long, Long)] =
       df.repartition(numQueues).mapPartitions { (rows: Iterator[Row]) =>
         val queueId = org.apache.spark.TaskContext.getPartitionId()
-        val spills = scala.collection.mutable.Map.empty[String, java.io.BufferedWriter]
-        val paths = scala.collection.mutable.Map.empty[String, java.nio.file.Path]
-        val lines = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+        val spills = scala.collection.mutable.Map.empty[String, Spill]
         rows.foreach { row =>
           val asMap = fieldNames.zip(row.toSeq).toMap
           val topic = selector.getTopic(asMap)
           val tag = selector.getTag(asMap)
           val m0 = converter.convert(row)
           val m = if (m0.tag.isEmpty && tag.nonEmpty) m0.copy(tag = tag) else m0
-          val w = spills.getOrElseUpdate(topic, {
-            val p = java.nio.file.Files.createTempFile(s"graft-epoch-$queueId-", ".spill")
-            paths(topic) = p
-            new java.io.BufferedWriter(new java.io.FileWriter(
-              p.toFile, java.nio.charset.StandardCharsets.UTF_8))
-          })
-          w.write(TopicLog.renderLine(m)); w.newLine()
-          lines(topic) += 1L
+          spills.getOrElseUpdate(topic, new Spill(s"graft-epoch-$queueId-")).write(m)
         }
-        val out = paths.keys.toSeq.sorted.flatMap { topic =>
-          spills(topic).close()
-          val p = paths(topic)
-          val ledger = EpochLedger.read(rootDir, topic)
-          val res =
-            if (ledger.exists(_.isCommitted(writerId, epochId))) None // replayed batch
-            else {
-              val (cl, cb) = ledger match {
-                // adopt raw complete lines when this queue was never managed
-                case Some(st) if st.queues.contains(queueId) => st.committed(queueId)
-                case _ => TopicLog.sizeInfo(rootDir, topic, queueId)
-              }
-              EpochLedger.truncateQueue(rootDir, topic, queueId, cb)
-              val spillBytes = java.nio.file.Files.size(p)
-              TopicLog.appendRendered(rootDir, topic, queueId, p)
-              Some((topic, queueId, cl + lines(topic), cb + spillBytes))
-            }
-          java.nio.file.Files.deleteIfExists(p)
-          res
-        }
-        out.iterator
+        spills.values.foreach(_.close())
+        try spills.toSeq.sortBy(_._1).flatMap { case (topic, s) =>
+          EpochLedger.commitTask(rootDir, topic, queueId, writerId, epoch, s.path, s.lines)
+            .map(a => (topic, queueId, a.lines, a.bytes))
+        }.iterator
+        finally spills.values.foreach(_.discard())
       }.collect()
-    stats.groupBy(_._1).foreach { case (topic, entries) =>
-      val prior = graft.source.EpochLedger.read(rootDir, topic)
-      if (!prior.exists(_.isCommitted(writerId, epochId))) {
-        // base = prior marks, or full raw adoption on first management so
-        // queues this epoch didn't touch keep their data readable
-        val base = prior.map(_.queues)
-          .getOrElse(graft.source.EpochLedger.adoptionState(rootDir, topic))
-        val updated = base ++
-          entries.map { case (_, q, lines, bytes) => q -> (lines, bytes) }
-        graft.source.EpochLedger.publish(rootDir, topic,
-          graft.source.EpochLedger.State(writerId, epochId, updated))
-      }
+    ends.groupBy(_._1).foreach { case (topic, es) =>
+      EpochLedger.commitDriver(rootDir, topic, writerId, epoch,
+        es.map { case (_, q, lines, bytes) => q -> (lines, bytes) })
     }
-  }
-
-  /** Test hook: land rows past the high-water mark WITHOUT the ledger
-    * publish — the on-disk state a driver crash leaves between a task's
-    * append and the atomic ledger rename. */
-  private[sink] def writeEpochTaskOnlyForTest(
-      df: DataFrame, rootDir: String, topic: String,
-      converter: RowMessageConverter): Unit =
-    graft.source.TopicLog.append(rootDir, topic, 0,
-      df.collect().iterator.map(r => converter.convert(r)))
-
-  /** True once any topic under the root is ledger-managed. */
-  private def anyLedger(rootDir: String): Boolean =
-    graft.source.TopicLog.listTopics(rootDir).exists(t =>
-      java.nio.file.Files.exists(graft.source.EpochLedger.file(rootDir, t)))
-
-  private def commitsFile(rootDir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(rootDir, "_committed_batches")
-
-  private[sink] def isCommitted(rootDir: String, batchId: Long): Boolean = {
-    val f = commitsFile(rootDir)
-    java.nio.file.Files.exists(f) &&
-      scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(f)).asScala.contains(batchId.toString)
-  }
-
-  private[sink] def markCommitted(rootDir: String, batchId: Long): Unit = {
-    java.nio.file.Files.createDirectories(commitsFile(rootDir).getParent)
-    java.nio.file.Files.writeString(commitsFile(rootDir), s"$batchId\n",
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
 }

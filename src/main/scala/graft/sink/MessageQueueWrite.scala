@@ -3,7 +3,7 @@ package graft.sink
 import java.util
 
 import graft.config.GraftOptions
-import graft.source.{Message, TopicLog}
+import graft.source.Message
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StructType, TimestampType}
@@ -23,7 +23,8 @@ class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
   override def build(): Write = new Write with RequiresDistributionAndOrdering {
     import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
     import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-    override def toBatch: BatchWrite = new MessageQueueBatchWrite(opts, schema)
+    private lazy val batch = new MessageQueueBatchWrite(opts, schema)
+    override def toBatch: BatchWrite = batch
     // the streaming queryId is stable across restarts (checkpoint metadata)
     // — exactly the writer identity the epoch ledger needs
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
@@ -43,42 +44,43 @@ class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
     override def supportedCustomMetrics()
         : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
       graft.source.Metrics.writeMetrics
+    // Spark reads a task's metrics before its commit, where the repair
+    // happens: a batch job's repaired bytes are summed on the driver
+    override def reportDriverMetrics()
+        : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+      Array(graft.source.Metrics.Value(graft.source.Metrics.BytesRepaired, batch.bytesRepaired))
   }
 }
 
+/** A batch append: [[graft.source.EpochLedger.commitDriver]] with no epoch,
+  * which advances the marks of a ledger-managed topic (so the rows are
+  * visible and the next epoch's repair keeps them) and leaves a raw topic
+  * as it is. */
 class MessageQueueBatchWrite(opts: GraftOptions, schema: StructType) extends BatchWrite {
+  private[sink] var bytesRepaired = 0L
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new QueueDataWriterFactory(opts, schema)
-  /** A batch append into a ledger-managed topic must advance the committed
-    * lengths or its rows would sit invisibly past the high-water mark (and
-    * be reclaimed by the next epoch's repair). Raw topics need nothing.
-    * NOTE: ledger commits are read-modify-write of one file — a topic
-    * admits ONE writing job at a time (the broker's single-writer-per-queue
-    * invariant extended to jobs); interleave a batch append with a live
-    * streaming query and one side's marks can be lost. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    graft.source.EpochLedger.read(opts.rootDir, opts.topic).foreach { st =>
-      val updated = st.queues ++ messages.collect {
-        case QueueCommit(q, lines, bytes) => q -> (lines, bytes)
-      }
-      graft.source.EpochLedger.publish(opts.rootDir, opts.topic, st.copy(queues = updated))
-    }
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    bytesRepaired = QueueCommit.bytesRepaired(messages)
+    graft.source.EpochLedger.commitDriver(opts.rootDir, opts.topic, "", None,
+      QueueCommit.marks(messages))
+  }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 /**
  * DSv2 streaming sink: `df.writeStream.format("graft-mq")...start()` —
  * the native counterpart of the reference's streaming sink
- * (legacy/RocketMQSink.java). Each micro-batch epoch runs the same
- * spill-then-append writers as the batch path (task = queue, single writer
- * per queue, no partial lines from failed attempts).
+ * (legacy/RocketMQSink.java). Each micro-batch or continuous epoch runs the
+ * same spill-then-append writers as the batch path (task = queue, single
+ * writer per queue, no partial lines from failed attempts).
  *
  * Delivery is EXACTLY-ONCE via the [[graft.source.EpochLedger]] protocol:
- * task commits truncate-repair their queue to the committed high-water mark
- * before appending, the driver publishes the new marks + epoch id in one
- * atomic rename, readers only see lines below the mark, and a replayed
- * epoch whose id the ledger already covers appends nothing. The reference's
- * pendingOffsetsToCommit bookkeeping (legacy/RocketMQSourceFunction.java:150,
+ * task commits truncate-repair their queue before appending, the driver
+ * publishes the new marks + epoch id in one atomic rename, readers only see
+ * lines below the mark, and a replayed epoch whose id the ledger already
+ * covers appends nothing. The reference's pendingOffsetsToCommit
+ * bookkeeping (legacy/RocketMQSourceFunction.java:150,
  * RocketMQSink.java:60-150) is at-least-once at this boundary; the ledger
  * closes it.
  */
@@ -88,28 +90,36 @@ class MessageQueueStreamingWrite(opts: GraftOptions, schema: StructType,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
     new QueueStreamingWriterFactory(opts, schema, writerId)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val prior = graft.source.EpochLedger.read(opts.rootDir, opts.topic)
-    if (!prior.exists(_.isCommitted(writerId, epochId))) {
-      // base = prior marks, or full raw adoption on first management so
-      // queues this epoch didn't touch keep their data readable
-      val base = prior.map(_.queues)
-        .getOrElse(graft.source.EpochLedger.adoptionState(opts.rootDir, opts.topic))
-      val updated = base ++ messages.collect {
-        case QueueCommit(q, lines, bytes) => q -> (lines, bytes)
-      }
-      graft.source.EpochLedger.publish(opts.rootDir, opts.topic,
-        graft.source.EpochLedger.State(writerId, epochId, updated))
-    }
-  }
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    graft.source.EpochLedger.commitDriver(opts.rootDir, opts.topic, writerId, Some(epochId),
+      QueueCommit.marks(messages))
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
+}
+
+/**
+ * What a task carries from one epoch's writer to the next. Each task
+ * deserializes its own copy of the writer factory, and a continuous task
+ * (`ContinuousWriteRDD`) calls `createWriter` on it once per epoch and
+ * commits epoch E+1 before the driver publishes E. So the task holds the
+ * end of its own last append, and the next epoch's writer repairs to it
+ * instead of to the ledger mark, which would cut the unpublished epoch-E
+ * lines. The hold lives and dies with the task: a restarted query repairs
+ * from the ledger. It also sums the task's repaired bytes, since Spark
+ * reads a writer's metrics before its commit.
+ */
+private[sink] final class TaskHold extends Serializable {
+  var end: Option[(Int, Long, (Long, Long))] = None // (queue, epoch, (lines, bytes))
+  var bytesRepaired = 0L
+  def base(queueId: Int, epochId: Long): Option[(Long, Long)] =
+    end.collect { case (q, e, at) if q == queueId && e == epochId - 1 => at }
 }
 
 class QueueStreamingWriterFactory(opts: GraftOptions, schema: StructType, writerId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  private val hold = new TaskHold
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new QueueDataWriter(opts, schema, partitionId, epochId, writerId)
+    new QueueDataWriter(opts, schema, partitionId, epochId, writerId, hold)
 }
 
 class QueueDataWriterFactory(opts: GraftOptions, schema: StructType)
@@ -118,11 +128,20 @@ class QueueDataWriterFactory(opts: GraftOptions, schema: StructType)
     new QueueDataWriter(opts, schema, partitionId)
 }
 
-private final case class QueueCommit(queueId: Int, lines: Long, bytes: Long)
+/** A task's landed queue end (None = a replayed epoch, nothing appended). */
+private final case class QueueCommit(queueId: Int, end: Option[(Long, Long)], bytesRepaired: Long)
     extends WriterCommitMessage
 
+private object QueueCommit {
+  def marks(messages: Array[WriterCommitMessage]): Seq[(Int, (Long, Long))] =
+    messages.toSeq.collect { case QueueCommit(q, Some(end), _) => q -> end }
+  def bytesRepaired(messages: Array[WriterCommitMessage]): Long =
+    messages.iterator.collect { case c: QueueCommit => c.bytesRepaired }.sum
+}
+
 class QueueDataWriter(opts: GraftOptions, schema: StructType, partitionId: Int,
-                      epochId: Long = -1L, writerId: String = "")
+                      epochId: Long = -1L, writerId: String = "",
+                      hold: TaskHold = new TaskHold)
     extends DataWriter[InternalRow] {
 
   private val fieldNames = schema.fieldNames
@@ -169,13 +188,8 @@ class QueueDataWriter(opts: GraftOptions, schema: StructType, partitionId: Int,
   private val bodyIdx = schema.indices.filterNot(excluded.contains).toArray
 
   // rows spill to a task-attempt temp file as they arrive (O(1) heap, the
-  // 100 TB partition case); commit() appends the spill to the queue log in
-  // one transfer and deletes it.
-  private val spillPath = java.nio.file.Files.createTempFile(
-    s"graft-write-$partitionId-", ".spill")
-  private val spill = new java.io.BufferedWriter(new java.io.FileWriter(
-    spillPath.toFile, java.nio.charset.StandardCharsets.UTF_8))
-  private var rows = 0L
+  // 100 TB partition case); commit() appends it to the queue log
+  private val spill = new Spill(s"graft-write-$partitionId-")
   private var bytes = 0L
 
   private def str(row: InternalRow, i: Int): String =
@@ -219,59 +233,34 @@ class QueueDataWriter(opts: GraftOptions, schema: StructType, partitionId: Int,
         val body = bodyIdx.map(str(row, _)).mkString(opts.fieldDelimiter)
         Message(born, key, if (tag == "*") "" else tag, Map.empty, body)
       }
-    val line = TopicLog.renderLine(m)
-    spill.write(line)
-    spill.newLine()
-    rows += 1L
-    bytes += graft.source.Metrics.utf8Length(line) + 1L
+    bytes += graft.source.Metrics.utf8Length(spill.write(m)) + 1L
   }
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(graft.source.Metrics.Value(graft.source.Metrics.MessagesWritten, rows),
-      graft.source.Metrics.Value(graft.source.Metrics.BytesWritten, bytes))
+    Array(graft.source.Metrics.Value(graft.source.Metrics.MessagesWritten, spill.lines),
+      graft.source.Metrics.Value(graft.source.Metrics.BytesWritten, bytes),
+      graft.source.Metrics.Value(graft.source.Metrics.BytesRepaired, hold.bytesRepaired))
 
   /** The queue log is only touched here, after every row spilled cleanly —
-    * an attempt that dies mid-write leaves just an orphan temp file.
-    *
-    * Exactly-once protocol ([[graft.source.EpochLedger]]): a streaming
-    * epoch the ledger already covers appends NOTHING (post-commit replay);
-    * otherwise a ledger-managed queue is truncated back to its committed
-    * byte length first, so the tail a crashed attempt left mid-append is
-    * discarded before this attempt's spill lands. A crash DURING this
-    * append leaves a tail past the high-water mark that readers never see
-    * and the replay reclaims. The first managed write of a pre-existing raw
-    * log adopts its complete lines as committed. Spark's commit coordinator
+    * an attempt that dies mid-write leaves just an orphan temp file. The
+    * append is [[graft.source.EpochLedger.commitTask]]: a streaming epoch
+    * the ledger already covers appends nothing, and a ledger-managed queue
+    * is first repaired back to its base. Spark's commit coordinator
     * prevents the double-commit case within an epoch. */
   override def commit(): WriterCommitMessage = {
     spill.close()
-    val ledger = graft.source.EpochLedger.read(opts.rootDir, opts.topic)
-    if (epochId >= 0 && ledger.exists(_.isCommitted(writerId, epochId))) {
-      java.nio.file.Files.deleteIfExists(spillPath)
-      // values are never published: the driver skips committed epochs too
-      QueueCommit(partitionId, 0L, 0L)
-    } else {
-      val (committedLines, committedBytes) = ledger match {
-        case Some(st) if st.queues.contains(partitionId) => st.committed(partitionId)
-        case None if epochId < 0 => (0L, 0L) // raw batch append, no repair
-        case _ =>
-          // first managed write of this queue (no ledger yet, or a ledger
-          // that never saw this queue): adopt its raw complete lines
-          graft.source.TopicLog.sizeInfo(opts.rootDir, opts.topic, partitionId)
-      }
-      if (ledger.isDefined || epochId >= 0)
-        graft.source.EpochLedger.truncateQueue(
-          opts.rootDir, opts.topic, partitionId, committedBytes)
-      val spillBytes = java.nio.file.Files.size(spillPath)
-      TopicLog.appendRendered(opts.rootDir, opts.topic, partitionId, spillPath)
-      java.nio.file.Files.deleteIfExists(spillPath)
-      QueueCommit(partitionId, committedLines + rows, committedBytes + spillBytes)
+    val appended = graft.source.EpochLedger.commitTask(opts.rootDir, opts.topic, partitionId,
+      writerId, Some(epochId).filter(_ >= 0), spill.path, spill.lines,
+      hold.base(partitionId, epochId))
+    appended.foreach { a =>
+      hold.end = Some((partitionId, epochId, (a.lines, a.bytes)))
+      hold.bytesRepaired += a.bytesRepaired
     }
+    QueueCommit(partitionId, appended.map(a => (a.lines, a.bytes)),
+      appended.fold(0L)(_.bytesRepaired))
   }
 
-  override def abort(): Unit = {
-    spill.close()
-    java.nio.file.Files.deleteIfExists(spillPath)
-  }
-  override def close(): Unit = { java.nio.file.Files.deleteIfExists(spillPath); () }
+  override def abort(): Unit = spill.discard()
+  override def close(): Unit = spill.discard()
 }

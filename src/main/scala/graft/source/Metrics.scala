@@ -16,6 +16,7 @@ object Metrics {
   final val LinesSkipped = "graft_lines_skipped"
   final val MessagesWritten = "graft_messages_written"
   final val BytesWritten = "graft_bytes_written"
+  final val BytesRepaired = "graft_bytes_repaired"
 
   final class MessagesReadMetric extends CustomSumMetric {
     override def name(): String = MessagesRead
@@ -41,13 +42,17 @@ object Metrics {
     override def name(): String = BytesWritten
     override def description(): String = "message line bytes written"
   }
+  final class BytesRepairedMetric extends CustomSumMetric {
+    override def name(): String = BytesRepaired
+    override def description(): String = "uncommitted tail bytes cut by the ledger repair"
+  }
 
   def readMetrics: Array[CustomMetric] =
     Array(new MessagesReadMetric, new MessagesFilteredMetric, new BytesReadMetric,
       new LinesSkippedMetric)
 
   def writeMetrics: Array[CustomMetric] =
-    Array(new MessagesWrittenMetric, new BytesWrittenMetric)
+    Array(new MessagesWrittenMetric, new BytesWrittenMetric, new BytesRepairedMetric)
 
   final case class Value(metricName: String, metricValue: Long) extends CustomTaskMetric {
     override def name(): String = metricName

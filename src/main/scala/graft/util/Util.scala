@@ -16,33 +16,6 @@ object Props {
     props.getOrElse(key, default)
 }
 
-/** Bounded-exponential-backoff retry
-  * (reference: legacy/common/util/RetryUtil.java:30-58: 200ms initial,
-  * 5s cap, 5 attempts after the first failure). */
-object Retry {
-  val InitialBackoffMs = 200L
-  val MaxBackoffMs = 5000L
-  val MaxAttempts = 5
-
-  /** Runs `body`, retrying up to [[MaxAttempts]] times with doubling backoff.
-    * `sleep` is injectable so tests don't wait. */
-  def call[T](errorMsg: String, sleep: Long => Unit = Thread.sleep)(body: => T): T = {
-    var backoff = InitialBackoffMs
-    var retries = 0
-    while (true) {
-      try return body
-      catch {
-        case e: Exception =>
-          if (retries >= MaxAttempts) throw new RuntimeException(e)
-          retries += 1
-      }
-      sleep(backoff)
-      backoff = math.min(backoff * 2, MaxBackoffMs)
-    }
-    throw new IllegalStateException("unreachable")
-  }
-}
-
 /** Volatile running flag shared between a driver loop and its poll threads
   * (reference: legacy/common/util/RunningChecker.java). */
 class RunningChecker extends Serializable {

@@ -89,17 +89,93 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("batch DSv2 append into a ledger-managed topic advances the hwm") {
-    val root = Files.createTempDirectory("graft-eo").toString
-    epoch(root, 0, Seq("s1"))
-    val opts = GraftOptions.parse(Map(
-      "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
-    val bw = new MessageQueueBatchWrite(opts, bodySchema)
-    val w = new QueueDataWriter(opts, bodySchema, 0)
-    w.write(row("b1"))
+    import spark.implicits._
+    // the DSv2 batch writer and MessageQueueSink.write run the same commit
+    val appends: Seq[(String, String) => Unit] = Seq(
+      (root, body) => {
+        val opts = GraftOptions.parse(Map(
+          "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
+        val bw = new MessageQueueBatchWrite(opts, bodySchema)
+        val w = new QueueDataWriter(opts, bodySchema, 0)
+        w.write(row(body))
+        bw.commit(Array(w.commit()))
+      },
+      (root, body) => MessageQueueSink.write(Seq(body).toDF("body"), root,
+        new DefaultTopicSelector[Map[String, Any]]("eo"), new RowMessageConverter(bodySchema),
+        numQueues = 1))
+    appends.foreach { append =>
+      val root = Files.createTempDirectory("graft-eo").toString
+      epoch(root, 0, Seq("s1"))
+      append(root, "b1")
+      assert(bodies(root) === Seq("s1", "b1")) // visible: hwm advanced
+      epoch(root, 1, Seq("s2")) // next epoch must not reclaim the batch rows
+      assert(bodies(root) === Seq("s1", "b1", "s2"))
+    }
+  }
+
+  test("a batch append reports the tail its repair cut as a driver metric") {
+    val root = Files.createTempDirectory("graft-eo-rep").toString
+    epoch(root, 0, Seq("committed"))
+    val tail = "9\tk\tt\t\ttorn-lin"
+    Files.writeString(TopicLog.queueFile(root, "eo", 0).toPath, tail,
+      java.nio.file.StandardOpenOption.APPEND)
+    val write = new MessageQueueWriteBuilder(GraftOptions.parse(Map(
+      "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root)), bodySchema).build()
+    val bw = write.toBatch
+    val w = bw.createBatchWriterFactory(null).createWriter(0, 0L)
+    w.write(row("b"))
     bw.commit(Array(w.commit()))
-    assert(bodies(root) === Seq("s1", "b1")) // visible: hwm advanced
-    epoch(root, 1, Seq("s2")) // next epoch must not reclaim the batch rows
-    assert(bodies(root) === Seq("s1", "b1", "s2"))
+    assert(bodies(root) === Seq("committed", "b"))
+    assert(write.reportDriverMetrics().map(m => m.name -> m.value).toSeq ===
+      Seq(graft.source.Metrics.BytesRepaired -> tail.length.toLong))
+  }
+
+  private def repaired(w: org.apache.spark.sql.connector.write.DataWriter[_]): Long =
+    w.currentMetricsValues().find(_.name == graft.source.Metrics.BytesRepaired).get.value
+
+  test("continuous: task commits of epochs 2 and 3 before their publishes lose no row") {
+    val root = Files.createTempDirectory("graft-eo-cont").toString
+    val sw = new MessageQueueStreamingWrite(GraftOptions.parse(Map(
+      "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root)), bodySchema, "q")
+    // a task deserializes its own factory copy, then asks it for one writer
+    // per epoch, as ContinuousWriteRDD does
+    val ser = new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf).newInstance()
+    def taskFactory() = {
+      val f = sw.createStreamingWriterFactory(null)
+      ser.deserialize[QueueStreamingWriterFactory](ser.serialize(f))
+    }
+    def markWithinFile(): Unit = {
+      val (_, markBytes) = EpochLedger.read(root, "eo").get.committed(0)
+      assert(markBytes <= TopicLog.queueFile(root, "eo", 0).length(), "mark past EOF")
+    }
+    val factory = taskFactory()
+    def taskCommit(f: QueueStreamingWriterFactory, epochId: Long, line: String) = {
+      val w = f.createWriter(0, 7L, epochId)
+      w.write(row(line))
+      (w.commit(), repaired(w))
+    }
+    val (m1, r1) = taskCommit(factory, 1, "a")
+    sw.commit(1, Array(m1))
+    val (m2, r2) = taskCommit(factory, 2, "bb")
+    val (m3, r3) = taskCommit(factory, 3, "c")
+    sw.commit(2, Array(m2))
+    markWithinFile()
+    sw.commit(3, Array(m3))
+    markWithinFile()
+    assert(bodies(root) === Seq("a", "bb", "c"))
+    assert(Seq(r1, r2, r3) === Seq(0L, 0L, 0L)) // steady state repairs nothing
+    // epoch 4 lands but is never published; the restarted query's task
+    // holds no base and repairs from the ledger
+    val f = TopicLog.queueFile(root, "eo", 0)
+    val published = f.length()
+    val (_, r4) = taskCommit(factory, 4, "lost-attempt")
+    assert(r4 === 0L)
+    val tail = f.length() - published
+    val (m4, r4replay) = taskCommit(taskFactory(), 4, "d")
+    assert(r4replay === tail) // the restarted task cut the unpublished line
+    sw.commit(4, Array(m4))
+    markWithinFile()
+    assert(bodies(root) === Seq("a", "bb", "c", "d"))
   }
 
   test("foreachBatch: duplicate batch, crash-before-publish, and torn tail all heal") {
@@ -113,7 +189,7 @@ class ExactlyOnceSpec extends SparkSpec {
     fn(b0, 0L) // replayed batchId
     assert(bodies(root, "fb") === Seq("a", "b"))
     // crashed batch-1 attempt: data landed, ledger publish never ran
-    MessageQueueSink.writeEpochTaskOnlyForTest(Seq("c").toDF("body"), root, "fb", conv)
+    TopicLog.append(root, "fb", 0, Iterator(conv.convert(org.apache.spark.sql.Row("c"))))
     assert(bodies(root, "fb") === Seq("a", "b")) // invisible past hwm
     fn(Seq("c", "d").toDF("body"), 1L) // replay heals and lands once
     assert(bodies(root, "fb") === Seq("a", "b", "c", "d"))

@@ -190,14 +190,4 @@ class MessageQueueSinkSpec extends SparkSpec {
     val want = sampleDf(25).collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     assert(got === want)
   }
-
-  test("async flush mode appends per message (same data, more IO)") {
-    val root = freshRoot()
-    val conv = new RowMessageConverter(schema, fieldDelimiter = ",")
-    MessageQueueSink.write(sampleDf(10), root,
-      new DefaultTopicSelector[Map[String, Any]]("async"), conv,
-      numQueues = 2, flushMode = FlushMode.Async)
-    val total = (0 until 2).map(q => TopicLog.maxOffset(root, "async", q)).sum
-    assert(total === 10)
-  }
 }

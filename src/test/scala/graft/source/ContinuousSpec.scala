@@ -161,4 +161,49 @@ class ContinuousSpec extends SparkSpec {
       assert(metrics(cont)(Metrics.MessagesRead) === first.size + second.size)
     } finally { batch.close(); cont.close() }
   }
+
+  test("continuous query into the graft-mq sink lands every row exactly once under the marks") {
+    val root = freshRoot()
+    val (in, out) = ("cont4", "cont4-out")
+    def gen(q: Int, from: Int, until: Int): Iterator[Message] =
+      (from until until).iterator.map(i => Message(1000L + i, s"k$q-$i", "t", Map.empty, s"b-$q-$i"))
+    (0 until 2).foreach(q => TopicLog.append(root, in, q, gen(q, 0, 50)))
+    val q = spark.readStream.format("graft-mq")
+      .option("topic", in).option("consumerGroup", "cg4")
+      .option("rootDir", root).option("offsetResetTo", "earliest")
+      .option("continuousPollMs", "20")
+      .load()
+      .select(col("body"))
+      .writeStream.format("graft-mq")
+      .option("topic", out).option("consumerGroup", "cg4-sink").option("rootDir", root)
+      .option("checkpointLocation", Files.createTempDirectory("graft-cont-ckpt").toString)
+      .trigger(Trigger.Continuous("100 milliseconds"))
+      .start()
+    def published(): Long =
+      if (EpochLedger.read(root, out).isEmpty) 0L
+      else (0 until 2).map(qid => TopicLog.maxOffset(root, out, qid)).sum
+    def awaitPublished(n: Long): Unit =
+      while (published() < n) {
+        q.exception.foreach(e => throw e)
+        Thread.sleep(20)
+      }
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    try TimeLimits.failAfter(90.seconds) {
+      awaitPublished(100)
+      // rows appended while the query runs land over many epochs
+      (0 until 5).foreach { r =>
+        (0 until 2).foreach(qid => TopicLog.append(root, in, qid, gen(qid, 50 + 10 * r, 60 + 10 * r)))
+        awaitPublished(120 + 20 * r)
+      }
+    } finally q.stop()
+    val ledger = EpochLedger.read(root, out).get
+    val got = (0 until 2).flatMap { qid =>
+      val (lines, bytes) = ledger.committed(qid)
+      assert(bytes <= TopicLog.queueFile(root, out, qid).length(), s"queue $qid: mark past EOF")
+      TopicLog.readRange(root, out, qid, 0, lines).map(_._2.body).toSeq
+    }
+    assert(got.sorted === (for (qid <- 0 until 2; i <- 0 until 100) yield s"b-$qid-$i").sorted)
+  }
 }

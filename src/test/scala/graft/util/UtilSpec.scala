@@ -16,34 +16,6 @@ class UtilSpec extends AnyFunSuite {
     assert(Props.getString(p, "zz", "d") === "d")
   }
 
-  test("Retry returns first success without sleeping") {
-    var sleeps = List.empty[Long]
-    val got = Retry.call[Int]("never", ms => sleeps ::= ms) { 42 }
-    assert(got === 42)
-    assert(sleeps.isEmpty)
-  }
-
-  test("Retry backs off 200ms doubling capped at 5s, then succeeds") {
-    var sleeps = List.empty[Long]
-    var attempts = 0
-    val got = Retry.call[String]("flaky", ms => sleeps ::= ms) {
-      attempts += 1
-      if (attempts < 4) throw new RuntimeException("boom")
-      "ok"
-    }
-    assert(got === "ok")
-    assert(sleeps.reverse === List(200L, 400L, 800L))
-  }
-
-  test("Retry gives up after MaxAttempts and wraps the cause") {
-    var attempts = 0
-    val e = intercept[RuntimeException] {
-      Retry.call[Int]("always", _ => ()) { attempts += 1; throw new IllegalStateException("no") }
-    }
-    assert(attempts === Retry.MaxAttempts + 1)
-    assert(e.getCause.isInstanceOf[IllegalStateException])
-  }
-
   test("RunningChecker flag flips") {
     val rc = new RunningChecker
     assert(!rc.isRunning)
