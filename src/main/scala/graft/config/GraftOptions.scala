@@ -1,7 +1,5 @@
 package graft.config
 
-import graft.serde.DirtyDataStrategy
-
 /**
  * Option surface of the graft message-queue connector: same keys, defaults,
  * and required/optional split as the reference connector's option class and
@@ -11,6 +9,11 @@ import graft.serde.DirtyDataStrategy
  *
  * `parse` validates: both required keys present, no unknown keys, enum-valued
  * options in range — failures throw IllegalArgumentException listing the key.
+ * The reference keys no source or sink code would read (encoding,
+ * lineDelimiter, lengthCheck, retryTimes, sleepTimeMs, columnErrorDebug,
+ * partitionDiscoveryIntervalMs, isDynamicTag) are not taken: body parsing
+ * has its own settings in [[graft.operators.Deser.parseBodies]], and
+ * `dynamicTagColumn` alone turns the dynamic tag on.
  */
 final case class GraftOptions(
     topic: String,
@@ -20,17 +23,9 @@ final case class GraftOptions(
     startMessageOffset: Long = -1L,
     startTimeMs: Long = -1L,
     endTimeMs: Long = -1L,
-    partitionDiscoveryIntervalMs: Long = 30000L,
-    encoding: String = "UTF-8",
     fieldDelimiter: String = graft.serde.Delimiters.Soh,
-    lineDelimiter: String = "\n",
-    columnErrorDebug: Boolean = true,
-    lengthCheck: String = "NONE",
-    retryTimes: Int = 10,
-    sleepTimeMs: Long = 5000L,
     offsetResetTo: String = "latest",
-    isDynamicTag: Boolean = false,
-    dynamicTagColumn: String = null,
+    dynamicTagColumn: Option[String] = None,
     dynamicTagColumnWriteIncluded: Boolean = true,
     keyColumns: Seq[String] = Nil,
     writeKeysToBody: Boolean = false,
@@ -71,16 +66,8 @@ object GraftOptions {
   val StartMessageOffset = "startmessageoffset"
   val StartTimeMs = "starttimems"
   val EndTimeMs = "endtimems"
-  val PartitionDiscoveryIntervalMs = "partitiondiscoveryintervalms"
-  val Encoding = "encoding"
   val FieldDelimiter = "fielddelimiter"
-  val LineDelimiter = "linedelimiter"
-  val ColumnErrorDebug = "columnerrordebug"
-  val LengthCheck = "lengthcheck"
-  val RetryTimes = "retrytimes"
-  val SleepTimeMs = "sleeptimems"
   val OffsetResetTo = "offsetresetto"
-  val IsDynamicTag = "isdynamictag"
   val DynamicTagColumn = "dynamictagcolumn"
   val DynamicTagColumnWriteIncluded = "dynamictagcolumnwriteincluded"
   val KeyColumns = "keycolumns"
@@ -93,11 +80,14 @@ object GraftOptions {
 
   val RequiredKeys: Set[String] = Set(Topic, ConsumerGroup, RootDir)
   val OptionalKeys: Set[String] = Set(
-    Tag, StartMessageOffset, StartTimeMs, EndTimeMs, PartitionDiscoveryIntervalMs,
-    Encoding, FieldDelimiter, LineDelimiter, ColumnErrorDebug, LengthCheck,
-    RetryTimes, SleepTimeMs, OffsetResetTo, IsDynamicTag, DynamicTagColumn,
-    DynamicTagColumnWriteIncluded, KeyColumns, WriteKeysToBody, PropertyFilter,
-    NumQueues, MsgDelayLevel, MaxRowsPerTrigger, ContinuousPollMs)
+    Tag, StartMessageOffset, StartTimeMs, EndTimeMs, FieldDelimiter, OffsetResetTo,
+    DynamicTagColumn, DynamicTagColumnWriteIncluded, KeyColumns, WriteKeysToBody,
+    PropertyFilter, NumQueues, MsgDelayLevel, MaxRowsPerTrigger, ContinuousPollMs)
+
+  /** Keys the connector no longer takes, with what does their job now. */
+  private val Replaced: Map[String, String] = Map(
+    "encoding" -> "Deser.parseBodies", "linedelimiter" -> "Deser.parseBodies",
+    "lengthcheck" -> "Deser.parseBodies", "isdynamictag" -> "dynamicTagColumn")
 
   /** Broker-convention delay ladder, level 1-18 (reference:
     * legacy/common/RocketMQConfig.java MSG_DELAY_LEVEL00-18 — "1s 5s 10s 30s
@@ -154,11 +144,9 @@ object GraftOptions {
     val unknown = opts.keySet -- RequiredKeys -- OptionalKeys
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
-        s"unsupported options: ${unknown.toSeq.sorted.mkString(", ")}")
+        s"unsupported options: ${unknown.toSeq.sorted.map(k =>
+          Replaced.get(k).fold(k)(r => s"$k (use $r)")).mkString(", ")}")
 
-    val lengthCheck = opts.getOrElse(LengthCheck, "NONE").toUpperCase
-    if (!Set("NONE", "SKIP", "PAD", "EXCEPTION", "SKIP_SILENT").contains(lengthCheck))
-      throw new IllegalArgumentException(s"invalid lengthCheck: $lengthCheck")
     val reset = opts.getOrElse(OffsetResetTo, "latest").toLowerCase
     if (!Set("earliest", "latest", "timestamp").contains(reset))
       throw new IllegalArgumentException(s"invalid offsetResetTo: $reset")
@@ -186,22 +174,13 @@ object GraftOptions {
       startMessageOffset = opts.get(StartMessageOffset).map(_.toLong).getOrElse(-1L),
       startTimeMs = opts.get(StartTimeMs).map(_.toLong).getOrElse(-1L),
       endTimeMs = opts.get(EndTimeMs).map(_.toLong).getOrElse(-1L),
-      partitionDiscoveryIntervalMs =
-        opts.get(PartitionDiscoveryIntervalMs).map(_.toLong).getOrElse(30000L),
-      encoding = opts.getOrElse(Encoding, "UTF-8"),
       // an explicit empty delimiter normalizes to the SOH default: the read
       // path treats "" as never-split, so a writer honoring "" literally
       // would produce multi-column bodies the reader cannot parse back
       fieldDelimiter = Some(unescape(opts.getOrElse(FieldDelimiter, graft.serde.Delimiters.Soh)))
         .filter(_.nonEmpty).getOrElse(graft.serde.Delimiters.Soh),
-      lineDelimiter = unescape(opts.getOrElse(LineDelimiter, "\n")),
-      columnErrorDebug = opts.get(ColumnErrorDebug).forall(_.toBoolean),
-      lengthCheck = lengthCheck,
-      retryTimes = opts.get(RetryTimes).map(_.toInt).getOrElse(10),
-      sleepTimeMs = opts.get(SleepTimeMs).map(_.toLong).getOrElse(5000L),
       offsetResetTo = reset,
-      isDynamicTag = opts.get(IsDynamicTag).exists(_.toBoolean),
-      dynamicTagColumn = opts.get(DynamicTagColumn).orNull,
+      dynamicTagColumn = opts.get(DynamicTagColumn),
       dynamicTagColumnWriteIncluded =
         opts.get(DynamicTagColumnWriteIncluded).forall(_.toBoolean),
       keyColumns = opts.get(KeyColumns).map(_.split(",").map(_.trim).toSeq).getOrElse(Nil),
@@ -218,16 +197,4 @@ object GraftOptions {
       maxRowsPerTrigger = maxRows,
       continuousPollMs = pollMs)
   }
-
-  /** The three dirty-data strategies implied by `lengthCheck`. */
-  def strategies(lengthCheck: String): (DirtyDataStrategy, DirtyDataStrategy, DirtyDataStrategy) =
-    lengthCheck.toUpperCase match {
-      case "SKIP" => (DirtyDataStrategy.Skip, DirtyDataStrategy.Skip, DirtyDataStrategy.Skip)
-      case "PAD" => (DirtyDataStrategy.Skip, DirtyDataStrategy.Pad, DirtyDataStrategy.Cut)
-      case "EXCEPTION" =>
-        (DirtyDataStrategy.Exception, DirtyDataStrategy.Exception, DirtyDataStrategy.Exception)
-      case "SKIP_SILENT" =>
-        (DirtyDataStrategy.SkipSilent, DirtyDataStrategy.SkipSilent, DirtyDataStrategy.SkipSilent)
-      case _ => (DirtyDataStrategy.Skip, DirtyDataStrategy.Skip, DirtyDataStrategy.Cut)
-    }
 }

@@ -143,8 +143,7 @@ object MqRoundtrip {
     val conv = new RowMessageConverter(
       events.schema, fieldDelimiter = "\t",
       keyColumns = Seq("event_id"), writeKeysToBody = true,
-      isDynamicTag = true, dynamicTagColumn = "event_type",
-      bornTsColumn = "born_ms")
+      dynamicTagColumn = Some("event_type"), bornTsColumn = Some("born_ms"))
     MessageQueueSink.write(
       events, root, new DefaultTopicSelector[Map[String, Any]](topic), conv, numQueues = 8)
 
@@ -210,8 +209,7 @@ object MqRoundtrip {
     val conv = new RowMessageConverter(
       events.schema, fieldDelimiter = "\t",
       keyColumns = Seq("event_id"), writeKeysToBody = true,
-      isDynamicTag = true, dynamicTagColumn = "event_type",
-      bornTsColumn = "born_ms")
+      dynamicTagColumn = Some("event_type"), bornTsColumn = Some("born_ms"))
     MessageQueueSink.write(
       events, root, new DefaultTopicSelector[Map[String, Any]](topic), conv,
       numQueues = numQueues)

@@ -2,6 +2,8 @@ package graft.sink
 
 import graft.source.{EpochLedger, Message, TopicLog}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
 
 /** A task's rendered lines on their way to one queue log: a private temp
   * file (O(1) heap), which [[graft.source.EpochLedger.commitTask]] appends
@@ -24,6 +26,26 @@ private[sink] final class Spill(prefix: String) {
   def discard(): Unit = { out.close(); java.nio.file.Files.deleteIfExists(path); () }
 }
 
+/** The current row's fields by name, as the Scala values a [[TopicSelector]]
+  * sees. A field is converted only when the selector asks for it, and one
+  * view serves a task's rows (`row` moves along), so a constant selector
+  * costs nothing per row. */
+private[sink] final class RowFields(schema: StructType)
+    extends scala.collection.immutable.AbstractMap[String, Any] {
+  var row: InternalRow = _
+  private val index = schema.fieldNames.zipWithIndex.toMap
+  private val toScala =
+    schema.fields.map(f => CatalystTypeConverters.createToScalaConverter(f.dataType))
+  private def value(i: Int): Any =
+    if (row.isNullAt(i)) null else toScala(i)(row.get(i, schema(i).dataType))
+  override def get(key: String): Option[Any] = index.get(key).map(value(_))
+  override def iterator: Iterator[(String, Any)] =
+    schema.indices.iterator.map(i => schema(i).name -> value(i))
+  override def removed(key: String): Map[String, Any] = iterator.toMap - key
+  override def updated[V1 >: Any](key: String, v: V1): Map[String, V1] =
+    iterator.toMap.updated(key, v)
+}
+
 /**
  * Writes a DataFrame into file-backed topic logs.
  *
@@ -43,7 +65,9 @@ private[sink] final class Spill(prefix: String) {
  * speculation enabled; use the DSv2 writer (`df.write.format("graft-mq")`),
  * whose commit-coordinated append is retry-safe.
  *
- * Topic routing goes through a [[TopicSelector]] (constant or field-driven).
+ * Topic routing goes through a [[TopicSelector]] (constant or field-driven);
+ * rows become messages through the one [[RowMessageConverter]], on Spark
+ * SQL's binary rows (no external `Row` is built).
  */
 object MessageQueueSink {
 
@@ -121,17 +145,16 @@ object MessageQueueSink {
       numQueues: Int,
       writerId: String): Unit = {
     assertNoSpeculation(df.sparkSession.sparkContext.getConf)
-    val fieldNames = df.schema.fieldNames
-    val session = df.sparkSession
-    import session.implicits._
+    val schema = df.schema
     val ends: Array[(String, Int, Long, Long)] =
-      df.repartition(numQueues).mapPartitions { (rows: Iterator[Row]) =>
+      df.repartition(numQueues).queryExecution.toRdd.mapPartitions { rows =>
         val queueId = org.apache.spark.TaskContext.getPartitionId()
         val spills = scala.collection.mutable.Map.empty[String, Spill]
+        val fields = new RowFields(schema)
         rows.foreach { row =>
-          val asMap = fieldNames.zip(row.toSeq).toMap
-          val topic = selector.getTopic(asMap)
-          val tag = selector.getTag(asMap)
+          fields.row = row
+          val topic = selector.getTopic(fields)
+          val tag = selector.getTag(fields)
           val m0 = converter.convert(row)
           val m = if (m0.tag.isEmpty && tag.nonEmpty) m0.copy(tag = tag) else m0
           spills.getOrElseUpdate(topic, new Spill(s"graft-epoch-$queueId-")).write(m)

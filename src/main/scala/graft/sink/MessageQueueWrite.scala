@@ -1,12 +1,11 @@
 package graft.sink
 
-import java.util
+import java.util.concurrent.atomic.AtomicLong
 
 import graft.config.GraftOptions
-import graft.source.Message
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * DSv2 batch write: `df.write.format("graft-mq").option(...).save()`.
@@ -14,11 +13,12 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
  * Each task buffers its rows and appends them to its OWN queue file on
  * commit — task = queue (single writer per queue, the broker invariant), and
  * an aborted/retried task appends nothing (no partial lines). Rows become
- * delimited message bodies via the same exclusion rules as
- * [[RowMessageConverter]]; a `born_ts`-typed column can drive message time.
+ * messages through [[RowMessageConverter]]`(opts, schema)`, built here on
+ * the driver so a schema it cannot write fails before any task runs.
  */
 class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
-                               queryId: String = "")
+                               queryId: String = "",
+                               streamBytesRepaired: AtomicLong = new AtomicLong)
     extends WriteBuilder {
   override def build(): Write = new Write with RequiresDistributionAndOrdering {
     import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -28,7 +28,7 @@ class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
     // the streaming queryId is stable across restarts (checkpoint metadata)
     // — exactly the writer identity the epoch ledger needs
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-      new MessageQueueStreamingWrite(opts, schema, queryId)
+      new MessageQueueStreamingWrite(opts, schema, queryId, streamBytesRepaired)
     // task = queue, so the requested partition count IS the queue count;
     // 0 lets the incoming partitioning stand. Clustering key: the message
     // key columns (keeps one key's messages ordered within one queue, the
@@ -57,9 +57,10 @@ class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
   * visible and the next epoch's repair keeps them) and leaves a raw topic
   * as it is. */
 class MessageQueueBatchWrite(opts: GraftOptions, schema: StructType) extends BatchWrite {
+  private val conv = RowMessageConverter(opts, schema)
   private[sink] var bytesRepaired = 0L
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new QueueDataWriterFactory(opts, schema)
+    new QueueDataWriterFactory(opts, conv)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     bytesRepaired = QueueCommit.bytesRepaired(messages)
     graft.source.EpochLedger.commitDriver(opts.rootDir, opts.topic, "", None,
@@ -85,14 +86,19 @@ class MessageQueueBatchWrite(opts: GraftOptions, schema: StructType) extends Bat
  * closes it.
  */
 class MessageQueueStreamingWrite(opts: GraftOptions, schema: StructType,
-                                 writerId: String = "")
+                                 writerId: String = "",
+                                 bytesRepaired: AtomicLong = new AtomicLong)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+  private val conv = RowMessageConverter(opts, schema)
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new QueueStreamingWriterFactory(opts, schema, writerId)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    new QueueStreamingWriterFactory(opts, conv, writerId)
+  // the table reports the epoch's repaired bytes in the query's progress
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     graft.source.EpochLedger.commitDriver(opts.rootDir, opts.topic, writerId, Some(epochId),
       QueueCommit.marks(messages))
+    bytesRepaired.set(QueueCommit.bytesRepaired(messages))
+  }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
@@ -114,18 +120,19 @@ private[sink] final class TaskHold extends Serializable {
     end.collect { case (q, e, at) if q == queueId && e == epochId - 1 => at }
 }
 
-class QueueStreamingWriterFactory(opts: GraftOptions, schema: StructType, writerId: String)
+class QueueStreamingWriterFactory(opts: GraftOptions, conv: RowMessageConverter,
+                                  writerId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   private val hold = new TaskHold
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new QueueDataWriter(opts, schema, partitionId, epochId, writerId, hold)
+    new QueueDataWriter(opts, conv, partitionId, epochId, writerId, hold)
 }
 
-class QueueDataWriterFactory(opts: GraftOptions, schema: StructType)
+class QueueDataWriterFactory(opts: GraftOptions, conv: RowMessageConverter)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new QueueDataWriter(opts, schema, partitionId)
+    new QueueDataWriter(opts, conv, partitionId)
 }
 
 /** A task's landed queue end (None = a replayed epoch, nothing appended). */
@@ -139,102 +146,23 @@ private object QueueCommit {
     messages.iterator.collect { case c: QueueCommit => c.bytesRepaired }.sum
 }
 
-class QueueDataWriter(opts: GraftOptions, schema: StructType, partitionId: Int,
+/**
+ * One task's writer: rows become messages through [[RowMessageConverter]]
+ * (the one rule set for every sink path), spill to a task-attempt temp
+ * file, and land in the queue log at commit.
+ */
+class QueueDataWriter(opts: GraftOptions, conv: RowMessageConverter, partitionId: Int,
                       epochId: Long = -1L, writerId: String = "",
                       hold: TaskHold = new TaskHold)
     extends DataWriter[InternalRow] {
-
-  private val fieldNames = schema.fieldNames
-
-  /** A message-shaped input (every column is one of the source's own
-    * message/metadata columns, case-insensitively, and there is a string
-    * `body`) maps columns by ROLE — body→body, msg_key→key, tag→tag,
-    * born_ts→born, properties→properties; topic/queue_id/offset are
-    * broker-assigned and ignored. This is what makes
-    * `INSERT INTO <graft-mq table> SELECT ... AS body, ...` round-trip:
-    * reading a queue and inserting the rows back writes the same messages,
-    * not delimiter-joined column soup. (Positional `INSERT ... VALUES`
-    * arrives as col1..colN under ACCEPT_ANY_SCHEMA and takes the generic
-    * path — alias the columns.) Any explicit body-shaping option
-    * (keyColumns / dynamic tag / writeKeysToBody) disables the mapping so
-    * an existing delimited-body pipeline never changes format silently. */
-  private val messageShaped: Boolean = {
-    val msgCols = graft.source.MessageQueueTable.Schema.fieldNames.map(_.toLowerCase).toSet
-    opts.keyColumns.isEmpty && !opts.isDynamicTag && !opts.writeKeysToBody &&
-      fieldNames.forall(f => msgCols.contains(f.toLowerCase)) &&
-      schema.fields.exists(f => f.name.equalsIgnoreCase("body") &&
-        f.dataType == org.apache.spark.sql.types.StringType)
-  }
-  private def idxOf(name: String): Int =
-    schema.fields.indexWhere(_.name.equalsIgnoreCase(name))
-  private val msgBodyIdx = if (messageShaped) idxOf("body") else -1
-  private val msgKeyIdx = if (messageShaped) idxOf("msg_key") else -1
-  private val msgTagIdx = if (messageShaped) idxOf("tag") else -1
-  private val msgPropsIdx = if (messageShaped) idxOf("properties") else -1
-
-  private val tagIdx =
-    if (opts.isDynamicTag && opts.dynamicTagColumn != null)
-      schema.fieldIndex(opts.dynamicTagColumn)
-    else -1
-  private val keyIdx = opts.keyColumns.map(schema.fieldIndex).toArray
-  private val bornIdx = {
-    val i = schema.fields.indexWhere(f => f.name == "born_ts" && f.dataType == TimestampType)
-    i
-  }
-  private val excluded: Set[Int] =
-    (if (opts.writeKeysToBody) Set.empty[Int] else keyIdx.toSet) ++
-      (if (tagIdx >= 0 && !opts.dynamicTagColumnWriteIncluded) Set(tagIdx) else Set.empty) ++
-      (if (bornIdx >= 0) Set(bornIdx) else Set.empty)
-  private val bodyIdx = schema.indices.filterNot(excluded.contains).toArray
 
   // rows spill to a task-attempt temp file as they arrive (O(1) heap, the
   // 100 TB partition case); commit() appends it to the queue log
   private val spill = new Spill(s"graft-write-$partitionId-")
   private var bytes = 0L
 
-  private def str(row: InternalRow, i: Int): String =
-    if (row.isNullAt(i)) ""
-    else schema(i).dataType match {
-      case TimestampType => (row.getLong(i) / 1000L).toString // micros → millis
-      case dt => row.get(i, dt).toString
-    }
-
-  // msgDelayLevel shifts delivery time (see GraftOptions.DelayLevelMs)
-  private val delayMs = graft.config.GraftOptions.delayMs(opts.msgDelayLevel)
-
-  override def write(row: InternalRow): Unit = {
-    val born = delayMs +
-      (if (bornIdx >= 0 && !row.isNullAt(bornIdx)) row.getLong(bornIdx) / 1000L
-       else System.currentTimeMillis())
-    val m =
-      if (messageShaped) {
-        val props =
-          if (msgPropsIdx < 0 || row.isNullAt(msgPropsIdx)) Map.empty[String, String]
-          else {
-            val md = row.getMap(msgPropsIdx)
-            val ks = md.keyArray(); val vs = md.valueArray()
-            (0 until md.numElements()).map { i =>
-              // map values are nullable in SQL; a property is never null
-              val v = vs.getUTF8String(i)
-              ks.getUTF8String(i).toString -> (if (v == null) "" else v.toString)
-            }.toMap
-          }
-        val tag = if (msgTagIdx >= 0) str(row, msgTagIdx) else opts.tag
-        Message(born,
-          if (msgKeyIdx >= 0) str(row, msgKeyIdx) else "",
-          if (tag == "*") "" else tag,
-          props,
-          str(row, msgBodyIdx))
-      } else {
-        val key = keyIdx.map(str(row, _)).mkString(",")
-        val tag = if (tagIdx >= 0) str(row, tagIdx) else opts.tag
-        // GraftOptions.parse normalizes an empty delimiter to SOH, so writer
-        // and reader always agree on the body layout
-        val body = bodyIdx.map(str(row, _)).mkString(opts.fieldDelimiter)
-        Message(born, key, if (tag == "*") "" else tag, Map.empty, body)
-      }
-    bytes += graft.source.Metrics.utf8Length(spill.write(m)) + 1L
-  }
+  override def write(row: InternalRow): Unit =
+    bytes += graft.source.Metrics.utf8Length(spill.write(conv.convert(row))) + 1L
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, MicroBatchStream, Offset, PartitionOffset, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, MicroBatchStream, Offset, PartitionOffset, ReportsSinkMetrics, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -79,7 +79,7 @@ object MessageQueueTable {
 }
 
 class MessageQueueTable(val opts: GraftOptions) extends Table
-    with SupportsRead with SupportsWrite {
+    with SupportsRead with SupportsWrite with ReportsSinkMetrics {
   /** Same table with extra property-equality predicates for the reader —
     * [[graft.plans.PushPropertyPredicates]] rewrites a plan's relation onto
     * this, the way the reference consumer installs a SQL92 property
@@ -100,7 +100,14 @@ class MessageQueueTable(val opts: GraftOptions) extends Table
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new graft.sink.MessageQueueWriteBuilder(opts, info.schema(), info.queryId())
+    new graft.sink.MessageQueueWriteBuilder(opts, info.schema(), info.queryId(), bytesRepaired)
+
+  /** The bytes the repairs of the last committed micro-batch or epoch cut,
+    * in `lastProgress.sink.metrics`: Spark never asks a micro-batch write
+    * node for driver metrics. */
+  private val bytesRepaired = new java.util.concurrent.atomic.AtomicLong
+  override def metrics(): util.Map[String, String] =
+    util.Map.of(Metrics.BytesRepaired, bytesRepaired.get.toString)
 }
 
 /**

@@ -1,6 +1,5 @@
 package graft.config
 
-import graft.serde.DirtyDataStrategy
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftOptionsSpec extends AnyFunSuite {
@@ -12,14 +11,7 @@ class GraftOptionsSpec extends AnyFunSuite {
     val o = GraftOptions.parse(base)
     assert(o.topic === "t1" && o.consumerGroup === "g1" && o.rootDir === "/tmp/mq")
     assert(o.tag === "*")
-    assert(o.encoding === "UTF-8")
     assert(o.fieldDelimiter === "\u0001")
-    assert(o.lineDelimiter === "\n")
-    assert(o.lengthCheck === "NONE")
-    assert(o.retryTimes === 10)
-    assert(o.sleepTimeMs === 5000L)
-    assert(o.partitionDiscoveryIntervalMs === 30000L)
-    assert(o.columnErrorDebug)
   }
 
   test("missing required option names the key") {
@@ -32,15 +24,26 @@ class GraftOptionsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("boguskey"))
   }
 
+  test("the keys nothing read are rejected, naming what replaced them") {
+    for ((k, use) <- Seq("encoding" -> "Deser.parseBodies", "lineDelimiter" -> "Deser.parseBodies",
+        "lengthCheck" -> "Deser.parseBodies", "isDynamicTag" -> "dynamicTagColumn")) {
+      val e = intercept[IllegalArgumentException](GraftOptions.parse(base + (k -> "x")))
+      assert(e.getMessage.contains(s"${k.toLowerCase} (use $use)"))
+    }
+    for (k <- Seq("retryTimes", "sleepTimeMs", "partitionDiscoveryIntervalMs", "columnErrorDebug")) {
+      val e = intercept[IllegalArgumentException](GraftOptions.parse(base + (k -> "1")))
+      assert(e.getMessage.contains(k.toLowerCase))
+    }
+  }
+
   test("option keys are case-insensitive") {
     val o = GraftOptions.parse(Map("TOPIC" -> "t", "ConsumerGroup" -> "g", "ROOTDIR" -> "/x"))
     assert(o.topic === "t")
   }
 
   test("delimiters unescape java escapes") {
-    val o = GraftOptions.parse(base ++ Map("fieldDelimiter" -> "\\t", "lineDelimiter" -> "\\r\\n"))
+    val o = GraftOptions.parse(base ++ Map("fieldDelimiter" -> "\\t"))
     assert(o.fieldDelimiter === "\t")
-    assert(o.lineDelimiter === "\r\n")
     assert(GraftOptions.unescape("\\u0001") === "\u0001")
     assert(GraftOptions.unescape("a\\\\b") === "a\\b")
   }
@@ -69,17 +72,6 @@ class GraftOptionsSpec extends AnyFunSuite {
     assert(GraftOptions.parse(base + ("offsetResetTo" -> "earliest")).startMode ===
       StartMode.Earliest)
     assert(GraftOptions.parse(base).startMode === StartMode.Latest)
-  }
-
-  test("lengthCheck shorthand maps to the reference strategy triples") {
-    assert(GraftOptions.strategies("SKIP") ===
-      ((DirtyDataStrategy.Skip, DirtyDataStrategy.Skip, DirtyDataStrategy.Skip)))
-    assert(GraftOptions.strategies("PAD") ===
-      ((DirtyDataStrategy.Skip, DirtyDataStrategy.Pad, DirtyDataStrategy.Cut)))
-    assert(GraftOptions.strategies("EXCEPTION") ===
-      ((DirtyDataStrategy.Exception, DirtyDataStrategy.Exception, DirtyDataStrategy.Exception)))
-    assert(GraftOptions.strategies("NONE") ===
-      ((DirtyDataStrategy.Skip, DirtyDataStrategy.Skip, DirtyDataStrategy.Cut)))
   }
 
   test("keyColumns splits on comma") {

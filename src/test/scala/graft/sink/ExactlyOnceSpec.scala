@@ -20,10 +20,11 @@ class ExactlyOnceSpec extends SparkSpec {
 
   private val bodySchema = StructType(Seq(StructField("body", StringType)))
 
-  private def writer(root: String, queue: Int, epoch: Long): QueueDataWriter =
-    new QueueDataWriter(GraftOptions.parse(Map(
-      "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root)),
-      bodySchema, queue, epoch)
+  private def writer(root: String, queue: Int, epoch: Long): QueueDataWriter = {
+    val opts = GraftOptions.parse(Map(
+      "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
+    new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), queue, epoch)
+  }
 
   private def row(s: String): InternalRow = InternalRow(UTF8String.fromString(s))
 
@@ -96,7 +97,7 @@ class ExactlyOnceSpec extends SparkSpec {
         val opts = GraftOptions.parse(Map(
           "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
         val bw = new MessageQueueBatchWrite(opts, bodySchema)
-        val w = new QueueDataWriter(opts, bodySchema, 0)
+        val w = new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), 0)
         w.write(row(body))
         bw.commit(Array(w.commit()))
       },
@@ -189,7 +190,7 @@ class ExactlyOnceSpec extends SparkSpec {
     fn(b0, 0L) // replayed batchId
     assert(bodies(root, "fb") === Seq("a", "b"))
     // crashed batch-1 attempt: data landed, ledger publish never ran
-    TopicLog.append(root, "fb", 0, Iterator(conv.convert(org.apache.spark.sql.Row("c"))))
+    TopicLog.append(root, "fb", 0, Iterator(conv.convert(row("c"))))
     assert(bodies(root, "fb") === Seq("a", "b")) // invisible past hwm
     fn(Seq("c", "d").toDF("body"), 1L) // replay heals and lands once
     assert(bodies(root, "fb") === Seq("a", "b", "c", "d"))
@@ -292,7 +293,7 @@ class ExactlyOnceSpec extends SparkSpec {
     def epochAs(writer: String, id: Long, lines: Seq[String]): Unit = {
       val opts = GraftOptions.parse(Map(
         "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
-      val w = new QueueDataWriter(opts, bodySchema, 0, id, writer)
+      val w = new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), 0, id, writer)
       lines.foreach(l => w.write(row(l)))
       val msg = w.commit()
       new MessageQueueStreamingWrite(opts, bodySchema, writer).commit(id, Array(msg))
@@ -354,5 +355,39 @@ class ExactlyOnceSpec extends SparkSpec {
     run() // restart with no new data: ledger blocks any re-append
     val second = (0 until 8).flatMap(q => bodies(dstRoot, "out", q)).sorted
     assert(second === first)
+  }
+
+  test("a micro-batch's repair shows in the query progress as a sink metric") {
+    import org.apache.spark.sql.streaming.Trigger
+    val srcRoot = Files.createTempDirectory("graft-eo-prog").toString
+    val dstRoot = Files.createTempDirectory("graft-eo-prog").toString
+    val checkpoint = Files.createTempDirectory("graft-eo-ckpt").toString
+    def add(from: Int, until: Int): Unit =
+      TopicLog.append(srcRoot, "in", 0, (from until until).iterator.map(i =>
+        graft.source.Message(1000L * (i + 1), s"k$i", "t", Map.empty, s"body-$i")))
+    def run(): Long = {
+      val q = spark.readStream.format("graft-mq")
+        .option("topic", "in").option("consumerGroup", "g").option("rootDir", srcRoot)
+        .option("offsetResetTo", "earliest").load()
+        .select(col("body"))
+        .writeStream.format("graft-mq")
+        .option("topic", "out").option("consumerGroup", "g").option("rootDir", dstRoot)
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      assert(q.awaitTermination(60000))
+      q.lastProgress.sink.metrics.get(graft.source.Metrics.BytesRepaired).toLong
+    }
+    add(0, 3)
+    assert(run() === 0L)
+    // a crashed attempt left a torn fragment past the sink's mark
+    val fragment = "9\tk\tt\t\ttorn-lin"
+    Files.writeString(TopicLog.queueFile(dstRoot, "out", 0).toPath, fragment,
+      java.nio.file.StandardOpenOption.APPEND)
+    add(3, 5)
+    assert(run() === fragment.length.toLong)
+    assert(bodies(dstRoot, "out") === (0 until 5).map(i => s"body-$i"))
+    add(5, 6)
+    assert(run() === 0L) // nothing left to repair
   }
 }

@@ -4,9 +4,11 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.source.TopicLog
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 class MessageQueueSinkSpec extends SparkSpec {
 
@@ -16,6 +18,12 @@ class MessageQueueSinkSpec extends SparkSpec {
     StructField("id", LongType),
     StructField("name", StringType),
     StructField("category", StringType)))
+
+  /** A binary row of Catalyst values: strings as UTF8String, timestamps as micros. */
+  private def irow(vs: Any*): InternalRow = InternalRow.fromSeq(vs.map {
+    case s: String => UTF8String.fromString(s)
+    case v => v
+  })
 
   private def sampleDf(n: Int) = {
     import spark.implicits._
@@ -66,19 +74,19 @@ class MessageQueueSinkSpec extends SparkSpec {
 
   test("dynamic tag column sets tag and can be excluded from body") {
     val conv = new RowMessageConverter(schema, fieldDelimiter = ",",
-      isDynamicTag = true, dynamicTagColumn = "category", dynamicTagIncluded = false)
-    val m = conv.convert(Row(1L, "n", "A"), bornTs = 5L)
+      dynamicTagColumn = Some("category"), dynamicTagIncluded = false)
+    val m = conv.convert(irow(1L, "n", "A"), bornTs = 5L)
     assert(m.tag === "A")
     assert(m.body === "1,n")
     val convIncl = new RowMessageConverter(schema, fieldDelimiter = ",",
-      isDynamicTag = true, dynamicTagColumn = "category")
-    assert(convIncl.convert(Row(1L, "n", "A"), 5L).body === "1,n,A")
+      dynamicTagColumn = Some("category"))
+    assert(convIncl.convert(irow(1L, "n", "A"), 5L).body === "1,n,A")
   }
 
   test("key columns join with comma; property columns move to properties") {
     val conv = new RowMessageConverter(schema, fieldDelimiter = "|",
       keyColumns = Seq("id", "name"), propertyColumns = Seq("category"))
-    val m = conv.convert(Row(7L, "x", "B"), bornTs = 1L)
+    val m = conv.convert(irow(7L, "x", "B"), bornTs = 1L)
     assert(m.key === "7,x")
     assert(m.properties === Map("category" -> "B"))
     assert(m.body === "") // id,name excluded as keys; category as property
@@ -86,8 +94,8 @@ class MessageQueueSinkSpec extends SparkSpec {
 
   test("bornTs column drives message time") {
     val s2 = StructType(schema.fields :+ StructField("ts", TimestampType))
-    val conv = new RowMessageConverter(s2, fieldDelimiter = ",", bornTsColumn = "ts")
-    val m = conv.convert(Row(1L, "a", "A", new java.sql.Timestamp(123456L)))
+    val conv = new RowMessageConverter(s2, fieldDelimiter = ",", bornTsColumn = Some("ts"))
+    val m = conv.convert(irow(1L, "a", "A", 123456000L))
     assert(m.bornTs === 123456L)
   }
 
@@ -149,7 +157,7 @@ class MessageQueueSinkSpec extends SparkSpec {
     sampleDf(40).write.format("graft-mq")
       .option("topic", "dsv2").option("consumerGroup", "g").option("rootDir", root)
       .option("keyColumns", "id")
-      .option("isDynamicTag", "true").option("dynamicTagColumn", "category")
+      .option("dynamicTagColumn", "category")
       .option("dynamicTagColumnWriteIncluded", "false")
       .mode("append")
       .save()
@@ -189,5 +197,86 @@ class MessageQueueSinkSpec extends SparkSpec {
     val got = back.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val want = sampleDf(25).collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     assert(got === want)
+  }
+
+  test("one encoder: write, foreachBatch and the DSv2 writer render rows alike") {
+    import spark.implicits._
+    // every path writes `in` as topic "enc" of its own root, one queue
+    def viaWrite(in: DataFrame, conv: RowMessageConverter): String = {
+      val root = freshRoot()
+      MessageQueueSink.write(in, root, new DefaultTopicSelector[Map[String, Any]]("enc"), conv,
+        numQueues = 1)
+      root
+    }
+    def viaForeachBatch(in: DataFrame, conv: RowMessageConverter): String = {
+      val root = freshRoot()
+      MessageQueueSink.foreachBatch(root, new DefaultTopicSelector[Map[String, Any]]("enc"),
+        conv, numQueues = 1)(in, 0L)
+      root
+    }
+    def viaDsv2(in: DataFrame, options: (String, String)*): String = {
+      val root = freshRoot()
+      options.foldLeft(in.write.format("graft-mq"))((w, kv) => w.option(kv._1, kv._2))
+        .option("topic", "enc").option("consumerGroup", "g").option("rootDir", root)
+        .option("numQueues", "1").mode("append").save()
+      root
+    }
+    def lines(root: String): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      Files.readAllLines(TopicLog.queueFile(root, "enc", 0).toPath).asScala.toSeq.sorted
+    }
+    def messages(root: String): Seq[graft.source.Message] =
+      TopicLog.readRange(root, "enc", 0, 0, TopicLog.maxOffset(root, "enc", 0))
+        .map(_._2).toSeq.sortBy(_.body)
+
+    // long, string, binary, date, decimal and timestamp columns; the first
+    // timestamp is before 1970 with a sub-millisecond part; the last row is
+    // null in every body column; born_ts drives message time
+    val frame = Seq(
+      (Some(1L), Some("hi"), Some("bin"), Some("2024-01-02"), Some("0.0000001"), Some(-1500L), 1000L),
+      (Some(2L), Some("\u00fc\tv"), Some("\u00e9"), Some("1969-07-20"), Some("12.5"),
+        Some(1700000000123456L), 2000L),
+      (None, None, None, None, None, None, 3000L))
+      .toDF("id", "name", "raw", "day", "amount", "ts_us", "born_ms")
+      .select(col("id"), col("name"), col("raw").cast("binary").as("raw"),
+        col("day").cast("date").as("day"), col("amount").cast("decimal(10,7)").as("amount"),
+        timestamp_micros(col("ts_us")).as("ts"), timestamp_millis(col("born_ms")).as("born_ts"))
+    val conv = new RowMessageConverter(frame.schema, staticTag = "t", fieldDelimiter = "|",
+      bornTsColumn = Some("born_ts"))
+    val roots = Seq(viaWrite(frame, conv), viaForeachBatch(frame, conv),
+      viaDsv2(frame, "tag" -> "t", "fieldDelimiter" -> "|"))
+    val expected = Seq(
+      (1000L, "1|hi|bin|2024-01-02|1E-7|-2"),
+      (2000L, "2|\u00fc\tv|\u00e9|1969-07-20|12.5000000|1700000000123"),
+      (3000L, "|||||"))
+    roots.foreach { root =>
+      assert(messages(root).map(m => (m.bornTs, m.body)) === expected.sortBy(_._2))
+      assert(messages(root).forall(m => m.tag == "t" && m.key.isEmpty && m.properties.isEmpty))
+      assert(lines(root) === lines(roots.head))
+    }
+
+    // a nested body column is refused, naming the column, on both surfaces
+    val nested = Seq((1L, Seq(1, 2))).toDF("id", "xs")
+    val e1 = intercept[IllegalArgumentException](new RowMessageConverter(nested.schema))
+    assert(e1.getMessage.contains("xs"))
+    val e2 = intercept[Exception](viaDsv2(nested))
+    assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains("xs")))
+
+    // dynamicTagColumn alone turns the dynamic tag on, on both surfaces
+    val tagged = sampleDf(4)
+    val tagConv = new RowMessageConverter(tagged.schema, fieldDelimiter = "|",
+      dynamicTagColumn = Some("category"))
+    for (root <- Seq(viaWrite(tagged, tagConv), viaDsv2(tagged,
+        "fieldDelimiter" -> "|", "dynamicTagColumn" -> "category"))) {
+      assert(messages(root).map(m => (m.tag, m.body)) ===
+        Seq(("A", "0|name0|A"), ("B", "1|name1|B"), ("A", "2|name2|A"), ("B", "3|name3|B")))
+    }
+
+    // a message-shaped (body, tag) frame maps tag to the tag on both
+    val shaped = Seq(("b1", "x"), ("b2", "y")).toDF("body", "tag")
+    for (root <- Seq(viaWrite(shaped, new RowMessageConverter(shaped.schema)), viaDsv2(shaped))) {
+      assert(messages(root).map(m => (m.tag, m.body)) === Seq(("x", "b1"), ("y", "b2")))
+    }
   }
 }

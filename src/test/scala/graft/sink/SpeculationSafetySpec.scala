@@ -36,7 +36,7 @@ class SpeculationSafetySpec extends AnyFunSuite {
   private def writerFor(root: String, partition: Int): QueueDataWriter = {
     val opts = GraftOptions.parse(Map(
       "topic" -> "race", "consumerGroup" -> "g", "rootDir" -> root))
-    new QueueDataWriter(opts, bodySchema, partition)
+    new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), partition)
   }
 
   private def row(s: String): InternalRow = InternalRow(UTF8String.fromString(s))
