@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.source.{EpochLedger, Message, TopicLog}
+import graft.source.{EpochLedger, TopicLog}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types.StructType
@@ -8,22 +8,12 @@ import org.apache.spark.sql.types.StructType
 /** A task's rendered lines on their way to one queue log: a private temp
   * file (O(1) heap), which [[graft.source.EpochLedger.commitTask]] appends
   * and deletes. An attempt that dies before its commit leaves the queue log
-  * untouched. */
+  * untouched. Rows render into [[out]], which counts the lines and bytes. */
 private[sink] final class Spill(prefix: String) {
   val path: java.nio.file.Path = java.nio.file.Files.createTempFile(prefix, ".spill")
-  private val out = new java.io.BufferedWriter(new java.io.FileWriter(
-    path.toFile, java.nio.charset.StandardCharsets.UTF_8))
-  private var n = 0L
-  def lines: Long = n
-
-  /** Spill one message; returns its rendered line (no terminator). */
-  def write(m: Message): String = {
-    val line = TopicLog.renderLine(m)
-    out.write(line); out.newLine(); n += 1L
-    line
-  }
+  val out = new TopicLog.LineWriter(new java.io.FileOutputStream(path.toFile))
   def close(): Unit = out.close()
-  def discard(): Unit = { out.close(); java.nio.file.Files.deleteIfExists(path); () }
+  def discard(): Unit = try out.close() finally { java.nio.file.Files.deleteIfExists(path); () }
 }
 
 /** The current row's fields by name, as the Scala values a [[TopicSelector]]
@@ -66,8 +56,9 @@ private[sink] final class RowFields(schema: StructType)
  * whose commit-coordinated append is retry-safe.
  *
  * Topic routing goes through a [[TopicSelector]] (constant or field-driven);
- * rows become messages through the one [[RowMessageConverter]], on Spark
- * SQL's binary rows (no external `Row` is built).
+ * rows become queue lines through the one [[RowMessageConverter]], on Spark
+ * SQL's binary rows (no external `Row` and no message is built), and the
+ * selector's tag stands in for an empty one.
  */
 object MessageQueueSink {
 
@@ -151,20 +142,21 @@ object MessageQueueSink {
         val queueId = org.apache.spark.TaskContext.getPartitionId()
         val spills = scala.collection.mutable.Map.empty[String, Spill]
         val fields = new RowFields(schema)
-        rows.foreach { row =>
-          fields.row = row
-          val topic = selector.getTopic(fields)
-          val tag = selector.getTag(fields)
-          val m0 = converter.convert(row)
-          val m = if (m0.tag.isEmpty && tag.nonEmpty) m0.copy(tag = tag) else m0
-          spills.getOrElseUpdate(topic, new Spill(s"graft-epoch-$queueId-")).write(m)
-        }
-        spills.values.foreach(_.close())
-        try spills.toSeq.sortBy(_._1).flatMap { case (topic, s) =>
-          EpochLedger.commitTask(rootDir, topic, queueId, writerId, epoch, s.path, s.lines)
-            .map(a => (topic, queueId, a.lines, a.bytes))
-        }.iterator
-        finally spills.values.foreach(_.discard())
+        // every spill a task opened is deleted however the task ends
+        try {
+          rows.foreach { row =>
+            fields.row = row
+            val out = spills.getOrElseUpdate(selector.getTopic(fields),
+              new Spill(s"graft-epoch-$queueId-")).out
+            converter.render(row, out, selector.getTag(fields))
+            out.endLine()
+          }
+          spills.values.foreach(_.close())
+          spills.toSeq.sortBy(_._1).flatMap { case (topic, s) =>
+            EpochLedger.commitTask(rootDir, topic, queueId, writerId, epoch, s.path, s.out.lines)
+              .map(a => (topic, queueId, a.lines, a.bytes))
+          }.iterator
+        } finally spills.values.foreach(_.discard())
       }.collect()
     ends.groupBy(_._1).foreach { case (topic, es) =>
       EpochLedger.commitDriver(rootDir, topic, writerId, epoch,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
  * Each task buffers its rows and appends them to its OWN queue file on
  * commit — task = queue (single writer per queue, the broker invariant), and
  * an aborted/retried task appends nothing (no partial lines). Rows become
- * messages through [[RowMessageConverter]]`(opts, schema)`, built here on
+ * queue lines through [[RowMessageConverter]]`(opts, schema)`, built here on
  * the driver so a schema it cannot write fails before any task runs.
  */
 class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
@@ -147,9 +147,9 @@ private object QueueCommit {
 }
 
 /**
- * One task's writer: rows become messages through [[RowMessageConverter]]
- * (the one rule set for every sink path), spill to a task-attempt temp
- * file, and land in the queue log at commit.
+ * One task's writer: [[RowMessageConverter]] (the one rule set for every
+ * sink path) renders each row's queue line straight into a task-attempt
+ * temp file, which lands in the queue log at commit.
  */
 class QueueDataWriter(opts: GraftOptions, conv: RowMessageConverter, partitionId: Int,
                       epochId: Long = -1L, writerId: String = "",
@@ -159,15 +159,16 @@ class QueueDataWriter(opts: GraftOptions, conv: RowMessageConverter, partitionId
   // rows spill to a task-attempt temp file as they arrive (O(1) heap, the
   // 100 TB partition case); commit() appends it to the queue log
   private val spill = new Spill(s"graft-write-$partitionId-")
-  private var bytes = 0L
 
-  override def write(row: InternalRow): Unit =
-    bytes += graft.source.Metrics.utf8Length(spill.write(conv.convert(row))) + 1L
+  override def write(row: InternalRow): Unit = {
+    conv.render(row, spill.out)
+    spill.out.endLine()
+  }
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(graft.source.Metrics.Value(graft.source.Metrics.MessagesWritten, spill.lines),
-      graft.source.Metrics.Value(graft.source.Metrics.BytesWritten, bytes),
+    Array(graft.source.Metrics.Value(graft.source.Metrics.MessagesWritten, spill.out.lines),
+      graft.source.Metrics.Value(graft.source.Metrics.BytesWritten, spill.out.bytes),
       graft.source.Metrics.Value(graft.source.Metrics.BytesRepaired, hold.bytesRepaired))
 
   /** The queue log is only touched here, after every row spilled cleanly —
@@ -179,7 +180,7 @@ class QueueDataWriter(opts: GraftOptions, conv: RowMessageConverter, partitionId
   override def commit(): WriterCommitMessage = {
     spill.close()
     val appended = graft.source.EpochLedger.commitTask(opts.rootDir, opts.topic, partitionId,
-      writerId, Some(epochId).filter(_ >= 0), spill.path, spill.lines,
+      writerId, Some(epochId).filter(_ >= 0), spill.path, spill.out.lines,
       hold.base(partitionId, epochId))
     appended.foreach { a =>
       hold.end = Some((partitionId, epochId, (a.lines, a.bytes)))

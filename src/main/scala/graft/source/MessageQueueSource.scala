@@ -4,6 +4,7 @@ import java.util
 
 import graft.config.{GraftOptions, StartMode}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -252,7 +253,9 @@ class QueueReaderFactory(opts: GraftOptions, requiredSchema: StructType)
  * equality-conjunction property filter (the reference consumer's tag and
  * SQL92 property selectors, reference: example/PropertyFilterExamples.java:33)
  * drop non-matching messages before a row is built (reference reader poll
- * loop: source/reader/RocketMQPartitionSplitReader.java:90-180), and every
+ * loop: source/reader/RocketMQPartitionSplitReader.java:90-180): the tag is
+ * compared as bytes before any other field is decoded, and the properties
+ * are parsed only when the filter or the projection needs them. Every
  * message read is counted in the `graft_*` read metrics. Its position, the
  * next offset to read, is what the continuous subclass reports.
  */
@@ -262,47 +265,69 @@ class QueuePartitionReader(opts: GraftOptions, requiredSchema: StructType,
 
   protected val cursor =
     TopicLog.cursor(TopicLog.queueFile(opts.rootDir, topic, queueId), start, stop)
-  private val acceptedTags: Set[String] =
+  private val acceptedTags: Array[Array[Byte]] =
     if (opts.tag == null || opts.tag == "*" || opts.tag.isEmpty) null
-    else opts.tag.split("\\|\\|").map(_.trim).toSet
-  // column pruning: one extractor per REQUIRED column only
-  private val extractors: Array[(Long, Message) => Any] =
-    requiredSchema.fieldNames.map {
-      case "topic" => (_: Long, _: Message) => UTF8String.fromString(topic)
-      case "queue_id" => (_: Long, _: Message) => queueId
-      case "offset" => (o: Long, _: Message) => o
-      case "born_ts" => (_: Long, m: Message) => m.bornTs * 1000L // millis → micros
-      case "msg_key" => (_: Long, m: Message) => UTF8String.fromString(m.key)
-      case "tag" => (_: Long, m: Message) => UTF8String.fromString(m.tag)
-      case "properties" => (_: Long, m: Message) => {
-        val keys = new Array[Any](m.properties.size)
-        val vals = new Array[Any](m.properties.size)
-        var i = 0
-        m.properties.foreach { case (k, v) =>
-          keys(i) = UTF8String.fromString(k); vals(i) = UTF8String.fromString(v); i += 1
-        }
-        ArrayBasedMapData(keys, vals)
-      }
-      case "body" => (_: Long, m: Message) => UTF8String.fromString(m.body)
-      case other => throw new IllegalArgumentException(s"unknown column: $other")
-    }
-  private var current: InternalRow = _
+    else opts.tag.split("\\|\\|").map(_.trim.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private val propertyFilter = opts.propertyFilter
+  // column pruning: the position in MessageQueueTable.Schema of each
+  // REQUIRED column, and one reused row that holds them
+  private val columns: Array[Int] = requiredSchema.fieldNames.map { c =>
+    val i = MessageQueueTable.Schema.fieldNames.indexOf(c)
+    if (i < 0) throw new IllegalArgumentException(s"unknown column: $c")
+    i
+  }
+  private val current = new SpecificInternalRow(requiredSchema.fields.map(_.dataType).toSeq)
+  private val topicName = UTF8String.fromString(topic)
   private var messagesRead = 0L
   private var messagesFiltered = 0L
   private var bytesRead = 0L
 
+  /** The next line that passes the tag and property selector, into
+    * [[current]]: a field is decoded only when a column or the selector
+    * needs it, and a string field with no backslash is a UTF8String over
+    * the cursor's bytes, valid until the next call. */
   override def next(): Boolean = {
     while (cursor.advance()) {
-      val m = cursor.message()
-      bytesRead += Metrics.utf8Length(m.body)
-      if ((acceptedTags == null || acceptedTags.contains(m.tag)) &&
-          opts.propertyFilter.forall { case (k, v) => m.properties.get(k).contains(v) }) {
+      val line = cursor.fields()
+      val selected = (acceptedTags == null || line.isOneOf(TopicLog.Tag, acceptedTags)) &&
+        (propertyFilter.isEmpty || {
+          val props = line.properties()
+          propertyFilter.forall { case (k, v) => props.get(k).contains(v) }
+        })
+      bytesRead += line.decodedLength(TopicLog.Body)
+      if (selected) {
         messagesRead += 1
-        current = InternalRow.fromSeq(extractors.map(_(cursor.offset, m)).toIndexedSeq)
+        fill(line)
         return true
-      } else messagesFiltered += 1
+      }
+      messagesFiltered += 1
     }
     false
+  }
+
+  private def fill(line: TopicLog.Fields): Unit = {
+    var i = 0
+    while (i < columns.length) {
+      columns(i) match {
+        case 0 => current.update(i, topicName)
+        case 1 => current.setInt(i, queueId)
+        case 2 => current.setLong(i, cursor.offset)
+        case 3 => current.setLong(i, line.bornTs() * 1000L) // millis → micros
+        case 4 => current.update(i, line.utf8(TopicLog.Key))
+        case 5 => current.update(i, line.utf8(TopicLog.Tag))
+        case 6 =>
+          val props = line.properties()
+          val keys = new Array[Any](props.size)
+          val vals = new Array[Any](props.size)
+          var k = 0
+          props.foreach { case (key, v) =>
+            keys(k) = UTF8String.fromString(key); vals(k) = UTF8String.fromString(v); k += 1
+          }
+          current.update(i, ArrayBasedMapData(keys, vals))
+        case _ => current.update(i, line.utf8(TopicLog.Body))
+      }
+      i += 1
+    }
   }
 
   override def get(): InternalRow = current

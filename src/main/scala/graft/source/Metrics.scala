@@ -58,22 +58,4 @@ object Metrics {
     override def name(): String = metricName
     override def value(): Long = metricValue
   }
-
-  /** UTF-8 byte length of a string without allocating the byte array —
-    * the *_bytes metrics must report bytes, not UTF-16 char counts. */
-  def utf8Length(s: String): Long = {
-    var n = 0L
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      n +=
-        (if (c < 0x80) 1
-         else if (c < 0x800) 2
-         else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
-           Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
-         else 3)
-      i += 1
-    }
-    n
-  }
 }

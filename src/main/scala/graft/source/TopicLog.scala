@@ -1,10 +1,13 @@
 package graft.source
 
-import java.io.{BufferedWriter, File, FileWriter}
+import java.io.File
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Paths, StandardOpenOption}
+
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One message in the file-backed queue log: the graft stand-in for a broker
   * message (bornTs/key/tag/properties/body — the same fields the reference's
@@ -21,9 +24,17 @@ final case class Message(
  * line, offset = line number. Stands in for the broker so all offset/split
  * semantics stay real (see SURVEY.md §3).
  *
- * Line format (tab-separated): `bornTs \t key \t tag \t k=v;k=v \t body`,
- * with backslash/tab/newline/CR escaped inside every field, so arbitrary
- * bodies round-trip. Append-only; one writer per queue (MQ semantics).
+ * Wire format, in bytes: one line per message, `bornTs \t key \t tag \t
+ * k=v;k=v \t body \n`. bornTs is the decimal text of epoch ms; the other
+ * fields are UTF-8 with six bytes escaped by a backslash: `\\`, tab (`\t`),
+ * newline (`\n`), CR (`\r`), `\;` and `\=` (the last two structure the
+ * properties field). All six are ASCII, so none occurs inside a multi-byte
+ * UTF-8 sequence: escaping a field's bytes is escaping its characters, and
+ * the tabs and newlines that structure a line are found in the raw bytes.
+ * Properties are sorted by key as Strings (UTF-16 order). [[LineWriter]] is
+ * the one encoder and [[Fields]] the one decoder; a field with no
+ * backslash and valid UTF-8 is read as its stored bytes. Append-only; one
+ * writer per queue (MQ semantics).
  *
  * Reads seek: each log has an in-memory [[PositionIndex]] (an entry every
  * [[Stride]] lines, built by the cursors that walk the log), so a read
@@ -54,96 +65,345 @@ object TopicLog {
     else dir.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
   }
 
-  // ---- field escaping ----
+  // ---- the wire codec, in bytes ----
 
-  private[source] def escape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '\t' => sb.append("\\t")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      // ';' and '=' structure the properties field; escaping them everywhere
-      // keeps one uniform codec (unescape's catch-all restores them)
-      case ';' => sb.append("\\;")
-      case '=' => sb.append("\\=")
-      case c => sb.append(c)
-    }
-    sb.toString
+  /** Field numbers of a line: `bornTs \t key \t tag \t properties \t body`. */
+  final val BornTs = 0
+  final val Key = 1
+  final val Tag = 2
+  final val Properties = 3
+  final val Body = 4
+
+  /** The letter that follows the backslash for each of the six escaped
+    * bytes, 0 for every other byte. */
+  private val EscapeLetter: Array[Byte] = {
+    val a = new Array[Byte](256)
+    Seq('\\' -> '\\', '\t' -> 't', '\n' -> 'n', '\r' -> 'r', ';' -> ';', '=' -> '=')
+      .foreach { case (b, letter) => a(b.toInt) = letter.toByte }
+    a
   }
 
-  /** First index of `sep` not preceded by an escape backslash. */
-  private def indexOfUnescaped(s: String, sep: Char, from: Int): Int = {
+  /** Bytes a [[LineWriter]] buffers before it hands them on. */
+  private final val FlushBytes = 64 * 1024
+
+  /**
+   * The one encoder of the wire format. It renders queue lines into a byte
+   * buffer and hands the buffer to `out` about every [[FlushBytes]] bytes.
+   * A caller writes a line's fields with [[ascii]], [[tab]] and the
+   * `escaped` forms ([[message]] writes all five of a [[Message]]), then
+   * ends the line with [[endLine]]. It counts the lines and the bytes it
+   * took, newlines included.
+   */
+  final class LineWriter(out: java.io.OutputStream) extends AutoCloseable {
+    private var buf = new Array[Byte](8192)
+    private var len = 0
+    private var flushed = 0L
+    private var n = 0L
+    def lines: Long = n
+    def bytes: Long = flushed + len
+
+    private def room(k: Int): Unit =
+      if (len + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + k))
+
+    def tab(): Unit = { room(1); buf(len) = '\t'; len += 1 }
+
+    /** `s` as is: text that is ASCII with none of the escaped bytes (a
+      * number's or a date's text). */
+    def ascii(s: String): Unit = {
+      room(s.length)
+      var i = 0
+      while (i < s.length) { buf(len) = s.charAt(i).toByte; len += 1; i += 1 }
+    }
+
+    /** `s`'s UTF-8 bytes, escaped. */
+    def escaped(s: String): Unit = escaped(s.getBytes(StandardCharsets.UTF_8))
+
+    /** `utf8`, valid UTF-8 (a String's encoding), escaped. */
+    def escaped(utf8: Array[Byte]): Unit = { escapedBytes(utf8, Platform.BYTE_ARRAY_OFFSET, utf8.length); () }
+
+    /** `s`'s bytes, escaped; bytes that are not valid UTF-8 are written as
+      * `s.toString` encodes them (U+FFFD). */
+    def escaped(s: UTF8String): Unit = {
+      val start = len
+      if (escapedBytes(s.getBaseObject, s.getBaseOffset, s.numBytes) && !s.isValid) {
+        len = start
+        escaped(s.toString)
+      }
+    }
+
+    /** Writes the `count` bytes at `base` + `offset` with each escaped byte
+      * as a backslash and its letter; true when one of them is not ASCII. */
+    private def escapedBytes(base: AnyRef, offset: Long, count: Int): Boolean = {
+      room(2 * count)
+      val out = buf
+      var o = len
+      var high = 0
+      var i = 0
+      while (i < count) {
+        val b = Platform.getByte(base, offset + i)
+        val letter = EscapeLetter(b & 0xff)
+        if (letter == 0) { out(o) = b; o += 1 }
+        else { out(o) = '\\'; out(o + 1) = letter; o += 2 }
+        high |= b
+        i += 1
+      }
+      len = o
+      high < 0
+    }
+
+    /** A properties field: `key=value` pairs sorted as Strings (UTF-16
+      * order), joined by ';'. */
+    def properties(props: Map[String, String]): Unit =
+      props.toSeq.sorted.iterator.zipWithIndex.foreach { case ((k, v), i) =>
+        if (i > 0) ascii(";")
+        escaped(k); ascii("="); escaped(v)
+      }
+
+    /** The five fields of `m` (no terminator). */
+    def message(m: Message): Unit = {
+      ascii(m.bornTs.toString); tab()
+      escaped(m.key); tab()
+      escaped(m.tag); tab()
+      properties(m.properties); tab()
+      escaped(m.body)
+    }
+
+    /** Where the next byte of the current line goes: with [[wroteOnly]] and
+      * [[rewind]], how a renderer takes back a field it wrote. */
+    private[graft] def position: Int = len
+    private[graft] def wroteOnly(from: Int, b: Char): Boolean = len == from + 1 && buf(from) == b
+    private[graft] def rewind(to: Int): Unit = len = to
+
+    def endLine(): Unit = {
+      room(1); buf(len) = '\n'; len += 1; n += 1
+      if (len >= FlushBytes) flush()
+    }
+
+    private def flush(): Unit = if (len > 0) { out.write(buf, 0, len); flushed += len; len = 0 }
+
+    override def close(): Unit = try flush() finally out.close()
+  }
+
+  /** Whether buf[from, until) is well-formed UTF-8: exactly the byte
+    * sequences Java's UTF-8 decoder takes without a replacement. */
+  private def validUtf8(buf: Array[Byte], from: Int, until: Int): Boolean =
+    UTF8String.fromBytes(buf, from, until - from).isValid
+
+  /** buf[from, until) as a String decode and encode leave it: invalid
+    * UTF-8 becomes U+FFFD. */
+  private def replaced(buf: Array[Byte], from: Int, until: Int): Array[Byte] =
+    new String(buf, from, until - from, StandardCharsets.UTF_8).getBytes(StandardCharsets.UTF_8)
+
+  private final val Ones = 0x0101010101010101L
+  private final val Highs = 0x8080808080808080L
+  private final val Backslashes = 0x5c5c5c5c5c5c5c5cL
+
+  /** Index of the first backslash or non-ASCII byte in buf[from, until),
+    * or `until`: eight bytes a step while a word holds neither. */
+  private def plainUntil(buf: Array[Byte], from: Int, until: Int): Int = {
     var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\') i += 2
-      else if (c == sep) return i
-      else i += 1
+    var plain = true
+    while (plain && i + 8 <= until) {
+      val w = Platform.getLong(buf, Platform.BYTE_ARRAY_OFFSET + i)
+      val x = w ^ Backslashes // a zero byte where w holds a backslash
+      plain = ((w | ((x - Ones) & ~x)) & Highs) == 0
+      if (plain) i += 8
     }
-    -1
+    while (i < until && buf(i) >= 0 && buf(i) != '\\') i += 1
+    i
   }
 
-  /** Split on unescaped occurrences of `sep`. */
-  private def splitUnescaped(s: String, sep: Char): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var start = 0
-    var idx = indexOfUnescaped(s, sep, 0)
-    while (idx >= 0) {
-      out += s.substring(start, idx)
-      start = idx + 1
-      idx = indexOfUnescaped(s, sep, start)
+  /** The decoded bytes of a field stored as buf[from, until), or null when
+    * they are the stored bytes (no backslash, valid UTF-8: one scan).
+    * Otherwise invalid UTF-8 becomes U+FFFD first, as a String decode of
+    * the stored bytes does, and then the escapes are undone: a backslash
+    * and the byte after it become that byte, with t, n and r read as tab,
+    * newline and CR, and a trailing lone backslash stays. */
+  private def decoded(buf: Array[Byte], from: Int, until: Int): Array[Byte] = {
+    val first = plainUntil(buf, from, until)
+    if (first == until) return null
+    if (validUtf8(buf, first, until)) {
+      var j = first
+      while (j < until && buf(j) != '\\') j += 1
+      if (j == until) null else unescape(buf, from, until)
+    } else {
+      val fixed = replaced(buf, from, until)
+      unescape(fixed, 0, fixed.length)
     }
-    out += s.substring(start)
-    out.result()
   }
 
-  private[source] def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => sb.append('\\')
-          case 't' => sb.append('\t')
-          case 'n' => sb.append('\n')
-          case 'r' => sb.append('\r')
-          case other => sb.append(other)
+  private def unescape(src: Array[Byte], from: Int, until: Int): Array[Byte] = {
+    val out = new Array[Byte](until - from)
+    var o = 0
+    var i = from
+    while (i < until) {
+      val b = src(i)
+      if (b == '\\' && i + 1 < until) {
+        out(o) = src(i + 1) match {
+          case 't' => '\t'
+          case 'n' => '\n'
+          case 'r' => '\r'
+          case other => other
         }
         i += 2
-      } else { sb.append(c); i += 1 }
+      } else { out(o) = b; i += 1 }
+      o += 1
     }
-    sb.toString
+    java.util.Arrays.copyOf(out, o)
   }
 
-  private[source] def formatLine(m: Message): String = {
-    val props = m.properties.toSeq.sorted
-      .map { case (k, v) => s"${escape(k)}=${escape(v)}" }.mkString(";")
-    s"${m.bornTs}\t${escape(m.key)}\t${escape(m.tag)}\t$props\t${escape(m.body)}"
+  /** Index of the first `sep` in a[from, until) not escaped by a
+    * backslash, or `until`. */
+  private def indexOfUnescaped(a: Array[Byte], sep: Char, from: Int, until: Int): Int = {
+    var i = from
+    while (i < until) {
+      val b = a(i)
+      if (b == '\\') i += 2
+      else if (b == sep) return i
+      else i += 1
+    }
+    until
   }
 
-  private[source] def parseLine(line: String): Message = {
-    val parts = line.split("\t", 5)
-    val props =
-      if (parts.length < 4 || parts(3).isEmpty) Map.empty[String, String]
-      else splitUnescaped(parts(3), ';').iterator.filter(_.nonEmpty).map { kv =>
-        val eq = indexOfUnescaped(kv, '=', 0)
-        require(eq >= 0, s"malformed property entry: $kv")
-        unescape(kv.substring(0, eq)) -> unescape(kv.substring(eq + 1))
-      }.toMap
-    Message(
-      bornTs = parts(0).toLong,
-      key = unescape(parts(1)),
-      tag = unescape(parts(2)),
-      properties = props,
-      body = if (parts.length < 5) "" else unescape(parts(4)))
+  private def text(a: Array[Byte], from: Int, until: Int): String = {
+    val d = decoded(a, from, until)
+    if (d == null) new String(a, from, until - from, StandardCharsets.UTF_8)
+    else new String(d, StandardCharsets.UTF_8)
+  }
+
+  /** `Long.parseLong` of the ASCII text in buf[from, until): the same
+    * values, and a NumberFormatException for the same inputs once a
+    * non-ASCII byte counts as a non-digit (a US-ASCII decode first). */
+  private def parseLong(buf: Array[Byte], from: Int, until: Int): Long = {
+    def fail(): Nothing = throw new NumberFormatException(
+      "For input string: \"" + new String(buf, from, until - from, StandardCharsets.US_ASCII) + "\"")
+    var i = from
+    var negative = false
+    var limit = -Long.MaxValue
+    if (i >= until) fail()
+    val first = buf(i)
+    if (first < '0') {
+      if (first == '-') { negative = true; limit = Long.MinValue }
+      else if (first != '+') fail()
+      i += 1
+      if (i == until) fail()
+    }
+    val multmin = limit / 10
+    var result = 0L
+    while (i < until) {
+      val d = buf(i) - '0'
+      if (d < 0 || d > 9 || result < multmin) fail()
+      result *= 10
+      if (result < limit + d) fail()
+      result -= d
+      i += 1
+    }
+    if (negative) result else -result
+  }
+
+  /**
+   * The five fields of one line in a byte buffer, found by its four tab
+   * separators, and their decoders. A field is decoded only when asked,
+   * and one with no backslash and valid UTF-8 is its stored bytes. Invalid
+   * UTF-8 reads as U+FFFD, as a String decode of the line does. A line
+   * with fewer than three fields is malformed; absent properties and body
+   * are empty, and the body runs to the line end.
+   */
+  final class Fields private[source] () {
+    private var buf: Array[Byte] = _
+    private val from = new Array[Int](5)
+    private val until = new Array[Int](5)
+
+    private[source] def split(bytes: Array[Byte], start: Int, end: Int): Fields = {
+      buf = bytes
+      var i = start
+      var f = 0
+      while (f < Body) {
+        from(f) = i
+        while (i < end && bytes(i) != '\t') i += 1
+        until(f) = i
+        if (i < end) i += 1
+        else if (f < Tag) throw new IllegalArgumentException(
+          "malformed queue line (fewer than three fields): " +
+            new String(bytes, start, end - start, StandardCharsets.UTF_8))
+        f += 1
+      }
+      from(Body) = i; until(Body) = end
+      this
+    }
+
+    /** Field `f` decoded, as a UTF8String over the stored bytes when they
+      * need no decoding. */
+    def utf8(f: Int): UTF8String = {
+      val d = decoded(buf, from(f), until(f))
+      if (d == null) UTF8String.fromBytes(buf, from(f), until(f) - from(f)) else UTF8String.fromBytes(d)
+    }
+
+    def string(f: Int): String = text(buf, from(f), until(f))
+
+    /** The byte length of field `f` decoded. */
+    def decodedLength(f: Int): Int = {
+      val d = decoded(buf, from(f), until(f))
+      if (d == null) until(f) - from(f) else d.length
+    }
+
+    /** Whether field `f` decodes to one of `values` (UTF-8 bytes). */
+    def isOneOf(f: Int, values: Array[Array[Byte]]): Boolean = {
+      val d = decoded(buf, from(f), until(f))
+      var k = 0
+      while (k < values.length) {
+        val v = values(k)
+        if (if (d == null) java.util.Arrays.equals(buf, from(f), until(f), v, 0, v.length)
+            else java.util.Arrays.equals(d, v)) return true
+        k += 1
+      }
+      false
+    }
+
+    /** The bornTs field as `Long.parseLong` of its text. */
+    def bornTs(): Long =
+      try parseLong(buf, from(BornTs), until(BornTs))
+      catch {
+        case _: NumberFormatException => java.lang.Long.parseLong(
+          new String(buf, from(BornTs), until(BornTs) - from(BornTs), StandardCharsets.UTF_8))
+      }
+
+    /** The properties field: entries split on unescaped ';' (empty ones
+      * skipped), each split at its first unescaped '='; a later duplicate
+      * key wins. */
+    def properties(): Map[String, String] = {
+      val s = from(Properties)
+      val e = until(Properties)
+      if (s == e) return Map.empty
+      val (a, as, ae) =
+        if (validUtf8(buf, s, e)) (buf, s, e)
+        else { val fixed = replaced(buf, s, e); (fixed, 0, fixed.length) }
+      val out = Map.newBuilder[String, String]
+      var i = as
+      while (i < ae) {
+        val j = indexOfUnescaped(a, ';', i, ae)
+        if (j > i) {
+          val eq = indexOfUnescaped(a, '=', i, j)
+          require(eq < j,
+            s"malformed property entry: ${new String(a, i, j - i, StandardCharsets.UTF_8)}")
+          out += text(a, i, eq) -> text(a, eq + 1, j)
+        }
+        i = j + 1
+      }
+      out.result()
+    }
+
+    def message(): Message =
+      Message(bornTs(), string(Key), string(Tag), properties(), string(Body))
+  }
+
+  /** One line (its trailing newline, if any, ignored) decoded. */
+  def decode(line: Array[Byte]): Message = {
+    val end = if (line.nonEmpty && line.last == '\n') line.length - 1 else line.length
+    new Fields().split(line, 0, end).message()
   }
 
   // ---- IO ----
-
-  /** One message as its on-disk line (no terminator). */
-  def renderLine(m: Message): String = formatLine(m)
 
   /** Append pre-rendered lines from a spill file to a queue log in one
     * channel transfer (the DSv2 writer's commit path). */
@@ -161,11 +421,10 @@ object TopicLog {
   def append(root: String, topic: String, queueId: Int, messages: Iterator[Message]): Long = {
     val file = queueFile(root, topic, queueId)
     file.getParentFile.mkdirs()
-    val out = new BufferedWriter(new FileWriter(file, StandardCharsets.UTF_8, true))
-    var n = 0L
-    try messages.foreach { m => out.write(formatLine(m)); out.newLine(); n += 1 }
+    val out = new LineWriter(new java.io.FileOutputStream(file, true))
+    try messages.foreach { m => out.message(m); out.endLine() }
     finally out.close()
-    n
+    out.lines
   }
 
   /** Earliest available offset: always 0. A log is never trimmed at its
@@ -332,9 +591,9 @@ object TopicLog {
 
   /** Forward cursor over the complete lines of one queue log, opened at a
     * [[Mark]] of its [[PositionIndex]] at or below `from`. Line ends are
-    * found in raw bytes and a line is decoded only when asked ([[bornTs]]
-    * or [[message]]), so a skipped line costs a newline search and a
-    * bornTs parse, not a UTF-8 decode. [[advance]]
+    * found in raw bytes and a line is decoded only when asked ([[bornTs]],
+    * [[fields]] or [[message]]), so a skipped line costs a newline search
+    * and a bornTs parse, not a UTF-8 decode. [[advance]]
     * yields only lines with `from <= offset < stop` (`stop`: the caller's
     * ledger mark or complete-line count), never an unterminated tail, and
     * records every stride boundary it passes in the index. A cursor opened
@@ -430,11 +689,11 @@ object TopicLog {
       true
     }
 
-    /** The bornTs prefix of the current line. */
+    /** The bornTs prefix of the current line, parsed from its ASCII bytes. */
     def bornTs(): Long = {
       var end = lineStart
       while (end < lineEnd && buf(end) != '\t') end += 1
-      java.lang.Long.parseLong(new String(buf, lineStart, end - lineStart, StandardCharsets.US_ASCII))
+      parseLong(buf, lineStart, end)
     }
 
     /** The current line's bornTs as the index folds it: Long.MaxValue when
@@ -443,9 +702,17 @@ object TopicLog {
     private def indexedBornTs(): Long =
       try bornTs() catch { case _: NumberFormatException => Long.MaxValue }
 
+    private val line = new Fields
+    private var splitAt = -1L
+
+    /** The current line's field bounds, found on the first ask per line. */
+    def fields(): Fields = {
+      if (splitAt != nextLine) { line.split(buf, lineStart, lineEnd); splitAt = nextLine }
+      line
+    }
+
     /** The current line, fully decoded. */
-    def message(): Message =
-      parseLine(new String(buf, lineStart, lineEnd - lineStart, StandardCharsets.UTF_8))
+    def message(): Message = fields().message()
 
     override def close(): Unit = if (ch != null) { ch.close(); ch = null }
   }

@@ -105,6 +105,18 @@ class MessageQueueSinkSpec extends SparkSpec {
     }
   }
 
+  test("a write task that fails partway leaves no spill file behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def spills(): Int = Option(tmp.list()).fold(0)(_.count(_.startsWith("graft-epoch-")))
+    val before = spills()
+    val conv = new RowMessageConverter(schema, fieldDelimiter = ",")
+    val e = intercept[Exception](MessageQueueSink.write(sampleDf(20), freshRoot(),
+      new MessageQueueSinkSpec.FailsOnRow(15), conv, numQueues = 1))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("selector fails on row 15")))
+    assert(spills() === before)
+  }
+
   test("foreachBatch is idempotent: a replayed batchId appends nothing") {
     val root = freshRoot()
     val conv = new RowMessageConverter(schema, fieldDelimiter = ",")
@@ -278,5 +290,18 @@ class MessageQueueSinkSpec extends SparkSpec {
     for (root <- Seq(viaWrite(shaped, new RowMessageConverter(shaped.schema)), viaDsv2(shaped))) {
       assert(messages(root).map(m => (m.tag, m.body)) === Seq(("x", "b1"), ("y", "b2")))
     }
+  }
+}
+
+object MessageQueueSinkSpec {
+  /** A selector whose copy in a task throws on the task's `n`-th row. */
+  final class FailsOnRow(n: Int) extends TopicSelector[Map[String, Any]] {
+    private var rows = 0
+    override def getTopic(row: Map[String, Any]): String = {
+      rows += 1
+      if (rows == n) throw new IllegalStateException(s"selector fails on row $n")
+      "leak"
+    }
+    override def getTag(row: Map[String, Any]): String = ""
   }
 }

@@ -148,7 +148,7 @@ class ContinuousSpec extends SparkSpec {
       val expected = metrics(batch)
       assert(expected(Metrics.MessagesRead) === first.size)
       assert(expected(Metrics.MessagesFiltered) === 13 - first.size)
-      assert(expected(Metrics.BytesRead) === gen(0, 13).map(m => Metrics.utf8Length(m.body)).sum)
+      assert(expected(Metrics.BytesRead) === gen(0, 13).map(m => m.body.getBytes("UTF-8").length.toLong).sum)
       assert(metrics(cont) === expected)
       assert(cont.getOffset === QueuePartitionOffset(0, 13))
 

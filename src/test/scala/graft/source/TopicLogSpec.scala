@@ -15,7 +15,8 @@ class TopicLogSpec extends AnyFunSuite {
 
   test("escape round-trips tabs, newlines, backslashes") {
     val nasty = "a\tb\nc\rd\\e\\t"
-    assert(TopicLog.unescape(TopicLog.escape(nasty)) === nasty)
+    val m = Message(0L, nasty, nasty, Map(nasty -> nasty), nasty)
+    assert(TopicLog.decode(StringLineCodec.encode(m)) === m)
   }
 
   test("append then read back preserves every field") {
@@ -158,7 +159,7 @@ class TopicLogSpec extends AnyFunSuite {
     val text = new String(Files.readAllBytes(TopicLog.queueFile(root, topic, 0).toPath),
       java.nio.charset.StandardCharsets.UTF_8)
     text.substring(0, text.lastIndexOf('\n') + 1).split("\n", -1).dropRight(1)
-      .map(TopicLog.parseLine).toVector
+      .map(StringLineCodec.parseLine).toVector
   }
 
   private def linearSearch(log: Vector[Message], ts: Long): Long = {
@@ -255,8 +256,7 @@ class TopicLogSpec extends AnyFunSuite {
     assert(stale.size === 4)
     // rewritten in place, outside truncateQueue: longer, with longer lines
     val next = (0 until 5 * S).map(i => msg(10L * i, s"rewritten-$i"))
-    Files.write(f.toPath, next.map(m => TopicLog.renderLine(m) + "\n").mkString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.write(f.toPath, next.flatMap(m => StringLineCodec.encode(m) :+ '\n'.toByte).toArray)
     val bytes = Files.readAllBytes(f.toPath)
     // the stale marks and end now point into the middle of lines
     (stale.tail :+ TopicLog.indexOf(f).end).foreach(m => assert(bytes((m.byte - 1).toInt) != '\n'))
