@@ -24,21 +24,26 @@ object Multimodal {
     StructField("channels", IntegerType),
     StructField("n_bytes", LongType)))
 
+  /** The stub's 12-byte header (width, height, channels as big-endian
+    * ints, `ByteBuffer`'s default order) followed by `payload`. */
+  private def withHeader(width: Int, height: Int, channels: Int, payload: Array[Byte]): Array[Byte] =
+    java.nio.ByteBuffer.allocate(12 + payload.length)
+      .putInt(width).putInt(height).putInt(channels).put(payload).array()
+
   /** Deterministic stub encode: header + rep-count payload. */
   def encodeStub(width: Int, height: Int, channels: Int): Array[Byte] = {
-    import graft.serde.ByteUtils
     val payload = new Array[Byte]((width * height * channels) min 4096)
     var i = 0
     while (i < payload.length) { payload(i) = ((i * 31 + width) % 251).toByte; i += 1 }
-    ByteUtils.fromInt(width) ++ ByteUtils.fromInt(height) ++ ByteUtils.fromInt(channels) ++ payload
+    withHeader(width, height, channels, payload)
   }
 
   /** Stub decode: parse the 12-byte header (a real impl would parse the
     * JPEG/PNG header); throws on short/corrupt content. */
   def decodeStub(content: Array[Byte]): (Int, Int, Int) = {
-    import graft.serde.ByteUtils
     require(content != null && content.length >= 12, "corrupt media: missing header")
-    (ByteUtils.toInt(content, 0), ByteUtils.toInt(content, 4), ByteUtils.toInt(content, 8))
+    val header = java.nio.ByteBuffer.wrap(content, 0, 12)
+    (header.getInt(), header.getInt(), header.getInt())
   }
 
   /**
@@ -75,14 +80,12 @@ object Multimodal {
         val resized =
           try {
             val (_, _, c) = decodeStub(content)
-            import graft.serde.ByteUtils
             val payload = content.drop(12)
             val outLen = (newWidth * newHeight * c) min payload.length min 4096
             val out = new Array[Byte](outLen)
             var i = 0
             while (i < outLen) { out(i) = payload(i * payload.length / math.max(outLen, 1)); i += 1 }
-            ByteUtils.fromInt(newWidth) ++ ByteUtils.fromInt(newHeight) ++
-              ByteUtils.fromInt(c) ++ out
+            withHeader(newWidth, newHeight, c, out)
           } catch { case _: Exception => content }
         Row.fromSeq(r.toSeq.updated(idx, resized))
       }

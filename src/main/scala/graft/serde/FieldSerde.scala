@@ -1,59 +1,22 @@
 package graft.serde
 
-import java.math.{BigDecimal => JBigDecimal, BigInteger}
-import java.nio.charset.{Charset, StandardCharsets}
+import java.math.{BigDecimal => JBigDecimal}
+import java.nio.charset.StandardCharsets
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.types._
 
 /**
- * Typed field (de)serialization: string→typed and bytes→typed coercions for
- * message fields, keyed by a [[FieldSerde.ValueType]] derived from the Spark
- * SQL column type.
+ * Typed field parsing: string→typed coercion of a message field for its
+ * Spark SQL column type.
  *
  * Parse semantics mirror the reference connector
- * (reference: source/util/StringSerializer.java:60-140,
- * source/util/ByteSerializer.java:40-100): booleans accept
+ * (reference: source/util/StringSerializer.java:60-140): booleans accept
  * "true"/"false" (any case) plus "1"/"0"; timestamps accept epoch-millis
  * longs falling back to `Timestamp.valueOf` literals; decimals honor the
  * column's precision/scale.
  */
 object FieldSerde {
-
-  sealed abstract class ValueType(val name: String)
-  object ValueType {
-    case object VByteArray extends ValueType("V_ByteArray")
-    case object VString extends ValueType("V_String")
-    case object VByte extends ValueType("V_Byte")
-    case object VShort extends ValueType("V_Short")
-    case object VInteger extends ValueType("V_Integer")
-    case object VLong extends ValueType("V_Long")
-    case object VFloat extends ValueType("V_Float")
-    case object VDouble extends ValueType("V_Double")
-    case object VBoolean extends ValueType("V_Boolean")
-    case object VTimestamp extends ValueType("V_Timestamp")
-    case object VDate extends ValueType("V_Date")
-    case object VBigDecimal extends ValueType("V_BigDecimal")
-    case object Unsupported extends ValueType("Unsupported")
-  }
-  import ValueType._
-
-  /** Spark SQL type → ValueType (analog of getTypeIndex over class tokens). */
-  def typeIndex(dataType: DataType): ValueType = dataType match {
-    case BinaryType => VByteArray
-    case StringType => VString
-    case ByteType => VByte
-    case ShortType => VShort
-    case IntegerType => VInteger
-    case LongType => VLong
-    case FloatType => VFloat
-    case DoubleType => VDouble
-    case BooleanType => VBoolean
-    case TimestampType => VTimestamp
-    case DateType => VDate
-    case _: DecimalType => VBigDecimal
-    case _ => Unsupported
-  }
 
   /** "true"/"false" any-case, plus "1"/"0"; anything else throws. */
   def parseBoolean(s: String): Boolean = s match {
@@ -67,51 +30,28 @@ object FieldSerde {
 
   /**
    * String → external Spark row value for the given column type.
-   * Returns null for null input (except strings and binary, which mirror the
-   * reference's empty-value behavior). Throws on malformed input — the caller
+   * Returns null for null input.
+   * Throws on malformed input or an unsupported column type — the caller
    * (RowDeserializer) translates that into its dirty-data strategy.
    */
-  def parse(value: String, dataType: DataType): Any = typeIndex(dataType) match {
-    case VByteArray => if (value == null) null else value.getBytes(StandardCharsets.UTF_8)
-    case VString => value
-    case VByte => if (value == null) null else java.lang.Byte.parseByte(value)
-    case VShort => if (value == null) null else java.lang.Short.parseShort(value)
-    case VInteger => if (value == null) null else java.lang.Integer.parseInt(value)
-    case VLong => if (value == null) null else java.lang.Long.parseLong(value)
-    case VFloat => if (value == null) null else java.lang.Float.parseFloat(value)
-    case VDouble => if (value == null) null else java.lang.Double.parseDouble(value)
-    case VBoolean => if (value == null) null else parseBoolean(value)
-    case VTimestamp =>
+  def parse(value: String, dataType: DataType): Any = dataType match {
+    case BinaryType => if (value == null) null else value.getBytes(StandardCharsets.UTF_8)
+    case StringType => value
+    case ByteType => if (value == null) null else java.lang.Byte.parseByte(value)
+    case ShortType => if (value == null) null else java.lang.Short.parseShort(value)
+    case IntegerType => if (value == null) null else java.lang.Integer.parseInt(value)
+    case LongType => if (value == null) null else java.lang.Long.parseLong(value)
+    case FloatType => if (value == null) null else java.lang.Float.parseFloat(value)
+    case DoubleType => if (value == null) null else java.lang.Double.parseDouble(value)
+    case BooleanType => if (value == null) null else parseBoolean(value)
+    case TimestampType =>
       if (value == null) null
       else try new Timestamp(java.lang.Long.parseLong(value))
       catch { case _: NumberFormatException => Timestamp.valueOf(value) }
-    case VDate => if (value == null) null else Date.valueOf(value)
-    case VBigDecimal =>
+    case DateType => if (value == null) null else Date.valueOf(value)
+    case dt: DecimalType =>
       if (value == null) null
-      else {
-        val dt = dataType.asInstanceOf[DecimalType]
-        new JBigDecimal(value).setScale(dt.scale, java.math.RoundingMode.HALF_UP)
-      }
-    case Unsupported =>
-      throw new IllegalArgumentException(s"unsupported field type: $dataType")
-  }
-
-  /** Binary → external row value (big-endian layouts via [[ByteUtils]]). */
-  def parseBytes(value: Array[Byte], dataType: DataType,
-                 charset: Charset = StandardCharsets.UTF_8): Any = typeIndex(dataType) match {
-    case VByteArray => value
-    case VString => if (value == null) "" else new String(value, charset)
-    case VByte => if (value == null) 0.toByte else value(0)
-    case VShort => ByteUtils.toShort(value)
-    case VInteger => ByteUtils.toInt(value)
-    case VLong => ByteUtils.toLong(value)
-    case VFloat => ByteUtils.toFloat(value)
-    case VDouble => ByteUtils.toDouble(value)
-    case VBoolean => ByteUtils.toBoolean(value)
-    case VTimestamp => new Timestamp(ByteUtils.toLong(value))
-    case VDate => new Date(ByteUtils.toLong(value))
-    case VBigDecimal => ByteUtils.toBigDecimal(value)
-    case Unsupported =>
-      throw new IllegalArgumentException(s"unsupported field type: $dataType")
+      else new JBigDecimal(value).setScale(dt.scale, java.math.RoundingMode.HALF_UP)
+    case _ => throw new IllegalArgumentException(s"unsupported field type: $dataType")
   }
 }

@@ -38,20 +38,27 @@ import scala.jdk.CollectionConverters._
  * file instead of duplicating).
  *
  * Crash matrix: crash before any append → clean replay; crash mid-append →
- * tail beyond hwm is invisible and truncated on replay; crash after publish
- * but before the checkpoint advances → replay sees maxEpoch >= epoch and
- * appends nothing. No case duplicates or loses committed lines.
+ * tail beyond hwm is invisible and truncated on replay; crash after the
+ * appends but before the publish → the lines sit above the marks, invisible,
+ * and the replay truncates them; crash after publish but before the
+ * checkpoint advances → replay sees maxEpoch >= epoch and appends nothing.
+ * That holds for a stream's first epoch into a topic too: before any task
+ * of it appends, the topic becomes ledger-managed ([[adopt]]), so there is
+ * always a mark to sit above. No case duplicates or loses committed lines.
  *
  * At 100 TB the data path is unchanged — appends stay task-local and
  * sequential; only O(queues) counters flow through the driver per epoch.
  * On an object store the same protocol holds with the rename swapped for a
- * conditional put of the ledger object.
+ * conditional put of the ledger object, and the adoption's hard link for a
+ * put-if-absent.
  *
  * A topic is either ledger-managed (written by a stream epoch) or raw (only
- * batch appends so far); the first managed write ADOPTS existing complete
- * lines as committed. A batch append (no epoch) into a managed topic runs
- * the same two steps, so its rows become visible and later repairs keep
- * them; into a raw topic it appends without repair and publishes nothing.
+ * batch appends so far); the first stream epoch to reach it ADOPTS the
+ * existing complete lines as committed. In a managed topic a queue the
+ * ledger does not name has no committed line. A batch append (no epoch)
+ * into a managed topic runs the same two steps, so its rows become visible
+ * and later repairs keep them; into a raw topic it appends without repair
+ * and publishes nothing.
  */
 object EpochLedger {
 
@@ -106,20 +113,25 @@ object EpochLedger {
     if (d == "-") "" else d
   }
 
-  /** Atomically replace the ledger (write temp, fsync, ATOMIC_MOVE). */
-  private[graft] def publish(root: String, topic: String, state: State): Unit = {
-    val target = file(root, topic)
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(s".$FileName.tmp")
+  /** Write `state` to `path` and fsync it. */
+  private def write(path: Path, state: State): Unit = {
     val body = (s"v2 ${state.maxEpoch} ${escapeId(state.writerId)}" +:
       state.queues.toSeq.sorted.map { case (q, (ln, b)) => s"$q $ln $b" })
       .mkString("", "\n", "\n")
-    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
+    val ch = FileChannel.open(path, StandardOpenOption.CREATE,
       StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
     try {
       ch.write(java.nio.ByteBuffer.wrap(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       ch.force(true)
     } finally ch.close()
+  }
+
+  /** Atomically replace the ledger (write temp, fsync, ATOMIC_MOVE). */
+  private[graft] def publish(root: String, topic: String, state: State): Unit = {
+    val target = file(root, topic)
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".$FileName.tmp")
+    write(tmp, state)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -128,15 +140,28 @@ object EpochLedger {
     read(root, topic).exists(_.isCommitted(writer, epochId))
 
   /**
-   * Committed marks a publisher must base a NEW ledger on: every queue file
-   * already on disk is adopted at its current complete-line prefix, so the
-   * first managed epoch never shadows (and its successors never truncate)
-   * raw data in queues that epoch didn't happen to touch. O(existing
-   * queues) driver-side scan, paid once per topic adoption.
+   * Make a raw topic ledger-managed: publish the adoption ledger, in which
+   * every queue file already on disk is committed at its complete-line
+   * prefix (so managed epochs never shadow, and never truncate, raw data),
+   * at epoch -1 under `writerId`. The ledger is created, never replaced (a
+   * hard link of a written temp file, which fails if `_epochs` exists): of
+   * the tasks that race to adopt one topic one wins, and the others read
+   * its ledger. O(existing queues), paid once per topic.
    */
-  private def adoptionState(root: String, topic: String): Map[Int, (Long, Long)] =
-    TopicLog.listQueues(root, topic)
-      .map(q => q -> TopicLog.sizeInfo(root, topic, q)).toMap
+  private def adopt(root: String, topic: String, writerId: String): State = {
+    val target = file(root, topic)
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".$FileName-${java.util.UUID.randomUUID}.tmp")
+    try {
+      val state = State(writerId, -1L, TopicLog.listQueues(root, topic)
+        .map(q => q -> TopicLog.sizeInfo(root, topic, q)).toMap)
+      write(tmp, state)
+      Files.createLink(target, tmp)
+      state
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => read(root, topic).get
+    } finally Files.deleteIfExists(tmp)
+  }
 
   /** Truncate a queue log back to its committed byte length — the repair
     * step that discards an uncommitted tail before a replay re-appends.
@@ -160,26 +185,23 @@ object EpochLedger {
   /**
    * Step 1 of the protocol: land one task's spill (`spillLines` rendered
    * lines) in `queueId` of `topic`, then delete the spill. `epoch` is the
-   * stream epoch, or None for a batch append. `heldBase` is the end of
+   * stream epoch, or None for a batch append. A stream epoch first makes
+   * a raw topic ledger-managed ([[adopt]]), so its lines land above a mark
+   * and stay invisible until the epoch publishes. `heldBase` is the end of
    * this task's own append of the previous epoch, when it made one (the
-   * continuous case); otherwise the base is the ledger mark, or the raw
-   * complete-line prefix the first managed write adopts. None = a replay
-   * of an epoch the ledger already covers: nothing is appended.
+   * continuous case); otherwise the base is the ledger mark. None = a
+   * replay of an epoch the ledger already covers: nothing is appended.
    */
   def commitTask(root: String, topic: String, queueId: Int, writerId: String,
       epoch: Option[Long], spill: Path, spillLines: Long,
       heldBase: Option[(Long, Long)] = None): Option[Appended] =
     try {
-      val ledger = read(root, topic)
+      val ledger = read(root, topic).orElse(epoch.map(_ => adopt(root, topic, writerId)))
       if (epoch.exists(e => ledger.exists(_.isCommitted(writerId, e)))) None
       else {
-        val managed = ledger.isDefined || epoch.isDefined
-        val (lines, bytes) = heldBase.getOrElse(ledger match {
-          case Some(st) if st.queues.contains(queueId) => st.committed(queueId)
-          case _ if managed => TopicLog.sizeInfo(root, topic, queueId)
-          case _ => (0L, 0L) // raw batch append: no mark to keep
-        })
-        val repaired = if (managed) truncateQueue(root, topic, queueId, bytes) else 0L
+        // a raw batch append (no ledger) has no mark to keep
+        val (lines, bytes) = heldBase.getOrElse(ledger.fold((0L, 0L))(_.committed(queueId)))
+        val repaired = if (ledger.isDefined) truncateQueue(root, topic, queueId, bytes) else 0L
         val spillBytes = Files.size(spill)
         TopicLog.appendRendered(root, topic, queueId, spill)
         Some(Appended(lines + spillLines, bytes + spillBytes, repaired))
@@ -189,8 +211,8 @@ object EpochLedger {
   /**
    * Step 2 of the protocol: publish the queues' new marks for `epoch`. A
    * stream epoch publishes unless the ledger already covers it, on top of
-   * the prior marks (or, on first management, the adoption of every raw
-   * queue, so queues this epoch did not touch keep their data readable). A
+   * the prior marks (or, when no task reached a raw topic, its [[adopt]]ion,
+   * so queues this epoch did not touch keep their data readable). A
    * batch append (`epoch` None) publishes only into a ledger-managed topic
    * and keeps its epoch.
    *
@@ -203,7 +225,7 @@ object EpochLedger {
     val prior = read(root, topic)
     epoch match {
       case Some(e) if !prior.exists(_.isCommitted(writerId, e)) =>
-        val base = prior.map(_.queues).getOrElse(adoptionState(root, topic))
+        val base = prior.getOrElse(adopt(root, topic, writerId)).queues
         publish(root, topic, State(writerId, e, base ++ marks))
       case None => prior.foreach(st => publish(root, topic, st.copy(queues = st.queues ++ marks)))
       case _ => ()

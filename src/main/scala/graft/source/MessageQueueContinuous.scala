@@ -64,14 +64,10 @@ class MessageQueueContinuousStream(opts: GraftOptions,
 
   override def planInputPartitions(start: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[QueueOffsets].offsets
-    // a queue present in the log but absent from the checkpoint starts at
-    // its mode-resolved offset (same rule as the micro-batch stream)
     val queues = listQueues()
     plannedQueues = queues
     queues.map { q =>
-      val from = s.getOrElse(q,
-        OffsetStore.resolveStartOffset(opts.rootDir, opts.topic, q, opts.startMode))
-      ContinuousQueueSplit(opts.topic, q, from): InputPartition
+      ContinuousQueueSplit(opts.topic, q, OffsetStore.streamStart(s, q)): InputPartition
     }.toArray
   }
 
@@ -80,17 +76,9 @@ class MessageQueueContinuousStream(opts: GraftOptions,
 
   override def needsReconfiguration(): Boolean = listQueues() != plannedQueues
 
-  /** Same monitoring-only group-offset surface as the micro-batch stream's
-    * commit: restarts are governed by the checkpoint (restore-wins), so a
-    * failed write logs and continues. */
+  /** The same group-offset surface as the micro-batch stream's commit. */
   override def commit(end: Offset): Unit =
-    try OffsetStore.commitOffsets(opts.rootDir, opts.topic, opts.consumerGroup,
-      end.asInstanceOf[QueueOffsets].offsets)
-    catch {
-      case e: Exception =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"could not persist consumer-group offsets for ${opts.consumerGroup}: $e")
-    }
+    OffsetStore.tryCommit(opts, end.asInstanceOf[QueueOffsets].offsets)
 
   override def stop(): Unit = ()
 }

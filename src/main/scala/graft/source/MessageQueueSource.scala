@@ -229,6 +229,12 @@ class MessageQueueBatch(opts: GraftOptions,
     new QueueReaderFactory(opts, requiredSchema)
 }
 
+/** One queue's offset range [start, stop): the input partition of a batch
+  * scan or a micro-batch. Spark's scheduler places it; the stream's offsets
+  * live in Spark's checkpoint. */
+final case class QueueSplit(topic: String, queueId: Int, startingOffset: Long,
+    stoppingOffset: Long) extends InputPartition
+
 /** One reader factory for every read mode: a [[QueueSplit]] (batch and
   * micro-batch) gets a bounded reader, a [[ContinuousQueueSplit]] a
   * tailing one. */
@@ -495,8 +501,8 @@ class MessageQueueMicroBatchStream(opts: GraftOptions,
     val e = end.asInstanceOf[QueueOffsets].offsets
     lastPlannedEnd = Some(e)
     e.toSeq.sortBy(_._1).flatMap { case (q, stop) =>
-      val from = s.getOrElse(q, 0L)
-      if (stop > from) Some(QueueSplit(opts.topic, MessageQueueSource.Broker, q, from, stop))
+      val from = OffsetStore.streamStart(s, q)
+      if (stop > from) Some(QueueSplit(opts.topic, q, from, stop))
       else None
     }.toArray
   }
@@ -504,34 +510,19 @@ class MessageQueueMicroBatchStream(opts: GraftOptions,
   override def createReaderFactory(): PartitionReaderFactory =
     new QueueReaderFactory(opts, requiredSchema)
 
-  /** Persist the group's progress so external tooling sees lag, mirroring
-    * the reference's commit-on-checkpoint-complete
-    * (legacy/RocketMQSourceFunction.java:340-437). Restart correctness does
-    * NOT depend on this — the streaming checkpoint wins (restore-wins) — so
-    * a failing offset write must never kill a healthy data path: log and
-    * continue. */
+  /** Persist the group's progress so external tooling sees lag
+    * ([[OffsetStore.tryCommit]]). */
   override def commit(end: Offset): Unit =
-    tryCommit(end.asInstanceOf[QueueOffsets].offsets)
+    OffsetStore.tryCommit(opts, end.asInstanceOf[QueueOffsets].offsets)
 
   /** Flush the final batch's end offsets (see [[lastPlannedEnd]]). If the
     * run died mid-batch this may over-report the group position by one
     * batch — acceptable for a monitoring-only surface; the streaming
     * checkpoint remains the authority for restarts (restore-wins). */
-  override def stop(): Unit = lastPlannedEnd.foreach(tryCommit)
-
-  private def tryCommit(offsets: Map[Int, Long]): Unit =
-    try OffsetStore.commitOffsets(opts.rootDir, opts.topic, opts.consumerGroup, offsets)
-    catch {
-      case e: Exception =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"could not persist consumer-group offsets for ${opts.consumerGroup}: $e")
-    }
+  override def stop(): Unit = lastPlannedEnd.foreach(OffsetStore.tryCommit(opts, _))
 }
 
 object MessageQueueSource {
-  /** Single logical broker name for the file-backed store. */
-  val Broker = "file"
-
   /** Resolve per-queue [start, stop) ranges for a bounded scan. */
   def resolveSplits(opts: GraftOptions, batchDefaultEarliest: Boolean): Seq[QueueSplit] =
     TopicLog.listQueues(opts.rootDir, opts.topic).map { q =>
@@ -543,6 +534,6 @@ object MessageQueueSource {
         case m => m
       }
       val start = OffsetStore.resolveStartOffset(opts.rootDir, opts.topic, q, mode)
-      QueueSplit(opts.topic, Broker, q, math.min(start, stop), stop)
+      QueueSplit(opts.topic, q, math.min(start, stop), stop)
     }
 }

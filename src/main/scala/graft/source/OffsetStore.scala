@@ -1,34 +1,14 @@
 package graft.source
 
-import graft.config.StartMode
+import graft.config.{GraftOptions, StartMode}
 
 /**
- * Offset bookkeeping for a consumer group: a restored (checkpointed) offset
- * always wins over the configured start mode, exactly like the reference's
- * offset table restore (reference: legacy/RocketMQSourceFunction.java:147,
- * 338-365, 419-437). In Structured Streaming the checkpoint plays the role
- * of the restored state; this class carries the same semantics for bounded
- * scans and tests.
+ * Start offsets and consumer-group offsets. A stream's position lives in
+ * Spark's checkpoint (restore-wins: a restarted query resumes there, not at
+ * its start mode); what is here resolves a start mode to an offset, and
+ * keeps the group's progress in a file for monitoring
+ * (reference: legacy/RocketMQSourceFunction.java:338-437).
  */
-class OffsetStore(
-    rootDir: String,
-    topic: String,
-    restoredOffsets: Map[Int, Long] = Map.empty) extends Serializable {
-
-  private val table = scala.collection.concurrent.TrieMap[Int, Long](restoredOffsets.toSeq: _*)
-
-  /** Start offset for a queue: restored > explicit start mode. */
-  def initialOffset(queueId: Int, mode: StartMode): Long =
-    table.getOrElseUpdate(queueId,
-      OffsetStore.resolveStartOffset(rootDir, topic, queueId, mode))
-
-  /** Record progress (next offset to read). */
-  def update(queueId: Int, offset: Long): Unit = table.put(queueId, offset)
-
-  /** Checkpoint view of the table. */
-  def snapshot: Map[Int, Long] = table.toMap
-}
-
 object OffsetStore {
 
   /** Map a start mode to a concrete offset for one queue
@@ -42,6 +22,14 @@ object OffsetStore {
       case StartMode.Offset(o) =>
         math.min(o, TopicLog.maxOffset(rootDir, topic, queueId))
     }
+
+  /** Where a stream reads `queueId` from, given the start offsets it plans
+    * with. A queue those offsets do not name appeared after the query
+    * started, so it is read from its first line: under `latest` its
+    * mode-resolved start would skip every line written before the stream
+    * saw the queue. The micro-batch and the continuous stream both plan
+    * with this. */
+  def streamStart(start: Map[Int, Long], queueId: Int): Long = start.getOrElse(queueId, 0L)
 
   // ---- durable consumer-group offsets ----
   //
@@ -67,6 +55,17 @@ object OffsetStore {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** A stream's commit of its group's offsets. Restarts follow the
+    * streaming checkpoint, not this file, so a failed write logs and the
+    * query goes on. */
+  def tryCommit(opts: GraftOptions, offsets: Map[Int, Long]): Unit =
+    try commitOffsets(opts.rootDir, opts.topic, opts.consumerGroup, offsets)
+    catch {
+      case e: Exception =>
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"could not persist consumer-group offsets for ${opts.consumerGroup}: $e")
+    }
 
   /** Last committed offsets for a group (empty if it never committed).
     * Malformed lines are skipped, not fatal — this is a monitoring API and

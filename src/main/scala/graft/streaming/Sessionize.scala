@@ -24,9 +24,11 @@ private final case class SessionState(
 /**
  * Gap-based sessionization with custom keyed state —
  * `flatMapGroupsWithState` + event-time timeout, the Structured Streaming
- * shape for state the built-in windows can't express (the reference's
- * per-queue watermark state lives at the same layer:
- * legacy/common/watermark/WaterMarkPerQueue.java:30-55).
+ * shape for state the built-in windows can't express. The timeout runs off
+ * Spark's own watermark (`withWatermark` on `ts`), which the engine keeps
+ * per partition and mins across them — where the reference kept per-queue
+ * watermark state in its source
+ * (legacy/common/watermark/WaterMarkPerQueue.java:30-55).
  *
  * A session closes when no event arrives within `gapMs` of its last event;
  * the timeout fires once the watermark passes last+gap, so state size is

@@ -3,69 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 /**
- * Event-time watermark generators, mirroring the reference's six strategies
- * (reference: legacy/common/watermark/, all 6 files). The generators are pure state
- * machines (extract timestamps, ask for the current watermark) so their
- * semantics are unit-testable; [[Watermarks.withBoundedOutOfOrderness]] maps
- * the bounded-out-of-orderness discipline onto Structured Streaming's
- * `withWatermark`, which is the engine-level equivalent (max event time
- * minus delay, maintained per partition and min-ed across the cluster).
+ * Event-time watermarks on Spark's own mechanism. The reference connector
+ * ships six watermark generators (reference: legacy/common/watermark/) that
+ * a Flink source calls per record; in Structured Streaming the engine keeps
+ * the watermark itself — the max event time seen minus the delay, tracked
+ * per partition and min-ed across the cluster at each trigger — so the
+ * bounded-out-of-orderness discipline is one `withWatermark` call, and a
+ * slow queue holds the watermark back as the per-queue generator did.
  */
 object Watermarks {
 
-  /** Max-seen-event-time minus a fixed bound
-    * (reference: legacy/common/watermark/BoundedOutOfOrdernessGenerator.java:30-50). */
-  class BoundedOutOfOrderness(val maxOutOfOrderness: Long = 5000L) extends Serializable {
-    private var currentMax = 0L
-    def extractTimestamp(ts: Long): Long = { currentMax = math.max(ts, currentMax); ts }
-    def currentWatermark: Long = currentMax - maxOutOfOrderness
-  }
-
-  /** Per-queue max event time; watermark = min over queues minus the bound —
-    * a slow queue holds the watermark back
-    * (reference: legacy/common/watermark/BoundedOutOfOrdernessGeneratorPerQueue.java:35-60,
-    * WaterMarkPerQueue.java:30-55). */
-  class PerQueue(val maxOutOfOrderness: Long = 5000L) extends Serializable {
-    private val maxEventTime = scala.collection.mutable.Map.empty[String, Long]
-    def extractTimestamp(queue: String, ts: Long): Long = {
-      val prev = maxEventTime.getOrElse(queue, maxOutOfOrderness)
-      maxEventTime(queue) = math.max(prev, ts)
-      ts
-    }
-    def currentWatermark: Long = {
-      val min = if (maxEventTime.isEmpty) maxOutOfOrderness else maxEventTime.values.min
-      min - maxOutOfOrderness
-    }
-  }
-
-  /** Wall-clock minus a fixed lag; `clock` injectable for tests
-    * (reference: legacy/common/watermark/TimeLagWatermarkGenerator.java:30-45). */
-  class TimeLag(val maxTimeLag: Long = 5000L,
-                clock: () => Long = () => System.currentTimeMillis()) extends Serializable {
-    def extractTimestamp(ts: Long): Long = ts
-    def currentWatermark: Long = clock() - maxTimeLag
-  }
-
-  /** Emits a watermark only when the message carries the marker property
-    * (reference: legacy/common/watermark/PunctuatedAssigner.java:25-40). */
-  class Punctuated(val watermarkProperty: String = Punctuated.DefaultProperty) extends Serializable {
-    def extractTimestamp(ts: Long): Long = ts
-    /** Some(watermark) if this element punctuates, else None. */
-    def checkAndGetNextWatermark(properties: Map[String, String], extractedTs: Long): Option[Long] =
-      if (properties.contains(watermarkProperty)) Some(extractedTs) else None
-  }
-  object Punctuated { val DefaultProperty = "__watermark__" }
-
-  /** Single global max-timestamp tracker
-    * (reference: legacy/common/watermark/WaterMarkForAll.java:25-40). */
-  class ForAll(val maxOutOfOrderness: Long = 5000L) extends Serializable {
-    private var maxTimestamp = 0L
-    def extractTimestamp(ts: Long): Unit = maxTimestamp = math.max(ts, maxTimestamp)
-    def currentWatermark: Long = maxTimestamp - maxOutOfOrderness
-  }
-
-  /** Spark-native mapping: bounded out-of-orderness == `withWatermark` on the
-    * event-time column with the bound as the delay. */
+  /** Bounded out-of-orderness == `withWatermark` on the event-time column
+    * with the bound as the delay. */
   def withBoundedOutOfOrderness(
       df: DataFrame, eventTimeCol: String, maxOutOfOrdernessMs: Long): DataFrame =
     df.withWatermark(eventTimeCol, s"$maxOutOfOrdernessMs milliseconds")

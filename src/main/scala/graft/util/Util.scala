@@ -1,29 +1,5 @@
 package graft.util
 
-/** Typed property getters over a string map
-  * (reference: legacy/common/util/RocketMQUtils.java:30-70). */
-object Props {
-  def getInt(props: Map[String, String], key: String, default: Int): Int =
-    props.get(key).map(_.trim.toInt).getOrElse(default)
-
-  def getLong(props: Map[String, String], key: String, default: Long): Long =
-    props.get(key).map(_.trim.toLong).getOrElse(default)
-
-  def getBoolean(props: Map[String, String], key: String, default: Boolean): Boolean =
-    props.get(key).map(_.trim.toBoolean).getOrElse(default)
-
-  def getString(props: Map[String, String], key: String, default: String): String =
-    props.getOrElse(key, default)
-}
-
-/** Volatile running flag shared between a driver loop and its poll threads
-  * (reference: legacy/common/util/RunningChecker.java). */
-class RunningChecker extends Serializable {
-  @volatile private var running = false
-  def isRunning: Boolean = running
-  def setRunning(r: Boolean): Unit = running = r
-}
-
 /** Filesystem helpers shared by the queue log, bucketed tables and
   * streaming sinks. */
 object Fs {

@@ -15,6 +15,13 @@ class MultimodalSpec extends SparkSpec {
     ).toDF("media_id", "modality", "content")
   }
 
+  test("the stub header is width, height, channels as big-endian ints") {
+    assert(Multimodal.encodeStub(64, 48, 3).take(12).toSeq ===
+      Seq[Byte](0, 0, 0, 64, 0, 0, 0, 48, 0, 0, 0, 3))
+    assert(Multimodal.decodeStub(Array[Byte](0, 0, 1, 2, -1, -1, -1, -1, 127, 0, 0, 0)) ===
+      ((258, -1, 0x7F000000)))
+  }
+
   test("withDecodedMeta adds a typed struct; corrupt content yields null meta") {
     val out = Multimodal.withDecodedMeta(media)
     assert(out.schema("meta").dataType === Multimodal.MetaType)

@@ -8,20 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class FieldSerdeSpec extends AnyFunSuite {
   import FieldSerde._
 
-  test("typeIndex maps every supported Spark type") {
-    assert(typeIndex(BinaryType) === ValueType.VByteArray)
-    assert(typeIndex(StringType) === ValueType.VString)
-    assert(typeIndex(ByteType) === ValueType.VByte)
-    assert(typeIndex(ShortType) === ValueType.VShort)
-    assert(typeIndex(IntegerType) === ValueType.VInteger)
-    assert(typeIndex(LongType) === ValueType.VLong)
-    assert(typeIndex(FloatType) === ValueType.VFloat)
-    assert(typeIndex(DoubleType) === ValueType.VDouble)
-    assert(typeIndex(BooleanType) === ValueType.VBoolean)
-    assert(typeIndex(TimestampType) === ValueType.VTimestamp)
-    assert(typeIndex(DateType) === ValueType.VDate)
-    assert(typeIndex(DecimalType(10, 5)) === ValueType.VBigDecimal)
-    assert(typeIndex(ArrayType(IntegerType)) === ValueType.Unsupported)
+  test("parse refuses an unsupported column type") {
+    val e = intercept[IllegalArgumentException](parse("[1]", ArrayType(IntegerType)))
+    assert(e.getMessage.contains("unsupported field type"))
+    assertThrows[IllegalArgumentException](parse(null, ArrayType(IntegerType)))
   }
 
   test("parseBoolean accepts true/false any case plus 1/0") {
@@ -62,16 +52,5 @@ class FieldSerdeSpec extends AnyFunSuite {
     assertThrows[NumberFormatException](parse("abc", IntegerType))
     assertThrows[NumberFormatException](parse("", LongType))
     assertThrows[NumberFormatException](parse("1.2.3", DoubleType))
-  }
-
-  test("parseBytes decodes big-endian primitive layouts") {
-    assert(parseBytes(ByteUtils.fromInt(42), IntegerType) === 42)
-    assert(parseBytes(ByteUtils.fromLong(7L), LongType) === 7L)
-    assert(parseBytes(ByteUtils.fromDouble(2.5), DoubleType) === 2.5)
-    assert(parseBytes(ByteUtils.fromLong(1690000000000L), TimestampType) ===
-      new Timestamp(1690000000000L))
-    assert(parseBytes("text".getBytes, StringType) === "text")
-    assert(parseBytes(null, StringType) === "")
-    assert(parseBytes(Array[Byte](1), BooleanType) === true)
   }
 }

@@ -196,6 +196,40 @@ class ExactlyOnceSpec extends SparkSpec {
     assert(bodies(root, "fb") === Seq("a", "b", "c", "d"))
   }
 
+  test("a stream's first epoch into a raw topic: the unpublished attempt is invisible, the replay lands once") {
+    val root = Files.createTempDirectory("graft-eo-first").toString
+    // epoch 0's task commits into a topic with no ledger yet; the driver
+    // dies before it publishes
+    val w = writer(root, 0, 0)
+    Seq("a", "b").foreach(l => w.write(row(l)))
+    w.commit()
+    assert(bodies(root) === Seq.empty)
+    // the restarted query replays epoch 0, and this time it publishes
+    epoch(root, 0, Seq("a", "b"))
+    assert(bodies(root) === Seq("a", "b"))
+  }
+
+  test("foreachBatch's first batch across two routed topics: a failed publish hides it, the replay lands once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-eo-first-fb").toString
+    val topics = Seq("fb-x", "fb-y")
+    val batch = Seq(("fb-x", "x1"), ("fb-y", "y1"), ("fb-x", "x2"), ("fb-y", "y2"))
+      .toDF("topic", "body")
+    val fn = MessageQueueSink.foreachBatch(root,
+      new SimpleTopicSelector("topic", "fb-default", "tag", ""),
+      new RowMessageConverter(batch.schema), numQueues = 2)
+    def all(topic: String): Seq[String] = (0 until 2).flatMap(q => bodies(root, topic, q)).sorted
+    // the tasks append, then the driver's publish fails: a directory sits
+    // where each topic's ledger temp file goes
+    val blocks = topics.map(t => EpochLedger.file(root, t).resolveSibling("._epochs.tmp"))
+    blocks.foreach(Files.createDirectories(_))
+    intercept[java.io.IOException](fn(batch, 0L))
+    assert(topics.map(all) === Seq(Seq.empty, Seq.empty))
+    blocks.foreach(Files.delete)
+    fn(batch, 0L) // the replayed batch publishes
+    assert(topics.map(all) === Seq(Seq("x1", "x2"), Seq("y1", "y2")))
+  }
+
   test("mq source reading a ledgered topic sees only committed lines") {
     val root = Files.createTempDirectory("graft-eo-src").toString
     epoch(root, 0, Seq("x", "y"))

@@ -134,7 +134,7 @@ class ContinuousSpec extends SparkSpec {
     val first = gen(0, 13).zipWithIndex.collect { case (m, i) if accepted(m) => (i.toLong, m.body) }
     assert(accepted(gen(0, 13).last))
     val batch = new MessageQueueBatch(opts, schema).createReaderFactory()
-      .createReader(QueueSplit(topic, MessageQueueSource.Broker, 0, 0, 13))
+      .createReader(QueueSplit(topic, 0, 0, 13))
     val cont = new MessageQueueContinuousStream(opts, schema).createContinuousReaderFactory()
       .createReader(ContinuousQueueSplit(topic, 0, 0))
     // a reader that stops yielding blocks in its poll loop: interrupt it
@@ -160,6 +160,43 @@ class ContinuousSpec extends SparkSpec {
       assert(cont.getOffset === QueuePartitionOffset(0, 13 + gen(13, 26).lastIndexWhere(accepted) + 1))
       assert(metrics(cont)(Metrics.MessagesRead) === first.size + second.size)
     } finally { batch.close(); cont.close() }
+  }
+
+  test("a queue created while a continuous query runs is read from its first line") {
+    val root = freshRoot()
+    val topic = "cont5"
+    def gen(q: Int, from: Int, until: Int): Iterator[Message] =
+      (from until until).iterator.map(i => Message(1000L + i, s"k$q-$i", "t", Map.empty, s"b-$q-$i"))
+    (0 until 2).foreach(q => TopicLog.append(root, topic, q, gen(q, 0, 3)))
+    // default options: the stream starts at each queue's end (latest)
+    val q = spark.readStream.format("graft-mq")
+      .option("topic", topic).option("consumerGroup", "cg5")
+      .option("rootDir", root).option("continuousPollMs", "20")
+      .load()
+      .select(col("queue_id"), col("body"))
+      .writeStream.format("memory").queryName("cont_newq")
+      .trigger(Trigger.Continuous("200 milliseconds"))
+      .start()
+    def queue2(): Set[String] =
+      spark.table("cont_newq").where(col("queue_id") === 2).collect().map(_.getString(1)).toSet
+    def await(done: => Boolean)(poll: => Unit): Unit = {
+      val deadline = System.nanoTime() + 30000L * 1000000L
+      while (!done && System.nanoTime() < deadline) { poll; Thread.sleep(200) }
+    }
+    try {
+      // the readers of queues 0 and 1 run once a line appended now arrives
+      var i = 3
+      await(spark.table("cont_newq").count() > 0) {
+        TopicLog.append(root, topic, 0, gen(0, i, i + 1)); i += 1
+      }
+      assert(spark.table("cont_newq").count() > 0, "the query never read queue 0")
+      // queue 2 appears with 6 lines; the query replans to read it
+      TopicLog.append(root, topic, 2, gen(2, 0, 6))
+      Thread.sleep(1000)
+      TopicLog.append(root, topic, 2, gen(2, 6, 8))
+      await(Set("b-2-6", "b-2-7").subsetOf(queue2()))(())
+      assert(queue2() === (0 until 8).map(i => s"b-2-$i").toSet)
+    } finally q.stop()
   }
 
   test("continuous query into the graft-mq sink lands every row exactly once under the marks") {

@@ -170,16 +170,6 @@ class MessageQueueSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("consumergroup"))
   }
 
-  test("OffsetStore: restored offsets win over start mode") {
-    val root = freshRoot()
-    seed(root, "t7", queues = 2, perQueue = 10)
-    val store = new OffsetStore(root, "t7", restoredOffsets = Map(0 -> 7L))
-    assert(store.initialOffset(0, StartMode.Earliest) === 7L) // restored wins
-    assert(store.initialOffset(1, StartMode.Earliest) === 0L) // no restore → mode
-    store.update(1, 4L)
-    assert(store.snapshot === Map(0 -> 7L, 1 -> 4L))
-  }
-
   test("OffsetStore start modes resolve like the reference") {
     val root = freshRoot()
     seed(root, "t8", queues = 1, perQueue = 10)

@@ -8,47 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 class WatermarksSpec extends SparkSpec {
-  import Watermarks._
-
-  test("BoundedOutOfOrderness: watermark trails max seen timestamp by the bound") {
-    val g = new BoundedOutOfOrderness(5000)
-    g.extractTimestamp(10000)
-    assert(g.currentWatermark === 5000)
-    g.extractTimestamp(8000) // late element does not move it backwards
-    assert(g.currentWatermark === 5000)
-    g.extractTimestamp(20000)
-    assert(g.currentWatermark === 15000)
-  }
-
-  test("PerQueue: the slowest queue holds the watermark back") {
-    val g = new PerQueue(1000)
-    g.extractTimestamp("q0", 10000)
-    g.extractTimestamp("q1", 4000)
-    assert(g.currentWatermark === 3000) // min(10000,4000) - 1000
-    g.extractTimestamp("q1", 9000)
-    assert(g.currentWatermark === 8000)
-  }
-
-  test("TimeLag: watermark is wall clock minus lag") {
-    var now = 100000L
-    val g = new TimeLag(5000, () => now)
-    assert(g.currentWatermark === 95000)
-    now = 200000L
-    assert(g.currentWatermark === 195000)
-    assert(g.extractTimestamp(42) === 42)
-  }
-
-  test("Punctuated: only marker-carrying elements punctuate") {
-    val g = new Punctuated()
-    assert(g.checkAndGetNextWatermark(Map("__watermark__" -> "1"), 777L) === Some(777L))
-    assert(g.checkAndGetNextWatermark(Map("other" -> "1"), 777L) === None)
-  }
-
-  test("ForAll tracks the global max") {
-    val g = new ForAll(100)
-    g.extractTimestamp(500); g.extractTimestamp(300)
-    assert(g.currentWatermark === 400)
-  }
 
   test("streaming windowed aggregate over the mq source with watermark drops late rows") {
     val root = Files.createTempDirectory("graft-wm").toString

@@ -4,27 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class UtilSpec extends AnyFunSuite {
 
-  test("Props typed getters with defaults") {
-    val p = Map("a" -> "5", "b" -> " 7 ", "c" -> "true", "s" -> "x")
-    assert(Props.getInt(p, "a", 0) === 5)
-    assert(Props.getInt(p, "b", 0) === 7)
-    assert(Props.getInt(p, "zz", 9) === 9)
-    assert(Props.getLong(p, "a", 0L) === 5L)
-    assert(Props.getBoolean(p, "c", false))
-    assert(Props.getBoolean(p, "zz", true))
-    assert(Props.getString(p, "s", "d") === "x")
-    assert(Props.getString(p, "zz", "d") === "d")
-  }
-
-  test("RunningChecker flag flips") {
-    val rc = new RunningChecker
-    assert(!rc.isRunning)
-    rc.setRunning(true)
-    assert(rc.isRunning)
-    rc.setRunning(false)
-    assert(!rc.isRunning)
-  }
-
   test("IndexSidecar: round-trips props + matrix, rejects wrong kind") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sidecar-test").toString
     val m = Array(Array(1.5, -2.25, 0.1), Array(3.0, 4.0, 1e-17))
