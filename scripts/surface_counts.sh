@@ -26,7 +26,7 @@ lines=$(cat $main_files | wc -l)
 echo "main-tree lines: $lines"
 
 keys=$(grep -cE '^  val [A-Z][A-Za-z]* = "[a-z]+"$' src/main/scala/graft/config/GraftOptions.scala || true)
-props=$(grep -rhoE '"(graft\.[a-z.]+|SPARK_[A-Z_]+)"' src/main --include=*.scala | sort -u | wc -l)
+props=$(grep -rhoE '"(graft\.[a-z.]+|SPARK_[A-Z0-9_]+)"' src/main --include=*.scala | sort -u | wc -l)
 mem=$(grep -c 'sys.env.getOrElse("SPARK_DRIVER_MEM"' build.sbt || true)
 echo "settable options: $((keys + props + mem))" \
   "(graft-mq keys $keys, JVM properties and environment variables $props, build.sbt $mem)"

@@ -1,33 +1,138 @@
 package graft
+import scala.collection.mutable
+
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 
 object Bench {
-  /** Stateful Structured Streaming entries. These leave state-store
-    * maintenance threads + checkpoint cleanup behind in the JVM, which the
-    * round-3 judge measured contaminating the next ~7 benched queries by
-    * 3-6x. They run LAST, and StateStore providers are unloaded after each
-    * so they only ever pay for themselves. */
-  private val streamingEntries =
-    Set("events_windowed_stream", "events_hopping_stream",
-      "events_dedup_stream", "sessionize_stream",
-      "corpus_quality_stream", "decontaminate_stream", "events_enrich_stream",
-      "purchase_attribution_stream", "token_count_stream",
-      "kmv_distinct_stream", "blocklist_stream", "entropy_stream")
-
-  /** Summed executor task time per timed query (round 21, verdict #3):
-    * the scaling lane at sf0.1 measures driver latency, not parallelism —
-    * wall times barely move with the core count, so the driver's low-core
-    * ratio can't catch a genuinely serial operator. Summed task seconds CAN:
-    * a kernel-bound key shows taskSec ≈ wall·cores at full occupancy and
-    * taskSec ≫ wall·1 when serial. Rides ONLY in the BENCH_iters sidecar
-    * (stdout JSON line unchanged — the env/stdout contract is frozen). */
-  private class TaskTimeAcc extends org.apache.spark.scheduler.SparkListener {
-    @volatile var taskMillis = 0L
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      taskMillis += s.stageInfo.taskMetrics.executorRunTime
+  /** Spark job figures, summed over a set of jobs. */
+  private[graft] final class Counts {
+    var jobs, stages, tasks = 0
+    var taskMs, shufR, shufW, jobMs = 0L
+    def add(o: Counts): Unit = {
+      jobs += o.jobs; stages += o.stages; tasks += o.tasks
+      taskMs += o.taskMs; shufR += o.shufR; shufW += o.shufW; jobMs += o.jobMs
+    }
+    def json: String =
+      s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"taskSec":${taskMs / 1e3},""" +
+        s""""shufR":$shufR,"shufW":$shufW,"jobSec":${jobMs / 1e3}"""
   }
+
+  /** The one per-key profiler: the jobs each timed sample starts, their
+    * stages' summed executor time (taskSec), tasks and shuffle bytes, and
+    * their wall time (jobSec), per phase. It rides ONLY in the BENCH_iters
+    * sidecar; the stdout line and the env contract are frozen.
+    *
+    * Summed task seconds tell what wall time cannot: a kernel-bound key
+    * shows taskSec ~ wall*cores at full occupancy and taskSec ~ wall when
+    * serial, and at sf0.1 the wall barely moves with the core count.
+    *
+    * A job belongs to the sample whose thread started it: [[sample]] tags
+    * the body's jobs, and Spark carries the tag into every job the body
+    * starts, on its own thread, a thread it creates (a stream's execution
+    * thread) or a Spark SQL pool thread (broadcasts, subqueries). Untagged
+    * jobs (warmup) are not counted. */
+  private[graft] final class KeyProfile extends SparkListener {
+    // sample -> (key, its phases in the order they first ran)
+    private val samples = mutable.ArrayBuffer[(String, mutable.LinkedHashMap[String, Counts])]()
+    // running job -> (its phase, start time, stages); stage -> its first job's phase
+    private val running = mutable.Map[Int, (Counts, Long, Seq[Int])]()
+    private val stages = mutable.Map[Int, Counts]()
+    // running SQL execution -> its long call site
+    private val executions = mutable.Map[Long, String]()
+
+    /** `body` as one sample of `key`. */
+    def sample[T](sc: SparkContext, key: String)(body: => T): T = {
+      val tag = synchronized {
+        samples += key -> mutable.LinkedHashMap.empty
+        SampleTag + (samples.size - 1)
+      }
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    }
+
+    private def of(key: String) = samples.collect { case (`key`, phases) => phases }.toSeq
+
+    /** Task seconds of each sample of `key`, in order. */
+    def taskSec(key: String): Seq[Double] =
+      synchronized(of(key).map(_.values.map(_.taskMs).sum / 1e3))
+
+    /** `key`'s phases summed over its samples, in the order each first ran. */
+    def phasesOf(key: String): Seq[(String, Counts)] = synchronized {
+      val all = mutable.LinkedHashMap[String, Counts]()
+      for (phases <- of(key); (p, c) <- phases) all.getOrElseUpdate(p, new Counts).add(c)
+      all.toSeq
+    }
+
+    /** `key`'s sidecar object: its totals, then `byPhase`. */
+    def json(key: String): String = synchronized {
+      val phases = phasesOf(key)
+      val total = new Counts
+      phases.foreach(p => total.add(p._2))
+      val byPhase = phases.map { case (p, c) =>
+        "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(p)) + s"\":{${c.json}}"
+      }.mkString("{", ",", "}")
+      s"""{"samples":${of(key).size},${total.json},"byPhase":$byPhase}"""
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => synchronized(executions(x.executionId) = x.details)
+      case x: SparkListenerSQLExecutionEnd => synchronized(executions.remove(x.executionId))
+      case _ =>
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      for (tags <- prop("spark.job.tags"); t <- tags.split(",").find(_.startsWith(SampleTag))) {
+        val phase = samples(t.drop(SampleTag.length).toInt)._2
+          .getOrElseUpdate(phaseOf(e, prop), new Counts)
+        phase.jobs += 1
+        running(e.jobId) = (phase, e.time, e.stageIds)
+        e.stageIds.foreach(stages.getOrElseUpdate(_, phase))
+      }
+    }
+
+    /** A job's phase, in this order: the decision of the
+      * [[graft.util.FastPaths]] gate that ran it (its job description);
+      * else the first frame of a graft class outside graft.util (the line
+      * that ran the action, or started the stream: a stream's thread
+      * carries the call site of its start()) in its stages' long call
+      * site, then in its SQL execution's (Spark SQL starts some jobs on
+      * pool threads, whose own call site is the pool's); else Spark's short
+      * call site, marked `no graft frame`. */
+    private def phaseOf(e: SparkListenerJobStart, prop: String => Option[String]): String = {
+      val sites = e.stageInfos.sortBy(-_.stageId).map(_.details) ++
+        prop("spark.sql.execution.id").flatMap(x => executions.get(x.toLong))
+      prop("spark.job.description").filter(_.startsWith("fastpath "))
+        .orElse(sites.iterator.flatMap(_.linesIterator).find(GraftFrame.findPrefixOf(_).isDefined))
+        .getOrElse("no graft frame: " + e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      stages.get(si.stageId).foreach { c =>
+        c.stages += 1; c.tasks += si.numTasks; c.taskMs += m.executorRunTime
+        c.shufR += m.shuffleReadMetrics.totalBytesRead
+        c.shufW += m.shuffleWriteMetrics.bytesWritten
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      running.remove(e.jobId).foreach { case (phase, t0, stageIds) =>
+        phase.jobMs += e.time - t0
+        stageIds.foreach(stages.remove)
+      }
+    }
+  }
+
+  private val SampleTag = "bench-sample-"
+  // a frame in a graft class outside graft.util
+  private val GraftFrame = """^graft\.(?!util\.)""".r
 
   // SPARK_GRAFT_BENCH_FORCE_DISTRIBUTED=1: every size-adaptive fast path
   // reports ineligible (graft.util.FastPaths), so this run measures the
@@ -60,39 +165,29 @@ object Bench {
       .map(t => java.nio.file.Paths.get(sfDir, s"$t.parquet"))
       .find(java.nio.file.Files.exists(_))
       .foreach(p => spark.read.parquet(p.toString).limit(1).count())
+    val profile = new KeyProfile
+    spark.sparkContext.addSparkListener(profile)
     // noop-sink write materializes EVERY output column and keeps sorts:
     // count() let Catalyst prune projections, so scan-stage queries were
     // timed as bare parquet scans and orderBys were optimized away
-    val taskAcc = new TaskTimeAcc
-    spark.sparkContext.addSparkListener(taskAcc)
-    // per-(query, sample) summed task seconds, aligned with the wall samples
-    val taskSecs = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
     def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      // listener-bus drains sit OUTSIDE the timed region: settle the
-      // previous query's stage events, snapshot, time, settle, diff
-      Thread.sleep(30)
-      val taskMs0 = taskAcc.taskMillis
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
+      try profile.sample(spark.sparkContext, name) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      } catch {
         case e: Throwable =>
           // -1.0 is the sentinel the driver records; WHY it failed must
           // still reach the log or the failure costs a debugging round
           System.err.println(s"[bench] $name FAILED: $e")
           e.getStackTrace.take(5).foreach(f => System.err.println(s"[bench]   at $f"))
-          taskSecs(name) :+= -1.0
           return -1.0
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(30)
-      taskSecs(name) :+= (taskAcc.taskMillis - taskMs0) / 1e3
-      wall
+      (System.nanoTime() - t0) / 1e9
     }
     // Deterministic order (Map hash order varied run to run): batch queries
     // sorted by name, the stateful streaming entries last.
     val (streaming, batch) =
-      SparkEntry.queries.toSeq.sortBy(_._1).partition(q => streamingEntries(q._1))
+      SparkEntry.queries.toSeq.sortBy(_._1).partition(q => SparkEntry.streamingKeys(q._1))
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts to named queries (isolated
     // measurement during perf work); unset = all
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -103,7 +198,7 @@ object Bench {
       val t = once(name, fn)
       // unload state-store providers + stop the maintenance thread so a
       // stateful query never bills the one benched after it
-      if (streamingEntries(name)) StateStore.stop()
+      if (SparkEntry.streamingKeys(name)) StateStore.stop()
       t
     }
     // min over iterations is the stable estimator (single-shot timings at
@@ -152,6 +247,9 @@ object Bench {
       val ts = samples(name)
       name -> (if (ts.isEmpty || ts.exists(_ < 0)) -1.0 else ts.min)
     }
+    // stopping the session delivers every queued listener event, so the
+    // profile read below holds every job of every sample
+    spark.stop()
     // The driver stores only the LAST 2000 chars of stdout as the round's
     // bench artifact — and sbt appends an ~82-char "[success] Total time"
     // epilogue we can't suppress (run is forked). A 137-key board cannot
@@ -193,13 +291,16 @@ object Bench {
     val its = (selB ++ selS).map { case (name, _) =>
       s"\"" + name + "\":" + samples(name).map(sec).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    // summed executor task seconds per sample (aligned with iters): the
-    // scaling-capable signal — see TaskTimeAcc
+    // summed executor task seconds per sample (aligned with iters), and
+    // each key's jobs by phase — see KeyProfile
     val tsk = (selB ++ selS).map { case (name, _) =>
-      s"\"" + name + "\":" + taskSecs(name).map(sec).mkString("[", ",", "]")
+      val ts = samples(name).zip(profile.taskSec(name)).map { case (w, t) => if (w < 0) w else t }
+      s"\"" + name + "\":" + ts.map(sec).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val phases = (selB ++ selS).map { case (name, _) => s"\"" + name + "\":" + profile.json(name) }
+      .mkString("{", ",", "}")
     sidecar("SPARK_GRAFT_ITERS_OUT", "BENCH_iters.json",
-      s"""{"iters":$its,"taskSec":$tsk,"sf":"$sfDir"}""")
+      s"""{"iters":$its,"taskSec":$tsk,"phases":$phases,"sf":"$sfDir"}""")
     val board = results.map { case (k, v) => s"\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
     sidecar("SPARK_GRAFT_BOARD_OUT", "BENCH_board.json", s"""{"queries":$board,"sf":"$sfDir"}""")
@@ -213,7 +314,6 @@ object Bench {
     println(s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
       s""""queries":$qs,"nq":${results.size},"failed":$failed,""" +
       s""""note":"top-20 of ${results.size} keys; full board in BENCH_board.json","sf":"$sfName"}""")
-    spark.stop()
     System.out.flush()
     // hard-exit the forked JVM: a leaked non-daemon thread (state store
     // maintenance, netty) must never hang the bench after results are out

@@ -4,8 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Writes PLANS.md: the formatted physical plan of each headline query, for
-  * scan/pushdown/broadcast auditing without running the engine. */
+/** Writes physical plans of [[SparkEntry]] queries, for
+  * scan/pushdown/broadcast auditing without running the engine:
+  *  - `PlanDump [sfDir]` writes PLANS.md, the plan of each headline query;
+  *  - `PlanDump <sfDir> <outDir> <tag> <query>[,<query>...]` writes each
+  *    named query's `explain("formatted")` to `<outDir>/<query>_<tag>.txt`,
+  *    the before/after plan evidence of a change. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -16,6 +20,34 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length >= 4) {
+      val (outDir, tag) = (args(1), args(2))
+      Files.createDirectories(Paths.get(outDir))
+      args(3).split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+        val plan = SparkEntry.queries(name)(spark, dir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), render(plan))
+        println(s"wrote $outDir/${name}_$tag.txt")
+      }
+    } else plansMd(spark, dir)
+    spark.stop()
+  }
+
+  /** `plan` cut to `cap` chars after each line's giant in-line literal
+    * (codebooks, LUTs) is elided, so a 100 KB literal cannot swallow the
+    * budget ahead of a FileScan: every node keeps its head and tail. Raw
+    * control bytes (e.g. the U+0001 field delimiter inside split()
+    * literals), which corrupt diffs and renderers, are escaped. */
+  def render(plan: String, cap: Int = Int.MaxValue): String =
+    plan.linesIterator.map { l =>
+      if (l.length <= 1200) l
+      else l.take(600) + s" …<${l.length - 900} literal chars elided>… " + l.takeRight(300)
+    }.mkString("\n").take(cap).map {
+      case c if c < ' ' && c != '\n' && c != '\t' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString
+
+  private def plansMd(spark: SparkSession, dir: String): Unit = {
     val headline = Seq(
       "q1_pricing_summary", "q3_top_revenue", "q4_region_revenue", "q7_anti_join",
       "q11_semi_join", "q14_scalar_subquery", "dedup_exact", "dedup_minhash",
@@ -310,29 +342,11 @@ object PlanDump {
     headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name\n\n```\n")
-      // elide giant in-line literals per LINE before the overall cap
-      // (round-20 verdict #4): a 100 KB codebook literal must not swallow
-      // the plan budget and cut the dump off ahead of a FileScan — every
-      // node keeps its head and tail, every scan stays auditable
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      val elided = plan.linesIterator.map { l =>
-        if (l.length <= 1200) l
-        else l.take(600) + s" …<${l.length - 900} literal chars elided>… " +
-          l.takeRight(300)
-      }.mkString("\n")
-      sb.append(elided.take(16000))
+      sb.append(render(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.SimpleMode), cap = 16000))
       sb.append("\n```\n")
     }
-    // plan strings can embed raw control bytes (e.g. the U+0001 field
-    // delimiter printed inside split() literals) which corrupt diffs and
-    // renderers — escape them on the way out
-    val sanitized = sb.toString.map {
-      case c if c < ' ' && c != '\n' && c != '\t' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }.mkString
-    Files.writeString(Paths.get("PLANS.md"), sanitized)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${headline.size} plans)")
-    spark.stop()
   }
 }

@@ -11,9 +11,10 @@ package graft.config
  * options in range — failures throw IllegalArgumentException listing the key.
  * The reference keys no source or sink code would read (encoding,
  * lineDelimiter, lengthCheck, retryTimes, sleepTimeMs, columnErrorDebug,
- * partitionDiscoveryIntervalMs, isDynamicTag) are not taken: body parsing
- * has its own settings in [[graft.operators.Deser.parseBodies]], and
- * `dynamicTagColumn` alone turns the dynamic tag on.
+ * partitionDiscoveryIntervalMs, isDynamicTag) are not taken: queue bodies
+ * are UTF-8, body parsing has its own settings in
+ * [[graft.operators.Deser.parseBodies]], and `dynamicTagColumn` alone turns
+ * the dynamic tag on.
  */
 final case class GraftOptions(
     topic: String,
@@ -86,8 +87,8 @@ object GraftOptions {
 
   /** Keys the connector no longer takes, with what does their job now. */
   private val Replaced: Map[String, String] = Map(
-    "encoding" -> "Deser.parseBodies", "linedelimiter" -> "Deser.parseBodies",
-    "lengthcheck" -> "Deser.parseBodies", "isdynamictag" -> "dynamicTagColumn")
+    "encoding" -> "queue bodies are UTF-8", "linedelimiter" -> "use Deser.parseBodies",
+    "lengthcheck" -> "use Deser.parseBodies", "isdynamictag" -> "use dynamicTagColumn")
 
   /** Broker-convention delay ladder, level 1-18 (reference:
     * legacy/common/RocketMQConfig.java MSG_DELAY_LEVEL00-18 — "1s 5s 10s 30s
@@ -145,7 +146,7 @@ object GraftOptions {
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
         s"unsupported options: ${unknown.toSeq.sorted.map(k =>
-          Replaced.get(k).fold(k)(r => s"$k (use $r)")).mkString(", ")}")
+          Replaced.get(k).fold(k)(r => s"$k ($r)")).mkString(", ")}")
 
     val reset = opts.getOrElse(OffsetResetTo, "latest").toLowerCase
     if (!Set("earliest", "latest", "timestamp").contains(reset))

@@ -1,6 +1,6 @@
 package graft.serde
 
-import java.nio.charset.Charset
+import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{BinaryType, StructType}
@@ -34,8 +34,8 @@ object DirtyDataStrategy {
  * Semantics mirror the reference row deserializer
  * (reference: source/reader/deserializer/RowDeserializationSchema.java:139-397):
  *
- *  - the message body is split into lines by `lineDelimiter`, each line into
- *    fields by `fieldDelimiter` (preserving empty tokens);
+ *  - the message body (UTF-8) is split into lines by `lineDelimiter`, each
+ *    line into fields by `fieldDelimiter` (preserving empty tokens);
  *  - `headerFields` are taken from message properties, not the body;
  *  - a single non-header BINARY column receives the raw body bytes;
  *  - a single non-header column of any type receives the whole line;
@@ -57,7 +57,6 @@ class RowDeserializer(
     formatErrorStrategy: DirtyDataStrategy = DirtyDataStrategy.Skip,
     fieldMissingStrategy: DirtyDataStrategy = DirtyDataStrategy.Skip,
     fieldIncrementStrategy: DirtyDataStrategy = DirtyDataStrategy.Cut,
-    encoding: String = "UTF-8",
     fieldDelimiter: String = Delimiters.Soh,
     lineDelimiter: String = "\n",
     headerFields: Set[String] = Set.empty) extends Serializable {
@@ -68,7 +67,6 @@ class RowDeserializer(
   private val dataIndexMapping: Array[Int] =
     schema.fieldNames.indices.filter(i => !isHeader(i)).toArray
   private val dataColumnSize = dataIndexMapping.length
-  @transient private lazy val charset = Charset.forName(encoding)
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[RowDeserializer])
 
   /** Dirty-row accounting, the behavioral difference between SKIP and
@@ -117,7 +115,7 @@ class RowDeserializer(
     } else if (body == null) {
       Seq.empty
     } else {
-      splitPreserveNone(new String(body, charset), lineDelimiter)
+      splitPreserveNone(new String(body, StandardCharsets.UTF_8), lineDelimiter)
         .flatMap(line => deserializeLine(line, properties))
     }
   }
@@ -219,7 +217,6 @@ object RowDeserializer {
   def withLengthCheck(
       schema: StructType,
       lengthCheck: String,
-      encoding: String = "UTF-8",
       fieldDelimiter: String = Delimiters.Soh,
       lineDelimiter: String = "\n",
       headerFields: Set[String] = Set.empty): RowDeserializer = {
@@ -232,6 +229,6 @@ object RowDeserializer {
         (DirtyDataStrategy.SkipSilent, DirtyDataStrategy.SkipSilent, DirtyDataStrategy.SkipSilent)
       case _ => (DirtyDataStrategy.Skip, DirtyDataStrategy.Skip, DirtyDataStrategy.Cut)
     }
-    new RowDeserializer(schema, fmt, miss, incr, encoding, fieldDelimiter, lineDelimiter, headerFields)
+    new RowDeserializer(schema, fmt, miss, incr, fieldDelimiter, lineDelimiter, headerFields)
   }
 }

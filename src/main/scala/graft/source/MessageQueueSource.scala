@@ -135,10 +135,15 @@ class MessageQueueScanBuilder(opts: GraftOptions) extends ScanBuilder
     requiredSchema = StructType(
       MessageQueueTable.Schema.filter(f => required.fieldNames.contains(f.name)))
 
-  private def toMillis(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp => Some(t.getTime)
-    case i: java.time.Instant => Some(i.toEpochMilli)
-    case _ => None
+  /** `v` in epoch millis, rounded down, or up (`ceil`) for an exclusive
+    * upper bound: `born_ts < 7000.5 ms` must keep the 7000 ms row. */
+  private def toMillis(v: Any, ceil: Boolean = false): Option[Long] = {
+    def round(ms: Long, nanos: Int) = if (ceil && nanos % 1000000 != 0) ms + 1 else ms
+    v match {
+      case t: java.sql.Timestamp => Some(round(t.getTime, t.getNanos))
+      case i: java.time.Instant => Some(round(i.toEpochMilli, i.getNano))
+      case _ => None
+    }
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -157,7 +162,8 @@ class MessageQueueScanBuilder(opts: GraftOptions) extends ScanBuilder
         bornTsLowerMs = Some(bornTsLowerMs.fold(toMillis(v).get)(math.max(_, toMillis(v).get)))
         pushed :+= f; true
       case f @ LessThan("born_ts", v) if toMillis(v).isDefined =>
-        bornTsUpperMs = Some(bornTsUpperMs.fold(toMillis(v).get)(math.min(_, toMillis(v).get)))
+        val upper = toMillis(v, ceil = true).get
+        bornTsUpperMs = Some(bornTsUpperMs.fold(upper)(math.min(_, upper)))
         pushed :+= f; true
       case f @ LessThanOrEqual("born_ts", v) if toMillis(v).isDefined =>
         // stop offset needs first-strictly-greater; +1ms is that bound in millis

@@ -25,10 +25,11 @@ class GraftOptionsSpec extends AnyFunSuite {
   }
 
   test("the keys nothing read are rejected, naming what replaced them") {
-    for ((k, use) <- Seq("encoding" -> "Deser.parseBodies", "lineDelimiter" -> "Deser.parseBodies",
-        "lengthCheck" -> "Deser.parseBodies", "isDynamicTag" -> "dynamicTagColumn")) {
+    for ((k, use) <- Seq("encoding" -> "queue bodies are UTF-8",
+        "lineDelimiter" -> "use Deser.parseBodies", "lengthCheck" -> "use Deser.parseBodies",
+        "isDynamicTag" -> "use dynamicTagColumn")) {
       val e = intercept[IllegalArgumentException](GraftOptions.parse(base + (k -> "x")))
-      assert(e.getMessage.contains(s"${k.toLowerCase} (use $use)"))
+      assert(e.getMessage.contains(s"${k.toLowerCase} ($use)"))
     }
     for (k <- Seq("retryTimes", "sleepTimeMs", "partitionDiscoveryIntervalMs", "columnErrorDebug")) {
       val e = intercept[IllegalArgumentException](GraftOptions.parse(base + (k -> "1")))

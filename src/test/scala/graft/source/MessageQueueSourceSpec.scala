@@ -135,6 +135,10 @@ class MessageQueueSourceSpec extends SparkSpec {
     assert(filtered.count() === 8) // ts 4000..7000 in each of 2 queues
     val ts = filtered.select("born_ts").collect().map(_.getTimestamp(0).getTime)
     assert(ts.forall(t => t >= 4000 && t < 8000))
+    // an exclusive bound with a sub-millisecond part keeps the row just below it
+    val subMs = new java.sql.Timestamp(7000L)
+    subMs.setNanos(500000) // 7000.5 ms
+    assert(base.filter(col("born_ts") < lit(subMs)).count() === 14) // ts 1000..7000, 2 queues
   }
 
   test("tag option intersected with a conflicting tag filter yields empty, not widened") {
