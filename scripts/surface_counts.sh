@@ -5,7 +5,8 @@
 #   scripts/surface_counts.sh [repo-dir]     (default: this checkout)
 #
 # Prints
-#   1. main-tree lines: every line of src/main/**/*.scala;
+#   1. main-tree lines: every line of src/main/**/*.scala, and test-tree
+#      lines: every line of src/test/**/*.scala;
 #   2. settable options, in three parts: the graft-mq option keys (the key
 #      constants of object GraftOptions), the JVM properties (graft.*) and
 #      environment variables (SPARK_*) read under src/main, and build.sbt's
@@ -24,6 +25,8 @@ main_files=$(find src/main -name '*.scala' | sort)
 
 lines=$(cat $main_files | wc -l)
 echo "main-tree lines: $lines"
+test_lines=$(find src/test -name '*.scala' -exec cat {} + | wc -l)
+echo "test-tree lines: $test_lines"
 
 keys=$(grep -cE '^  val [A-Z][A-Za-z]* = "[a-z]+"$' src/main/scala/graft/config/GraftOptions.scala || true)
 props=$(grep -rhoE '"(graft\.[a-z.]+|SPARK_[A-Z0-9_]+)"' src/main --include=*.scala | sort -u | wc -l)

@@ -235,14 +235,6 @@ object Bench {
     }
     (selB ++ selS).filter(q => isolatedLast.contains(q._1))
       .foreach { case (name, fn) => samples(name) :+= run(name, fn) }
-    // a >3x disagreement between samples means a noise window swallowed one
-    // of them — one extra isolated sample arbitrates (skip sub-second
-    // queries: their variance is fixed-cost jitter, not noise windows)
-    val retried = (selB ++ selS).filter { case (name, _) =>
-      val ts = samples(name)
-      ts.nonEmpty && ts.forall(_ >= 0) && ts.min > 0.5 && ts.max / ts.min > 3.0
-    }
-    retried.foreach { case (name, fn) => samples(name) :+= run(name, fn) }
     val results = (selB ++ selS).map { case (name, _) =>
       val ts = samples(name)
       name -> (if (ts.isEmpty || ts.exists(_ < 0)) -1.0 else ts.min)

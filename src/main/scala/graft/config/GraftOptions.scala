@@ -8,7 +8,8 @@ package graft.config
  * `nameServerAddress` replaced by `rootDir` (the file-backed broker root).
  *
  * `parse` validates: both required keys present, no unknown keys, enum-valued
- * options in range — failures throw IllegalArgumentException listing the key.
+ * options in range, numeric and boolean values that parse — failures throw
+ * IllegalArgumentException naming the key.
  * The reference keys no source or sink code would read (encoding,
  * lineDelimiter, lengthCheck, retryTimes, sleepTimeMs, columnErrorDebug,
  * partitionDiscoveryIntervalMs, isDynamicTag) are not taken: queue bodies
@@ -148,21 +149,31 @@ object GraftOptions {
         s"unsupported options: ${unknown.toSeq.sorted.map(k =>
           Replaced.get(k).fold(k)(r => s"$k ($r)")).mkString(", ")}")
 
+    // a value that does not parse fails naming its key
+    def typed[T](key: String, expected: String, default: T)(read: String => T): T =
+      opts.get(key).fold(default)(v => try read(v) catch {
+        case _: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"invalid $key: $v (expected $expected)")
+      })
+    def int(key: String, default: Int) = typed(key, "an integer", default)(_.toInt)
+    def long(key: String, default: Long) = typed(key, "an integer", default)(_.toLong)
+    def bool(key: String, default: Boolean) = typed(key, "true or false", default)(_.toBoolean)
+
     val reset = opts.getOrElse(OffsetResetTo, "latest").toLowerCase
     if (!Set("earliest", "latest", "timestamp").contains(reset))
       throw new IllegalArgumentException(s"invalid offsetResetTo: $reset")
     if (reset == "timestamp" && !opts.contains(StartTimeMs))
       throw new IllegalArgumentException(
         "offsetResetTo=timestamp requires startTimeMs")
-    val delayLevel = opts.get(MsgDelayLevel).map(_.toInt).getOrElse(0)
+    val delayLevel = int(MsgDelayLevel, 0)
     if (delayLevel < 0 || delayLevel >= DelayLevelMs.length)
       throw new IllegalArgumentException(
         s"invalid msgDelayLevel: $delayLevel (expected 0-${DelayLevelMs.length - 1})")
-    val maxRows = opts.get(MaxRowsPerTrigger).map(_.toLong).getOrElse(-1L)
+    val maxRows = long(MaxRowsPerTrigger, -1L)
     if (opts.contains(MaxRowsPerTrigger) && maxRows <= 0)
       throw new IllegalArgumentException(
         s"invalid maxRowsPerTrigger: $maxRows (expected a positive row count)")
-    val pollMs = opts.get(ContinuousPollMs).map(_.toLong).getOrElse(50L)
+    val pollMs = long(ContinuousPollMs, 50L)
     if (pollMs <= 0)
       throw new IllegalArgumentException(
         s"invalid continuousPollMs: $pollMs (expected a positive interval)")
@@ -172,9 +183,9 @@ object GraftOptions {
       consumerGroup = opts(ConsumerGroup),
       rootDir = opts(RootDir),
       tag = opts.getOrElse(Tag, DefaultTag),
-      startMessageOffset = opts.get(StartMessageOffset).map(_.toLong).getOrElse(-1L),
-      startTimeMs = opts.get(StartTimeMs).map(_.toLong).getOrElse(-1L),
-      endTimeMs = opts.get(EndTimeMs).map(_.toLong).getOrElse(-1L),
+      startMessageOffset = long(StartMessageOffset, -1L),
+      startTimeMs = long(StartTimeMs, -1L),
+      endTimeMs = long(EndTimeMs, -1L),
       // an explicit empty delimiter normalizes to the SOH default: the read
       // path treats "" as never-split, so a writer honoring "" literally
       // would produce multi-column bodies the reader cannot parse back
@@ -182,10 +193,9 @@ object GraftOptions {
         .filter(_.nonEmpty).getOrElse(graft.serde.Delimiters.Soh),
       offsetResetTo = reset,
       dynamicTagColumn = opts.get(DynamicTagColumn),
-      dynamicTagColumnWriteIncluded =
-        opts.get(DynamicTagColumnWriteIncluded).forall(_.toBoolean),
+      dynamicTagColumnWriteIncluded = bool(DynamicTagColumnWriteIncluded, true),
       keyColumns = opts.get(KeyColumns).map(_.split(",").map(_.trim).toSeq).getOrElse(Nil),
-      writeKeysToBody = opts.get(WriteKeysToBody).exists(_.toBoolean),
+      writeKeysToBody = bool(WriteKeysToBody, false),
       // "k=v;k2=v2" equality conjunction, the graft analog of the broker's
       // SQL92 message selector (reference: example/PropertyFilterExamples.java:33)
       propertyFilter = opts.get(PropertyFilter).map(_.split(";").iterator.map { kv =>
@@ -193,7 +203,7 @@ object GraftOptions {
         require(eq > 0, s"propertyFilter entries must be k=v, got: $kv")
         kv.substring(0, eq).trim -> kv.substring(eq + 1).trim
       }.toMap).getOrElse(Map.empty),
-      numQueues = opts.get(NumQueues).map(_.toInt).getOrElse(0),
+      numQueues = int(NumQueues, 0),
       msgDelayLevel = delayLevel,
       maxRowsPerTrigger = maxRows,
       continuousPollMs = pollMs)

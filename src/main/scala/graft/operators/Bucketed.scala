@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  * either side. At 100 TB this is the difference between re-shuffling the
  * fact table per query and never shuffling it again — the Spark-native
  * analog of the broker's fixed queue partitioning (messages hash-routed to
- * queues once, every consumer reads aligned splits; reference:
- * legacy/common/selector/DefaultTopicSelector.java + queue assignment).
+ * queues once, every consumer reads aligned splits; the `graft-mq` writer
+ * clusters rows on their key columns into `numQueues` queues the same way).
  *
  * Spark bucketing requires a saved table (the bucket spec lives in the
  * catalog), so these helpers wrap saveAsTable/table rather than plain

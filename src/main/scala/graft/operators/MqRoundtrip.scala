@@ -3,7 +3,6 @@ package graft.operators
 import java.nio.file.Files
 
 import graft.util.Materialize.MaterializeOps
-import graft.sink.{DefaultTopicSelector, MessageQueueSink, RowMessageConverter}
 import graft.source.TopicLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,12 +68,7 @@ object MqRoundtrip {
     val topic = "docs_stream"
     writeTopicOnce(root, topic) {
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val conv = new RowMessageConverter(
-        docs.schema, fieldDelimiter = "\u0001",
-        keyColumns = Seq("doc_id"), writeKeysToBody = true)
-      MessageQueueSink.write(
-        docs, root, new DefaultTopicSelector[Map[String, Any]](topic), conv,
-        numQueues = 8)
+      appendTopic(docs, root, topic, 8, firehose("doc_id"): _*)
     }
     (root, topic)
   }
@@ -87,6 +81,21 @@ object MqRoundtrip {
     writeTopicOnce(root, topic)(writeEventsTopic(spark, dir, root, topic))
     (root, topic)
   }
+
+  /** Appends `df` to `topic` under `root` through the `graft-mq` DSv2
+    * writer, `numQueues` queues clustered on the key columns; `options`
+    * are the body-shaping ones (fieldDelimiter, keyColumns, …). A write
+    * reads no consumer group, but the option is required. */
+  private def appendTopic(df: DataFrame, root: String, topic: String, numQueues: Int,
+      options: (String, String)*): Unit =
+    df.write.format("graft-mq").mode("append").options(options.toMap)
+      .option("topic", topic).option("consumerGroup", "producer").option("rootDir", root)
+      .option("numQueues", numQueues.toString).save()
+
+  /** The firehose topics' body shape: the `key` column as the message key
+    * and the body's first field, then the other columns, U+0001-delimited. */
+  private def firehose(key: String): Seq[(String, String)] = Seq(
+    "fieldDelimiter" -> graft.serde.Delimiters.Soh, "keyColumns" -> key, "writeKeysToBody" -> "true")
 
   private def sessionRoot(kind: String, dir: String): String =
     graft.util.Fs.processScopedTmpDir(
@@ -104,11 +113,7 @@ object MqRoundtrip {
       col("user_id"),
       col("event_type"),
       col("value"))
-    val conv = new RowMessageConverter(
-      events.schema, fieldDelimiter = "\u0001",
-      keyColumns = Seq("event_id"), writeKeysToBody = true)
-    MessageQueueSink.write(
-      events, root, new DefaultTopicSelector[Map[String, Any]](topic), conv, numQueues = 8)
+    appendTopic(events, root, topic, 8, firehose("event_id"): _*)
   }
 
   private def readEventsStream(
@@ -124,6 +129,12 @@ object MqRoundtrip {
         element_at(col("f"), 4).as("event_type"),
         element_at(col("f"), 5).cast("double").as("value"))
 
+  /** The roundtrip entries' body shape: the event id as the key and the
+    * body's first field, the event type as the tag (and the body's fourth
+    * field), tab-delimited; `born_ts` is the message's born time. */
+  private val RoundtripOptions = Seq("fieldDelimiter" -> "\t", "keyColumns" -> "event_id",
+    "writeKeysToBody" -> "true", "dynamicTagColumn" -> "event_type")
+
   def mqRoundtripEvents(spark: SparkSession, dir: String): DataFrame = {
     // batch path: the returned frame scans the log LAZILY, so the root must
     // survive the call — reuse, don't delete
@@ -138,14 +149,8 @@ object MqRoundtrip {
       col("event_type"),
       col("value"),
       col("props"),
-      (unix_micros(col("ts")) / 1000L).cast("long").as("born_ms"))
-
-    val conv = new RowMessageConverter(
-      events.schema, fieldDelimiter = "\t",
-      keyColumns = Seq("event_id"), writeKeysToBody = true,
-      dynamicTagColumn = Some("event_type"), bornTsColumn = Some("born_ms"))
-    MessageQueueSink.write(
-      events, root, new DefaultTopicSelector[Map[String, Any]](topic), conv, numQueues = 8)
+      timestamp_millis((unix_micros(col("ts")) / 1000L).cast("long")).as("born_ts"))
+    appendTopic(events, root, topic, 8, RoundtripOptions: _*)
 
     val back = spark.read.format("graft-mq")
       .option("topic", topic).option("consumerGroup", "rt").option("rootDir", root)
@@ -204,15 +209,9 @@ object MqRoundtrip {
       col("event_type"),
       col("value"),
       col("props"),
-      (unix_micros(col("ts")) / 1000L).cast("long").as("born_ms"))
+      timestamp_millis((unix_micros(col("ts")) / 1000L).cast("long")).as("born_ts"))
     val total = events.count()
-    val conv = new RowMessageConverter(
-      events.schema, fieldDelimiter = "\t",
-      keyColumns = Seq("event_id"), writeKeysToBody = true,
-      dynamicTagColumn = Some("event_type"), bornTsColumn = Some("born_ms"))
-    MessageQueueSink.write(
-      events, root, new DefaultTopicSelector[Map[String, Any]](topic), conv,
-      numQueues = numQueues)
+    appendTopic(events, root, topic, numQueues, RoundtripOptions: _*)
 
     val name = "mq_rt_cont_" + math.abs(dir.hashCode)
     val q = spark.readStream.format("graft-mq")
@@ -285,10 +284,7 @@ object MqRoundtrip {
         .when(m === 2, concat_ws(soh, col("doc_id"), col("lang"), col("n_chars"), lit("junk")))
         .when(m === 3, concat_ws(soh, col("doc_id"), col("lang"), lit("x9")))
         .otherwise(concat_ws(soh, col("doc_id"), col("lang"), col("n_chars"))).as("body"))
-    val conv = new RowMessageConverter(
-      bodies.schema, fieldDelimiter = soh, keyColumns = Seq("doc_id"))
-    MessageQueueSink.write(
-      bodies, root, new DefaultTopicSelector[Map[String, Any]](topic), conv, numQueues = 8)
+    appendTopic(bodies, root, topic, 8, "fieldDelimiter" -> soh, "keyColumns" -> "doc_id")
 
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -472,12 +468,7 @@ object MqRoundtrip {
     writeTopicOnce(root, topic) {
       val corpus = all.filter(col("doc_id") % 97 =!= 0)
         .select(col("doc_id"), col("text"))
-      val conv = new RowMessageConverter(
-        corpus.schema, fieldDelimiter = "\u0001",
-        keyColumns = Seq("doc_id"), writeKeysToBody = true)
-      MessageQueueSink.write(
-        corpus, root, new DefaultTopicSelector[Map[String, Any]](topic), conv,
-        numQueues = 8)
+      appendTopic(corpus, root, topic, 8, firehose("doc_id"): _*)
     }
 
     // lazy cut (round 21): the bound-enforcing count() below is the first
@@ -623,12 +614,7 @@ object MqRoundtrip {
     val newDocs = all.filter(col("doc_id") % 3 === 0).select(col("doc_id"), col("text"))
     val history = all.filter(col("doc_id") % 3 =!= 0)
     writeTopicOnce(root, topic) {
-      val conv = new RowMessageConverter(
-        newDocs.schema, fieldDelimiter = "\u0001",
-        keyColumns = Seq("doc_id"), writeKeysToBody = true)
-      MessageQueueSink.write(
-        newDocs, root, new DefaultTopicSelector[Map[String, Any]](topic), conv,
-        numQueues = 8)
+      appendTopic(newDocs, root, topic, 8, firehose("doc_id"): _*)
     }
 
     // under the broadcast ceiling the whole history probe index ships to

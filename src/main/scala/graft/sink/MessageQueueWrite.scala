@@ -15,6 +15,11 @@ import org.apache.spark.sql.types.StructType
  * an aborted/retried task appends nothing (no partial lines). Rows become
  * queue lines through [[RowMessageConverter]]`(opts, schema)`, built here on
  * the driver so a schema it cannot write fails before any task runs.
+ *
+ * This and `writeStream.format("graft-mq")` are the only ways rows reach a
+ * queue log: every write runs inside a SQL execution, and its task commit
+ * runs under Spark's commit coordinator, so a speculative or zombie
+ * attempt of a partition never appends.
  */
 class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
                                queryId: String = "",
@@ -57,7 +62,7 @@ class MessageQueueWriteBuilder(opts: GraftOptions, schema: StructType,
   * visible and the next epoch's repair keeps them) and leaves a raw topic
   * as it is. */
 class MessageQueueBatchWrite(opts: GraftOptions, schema: StructType) extends BatchWrite {
-  private val conv = RowMessageConverter(opts, schema)
+  private val conv = new RowMessageConverter(opts, schema)
   private[sink] var bytesRepaired = 0L
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new QueueDataWriterFactory(opts, conv)
@@ -89,7 +94,7 @@ class MessageQueueStreamingWrite(opts: GraftOptions, schema: StructType,
                                  writerId: String = "",
                                  bytesRepaired: AtomicLong = new AtomicLong)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  private val conv = RowMessageConverter(opts, schema)
+  private val conv = new RowMessageConverter(opts, schema)
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
     new QueueStreamingWriterFactory(opts, conv, writerId)
@@ -144,6 +149,17 @@ private object QueueCommit {
     messages.toSeq.collect { case QueueCommit(q, Some(end), _) => q -> end }
   def bytesRepaired(messages: Array[WriterCommitMessage]): Long =
     messages.iterator.collect { case c: QueueCommit => c.bytesRepaired }.sum
+}
+
+/** A task's rendered lines on their way to one queue log: a private temp
+  * file (O(1) heap), which [[graft.source.EpochLedger.commitTask]] appends
+  * and deletes. An attempt that dies before its commit leaves the queue log
+  * untouched. Rows render into [[out]], which counts the lines and bytes. */
+private[sink] final class Spill(prefix: String) {
+  val path: java.nio.file.Path = java.nio.file.Files.createTempFile(prefix, ".spill")
+  val out = new graft.source.TopicLog.LineWriter(new java.io.FileOutputStream(path.toFile))
+  def close(): Unit = out.close()
+  def discard(): Unit = try out.close() finally { java.nio.file.Files.deleteIfExists(path); () }
 }
 
 /**

@@ -3,34 +3,36 @@ package graft.sink
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.config.GraftOptions
-import graft.source.{Message, TopicLog}
+import graft.source.TopicLog
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /**
- * The one row encoder: `MessageQueueSink.write`, `foreachBatch` and the
- * DSv2 batch, micro-batch and continuous writers all call [[render]], which
- * writes a row of Spark SQL's binary format as one queue line, in escaped
- * UTF-8 bytes, straight into a [[TopicLog.LineWriter]]: no [[Message]] and
- * no String round trip. One rule set, decided per column when the
- * converter is built:
+ * The one row encoder: the DSv2 batch, micro-batch and continuous writers
+ * all call [[render]], which writes a row of Spark SQL's binary format as
+ * one queue line, in escaped UTF-8 bytes, straight into a
+ * [[TopicLog.LineWriter]]: no `Message` and no String round trip. It is
+ * built from the `graft-mq` options alone, on the driver, so a schema it
+ * cannot write fails before any task runs. One rule set, decided per column
+ * when the converter is built:
  *  - Message-shaped input (every column is one of the source's own
- *    columns, case-insensitively, there is a string `body`, and no key,
- *    dynamic tag or property columns nor `writeKeysToBody` are given) maps
- *    by role: body, msg_key → key, tag, properties, born_ts → born time;
+ *    columns, case-insensitively, there is a string `body`, and none of
+ *    `keyColumns`, `dynamicTagColumn`, `writeKeysToBody` is given) maps by
+ *    role: body, msg_key → key, tag, properties, born_ts → born time;
  *    topic/queue_id/offset are ignored. So reading a queue and writing the
  *    rows back (`INSERT INTO <graft-mq table> SELECT … AS body, …`) writes
  *    the same messages; positional `INSERT … VALUES` arrives as col1..colN
- *    and takes the delimited path. A body-shaping setting turns the mapping
- *    off, so a delimited-body pipeline never changes format silently.
+ *    and takes the delimited path. A body-shaping option turns the mapping
+ *    off, so a delimited-body pipeline never changes format silently. The
+ *    `properties` map column is the only source of message properties.
  *  - Otherwise the body joins every column on `fieldDelimiter` except the
  *    metadata ones (reference: sink/table/RocketMQRowDataConverter.java:50-160):
  *    key columns (comma-joined into the key) unless `writeKeysToBody`, the
- *    dynamic tag column unless `dynamicTagIncluded`, property columns and
- *    the born column.
+ *    dynamic tag column unless `dynamicTagColumnWriteIncluded`, and the
+ *    born column (`born_ts`, a timestamp).
  *  - A dynamic tag is on exactly when `dynamicTagColumn` is set; a `*` tag
- *    is written as no tag. Born time is the born column (timestamp, or long
- *    epoch ms), else the write time, plus `delayMs`.
+ *    is written as no tag. Born time is the born column, else the write
+ *    time, plus the `msgDelayLevel` delay.
  *  - Values: null → ""; string → its bytes (invalid UTF-8 as U+FFFD, as
  *    its String has it); timestamp (with or without time zone) → epoch ms,
  *    `Math.floorDiv` of the micros; date → ISO (2024-01-02); binary → its
@@ -39,22 +41,12 @@ import org.apache.spark.sql.types._
  *    fails construction, naming the column: a body field is
  *    delimiter-joined text, and a nested value has no delimiter-safe form.
  */
-class RowMessageConverter(
-    schema: StructType,
-    staticTag: String = "",
-    fieldDelimiter: String = graft.serde.Delimiters.Soh,
-    keyColumns: Seq[String] = Nil,
-    dynamicTagColumn: Option[String] = None,
-    dynamicTagIncluded: Boolean = true,
-    writeKeysToBody: Boolean = false,
-    propertyColumns: Seq[String] = Nil,
-    bornTsColumn: Option[String] = None,
-    delayMs: Long = 0L) extends Serializable {
+class RowMessageConverter(opts: GraftOptions, schema: StructType) extends Serializable {
   import RowMessageConverter.{Comma, Render}
 
   private val messageShaped =
-    keyColumns.isEmpty && dynamicTagColumn.isEmpty && propertyColumns.isEmpty &&
-      !writeKeysToBody && schema.fieldNames.forall(f =>
+    opts.keyColumns.isEmpty && opts.dynamicTagColumn.isEmpty && !opts.writeKeysToBody &&
+      schema.fieldNames.forall(f =>
         graft.source.MessageQueueTable.Schema.fieldNames.contains(f.toLowerCase)) &&
       schema.exists(f => f.name.equalsIgnoreCase("body") && f.dataType.isInstanceOf[StringType])
   private def role(name: String): Int =
@@ -62,22 +54,23 @@ class RowMessageConverter(
 
   private val keyIdx: Array[Int] =
     if (messageShaped) Array(role("msg_key")).filter(_ >= 0)
-    else keyColumns.map(schema.fieldIndex).toArray
-  private val tagIdx = dynamicTagColumn.map(schema.fieldIndex).getOrElse(role("tag"))
-  private val propIdx: Array[Int] = propertyColumns.map(schema.fieldIndex).toArray
+    else opts.keyColumns.map(schema.fieldIndex).toArray
+  private val tagIdx = opts.dynamicTagColumn.map(schema.fieldIndex).getOrElse(role("tag"))
   private val propMapIdx = role("properties")
-  private val bornIdx = bornTsColumn.map(schema.fieldIndex).getOrElse(role("born_ts"))
+  private val bornIdx = {
+    val named = schema.fields.indexWhere(f => f.name == "born_ts" && f.dataType == TimestampType)
+    if (named >= 0) named else role("born_ts")
+  }
   private val bodyIdx: Array[Int] =
     if (messageShaped) Array(role("body"))
-    else schema.indices.filterNot((if (writeKeysToBody) Set.empty[Int] else keyIdx.toSet) ++
-      Seq(bornIdx) ++ propIdx ++ (if (dynamicTagIncluded) Nil else Seq(tagIdx))).toArray
-  private val fixedTag = (if (staticTag == "*") "" else staticTag).getBytes(UTF_8)
-  private val delimiter = fieldDelimiter.getBytes(UTF_8)
-  // property columns once each, in the order their names sort as Strings
-  private val propOrder: Array[Int] = propIdx.distinct.sortBy(schema(_).name)
+    else schema.indices.filterNot((if (opts.writeKeysToBody) Set.empty[Int] else keyIdx.toSet) ++
+      Seq(bornIdx) ++ (if (opts.dynamicTagColumnWriteIncluded) Nil else Seq(tagIdx))).toArray
+  private val fixedTag = (if (opts.tag == "*") "" else opts.tag).getBytes(UTF_8)
+  private val delimiter = opts.fieldDelimiter.getBytes(UTF_8)
+  private val delayMs = GraftOptions.delayMs(opts.msgDelayLevel)
 
   private val renderers: Array[Render] = {
-    val rendered = (keyIdx ++ propIdx ++ bodyIdx :+ tagIdx).toSet
+    val rendered = (keyIdx ++ bodyIdx :+ tagIdx).toSet
     Array.tabulate(schema.length)(i => if (rendered(i)) renderer(schema(i)) else null)
   }
   private def renderer(f: StructField): Render = f.dataType match {
@@ -91,12 +84,11 @@ class RowMessageConverter(
     case dt => throw new IllegalArgumentException(s"column ${f.name} of type " +
       s"${dt.simpleString} has no delimiter-safe text form to write into a message")
   }
-  private val bornInMicros = bornIdx >= 0 && (schema(bornIdx).dataType match {
-    case TimestampType | TimestampNTZType => true
-    case LongType => false
+  if (bornIdx >= 0) schema(bornIdx).dataType match {
+    case TimestampType | TimestampNTZType =>
     case dt => throw new IllegalArgumentException(s"born column ${schema(bornIdx).name} " +
-      s"must be a timestamp or a long of epoch ms, not ${dt.simpleString}")
-  })
+      s"must be a timestamp, not ${dt.simpleString}")
+  }
 
   private def value(row: InternalRow, i: Int, out: TopicLog.LineWriter): Unit =
     if (!row.isNullAt(i)) renderers(i)(row, i, out)
@@ -117,42 +109,23 @@ class RowMessageConverter(
       // map values are nullable in SQL; a property is never null
       out.properties((0 until m.numElements()).map(i => ks.getUTF8String(i).toString ->
         (if (vs.isNullAt(i)) "" else vs.getUTF8String(i).toString)).toMap)
-    } else {
-      var k = 0
-      while (k < propOrder.length) {
-        if (k > 0) out.ascii(";")
-        out.escaped(schema(propOrder(k)).name); out.ascii("="); value(row, propOrder(k), out)
-        k += 1
-      }
     }
 
-  /** Writes `row` as one queue line into `out`, with no terminator. `tag`
-    * stands in for an empty tag: the selector's tag on `write` and
-    * `foreachBatch`. `bornTs` is the born time when no born column gives one. */
-  def render(row: InternalRow, out: TopicLog.LineWriter, tag: String = "",
+  /** Writes `row` as one queue line into `out`, with no terminator.
+    * `bornTs` is the born time when no born column gives one. */
+  def render(row: InternalRow, out: TopicLog.LineWriter,
       bornTs: Long = System.currentTimeMillis()): Unit = {
     val born =
       if (bornIdx < 0 || row.isNullAt(bornIdx)) bornTs
-      else if (bornInMicros) Math.floorDiv(row.getLong(bornIdx), 1000L)
-      else row.getLong(bornIdx)
+      else Math.floorDiv(row.getLong(bornIdx), 1000L)
     out.ascii((born + delayMs).toString); out.tab()
     joined(row, keyIdx, Comma, out); out.tab()
     val tagAt = out.position
     if (tagIdx >= 0) value(row, tagIdx, out) else out.escaped(fixedTag)
     if (out.wroteOnly(tagAt, '*')) out.rewind(tagAt)
-    if (out.position == tagAt && tag.nonEmpty) out.escaped(tag)
     out.tab()
     properties(row, out); out.tab()
     joined(row, bodyIdx, delimiter, out)
-  }
-
-  /** `row` as a [[Message]]: its rendered line, decoded. */
-  def convert(row: InternalRow, bornTs: Long = System.currentTimeMillis()): Message = {
-    val bytes = new java.io.ByteArrayOutputStream
-    val out = new TopicLog.LineWriter(bytes)
-    render(row, out, bornTs = bornTs)
-    out.close()
-    TopicLog.decode(bytes.toByteArray)
   }
 }
 
@@ -164,15 +137,4 @@ object RowMessageConverter {
   }
 
   private val Comma = Array[Byte](',')
-
-  /** The `graft-mq` sink options as converter settings; the born column is
-    * a `born_ts` column of TimestampType. */
-  def apply(opts: GraftOptions, schema: StructType): RowMessageConverter =
-    new RowMessageConverter(schema, staticTag = opts.tag, fieldDelimiter = opts.fieldDelimiter,
-      keyColumns = opts.keyColumns, dynamicTagColumn = opts.dynamicTagColumn,
-      dynamicTagIncluded = opts.dynamicTagColumnWriteIncluded,
-      writeKeysToBody = opts.writeKeysToBody,
-      bornTsColumn = schema.find(f => f.name == "born_ts" && f.dataType == TimestampType)
-        .map(_.name),
-      delayMs = GraftOptions.delayMs(opts.msgDelayLevel))
 }

@@ -15,8 +15,8 @@ import scala.jdk.CollectionConverters._
  * observers see either the old state or the new one, never a torn write.
  *
  * Protocol — every writer (the DSv2 batch, micro-batch and continuous
- * sinks, `MessageQueueSink.write` and `foreachBatch`) runs these two steps
- * and nothing else touches the marks:
+ * sinks of `graft-mq`, the only ways rows reach a queue log) runs these
+ * two steps and nothing else touches the marks:
  *  1. [[commitTask]], per task and topic: if the ledger already covers this
  *     epoch, append NOTHING (the epoch is a post-commit replay); otherwise
  *     truncate the queue file back to its base (discarding any uncommitted
@@ -68,8 +68,8 @@ object EpochLedger {
    *
    * `writerId` is the Delta-style transaction identity: epoch numbers only
    * mean "already committed" relative to the writer that issued them. A new
-   * writer (fresh checkpoint, different streaming query, rebuilt
-   * foreachBatch pipeline) starts its batchIds at 0 again — without the
+   * writer (fresh checkpoint, different streaming query) starts its
+   * epochs at 0 again — without the
    * identity check its first maxEpoch+1 batches of NEW data would all be
    * skipped as replays. A different writerId is therefore never
    * "committed"; it takes over the committed marks (data survives) and the

@@ -54,6 +54,14 @@ class GraftOptionsSpec extends AnyFunSuite {
       GraftOptions.parse(base + ("lengthCheck" -> "MAYBE")))
     assertThrows[IllegalArgumentException](
       GraftOptions.parse(base + ("offsetResetTo" -> "middle")))
+    // a numeric or boolean value that does not parse names its key
+    for ((k, v) <- Seq("numQueues" -> "eight", "msgDelayLevel" -> "2.5",
+        "maxRowsPerTrigger" -> "many", "continuousPollMs" -> "", "startMessageOffset" -> "0x10",
+        "startTimeMs" -> "now", "endTimeMs" -> "1e9", "writeKeysToBody" -> "yes",
+        "dynamicTagColumnWriteIncluded" -> "1")) {
+      val e = intercept[IllegalArgumentException](GraftOptions.parse(base + (k -> v)))
+      assert(e.getMessage.contains(k.toLowerCase), s"$k=$v: ${e.getMessage}")
+    }
   }
 
   test("maxRowsPerTrigger parses and must be positive when set") {

@@ -23,7 +23,7 @@ class ExactlyOnceSpec extends SparkSpec {
   private def writer(root: String, queue: Int, epoch: Long): QueueDataWriter = {
     val opts = GraftOptions.parse(Map(
       "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
-    new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), queue, epoch)
+    new QueueDataWriter(opts, new RowMessageConverter(opts, bodySchema), queue, epoch)
   }
 
   private def row(s: String): InternalRow = InternalRow(UTF8String.fromString(s))
@@ -91,19 +91,19 @@ class ExactlyOnceSpec extends SparkSpec {
 
   test("batch DSv2 append into a ledger-managed topic advances the hwm") {
     import spark.implicits._
-    // the DSv2 batch writer and MessageQueueSink.write run the same commit
+    // the batch writer's own commit, and a whole df.write job
     val appends: Seq[(String, String) => Unit] = Seq(
       (root, body) => {
         val opts = GraftOptions.parse(Map(
           "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
         val bw = new MessageQueueBatchWrite(opts, bodySchema)
-        val w = new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), 0)
+        val w = new QueueDataWriter(opts, new RowMessageConverter(opts, bodySchema), 0)
         w.write(row(body))
         bw.commit(Array(w.commit()))
       },
-      (root, body) => MessageQueueSink.write(Seq(body).toDF("body"), root,
-        new DefaultTopicSelector[Map[String, Any]]("eo"), new RowMessageConverter(bodySchema),
-        numQueues = 1))
+      (root, body) => Seq(body).toDF("body").write.format("graft-mq").mode("append")
+        .option("topic", "eo").option("consumerGroup", "g").option("rootDir", root)
+        .option("numQueues", "1").save())
     appends.foreach { append =>
       val root = Files.createTempDirectory("graft-eo").toString
       epoch(root, 0, Seq("s1"))
@@ -179,23 +179,6 @@ class ExactlyOnceSpec extends SparkSpec {
     assert(bodies(root) === Seq("a", "bb", "c", "d"))
   }
 
-  test("foreachBatch: duplicate batch, crash-before-publish, and torn tail all heal") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-eo-fb").toString
-    val conv = new RowMessageConverter(bodySchema)
-    val fn = MessageQueueSink.foreachBatch(root,
-      new DefaultTopicSelector[Map[String, Any]]("fb"), conv, numQueues = 1)
-    val b0 = Seq("a", "b").toDF("body")
-    fn(b0, 0L)
-    fn(b0, 0L) // replayed batchId
-    assert(bodies(root, "fb") === Seq("a", "b"))
-    // crashed batch-1 attempt: data landed, ledger publish never ran
-    TopicLog.append(root, "fb", 0, Iterator(conv.convert(row("c"))))
-    assert(bodies(root, "fb") === Seq("a", "b")) // invisible past hwm
-    fn(Seq("c", "d").toDF("body"), 1L) // replay heals and lands once
-    assert(bodies(root, "fb") === Seq("a", "b", "c", "d"))
-  }
-
   test("a stream's first epoch into a raw topic: the unpublished attempt is invisible, the replay lands once") {
     val root = Files.createTempDirectory("graft-eo-first").toString
     // epoch 0's task commits into a topic with no ledger yet; the driver
@@ -207,27 +190,6 @@ class ExactlyOnceSpec extends SparkSpec {
     // the restarted query replays epoch 0, and this time it publishes
     epoch(root, 0, Seq("a", "b"))
     assert(bodies(root) === Seq("a", "b"))
-  }
-
-  test("foreachBatch's first batch across two routed topics: a failed publish hides it, the replay lands once") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-eo-first-fb").toString
-    val topics = Seq("fb-x", "fb-y")
-    val batch = Seq(("fb-x", "x1"), ("fb-y", "y1"), ("fb-x", "x2"), ("fb-y", "y2"))
-      .toDF("topic", "body")
-    val fn = MessageQueueSink.foreachBatch(root,
-      new SimpleTopicSelector("topic", "fb-default", "tag", ""),
-      new RowMessageConverter(batch.schema), numQueues = 2)
-    def all(topic: String): Seq[String] = (0 until 2).flatMap(q => bodies(root, topic, q)).sorted
-    // the tasks append, then the driver's publish fails: a directory sits
-    // where each topic's ledger temp file goes
-    val blocks = topics.map(t => EpochLedger.file(root, t).resolveSibling("._epochs.tmp"))
-    blocks.foreach(Files.createDirectories(_))
-    intercept[java.io.IOException](fn(batch, 0L))
-    assert(topics.map(all) === Seq(Seq.empty, Seq.empty))
-    blocks.foreach(Files.delete)
-    fn(batch, 0L) // the replayed batch publishes
-    assert(topics.map(all) === Seq(Seq("x1", "x2"), Seq("y1", "y2")))
   }
 
   test("mq source reading a ledgered topic sees only committed lines") {
@@ -327,7 +289,7 @@ class ExactlyOnceSpec extends SparkSpec {
     def epochAs(writer: String, id: Long, lines: Seq[String]): Unit = {
       val opts = GraftOptions.parse(Map(
         "topic" -> "eo", "consumerGroup" -> "g", "rootDir" -> root))
-      val w = new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), 0, id, writer)
+      val w = new QueueDataWriter(opts, new RowMessageConverter(opts, bodySchema), 0, id, writer)
       lines.foreach(l => w.write(row(l)))
       val msg = w.commit()
       new MessageQueueStreamingWrite(opts, bodySchema, writer).commit(id, Array(msg))

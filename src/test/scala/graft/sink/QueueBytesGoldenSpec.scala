@@ -4,19 +4,24 @@ import java.nio.file.Files
 import java.security.MessageDigest
 
 import graft.SparkSpec
-import graft.config.GraftOptions
 import graft.source.TopicLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /**
- * The queue files every sink path writes, pinned byte for byte: three fixed
- * frames go through `write`, `foreachBatch`, the DSv2 batch writer and an
- * `AvailableNow` DSv2 stream, and each queue file's SHA-256 must equal the
- * hash recorded for it. Every frame carries a born column, so no byte
- * depends on the clock, and each is one partition, so line order is fixed.
- * A change to the wire format or to a value's text shows here first.
+ * The queue files every sink path writes, pinned byte for byte: five fixed
+ * frames go through the DSv2 batch writer and an `AvailableNow` DSv2
+ * stream, and each queue file's SHA-256 must equal the hash recorded for
+ * it. Every frame carries a born column, so no byte depends on the clock,
+ * and each is one partition, so line order is fixed. A change to the wire
+ * format or to a value's text shows here first.
+ *
+ * The `events` and `docs` frames carry the two option sets of
+ * [[graft.operators.MqRoundtrip]]'s topics. Their topics' lines, sorted
+ * across queues, must also equal what the `MessageQueueSink.write` path
+ * wrote before every write became a DSv2 write: that path routed rows to
+ * queues round-robin, so only the line multiset compares.
  */
 class QueueBytesGoldenSpec extends SparkSpec {
   import QueueBytesGoldenSpec._
@@ -30,6 +35,16 @@ class QueueBytesGoldenSpec extends SparkSpec {
   /** "queue-N: hash" for every queue file of topic `Topic` under `root`. */
   private def hashes(root: String): Seq[String] =
     TopicLog.listQueues(root, Topic).map(q => s"queue-$q: ${sha256(TopicLog.queueFile(root, Topic, q))}")
+
+  /** SHA-256 of topic `Topic`'s lines under `root`, sorted as bytes across
+    * its queues, each ended by a newline. */
+  private def linesHash(root: String): String = {
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    val lines = TopicLog.listQueues(root, Topic).flatMap(q => new String(
+      Files.readAllBytes(TopicLog.queueFile(root, Topic, q).toPath), latin1).split("\n"))
+    MessageDigest.getInstance("SHA-256").digest(lines.sorted.map(_ + "\n").mkString.getBytes(latin1))
+      .map(b => f"$b%02x").mkString
+  }
 
   /** The lane's message-shaped frame: born_ts, msg_key and an SOH body,
     * with escapes, non-ASCII, a trailing backslash and invalid UTF-8. */
@@ -86,33 +101,57 @@ class QueueBytesGoldenSpec extends SparkSpec {
         timestamp_millis(lit(1500000000000L) + col("id") * 250).as("born_ts"))
   }
 
+  /** The events roundtrip topics' frame: the event id as the key and the
+    * body's first field, the event type (null, `*`, a tab) as the dynamic
+    * tag, kept in the tab-delimited body; NaN, 1e20 and escapes in it. */
+  private def eventsFrame: DataFrame = {
+    import spark.implicits._
+    Seq(
+      (10L, 1700000000123456L, Some(3L), Some("click"), Some(185.22), Some("{\"k\": 87}")),
+      (11L, -1500L, Some(12L), Some("purchase"), Some(1e20), Some("tab\there")),
+      (12L, 1600000000000001L, None, None, None, None),
+      (13L, 0L, Some(0L), Some("*"), Some(-0.5), Some("nl\nhere\\")),
+      (14L, 1700000000999999L, Some(7L), Some("s\u00efgn\tup"), Some(Double.NaN), Some("")),
+      (15L, 1500000000000000L, Some(9L), Some("error"), Some(0.1), Some("\u00e9\u4e2d\ud83d\ude00")))
+      .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
+      .coalesce(1)
+      .withColumn("born_ts", timestamp_millis((col("ts_us") / 1000L).cast("long") + 1000L))
+  }
+
+  /** The documents firehose topics' frame: the doc id as the key and the
+    * body's first field, SOH-delimited, with escapes, an SOH, a null and
+    * an empty text, and invalid UTF-8. */
+  private def docsFrame: DataFrame = {
+    import spark.implicits._
+    Seq(
+      (1L, Some("plain text")),
+      (2L, Some("tab\there\nnl\rcr\\bs")),
+      (3L, Some("soh\u0001inside")),
+      (4L, None),
+      (5L, Some("")),
+      (6L, Some("\u00e9\u4e2d\ud83d\ude00 trailing\\")))
+      .toDF("doc_id", "text")
+      .union(spark.range(7, 8).select(col("id").as("doc_id"),
+        expr("cast(X'41FF42C3' as string)").as("text")))
+      .coalesce(1)
+      .select(col("doc_id"), col("text"),
+        timestamp_millis(lit(1650000000000L) + col("doc_id") * 13).as("born_ts"))
+  }
+
   /** (frame, DSv2 options beyond topic/consumerGroup/rootDir/numQueues). */
   private def frames: Seq[(String, DataFrame, Map[String, String])] = Seq(
     ("lane", laneFrame, Map.empty),
     ("producer", producerFrame, Map.empty),
     ("generic", genericFrame, Map("keyColumns" -> "id", "dynamicTagColumn" -> "kind",
-      "msgDelayLevel" -> "3", "fieldDelimiter" -> "|", "tag" -> "fallback")))
+      "msgDelayLevel" -> "3", "fieldDelimiter" -> "|", "tag" -> "fallback")),
+    ("events", eventsFrame, Map("fieldDelimiter" -> "\t", "keyColumns" -> "event_id",
+      "writeKeysToBody" -> "true", "dynamicTagColumn" -> "event_type")),
+    ("docs", docsFrame, Map("fieldDelimiter" -> "\u0001", "keyColumns" -> "doc_id",
+      "writeKeysToBody" -> "true")))
 
   private def options(root: String, extra: Map[String, String]): Map[String, String] =
     extra ++ Map("topic" -> Topic, "consumerGroup" -> "g", "rootDir" -> root,
       "numQueues" -> Queues.toString)
-
-  private def converter(df: DataFrame, extra: Map[String, String]): RowMessageConverter =
-    RowMessageConverter(GraftOptions.parse(options("unused", extra)), df.schema)
-
-  private def viaWrite(df: DataFrame, extra: Map[String, String]): String = {
-    val root = freshRoot()
-    MessageQueueSink.write(df, root, new DefaultTopicSelector[Map[String, Any]](Topic, "sel"),
-      converter(df, extra), numQueues = Queues)
-    root
-  }
-
-  private def viaForeachBatch(df: DataFrame, extra: Map[String, String]): String = {
-    val root = freshRoot()
-    MessageQueueSink.foreachBatch(root, new DefaultTopicSelector[Map[String, Any]](Topic),
-      converter(df, extra), numQueues = Queues)(df, 0L)
-    root
-  }
 
   private def viaDsv2Batch(df: DataFrame, extra: Map[String, String]): String = {
     val root = freshRoot()
@@ -136,14 +175,14 @@ class QueueBytesGoldenSpec extends SparkSpec {
 
   test("every sink path writes the recorded queue bytes") {
     val paths = Seq[(String, (DataFrame, Map[String, String]) => String)](
-      "write" -> viaWrite, "foreachBatch" -> viaForeachBatch,
       "dsv2-batch" -> viaDsv2Batch, "dsv2-stream" -> viaDsv2Stream)
-    val got = for {
-      (frame, df, extra) <- frames
-      (path, run) <- paths
-      line <- hashes(run(df, extra))
-    } yield s"$frame/$path/$line"
+    val roots = for ((frame, df, extra) <- frames; (path, run) <- paths)
+      yield (frame, path, run(df, extra))
+    val got = for ((frame, path, root) <- roots; line <- hashes(root))
+      yield s"$frame/$path/$line"
     assert(got === Recorded)
+    for ((frame, path, root) <- roots if WriteLines.contains(frame))
+      assert(linesHash(root) === WriteLines(frame), s"$frame/$path")
   }
 }
 
@@ -152,30 +191,34 @@ object QueueBytesGoldenSpec {
   val Queues = 2
 
   /** frame/path/queue-N: SHA-256 of the queue file, as the String line
-    * codec wrote it. */
+    * codec wrote it (`events` and `docs`: as the byte codec did, which
+    * writes the same bytes). */
   val Recorded: Seq[String] = Seq(
-    "lane/write/queue-0: b7c180acb7158edc69a31f2a574efe1d82d1535301bca34834564a0748328b9e",
-    "lane/write/queue-1: 157a106987f9b9e03bf57e4e222aa92f53a3248dd3d752430039abf388c6a4c5",
-    "lane/foreachBatch/queue-0: deba56f97775f95761a2e10c5b88c8edf0a0d76d2288243099765fb94cf6a6c9",
-    "lane/foreachBatch/queue-1: b9bd5694de735bb0cd1f47d7da7e520e212c8681ea47c493abb47585c48d0b28",
     "lane/dsv2-batch/queue-0: 0fdb780320a92d86c1b29eb2f186a5763315528c841f6437c13eb631ff9d6331",
     "lane/dsv2-batch/queue-1: 6cdc52b47f7e728d9445b24e3a5ac2411da5396f1b0f54047c8c1f60f893a71f",
     "lane/dsv2-stream/queue-0: 0fdb780320a92d86c1b29eb2f186a5763315528c841f6437c13eb631ff9d6331",
     "lane/dsv2-stream/queue-1: 6cdc52b47f7e728d9445b24e3a5ac2411da5396f1b0f54047c8c1f60f893a71f",
-    "producer/write/queue-0: 8ff46fc7126b43c3418316240310185f8bc99337592b98e5dad69f204c1dd9c2",
-    "producer/write/queue-1: e476701b0459ee6f01cf29e52a5211016d818118af667db6399edc67f247e03d",
-    "producer/foreachBatch/queue-0: 662bf64bc1be85c386d1dd2c2150dec4db7ae1c2a286d9508bfb77874f3aa16c",
-    "producer/foreachBatch/queue-1: 5179181f233bbabb6cb5864147474baab745db47693f14e9bd6a9f2d4ee40421",
     "producer/dsv2-batch/queue-0: 024da24cdb79500631181d2b89fce88ed9940fcc5f21078b667406efe443b84e",
     "producer/dsv2-batch/queue-1: b1f68cc789b849a9edf05b394736175fee4026279eafea7c90d263a0c97a3fa9",
     "producer/dsv2-stream/queue-0: 024da24cdb79500631181d2b89fce88ed9940fcc5f21078b667406efe443b84e",
     "producer/dsv2-stream/queue-1: b1f68cc789b849a9edf05b394736175fee4026279eafea7c90d263a0c97a3fa9",
-    "generic/write/queue-0: 995a98216fbe20f1eeded926c19ff0358e4dd8c95b32ba2dbe922bfc08f62f49",
-    "generic/write/queue-1: d9dbe951616d22abece0eb8c0bfc6e0dc1a6537f070f6d55af67ffd02c907bf9",
-    "generic/foreachBatch/queue-0: 14c3a6c3b4553bf32aff75a4e8065a645416fc2e91d383cf98a2bc893e912883",
-    "generic/foreachBatch/queue-1: 2fca670a6567a83580c09070911f106fc5a1647ac10dec80bb0e8173319c4e65",
     "generic/dsv2-batch/queue-0: ea52b2f3bd26ae898f72a488f9b0f627ba675639f22478a760b41a13fe68822a",
     "generic/dsv2-batch/queue-1: e6e06b66747d357d87fae4123fe0619f5aab6dc8d6b02de970668fe4b6dea3f0",
     "generic/dsv2-stream/queue-0: ea52b2f3bd26ae898f72a488f9b0f627ba675639f22478a760b41a13fe68822a",
-    "generic/dsv2-stream/queue-1: e6e06b66747d357d87fae4123fe0619f5aab6dc8d6b02de970668fe4b6dea3f0")
+    "generic/dsv2-stream/queue-1: e6e06b66747d357d87fae4123fe0619f5aab6dc8d6b02de970668fe4b6dea3f0",
+    "events/dsv2-batch/queue-0: d174fbafd6cd383e830cd05b1cf6a4607c0abf83ae144199f4ddc989cef0849b",
+    "events/dsv2-batch/queue-1: d522925a0f6e99ed74992b6b5f5e8e44174cb078a24af1e73115210af309c124",
+    "events/dsv2-stream/queue-0: d174fbafd6cd383e830cd05b1cf6a4607c0abf83ae144199f4ddc989cef0849b",
+    "events/dsv2-stream/queue-1: d522925a0f6e99ed74992b6b5f5e8e44174cb078a24af1e73115210af309c124",
+    "docs/dsv2-batch/queue-0: 078a17abb3fb90009e32236de90fce00252e5e508e3a20716985f695da286039",
+    "docs/dsv2-batch/queue-1: 203194f426073f12386f5c485e3dddb680ef547abd6d4f713c806e9c4cf1366b",
+    "docs/dsv2-stream/queue-0: 078a17abb3fb90009e32236de90fce00252e5e508e3a20716985f695da286039",
+    "docs/dsv2-stream/queue-1: 203194f426073f12386f5c485e3dddb680ef547abd6d4f713c806e9c4cf1366b")
+
+  /** frame -> SHA-256 of its topic's sorted lines as `MessageQueueSink.write`
+    * wrote them, with MqRoundtrip's converter settings (the events born
+    * column a long of epoch ms, `born_ts`'s value). */
+  val WriteLines: Map[String, String] = Map(
+    "events" -> "c12c197b41276b528e6408dd6e9551b0f5b481425eefe86981af89734eaced6e",
+    "docs" -> "3f31a9730e750e3c5e6e196ead33bc1941ec06d78fd7cb1e1ba711a284e877c8")
 }

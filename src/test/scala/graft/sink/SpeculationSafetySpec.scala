@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.config.GraftOptions
 import graft.source.TopicLog
-import org.apache.spark.SparkConf
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -12,31 +11,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Single-writer-per-queue safety (reference: legacy/RocketMQSink.java:60-150).
- * The legacy append path must refuse to run under speculative execution; the
- * DSv2 writer must tolerate a racing duplicate attempt of the same partition
- * because attempts spill privately and only the committed winner appends.
+ * The DSv2 writer must tolerate a racing duplicate attempt of the same
+ * partition (speculation, or a zombie task racing its retry) because
+ * attempts spill privately and only the committed winner appends.
  */
 class SpeculationSafetySpec extends AnyFunSuite {
-
-  test("assertNoSpeculation refuses a speculation-enabled conf") {
-    val on = new SparkConf(false).set("spark.speculation", "true")
-    val e = intercept[IllegalArgumentException](MessageQueueSink.assertNoSpeculation(on))
-    assert(e.getMessage.contains("spark.speculation"))
-    assert(e.getMessage.contains("graft-mq")) // points at the safe alternative
-  }
-
-  test("assertNoSpeculation passes when speculation is off or unset") {
-    MessageQueueSink.assertNoSpeculation(new SparkConf(false))
-    MessageQueueSink.assertNoSpeculation(
-      new SparkConf(false).set("spark.speculation", "false"))
-  }
 
   private val bodySchema = StructType(Seq(StructField("body", StringType)))
 
   private def writerFor(root: String, partition: Int): QueueDataWriter = {
     val opts = GraftOptions.parse(Map(
       "topic" -> "race", "consumerGroup" -> "g", "rootDir" -> root))
-    new QueueDataWriter(opts, RowMessageConverter(opts, bodySchema), partition)
+    new QueueDataWriter(opts, new RowMessageConverter(opts, bodySchema), partition)
   }
 
   private def row(s: String): InternalRow = InternalRow(UTF8String.fromString(s))
