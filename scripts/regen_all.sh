@@ -2,29 +2,29 @@
 # regen_all.sh — one-command regeneration of EVERY committed evidence
 # artifact, in the documented order (round-20 verdict #6: the round-17/18
 # failure mode was artifacts lagging code; this makes the freeze protocol
-# mechanical). FAILS on any red row: a correctness mismatch, a SCALING
-# ratio over bound, or a MemLane failure exits non-zero immediately.
+# mechanical). FAILS on any red row: a correctness mismatch or a SCALING
+# row over its bound exits non-zero immediately.
 #
 # Usage:
 #   scripts/regen_all.sh [stages]
 #
 # stages = comma list, default all of:
-#   compile,data,correctness,bands,scaling,memlane,bench,baseline,plans,check
+#   compile,data,correctness,bands,scaling,bench,baseline,plans,check
 # Run a subset for local iteration (e.g. `scripts/regen_all.sh bench,baseline`);
 # the committed artifacts should come from one full default run at the
 # freeze HEAD.
 #
 # Wall-clock budget (this host, 32 cores, idle): compile ~1 min, data
 # ~10 min (skipped when testdata-gen/ already exists), correctness
-# (five-regime matrix) ~45 min, bands ~35 min, scaling ~80 min + ~35 min
-# isolated banded re-run, memlane ~30 min, bench ~25 min (three boards),
+# (five-regime matrix) ~45 min, bands ~35 min, scaling ~4 min (4 cores),
+# bench ~25 min (three boards),
 # baseline ~5 min cached / ~35 min cold, plans ~5 min. Driver-side tooling
 # only (duckdb/pandas via python3); the Scala library has no such deps.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
-STAGES="${1:-compile,data,correctness,bands,scaling,memlane,bench,baseline,plans,check}"
+STAGES="${1:-compile,data,correctness,bands,scaling,bench,baseline,plans,check}"
 have() { [[ ",$STAGES," == *",$1,"* ]]; }
 log() { echo "[regen] $(date +%H:%M:%S) $*"; }
 
@@ -35,13 +35,12 @@ if have compile; then
 fi
 
 # ---------- data: testdata-gen dirs (SURVEY §6 recipe; gitignored) ----------
-scale() { # dst src factor [mode]
-  local dst=$1 src=$2 factor=$3 mode=${4:-}
+scale() { # dst src factor
+  local dst=$1 src=$2 factor=$3
   [[ -d "testdata-gen/$dst" ]] && { log "data: testdata-gen/$dst exists, keeping"; return; }
-  log "data: synthesizing testdata-gen/$dst (src=$src factor=$factor mode=${mode:-uniform})"
+  log "data: synthesizing testdata-gen/$dst (src=$src factor=$factor)"
   env SPARK_GRAFT_SCALE_SRC="$src" SPARK_GRAFT_SCALE_FACTOR="$factor" \
       SPARK_GRAFT_SCALE_DST="testdata-gen/$dst" \
-      ${mode:+SPARK_GRAFT_SCALE_MODE=$mode} \
       java -Xmx16g -cp "$CP" graft.ScaleData > "/tmp/regen_data_$dst.log" 2>&1 \
     || { tail -20 "/tmp/regen_data_$dst.log"; exit 1; }
 }
@@ -52,14 +51,10 @@ band() { # dst src args...
   python3 scripts/sf1_correctness.py --make-band "testdata-gen/$src" "testdata-gen/$dst" "$@"
 }
 if have data; then
-  scale sf1  /root/testdata/sf0.1 10          # second decade (caesar, single stage)
-  scale sf5  testdata-gen/sf1 5               # third-decade growth step (auto-perm)
-  scale sf10 testdata-gen/sf1 10              # third decade (auto-perm)
-  scale sf05skew    /root/testdata/sf0.1 5 skew  # skew twin (caesar-only: driver SF src)
-  scale sf05uniform /root/testdata/sf0.1 5       # its equally-sized uniform control
+  scale sf1  /root/testdata/sf0.1 10          # sf1 (caesar, single stage)
+  scale sf10 testdata-gen/sf1 10              # sf10 (auto-perm)
   band sf1band   sf1  10                      # 10% of sf1 — CORRECTNESS_sf1 sampled rows
   band sf10band1 sf10 100 100 1 66            # 1% of sf10, residue 66 — CORRECTNESS_sf10
-  band sf10band40 sf10 100 10 4               # 40% of sf10 — banded SCALING + mem lanes
 fi
 
 # ---------- correctness: the five-regime matrix (round-14 discipline) ----------
@@ -126,84 +121,14 @@ if have bands; then
     /tmp/regen_sf10b_default /tmp/regen_sf10b_forced CORRECTNESS_sf10.json 1800 $SF10_KEYS
 fi
 
-# ---------- scaling: full ScaleCheck (all lanes), then red-row check ----------
+# ---------- scaling: ScaleCheck's shuffle-byte growth -> SCALING.json ----------
+# One run per key and dir, default lane then forced lane; exits 1 on a row
+# over its bound (SCALING.json is written first).
 if have scaling; then
-  log "scaling: FULL ScaleCheck (all lanes, ~80 min)"
-  env SPARK_GRAFT_CPUS=16 \
-      SPARK_GRAFT_SCALE_BIG2=testdata-gen/sf1 \
-      SPARK_GRAFT_SCALE_BIG3=testdata-gen/sf5 \
-      SPARK_GRAFT_SCALE_BAND3=testdata-gen/sf10band40 \
-      SPARK_GRAFT_SCALE_SKEW=testdata-gen/sf05skew \
-      SPARK_GRAFT_SCALE_SKEW_BASE=testdata-gen/sf05uniform \
-      java -Xmx48g -cp "$CP" graft.ScaleCheck > /tmp/regen_scaling.log 2>&1 \
-    || { tail -30 /tmp/regen_scaling.log; exit 1; }
-  # end-of-run JVM inflation protocol (baseline_notes rounds 9/17/19): any
-  # over-bound row gets ONE isolated fresh-JVM re-measure of its lane —
-  # WITH a passing control key (round-20 advice) — folded via
-  # merge_scaling.py. Automated for the known-susceptible banded lane;
-  # other red rows fail here for a human look.
-  if python3 - <<'EOF'
-import json, sys
-s = json.load(open("SCALING.json"))
-red = [(l, k) for l, rows in s.items() if isinstance(rows, dict)
-       for k, r in rows.items() if isinstance(r, dict) and r.get("ok") is False]
-banded = [k for l, k in red if l == "third_decade_banded"]
-other = [(l, k) for l, k in red if l != "third_decade_banded"]
-if other:
-    print(f"[regen] RED scaling rows (non-banded): {other}"); sys.exit(2)
-sys.exit(1 if banded else 0)
-EOF
-  then log "scaling: all rows green"
-  else
-    rc=$?
-    [[ $rc -eq 2 ]] && exit 1
-    log "scaling: banded row(s) flagged — isolated fresh-JVM re-measure (+ control)"
-    mv SCALING.json /tmp/regen_scaling_full.json
-    env SPARK_GRAFT_CPUS=16 \
-        SPARK_GRAFT_SCALE_KEYS=embed_neardup,semantic_dedup,dedup_minhash \
-        SPARK_GRAFT_SCALE_BIG2=testdata-gen/sf1 \
-        SPARK_GRAFT_SCALE_BIG3=testdata-gen/sf5 \
-        SPARK_GRAFT_SCALE_BAND3=testdata-gen/sf10band40 \
-        java -Xmx48g -cp "$CP" graft.ScaleCheck > /tmp/regen_scaling_iso.log 2>&1 \
-      || { tail -30 /tmp/regen_scaling_iso.log; exit 1; }
-    mv SCALING.json /tmp/regen_scaling_iso.json
-    mv /tmp/regen_scaling_full.json SCALING.json
-    python3 scripts/merge_scaling.py SCALING.json /tmp/regen_scaling_iso.json \
-      third_decade_banded embed_neardup semantic_dedup dedup_minhash
-    python3 - <<'EOF'
-import json, sys
-s = json.load(open("SCALING.json"))
-red = [(l, k) for l, rows in s.items() if isinstance(rows, dict)
-       for k, r in rows.items() if isinstance(r, dict) and r.get("ok") is False]
-if red: print(f"[regen] STILL RED after isolated fold: {red}"); sys.exit(1)
-EOF
-  fi
-fi
-
-# ---------- memlane: bounded-heap lanes -> SCALING_memory.json ----------
-if have memlane; then
-  log "memlane: sf1 full lane (6g heap)"
-  env SPARK_GRAFT_MEM_DIR=testdata-gen/sf1 java -Xmx6g -cp "$CP" graft.MemLane \
-      > /tmp/regen_mem1.log 2>&1 || { tail -20 /tmp/regen_mem1.log; exit 1; }
-  log "memlane: band40 engaged-escalation lanes (append)"
-  env SPARK_GRAFT_MEM_DIR=testdata-gen/sf10band40 SPARK_GRAFT_MEM_APPEND=1 \
-      SPARK_GRAFT_MEM_KEYS=embed_neardup,semantic_dedup java -Xmx6g -cp "$CP" \
-      graft.MemLane > /tmp/regen_mem2.log 2>&1 || { tail -20 /tmp/regen_mem2.log; exit 1; }
-  env SPARK_GRAFT_MEM_DIR=testdata-gen/sf10band40 SPARK_GRAFT_MEM_APPEND=1 \
-      SPARK_GRAFT_MEM_KEYS=knn_graph_probe,hard_negatives_probe \
-      SPARK_GRAFT_MEM_PARTITIONS=32 java -Xmx6g -cp "$CP" graft.MemLane \
-      > /tmp/regen_mem3.log 2>&1 || { tail -20 /tmp/regen_mem3.log; exit 1; }
-  python3 - <<'EOF'
-import json, sys
-m = json.load(open("SCALING_memory.json"))
-def rows(o):
-    if isinstance(o, dict):
-        if "ok" in o: yield o
-        else:
-            for v in o.values(): yield from rows(v)
-bad = [r for r in rows(m) if r.get("ok") is False]
-if bad: print(f"[regen] RED memory rows: {bad}"); sys.exit(1)
-EOF
+  log "scaling: ScaleCheck sf0.01 -> sf0.1 (local[4])"
+  env SPARK_GRAFT_CPUS=4 java -Xmx8g -cp "$CP" graft.ScaleCheck \
+      /root/testdata/sf0.01 /root/testdata/sf0.1 > /tmp/regen_scaling.log 2>&1 \
+    || { grep "^\[scale\]" /tmp/regen_scaling.log | grep -v "ok=true" | tail -30; exit 1; }
 fi
 
 # ---------- bench: the three boards at the local[32] protocol ----------

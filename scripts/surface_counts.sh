@@ -5,8 +5,9 @@
 #   scripts/surface_counts.sh [repo-dir]     (default: this checkout)
 #
 # Prints
-#   1. main-tree lines: every line of src/main/**/*.scala, and test-tree
-#      lines: every line of src/test/**/*.scala;
+#   1. main-tree lines: every line of src/main/**/*.scala, test-tree
+#      lines: every line of src/test/**/*.scala, and tooling lines: every
+#      line of scripts/*.py and scripts/*.sh;
 #   2. settable options, in three parts: the graft-mq option keys (the key
 #      constants of object GraftOptions), the JVM properties (graft.*) and
 #      environment variables (SPARK_*) read under src/main, and build.sbt's
@@ -27,6 +28,8 @@ lines=$(cat $main_files | wc -l)
 echo "main-tree lines: $lines"
 test_lines=$(find src/test -name '*.scala' -exec cat {} + | wc -l)
 echo "test-tree lines: $test_lines"
+tool_lines=$(cat scripts/*.py scripts/*.sh 2>/dev/null | wc -l)
+echo "tooling lines (scripts/*.py, scripts/*.sh): $tool_lines"
 
 keys=$(grep -cE '^  val [A-Z][A-Za-z]* = "[a-z]+"$' src/main/scala/graft/config/GraftOptions.scala || true)
 props=$(grep -rhoE '"(graft\.[a-z.]+|SPARK_[A-Z0-9_]+)"' src/main --include=*.scala | sort -u | wc -l)

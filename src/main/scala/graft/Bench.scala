@@ -21,6 +21,13 @@ object Bench {
       s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"taskSec":${taskMs / 1e3},""" +
         s""""shufR":$shufR,"shufW":$shufW,"jobSec":${jobMs / 1e3}"""
   }
+  private[graft] object Counts {
+    def sum(cs: Iterable[Counts]): Counts = {
+      val total = new Counts
+      cs.foreach(total.add)
+      total
+    }
+  }
 
   /** The one per-key profiler: the jobs each timed sample starts, their
     * stages' summed executor time (taskSec), tasks and shuffle bytes, and
@@ -44,6 +51,8 @@ object Bench {
     private val stages = mutable.Map[Int, Counts]()
     // running SQL execution -> its long call site
     private val executions = mutable.Map[Long, String]()
+    // the highest job id whose end has been delivered (see settle)
+    private var lastJobEnded = -1
 
     /** `body` as one sample of `key`. */
     def sample[T](sc: SparkContext, key: String)(body: => T): T = {
@@ -53,6 +62,22 @@ object Bench {
       }
       sc.addJobTag(tag)
       try body finally sc.removeJobTag(tag)
+    }
+
+    /** Returns once every job and stage event posted before the call has
+      * reached this listener, so a live session's profile can be read.
+      * Spark delivers a listener's events in order, so the end of a job
+      * started now comes after every earlier one. */
+    def settle(sc: SparkContext): Unit = {
+      val marker = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
+        Seq(0), (_: Int, _: Unit) => (), ())
+      marker.get()
+      val id = marker.jobIds.head
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (synchronized(lastJobEnded < id)) {
+        require(System.nanoTime() < deadline, "the listener bus did not deliver a job end in 60 s")
+        Thread.sleep(10)
+      }
     }
 
     private def of(key: String) = samples.collect { case (`key`, phases) => phases }.toSeq
@@ -71,8 +96,7 @@ object Bench {
     /** `key`'s sidecar object: its totals, then `byPhase`. */
     def json(key: String): String = synchronized {
       val phases = phasesOf(key)
-      val total = new Counts
-      phases.foreach(p => total.add(p._2))
+      val total = Counts.sum(phases.map(_._2))
       val byPhase = phases.map { case (p, c) =>
         "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(p)) + s"\":{${c.json}}"
       }.mkString("{", ",", "}")
@@ -123,6 +147,7 @@ object Bench {
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      lastJobEnded = math.max(lastJobEnded, e.jobId)
       running.remove(e.jobId).foreach { case (phase, t0, stageIds) =>
         phase.jobMs += e.time - t0
         stageIds.foreach(stages.remove)

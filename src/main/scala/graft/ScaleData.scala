@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /**
  * Scale-point synthesizer: writes an sf-N× sibling of an existing testdata
  * dir for the data-bound tables (`documents`, `embeddings`, `events`) so
- * the scaling harness gets a decade of growth ABOVE the largest
- * driver-provided SF — the regime where the corpus genuinely spans many
- * parquet splits and the single-split floor excuse stops applying.
+ * the sf1/sf10 correctness bands and the sf1 side-boards get a decade of
+ * data ABOVE the largest driver-provided SF — the regime where the corpus
+ * genuinely spans many parquet splits and the single-split floor excuse
+ * stops applying.
  *
  * The construction is replication with per-copy isomorphism, NOT naive
  * duplication (which would give every doc `factor-1` exact twins and blow
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
  *    statistics are preserved EXACTLY (each copy is isomorphic to the
  *    source corpus), while cross-copy word shingles are disjoint — so
  *    pair density per row is constant and the corpus is `factor`× the
- *    work, which is exactly what a growth-ratio harness must hold fixed.
+ *    work, which is exactly what a scale point must hold fixed.
  *    `doc_id` remaps to `id*factor + k` (unique, integral); `n_chars` is
  *    length-preserved by construction.
  *  - `embeddings`: copy k rotates the embedding dimensions by k positions —
@@ -143,7 +144,7 @@ object ScaleData {
     * applies to user_id, attributes untouched — so each scaled event
     * matches a customer carrying its source event's attributes and the
     * enriched stream is `factor` relabeled copies of the source result
-    * (the isomorphism the growth harness needs). Customers no event ever
+    * (the isomorphism a scale point needs). Customers no event ever
     * references are dropped rather than replicated: the dim stays
     * events-matched at every copy instead of diluting join selectivity
     * differently at each scale. */
@@ -159,159 +160,18 @@ object ScaleData {
     }.reduce(_ unionByName _)
   }
 
-  // ---- skewed scale variant (round 16, verdict item #7) ----
-
-  /** Fixed boilerplate paragraph for the planted near-dup cluster — long
-    * enough (40+ words) that word shingles, minhash bands, simhash grams
-    * and winnow windows all see a real document. */
-  private[graft] val Boilerplate: String =
-    "this corpus ships a standard legal disclaimer paragraph that every " +
-    "mirrored page repeats verbatim while licensing terms copyright " +
-    "notices cookie banners and navigation chrome pad the body with " +
-    "identical tokens across millions of crawled documents the quick " +
-    "brown fox jumps over the lazy dog and the disclaimer closes with a " +
-    "generated reference number unique to each mirror"
-
-  /** Hot-row predicate shared by both skew synthesizers: a deterministic
-    * `hotPct`% of SOURCE ids — the same source rows are hot in every copy,
-    * so the cluster scales with the factor. */
-  private def hotRow(idCol: org.apache.spark.sql.Column, hotPct: Int) =
-    pmod(xxhash64(idCol), lit(100)) < hotPct
-
-  /** Skewed sibling of [[scaleDocuments]]: the isomorphic copies keep
-    * near-dup density constant and LSH/minhash buckets uniform — real
-    * corpora do not. This plants the two classic hot spots the uniform
-    * decade cannot exercise:
-    *  - a duplicated BOILERPLATE cluster (`hotPct`% of each copy's docs):
-    *    text becomes one fixed paragraph plus a per-doc tail — near-dup
-    *    (~0.9 jaccard), not exact-dup, so the band joins' verify stages
-    *    run for real. Applied BEFORE the caesar shift, so each copy
-    *    carries its own shifted cluster: every band join gets buckets
-    *    holding copySize·hotPct% docs — quadratic pair mass landing in a
-    *    few shuffle partitions, the skew AQE and the band-join shapes are
-    *    trusted to absorb;
-    *  - a hot DOMAIN: the same docs collapse onto source='src0', so any
-    *    domain-grouped stage sees one group carrying the cluster's mass.
-    * `n_chars` is recomputed for the hot rows (caesar preserves length). */
-  def skewDocuments(df: DataFrame, factor: Int, hotPct: Int = 4): DataFrame = {
-    val hot = hotRow(col("doc_id"), hotPct)
-    val hotText = concat(lit(Boilerplate), lit(" mirror reference "),
-      col("doc_id").cast("string"))
-    (0 until factor).map { k =>
-      df.select(df.columns.map {
-        case "doc_id" => remapId(col("doc_id"), factor, k).as("doc_id")
-        case "text" =>
-          caesar(when(hot, hotText).otherwise(col("text")), k).as("text")
-        case "source" =>
-          when(hot, lit("src0")).otherwise(col("source")).as("source")
-        case "n_chars" =>
-          when(hot, length(hotText).cast("long"))
-            .otherwise(col("n_chars")).as("n_chars")
-        case c => col(c)
-      }.toIndexedSeq: _*)
-    }.reduce(_ unionByName _)
-  }
-
-  /** Skewed sibling of [[scaleEmbeddings]]: `hotPct`% of vectors collapse
-    * onto ONE shared direction (deliberately NOT rotated per copy) plus a
-    * per-(source id, copy, dimension) epsilon — cosine ≈ 1 near-dups that
-    * land in the same hyperplane bucket in every LSH table, the hot-bucket
-    * regime. The epsilon mixes the COPY index and the DIMENSION into the
-    * hash (ADVICE r16: a source-id-only epsilon made every copy of a hot
-    * row bit-identical — partly an exact-dup cluster, not the near-dup one
-    * documented), so no two hot vectors collide short of a full 64-bit
-    * hash collision on every dimension, while the perturbation (≤ 1e-2 per
-    * component against a direction of norm ~1.2) keeps all hot pairs at
-    * cosine ≳ 0.998 — far above the 0.95 near-dup threshold the lane
-    * stresses. */
-  def skewEmbeddings(df: DataFrame, factor: Int, hotPct: Int = 5): DataFrame = {
-    val hot = hotRow(col("vec_id"), hotPct)
-    (0 until factor).map { k =>
-      val hotEmb = transform(col("embedding"), (_, i) =>
-        (lit(1.0) / (i.cast("double") + lit(1.0)) +
-          pmod(xxhash64(col("vec_id"), lit(k), i), lit(997)).cast("double") / lit(1e5))
-          .cast("float"))
-      df.select(df.columns.map {
-        case "vec_id" => remapId(col("vec_id"), factor, k).as("vec_id")
-        case "embedding" =>
-          val sh = pmod(lit(k), size(col("embedding")))
-          val rotated = when(sh === 0, col("embedding")).otherwise(concat(
-            slice(col("embedding"), sh + 1, size(col("embedding")) - sh),
-            slice(col("embedding"), lit(1), sh)))
-          when(hot, hotEmb).otherwise(rotated).as("embedding")
-        case c => col(c)
-      }.toIndexedSeq: _*)
-    }.reduce(_ unionByName _)
-  }
-
-  /** Orders scaled into the EVENTS-MATCHED customer key space (round 17,
-    * verdict item #3 — the join-family skew lane needs a fact table whose
-    * keys the scaled `customer` dim actually contains): o_custkey remaps
-    * to (o_custkey mod (maxUser+1)) + off·k, so every order matches
+  /** Orders scaled into the EVENTS-MATCHED customer key space: o_custkey
+    * remaps to (o_custkey mod (maxUser+1)) + off·k, so every order matches
     * exactly one [[scaleCustomer]] row and per-copy join fanout is
-    * constant; o_orderkey offsets past the source max per copy. With
-    * `hotPct` > 0, that share of ALL orders (selected by a hash of the
-    * scaled order key — different rows per copy, so the hot mass is
-    * `factor`× the source share) collapses onto customer key 0: ONE
-    * global hot key holding ~hotPct% of the fact side, the regime
-    * skew_join_salted exists for. Equi-join output stays LINEAR in the
-    * hot mass (each hot order matches one dim row), so unlike the pair
-    * operators the hot share can be realistic-large. */
-  def scaleOrders(orders: DataFrame, events: DataFrame, factor: Int,
-      hotPct: Int = 0): DataFrame = {
+    * constant; o_orderkey offsets past the source max per copy. */
+  def scaleOrders(orders: DataFrame, events: DataFrame, factor: Int): DataFrame = {
     val maxUser = events.agg(max(col("user_id"))).head().getAs[Number](0).longValue
     val off = maxUser + 1L
     val maxOrd = orders.agg(max(col("o_orderkey"))).head().getAs[Number](0).longValue
     (0 until factor).map { k =>
-      val scaledKey = col("o_orderkey") + lit((maxOrd + 1L) * k)
-      val hot = pmod(xxhash64(scaledKey), lit(100)) < hotPct
       orders.select(orders.columns.map {
-        case "o_orderkey" => scaledKey.as("o_orderkey")
-        case "o_custkey" =>
-          when(hot, lit(0L))
-            .otherwise(pmod(col("o_custkey"), lit(off)) + lit(off * k))
-            .as("o_custkey")
-        case c => col(c)
-      }.toIndexedSeq: _*)
-    }.reduce(_ unionByName _)
-  }
-
-  /** Skewed sibling of [[scaleEvents]] (round 17, verdict item #3): ONE
-    * GLOBAL hot user — `hotPml` per mille of ALL events (selected by a
-    * hash of the scaled event id, so different source rows go hot in each
-    * copy and their timestamps stay distinct) collapse onto user_id 0;
-    * every other row scales exactly like [[scaleEvents]]. The share is
-    * PAIR-MASS-BUDGETED, deliberately per mille not percent: the planted
-    * key is real work, and for the pair-emitting operators (range join,
-    * purchase attribution) that work is QUADRATIC in the hot mass — at
-    * 10‰ of a 500k-event corpus the hot user holds ~75× the average key
-    * (5000 events → ~208k extra 6h-window pairs ≈ 0.75× the uniform
-    * twin's whole pair mass, inside the 3× tax bound), while a plan that
-    * funnels the hot key's pair work onto one task blows the bound by
-    * ~an order of magnitude — the detection property the lane needs. A
-    * 20% hot user would be realistic for sessionize/asof (linear per-key
-    * output) but makes the pair operators' OUTPUT itself ~300× — every
-    * engine pays that, so it measures the workload, not the plan. */
-  def skewEvents(df: DataFrame, factor: Int, hotPml: Int = 10): DataFrame = {
-    val idCols = df.columns.filter(c => c == "user_id" || c == "event_id")
-    val offsets =
-      if (idCols.isEmpty) Map.empty[String, Long]
-      else {
-        val row = df.agg(
-          idCols.head -> "max",
-          idCols.tail.map(c => c -> "max").toIndexedSeq: _*).head()
-        idCols.zipWithIndex.map { case (c, i) => c -> (row.getAs[Number](i).longValue + 1L) }.toMap
-      }
-    (0 until factor).map { k =>
-      val hot = pmod(
-        xxhash64(col("event_id") + lit(offsets.getOrElse("event_id", 0L) * k)),
-        lit(1000)) < hotPml
-      df.select(df.columns.map {
-        case "user_id" =>
-          when(hot, lit(0L))
-            .otherwise(col("user_id") + lit(offsets("user_id") * k))
-            .as("user_id")
-        case c if offsets.contains(c) => (col(c) + lit(offsets(c) * k)).as(c)
+        case "o_orderkey" => (col("o_orderkey") + lit((maxOrd + 1L) * k)).as("o_orderkey")
+        case "o_custkey" => (pmod(col("o_custkey"), lit(off)) + lit(off * k)).as("o_custkey")
         case c => col(c)
       }.toIndexedSeq: _*)
     }.reduce(_ unionByName _)
@@ -348,14 +208,8 @@ object ScaleData {
       val n = spark.read.parquet(s"$dst/$name.parquet").count()
       println(s"[scaledata] $name: ${n} rows, $splits splits -> $dst/$name.parquet")
     }
-    // SPARK_GRAFT_SCALE_MODE=skew writes the SKEWED variant — the
-    // dedup/LSH stress set (documents + embeddings, round 16) plus the
-    // join/streaming stress set (hot-user events, hot-custkey orders,
-    // the matching customer dim — round 17), e.g.:
-    //   SPARK_GRAFT_SCALE_MODE=skew SPARK_GRAFT_SCALE_FACTOR=5
-    //   SPARK_GRAFT_SCALE_DST=testdata-gen/sf05skew sbt "runMain graft.ScaleData"
     val events = spark.read.parquet(s"$src/events.parquet")
-    // the join-lane tables exist only in driver SFs (orders) / some scale
+    // the join tables exist only in driver SFs (orders) / some scale
     // dirs (customer) — a source without them (e.g. a previously
     // synthesized decade being re-scaled) skips them instead of failing
     // after the data-bound tables already wrote
@@ -371,7 +225,7 @@ object ScaleData {
     // paths collide onto the same total shift — identical-text cliques
     // with quadratic pair mass, silently. Past that point a caesar request
     // AUTO-SWITCHES to perm (loudly): every decade stays near-dup-free
-    // instead of failing late inside a 45-minute scale lane. sf1 from a
+    // instead of failing late inside a long scale-point run. sf1 from a
     // driver SF (1 × 10 = 10 ≤ 26) keeps caesar — committed sf1 artifacts
     // stay byte-stable.
     val srcCopies = cumulativeCopies(src)
@@ -389,28 +243,12 @@ object ScaleData {
         (if (composed) "(composed stages share total shifts by pigeonhole)"
          else "(exceeds the 26 distinct caesar shifts)") +
         " - auto-switching to the perm cipher (set SPARK_GRAFT_SCALE_CIPHER=perm to silence)")
-    if (sys.env.get("SPARK_GRAFT_SCALE_MODE").contains("skew")) {
-      // the skew synthesizer is caesar-only (its planted cluster must stay
-      // letter-aligned per copy), so past the pigeonhole it REFUSES rather
-      // than silently planting the quadratic cliques on top of the
-      // deliberate hot cluster
-      require(totalCopies <= 26 && !composed,
-        s"skew mode composes caesar only: $srcCopies source x $factor copy paths " +
-          "collide by pigeonhole (composed stages, or >26 total shifts) - " +
-          "synthesize the skew dir from a driver SF instead")
-      write("documents", skewDocuments(spark.read.parquet(s"$src/documents.parquet"), factor))
-      write("embeddings", skewEmbeddings(spark.read.parquet(s"$src/embeddings.parquet"), factor))
-      write("events", skewEvents(events, factor))
-      ifPresent("orders")(o => write("orders", scaleOrders(o, events, factor, hotPct = 20)))
-      ifPresent("customer")(c => write("customer", scaleCustomer(c, events, factor)))
-    } else {
-      write("documents", scaleDocuments(spark.read.parquet(s"$src/documents.parquet"),
-        factor, permCipher, stage = srcCopies))
-      write("embeddings", scaleEmbeddings(spark.read.parquet(s"$src/embeddings.parquet"), factor))
-      write("events", scaleEvents(events, factor))
-      ifPresent("orders")(o => write("orders", scaleOrders(o, events, factor)))
-      ifPresent("customer")(c => write("customer", scaleCustomer(c, events, factor)))
-    }
+    write("documents", scaleDocuments(spark.read.parquet(s"$src/documents.parquet"),
+      factor, permCipher, stage = srcCopies))
+    write("embeddings", scaleEmbeddings(spark.read.parquet(s"$src/embeddings.parquet"), factor))
+    write("events", scaleEvents(events, factor))
+    ifPresent("orders")(o => write("orders", scaleOrders(o, events, factor)))
+    ifPresent("customer")(c => write("customer", scaleCustomer(c, events, factor)))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dst, "_scale_meta.json"),
       s"""{"copies":$totalCopies,"cipher":"${if (permCipher) "perm" else "caesar"}","factor":$factor,"src":"$src"}""")
     spark.stop()

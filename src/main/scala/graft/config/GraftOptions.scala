@@ -7,9 +7,10 @@ package graft.config
  * source/table/RocketMQDynamicTableSourceFactory.java:60-215), with
  * `nameServerAddress` replaced by `rootDir` (the file-backed broker root).
  *
- * `parse` validates: both required keys present, no unknown keys, enum-valued
- * options in range, numeric and boolean values that parse — failures throw
- * IllegalArgumentException naming the key.
+ * `parse` validates: both required keys (topic, rootDir) present, no
+ * unknown keys, enum-valued options in range, numeric and boolean values
+ * that parse — failures throw IllegalArgumentException naming the key.
+ * `consumerGroup` is required by reads alone, when the scan is built.
  * The reference keys no source or sink code would read (encoding,
  * lineDelimiter, lengthCheck, retryTimes, sleepTimeMs, columnErrorDebug,
  * partitionDiscoveryIntervalMs, isDynamicTag) are not taken: queue bodies
@@ -19,7 +20,7 @@ package graft.config
  */
 final case class GraftOptions(
     topic: String,
-    consumerGroup: String,
+    consumerGroup: String, // "" when absent: only a read needs one
     rootDir: String,
     tag: String = GraftOptions.DefaultTag,
     startMessageOffset: Long = -1L,
@@ -80,11 +81,15 @@ object GraftOptions {
   val MaxRowsPerTrigger = "maxrowspertrigger"
   val ContinuousPollMs = "continuouspollms"
 
-  val RequiredKeys: Set[String] = Set(Topic, ConsumerGroup, RootDir)
+  /** Required on every read and write. A read also needs [[ConsumerGroup]]
+    * (see [[graft.source.MessageQueueTable.newScanBuilder]]); a write never
+    * reads it. */
+  val RequiredKeys: Set[String] = Set(Topic, RootDir)
   val OptionalKeys: Set[String] = Set(
-    Tag, StartMessageOffset, StartTimeMs, EndTimeMs, FieldDelimiter, OffsetResetTo,
-    DynamicTagColumn, DynamicTagColumnWriteIncluded, KeyColumns, WriteKeysToBody,
-    PropertyFilter, NumQueues, MsgDelayLevel, MaxRowsPerTrigger, ContinuousPollMs)
+    ConsumerGroup, Tag, StartMessageOffset, StartTimeMs, EndTimeMs, FieldDelimiter,
+    OffsetResetTo, DynamicTagColumn, DynamicTagColumnWriteIncluded, KeyColumns,
+    WriteKeysToBody, PropertyFilter, NumQueues, MsgDelayLevel, MaxRowsPerTrigger,
+    ContinuousPollMs)
 
   /** Keys the connector no longer takes, with what does their job now. */
   private val Replaced: Map[String, String] = Map(
@@ -142,7 +147,8 @@ object GraftOptions {
     val missing = RequiredKeys.filterNot(opts.contains)
     if (missing.nonEmpty)
       throw new IllegalArgumentException(
-        s"missing required options: ${missing.toSeq.sorted.mkString(", ")}")
+        s"missing required options: ${missing.toSeq.sorted.mkString(", ")}" +
+          (if (opts.contains(ConsumerGroup)) "" else s" (and $ConsumerGroup, to read)"))
     val unknown = opts.keySet -- RequiredKeys -- OptionalKeys
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
@@ -180,7 +186,7 @@ object GraftOptions {
 
     GraftOptions(
       topic = opts(Topic),
-      consumerGroup = opts(ConsumerGroup),
+      consumerGroup = opts.getOrElse(ConsumerGroup, ""),
       rootDir = opts(RootDir),
       tag = opts.getOrElse(Tag, DefaultTag),
       startMessageOffset = long(StartMessageOffset, -1L),

@@ -33,8 +33,7 @@ object SimpleProducer {
         Map("user" -> users(i % users.length), "item" -> items(i % items.length)))
     }.toDF("body", "msg_key", "tag", "properties")
       .write.format("graft-mq").mode("append")
-      .option("topic", topic).option("consumerGroup", "GID_SIMPLE_PRODUCER")
-      .option("rootDir", root).option("numQueues", "4")
+      .option("topic", topic).option("rootDir", root).option("numQueues", "4")
       .save()
 
     println(s"produced $n messages to $topic under $root")

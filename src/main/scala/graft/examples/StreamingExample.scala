@@ -39,8 +39,7 @@ object StreamingExample {
       .select(upper(col("body")).as("body"), col("msg_key"), col("tag"),
         col("born_ts"))
       .writeStream.format("graft-mq")
-      .option("topic", dst).option("consumerGroup", "GID_STREAMING_EXAMPLE")
-      .option("rootDir", root).option("numQueues", "4")
+      .option("topic", dst).option("rootDir", root).option("numQueues", "4")
       .option("checkpointLocation", s"$root/_checkpoints/streaming-example")
       .trigger(Trigger.AvailableNow()) // drain the backlog, then stop
       .start()

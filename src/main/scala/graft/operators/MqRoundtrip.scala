@@ -84,12 +84,11 @@ object MqRoundtrip {
 
   /** Appends `df` to `topic` under `root` through the `graft-mq` DSv2
     * writer, `numQueues` queues clustered on the key columns; `options`
-    * are the body-shaping ones (fieldDelimiter, keyColumns, …). A write
-    * reads no consumer group, but the option is required. */
+    * are the body-shaping ones (fieldDelimiter, keyColumns, …). */
   private def appendTopic(df: DataFrame, root: String, topic: String, numQueues: Int,
       options: (String, String)*): Unit =
     df.write.format("graft-mq").mode("append").options(options.toMap)
-      .option("topic", topic).option("consumerGroup", "producer").option("rootDir", root)
+      .option("topic", topic).option("rootDir", root)
       .option("numQueues", numQueues.toString).save()
 
   /** The firehose topics' body shape: the `key` column as the message key

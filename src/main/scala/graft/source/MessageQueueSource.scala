@@ -96,8 +96,14 @@ class MessageQueueTable(val opts: GraftOptions) extends Table
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.ACCEPT_ANY_SCHEMA)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  /** Every read, batch or stream, is a consumer group's: a stream commits
+    * its offsets under the group ([[OffsetStore.tryCommit]]). */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    if (opts.consumerGroup.isEmpty)
+      throw new IllegalArgumentException(
+        s"missing required options: ${GraftOptions.ConsumerGroup} (a graft-mq read needs one)")
     new MessageQueueScanBuilder(opts)
+  }
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =

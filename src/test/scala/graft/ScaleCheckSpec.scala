@@ -1,15 +1,27 @@
 package graft
 
 /**
- * Pins the [[ScaleCheck]] harness contract on a light subset (the committed
- * SCALING.json carries the full ten-entry sf0.01→sf0.1 run). The SF pair
- * must be sf0.01→sf0.1 because that is where the documents table actually
- * steps 10x (500 rows at BOTH sf0.001 and sf0.01 — the harness rejects a
- * flat step as vacuous, which this suite also pins). The subset spans the
- * two pair-generation families most at risk of a quadratic stage at the
- * cheapest wall cost: banded MinHash LSH and SimHash banding.
+ * Pins the [[ScaleCheck]] count check on a light subset (the committed
+ * SCALING.json carries the full sf0.01→sf0.1 run). The SF pair must be
+ * sf0.01→sf0.1 because that is where the documents table actually steps
+ * 10x (500 rows at BOTH sf0.001 and sf0.01 — the check rejects a flat step
+ * as vacuous, which this suite also pins). The subset spans the two
+ * pair-generation families most at risk of a quadratic stage: banded
+ * MinHash LSH and SimHash banding.
  */
 class ScaleCheckSpec extends SparkSpec {
+
+  /** `body` with the eager recall gates off, as [[ScaleCheck.main]] runs:
+    * the counts are the operators' jobs alone. */
+  private def ungated[T](body: => T): T = {
+    val prev = sys.props.get("graft.bench")
+    sys.props("graft.bench") = "1"
+    try body
+    finally prev match {
+      case Some(v) => sys.props("graft.bench") = v
+      case None => sys.props.remove("graft.bench")
+    }
+  }
 
   test("a flat data step is a harness-usage error, not a vacuous pass") {
     val e = intercept[IllegalArgumentException] {
@@ -20,25 +32,26 @@ class ScaleCheckSpec extends SparkSpec {
   }
 
   test("data-bound entries grow at most SlackFactor x the data ratio across SFs") {
-    val prev = sys.props.get("graft.bench")
-    sys.props("graft.bench") = "1" // time operators, not the eager gates
-    try {
-      val results = ScaleCheck.check(
-        spark, Seq("dedup_minhash" -> "documents", "dedup_simhash" -> "documents"),
-        small = "/root/testdata/sf0.01", big = "/root/testdata/sf0.1")
-      results.foreach { r =>
-        info(f"${r.key}: ${r.tSmall}%.2fs -> ${r.tBig}%.2fs " +
-          f"(${r.ratio}%.2fx, bound ${r.bound}%.2fx)")
-        assert(r.ok,
-          f"${r.key} grew ${r.ratio}%.1fx across the data step (bound ${r.bound}%.1fx) " +
-            "— a super-linear stage crept in")
-      }
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.bench") = v
-        case None => sys.props.remove("graft.bench")
-      }
+    val results = ungated(ScaleCheck.check(
+      spark, Seq("dedup_minhash" -> "documents", "dedup_simhash" -> "documents"),
+      small = "/root/testdata/sf0.01", big = "/root/testdata/sf0.1"))
+    results.foreach { r =>
+      info(f"${r.key}: shuffle ${r.small.shufW} -> ${r.big.shufW} bytes " +
+        f"(${r.ratio}%.2fx, bound ${r.bound}%.2fx)")
+      assert(r.ok,
+        f"${r.key}'s shuffle grew ${r.ratio}%.1fx across the data step (bound " +
+          f"${r.bound}%.1fx), most in ${r.growth._1} — a super-linear stage crept in")
     }
+  }
+
+  test("the same key run twice at one SF writes identical shuffle bytes") {
+    // the count check rests on this: a ratio of two counts that repeat
+    // exactly needs no repeated samples and no noise allowance
+    def shufW() = ungated(ScaleCheck.phases(spark, "dedup_simhash", "/root/testdata/sf0.01"))
+      .map { case (phase, c) => phase -> c.shufW }
+    val first = shufW()
+    assert(first.map(_._2).sum > 0)
+    assert(shufW() === first)
   }
 
   test("the forced-distributed lane re-checks registered data-bound keys only") {
@@ -77,7 +90,7 @@ class ScaleCheckSpec extends SparkSpec {
         s"$k is a flip key but not a documents-input growth-lane entry")
     }
     // both correctness SFs sit far under the 256 MB ceiling: no flip, so
-    // the default lanes keep timing the default plans there
+    // the check accepts the sf0.01 -> sf0.1 step in the default lane
     assert(ScaleCheck.probeIndexEligible(spark, "/root/testdata/sf0.01"))
     assert(ScaleCheck.probeIndexEligible(spark, "/root/testdata/sf0.1"))
   }

@@ -115,69 +115,7 @@ class ScaleDataSpec extends SparkSpec {
       .filter(col("c_name") =!= "alice").count() === 0)
   }
 
-  test("skew variant: hot boilerplate cluster, hot domain, collapsed hot vectors") {
-    val docs = (0L until 50L).map(i => (i, s"unique body number $i with words", "en",
-      s"src${i % 20}", 30L)).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val sd = ScaleData.skewDocuments(docs, factor, hotPct = 20)
-    assert(sd.count() === 50L * factor)
-    // hot docs exist, carry the hot domain, and n_chars matches the text
-    val hot = sd.filter(col("source") === "src0" and col("text").contains("mirror"))
-    assert(hot.count() > 0)
-    // hot rows get their n_chars recomputed (caesar preserves length); cold
-    // rows pass the SOURCE value through untouched (here a synthetic 30)
-    assert(hot.filter(col("n_chars") =!= length(col("text"))).count() === 0)
-    // within a copy, hot docs are near-dups of each other (shared boilerplate)
-    val pairs = graft.operators.Dedup.ngramJaccard(
-      sd.select(col("doc_id"), col("text")), threshold = 0.5)
-    assert(pairs.count() > 0, "the planted cluster must produce near-dup pairs")
-    val emb = (0L until 40L).map(i =>
-      (i, Array.tabulate(8)(d => (math.sin(i + d) * 3).toFloat))).toDF("vec_id", "embedding")
-    val se = ScaleData.skewEmbeddings(emb, factor, hotPct = 20)
-    assert(se.count() === 40L * factor)
-    // hot vectors collapse onto one direction: pairwise cosine ~ 1 even
-    // ACROSS copies (the hot direction is deliberately not rotated).
-    // Select them by replaying the synthesizer's source-id predicate.
-    val srcId = (col("vec_id") / factor).cast("long")
-    val hotVecs = se.select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("emb"))
-      .filter(pmod(xxhash64(srcId), lit(100)) < 20)
-    val n = hotVecs.count()
-    assert(n > 2)
-    val sims = hotVecs.alias("a").crossJoin(hotVecs.alias("b"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(graft.operators.Similarity.cosine(col("a.emb"), col("b.emb")).as("s"))
-      .agg(min("s")).head().getDouble(0)
-    assert(sims > 0.999, s"hot vectors must be near-identical in direction, min cosine $sims")
-    // near-dup, NOT exact-dup: the epsilon mixes (source id, copy, dim), so
-    // no two hot vectors — across copies included — are bit-identical
-    assert(hotVecs.select("emb").distinct().count() === n)
-  }
-
-  test("skewEvents: one global hot user at the budgeted share; cold rows " +
-      "scale exactly like scaleEvents") {
-    val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val events = (0L until 400L).map(i =>
-      (i, i % 40L, new java.sql.Timestamp(ts0.getTime + i * 60000L), "view", 1.0))
-      .toDF("event_id", "user_id", "ts", "event_type", "value")
-    val se = ScaleData.skewEvents(events, factor, hotPml = 100) // 10% for the pin
-    assert(se.count() === 400L * factor)
-    assert(se.select("event_id").distinct().count() === 400L * factor)
-    // the hot user exists and holds roughly the planted share (hash noise
-    // bounded: 10% +- 5 points on 1200 rows)
-    val hotN = se.filter(col("user_id") === 0L).count().toDouble
-    assert(hotN / (400 * factor) > 0.05 && hotN / (400 * factor) < 0.15,
-      s"hot share ${hotN / (400 * factor)} out of band")
-    // cold rows carry the same per-copy offsets as scaleEvents — compare
-    // against the uniform twin on the non-hot event ids
-    val uni = ScaleData.scaleEvents(events, factor)
-      .select(col("event_id"), col("user_id").as("u_uni"))
-    val joined = se.filter(col("user_id") =!= 0L)
-      .select(col("event_id"), col("user_id")).join(uni, "event_id")
-    assert(joined.filter(col("user_id") =!= col("u_uni")).count() === 0)
-  }
-
-  test("scaleOrders: every scaled order matches exactly one scaled " +
-      "customer; the hot key holds the planted share") {
+  test("scaleOrders: every scaled order matches exactly one scaled customer") {
     val orders = (0L until 300L).map(i => (i, i % 90L, i * 10.0))
       .toDF("o_orderkey", "o_custkey", "o_totalprice")
     val events = Seq((100L, 0L), (101L, 29L)).toDF("event_id", "user_id") // maxUser 29
@@ -190,13 +128,6 @@ class ScaleDataSpec extends SparkSpec {
     assert(uniform.join(sc, col("o_custkey") === col("c_custkey")).count()
       === 300L * factor)
     assert(uniform.filter(col("o_custkey") === 0L).count() < 300L * factor / 10)
-    // the skewed twin: same size, hot custkey 0 holds ~20%
-    val skewed = ScaleData.scaleOrders(orders, events, factor, hotPct = 20)
-    assert(skewed.count() === 300L * factor)
-    assert(skewed.join(sc, col("o_custkey") === col("c_custkey")).count()
-      === 300L * factor)
-    val hotShare = skewed.filter(col("o_custkey") === 0L).count().toDouble / (300 * factor)
-    assert(hotShare > 0.12 && hotShare < 0.30, s"hot share $hotShare out of band")
   }
 
   test("documents: perm cipher keeps composed copy paths distinct where " +

@@ -18,11 +18,11 @@ class MessageQueueSinkSpec extends SparkSpec {
   }
 
   /** Appends `in` to topic "out" of a fresh root through the DSv2 writer;
-    * `options` come after topic, consumerGroup and rootDir. */
+    * `options` come after topic and rootDir. */
   private def viaDsv2(in: DataFrame, options: (String, String)*): String = {
     val root = freshRoot()
     in.write.format("graft-mq").mode("append")
-      .option("topic", "out").option("consumerGroup", "g").option("rootDir", root)
+      .option("topic", "out").option("rootDir", root)
       .options(options.toMap).save()
     root
   }
@@ -60,6 +60,18 @@ class MessageQueueSinkSpec extends SparkSpec {
     val got = back.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val want = sampleDf(50).collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     assert(got === want)
+  }
+
+  test("a write needs no consumerGroup; a read of what it wrote does") {
+    val root = freshRoot()
+    sampleDf(6).write.format("graft-mq").mode("append")
+      .option("topic", "out").option("rootDir", root).save()
+    assert(messages(root).size === 6)
+    def read(options: (String, String)*) = spark.read.format("graft-mq")
+      .option("topic", "out").option("rootDir", root).options(options.toMap).load()
+    val e = intercept[IllegalArgumentException](read().count())
+    assert(e.getMessage.contains("consumergroup"))
+    assert(read("consumerGroup" -> "g").count() === 6)
   }
 
   test("dynamic tag column sets tag and can be excluded from body") {
