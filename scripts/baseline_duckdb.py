@@ -81,9 +81,9 @@ lines = [
     "",
     "Every query key has a SQL oracle (the formerly rows-only approximate",
     "entries got exact lossy-pipeline replays in round 10), so every key has",
-    "a row here. The approximate entries ALSO carry eager in-query",
-    "recall/agreement gates; their DuckDB replays brute-force the same",
-    "candidate generation Spark prunes, so several are slower as oracles",
+    "a row here. The approximate entries' recall/agreement floors are",
+    "held in the test tree (`RecallFloorsSpec`); their DuckDB replays",
+    "brute-force the same candidate generation Spark prunes, so several are slower as oracles",
     "than as operators — that asymmetry is the point of the LSH/IVF paths.",
     "",
     "| query | duckdb_sec | spark_sec | spark/duckdb |",

@@ -97,22 +97,20 @@ if have bands; then
     /tmp/regen_sf1_default /tmp/regen_sf1_forced CORRECTNESS_sf1.json
   log "bands: sf1band sampled rows"
   rm -rf /tmp/regen_sf1b_default /tmp/regen_sf1b_forced
-  env SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_VERIFY_NO_GATES=1 java -cp "$CP" \
+  env SPARK_GRAFT_CPUS="$CPUS" java -cp "$CP" \
       graft.Verify testdata-gen/sf1band /tmp/regen_sf1b_default > /tmp/regen_sf1b_d.log 2>&1 \
     || { tail -20 /tmp/regen_sf1b_d.log; exit 1; }
-  env SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_VERIFY_NO_GATES=1 \
-      SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED=1 java -cp "$CP" \
+  env SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED=1 java -cp "$CP" \
       graft.Verify testdata-gen/sf1band /tmp/regen_sf1b_forced > /tmp/regen_sf1b_f.log 2>&1 \
     || { tail -20 /tmp/regen_sf1b_f.log; exit 1; }
   python3 scripts/sf1_correctness.py --sampled testdata-gen/sf1band \
     /tmp/regen_sf1b_default /tmp/regen_sf1b_forced CORRECTNESS_sf1.json
   log "bands: sf10band1 -> CORRECTNESS_sf10.json ($SF10_KEYS)"
   rm -rf /tmp/regen_sf10b_default /tmp/regen_sf10b_forced
-  env SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_VERIFY_NO_GATES=1 \
-      SPARK_GRAFT_VERIFY_ONLY="${SF10_KEYS// /,}" java -cp "$CP" \
+  env SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_VERIFY_ONLY="${SF10_KEYS// /,}" java -cp "$CP" \
       graft.Verify testdata-gen/sf10band1 /tmp/regen_sf10b_default > /tmp/regen_sf10b_d.log 2>&1 \
     || { tail -20 /tmp/regen_sf10b_d.log; exit 1; }
-  env SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_VERIFY_NO_GATES=1 \
+  env SPARK_GRAFT_CPUS="$CPUS" \
       SPARK_GRAFT_VERIFY_ONLY="${SF10_KEYS// /,}" SPARK_GRAFT_VERIFY_FORCE_DISTRIBUTED=1 \
       java -cp "$CP" graft.Verify testdata-gen/sf10band1 /tmp/regen_sf10b_forced \
       > /tmp/regen_sf10b_f.log 2>&1 \

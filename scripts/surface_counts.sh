@@ -10,8 +10,8 @@
 #      line of scripts/*.py and scripts/*.sh;
 #   2. settable options, in three parts: the graft-mq option keys (the key
 #      constants of object GraftOptions), the JVM properties (graft.*) and
-#      environment variables (SPARK_*) read under src/main, and build.sbt's
-#      SPARK_DRIVER_MEM;
+#      environment variables (SPARK_*) read under src/main, each listed by
+#      name, and build.sbt's SPARK_DRIVER_MEM;
 #   3. unreferenced top-level names: each top-level class, object or trait
 #      under src/main whose name no OTHER file under src/main (sources and
 #      resources) or graftbench/src mentions. A name here is reached only by
@@ -32,10 +32,14 @@ tool_lines=$(cat scripts/*.py scripts/*.sh 2>/dev/null | wc -l)
 echo "tooling lines (scripts/*.py, scripts/*.sh): $tool_lines"
 
 keys=$(grep -cE '^  val [A-Z][A-Za-z]* = "[a-z]+"$' src/main/scala/graft/config/GraftOptions.scala || true)
-props=$(grep -rhoE '"(graft\.[a-z.]+|SPARK_[A-Z0-9_]+)"' src/main --include=*.scala | sort -u | wc -l)
+prop_names=$(grep -rhoE '"(graft\.[a-z.]+|SPARK_[A-Z0-9_]+)"' src/main --include=*.scala \
+  | tr -d '"' | sort -u)
+props=$(printf '%s\n' "$prop_names" | grep -c . || true)
 mem=$(grep -c 'sys.env.getOrElse("SPARK_DRIVER_MEM"' build.sbt || true)
 echo "settable options: $((keys + props + mem))" \
   "(graft-mq keys $keys, JVM properties and environment variables $props, build.sbt $mem)"
+echo "  JVM properties and environment variables read under src/main:"
+printf '%s\n' "$prop_names" | sed '/^$/d; s/^/    /'
 
 # code lines (comment lines dropped) of the search roots that name $1 as a word
 code_uses() {

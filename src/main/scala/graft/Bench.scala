@@ -171,13 +171,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    // timings measure the operators, not the correctness harness — the
-    // approximate entries skip their eager recall-assertion jobs under bench
-    sys.props("graft.bench") = "1"
     val forceDistributed = graft.util.FastPaths.forceDistributed
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -237,10 +237,10 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val Array(small, big) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    sys.props("graft.bench") = "1" // count the operators' jobs, not the eager gates'
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -160,8 +160,8 @@ object SparkEntry {
     "split_leakage" -> (CorpusPipeline.splitLeakageQuery _),
     "corpus_stats" -> (CorpusPipeline.corpusStatsQuery _),
     "snapshot_diff" -> (CorpusPipeline.snapshotDiffQuery _),
-    // quantized-path ANN: oracle-exact on the bit-exact int8 grid, plus
-    // the eager recall gate vs full precision
+    // quantized-path ANN: oracle-exact on the bit-exact int8 grid; its
+    // recall vs full precision is held in RecallFloorsSpec
     "ann_quantized" -> (Similarity.annQuantized _),
     // all-vectors 5-NN graph, exhaustive through the IVF cells (EXACT)
     "knn_graph" -> (Similarity.knnGraphQuery _),
@@ -170,11 +170,12 @@ object SparkEntry {
     "q32_anomaly" -> (Relational.q32Anomaly _),
     "embedding_outliers" -> (Similarity.embeddingOutliers _),
     "hard_negatives" -> (Similarity.hardNegativesQuery _),
-    // pruned-nprobe graph, eager edge-recall gate vs the exact graph
+    // pruned-nprobe graph; RecallFloorsSpec holds its edge recall vs the
+    // exhaustive graph
     "knn_graph_probe" -> (Similarity.knnGraphProbe _),
     // pruned hard-negative miner — the scalable sibling of hard_negatives
-    // (adaptive K, √-law nprobe, recall-gated), same relationship as
-    // knn_graph_probe to knn_graph
+    // (adaptive K, √-law nprobe, recall floor in RecallFloorsSpec), same
+    // relationship as knn_graph_probe to knn_graph
     "hard_negatives_probe" -> (Similarity.hardNegativesProbe _),
     // oracle-checked near-dup family: LSH proposes, exact math decides, so
     // DuckDB reproduces the full answer (banding recall at the planted
@@ -214,8 +215,9 @@ object SparkEntry {
     // approximate operators, each BOTH oracle-exact (the full approximate
     // pipeline — LCG hyperplanes / knuth-hash quantizer / FNV+splitmix
     // SimHash — is replicated in exact integer/IEEE arithmetic on the
-    // DuckDB side) AND recall/agreement-gated against its exact baseline,
-    // so the oracle pins the machinery while the gate pins the semantics.
+    // DuckDB side); RecallFloorsSpec holds each one's recall or agreement
+    // against its exact baseline, so the oracle pins the machinery while
+    // the floor pins the semantics.
     "dedup_simhash" -> (Dedup.dedupSimhash _),
     "ann_lsh" -> (Similarity.annLsh _),
     "ann_ivf_probe" -> (Similarity.annIvfProbe _),
@@ -230,10 +232,10 @@ object SparkEntry {
     "ann_ivfpq_indexed" -> (Similarity.annIvfPqIndexed _),
     "embed_neardup" -> (Similarity.embedNearDup _),
     // DEFAULT semantic dedup = the scale path: LSH pair stage + pointer-
-    // jumping clustering, oracle-exact via the hyperplane-LCG replay AND
-    // gated on measured keep-decision agreement vs semantic_dedup_exact
-    // (pairs are verified, so the approx graph is a subset — errors only
-    // ever keep extra docs, never drop extras)
+    // jumping clustering, oracle-exact via the hyperplane-LCG replay;
+    // RecallFloorsSpec holds its keep-decision agreement vs
+    // semantic_dedup_exact (pairs are verified, so the approx graph is a
+    // subset — errors only ever keep extra docs, never drop extras)
     "semantic_dedup" -> (Similarity.semanticDedupQuery _),
   )
 

@@ -17,17 +17,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     if (graft.util.FastPaths.forceDistributed)
       println("[verify] forced-distributed: every size-adaptive fast path ineligible")
-    // SPARK_GRAFT_VERIFY_NO_GATES=1: skip the eager APPROXIMATION-QUALITY
-    // gates (recall / keep-agreement floors, calibrated at the correctness
-    // SFs) while keeping the oracle dump itself — used to hash-verify the
-    // approximate entries on synthesized scale decades, where the
-    // occupancy-constant adaptive banding trades recall for linear cost by
-    // design (the oracle replays the SAME approximation, so the compare is
-    // still exact). Never set by the driver: its gate keeps the floors.
-    if (sys.env.get("SPARK_GRAFT_VERIFY_NO_GATES").contains("1")) {
-      sys.props("graft.bench") = "1"
-      println("[verify] eager approximation-quality gates skipped (oracle compare unaffected)")
-    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -226,7 +226,7 @@ object Dedup {
    * asserts the growth rate). Recall of the Hamming ball is probabilistic
    * rather than guaranteed — a pair at distance h survives a given band
    * with p ≈ (1-32/128)^h, and rotations multiply the chances — so the
-   * query entry carries an eager measured-recall gate instead.
+   * query entry's recall floor lives in `RecallFloorsSpec` instead.
    */
   /** Banded 128-bit hashes `(id, sh0, sh1, band_key)` — the candidate-join
     * input of [[simHashNearDups128]], exposed so the suite can measure
@@ -271,35 +271,22 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Query entry (rows-only + recall assertion): SimHash bits are
-    * engine-specific so the pair set has no SQL oracle; instead the entry
-    * eagerly measures recall against the exact char-4-gram Jaccard>=0.9
-    * ground truth and throws below the floor. The entry runs the 128-bit
-    * char-4-gram kernel at Hamming<=14 with 2x4 32-bit bands: gram features
-    * put near-dups at Hamming<=14 and unrelated docs at 33-54 (unigram
-    * tokens over this corpus's ~30-word vocabulary collapse — every doc
-    * holds nearly the whole vocab, so token-voted hashes are near-equal
-    * corpus-wide and ANY banding goes all-pairs), and 32-bit keys make the
-    * candidate join ~linear (the round-5 64-bit/8-bit-band pigeonhole was
-    * O(n²/256); 16-bit keys still admit ~3% of all pairs). Measured recall
-    * 0.893 at sf0.001; floor 0.75 on measured end-to-end recall. */
-  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val simPairs = simHashNearDups128(docs, maxHamming = 14, rotations = 3)
-    if (Tables.eagerAssertionsEnabled) {
-      val truth = ngramJaccard(docs, threshold = 0.9, numBands = 16)
-        .select("doc_a", "doc_b").cache()
-      val total = truth.count()
-      val caught = truth.join(simPairs.select("doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left_semi").count()
-      truth.unpersist()
-      val recall = if (total == 0) 1.0 else caught.toDouble / total
-      System.err.println(f"[graft] dedup_simhash measured recall $recall%.3f ($caught/$total)")
-      require(recall >= 0.75,
-        f"dedup_simhash recall $recall%.3f below floor 0.75 ($caught/$total)")
-    }
-    simPairs.orderBy(col("doc_a"), col("doc_b"))
-  }
+  /** Query entry (oracle-exact): the 128-bit char-4-gram SimHash kernel at
+    * Hamming<=14 with 2x4 32-bit bands. The oracle replays the whole
+    * pipeline (gram hashes, 128-bit vote, band keys, Hamming filter), so
+    * the pair set is hash-exact; `RecallFloorsSpec` holds its recall
+    * against the exact char-4-gram Jaccard>=0.9 pairs ([[ngramJaccard]])
+    * at 0.75 (measured 0.750 / 0.840 / 0.812 at sf0.001 / sf0.01 /
+    * sf0.1). Gram features put near-dups at
+    * Hamming<=14 and unrelated docs at 33-54 (unigram tokens over this
+    * corpus's ~30-word vocabulary collapse — every doc holds nearly the
+    * whole vocab, so token-voted hashes are near-equal corpus-wide and ANY
+    * banding goes all-pairs), and 32-bit keys make the candidate join
+    * ~linear (the round-5 64-bit/8-bit-band pigeonhole was O(n²/256);
+    * 16-bit keys still admit ~3% of all pairs). */
+  def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
+    simHashNearDups128(Tables.documents(spark, dir), maxHamming = 14, rotations = 3)
+      .orderBy(col("doc_a"), col("doc_b"))
 
   // ---- exact n-gram Jaccard ----
 

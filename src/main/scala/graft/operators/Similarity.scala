@@ -34,7 +34,7 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
 
-  private[operators] def asDouble(emb: Column): Column = transform(emb, _.cast("double"))
+  private[graft] def asDouble(emb: Column): Column = transform(emb, _.cast("double"))
 
   /**
    * Exact top-k cosine neighbors for each probe vector.
@@ -272,42 +272,19 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"))
   }
 
-  /** Query entry (rows-only): LSH top-10 for the first 5 vectors. The test
+  /** Query entry (oracle-exact): LSH top-10 for the first 5 vectors. The test
     * embeddings have weak neighbors (cosine ≈ 0.25-0.4, i.e. angles near
     * 70°), so recall needs few bits and many tables; with strong near-dup
     * similarity (0.9+) the right trade is the reverse — more bits, fewer
-    * tables, smaller buckets. */
+    * tables, smaller buckets. `RecallFloorsSpec` holds its recall against
+    * [[bruteForceTopK]] at 0.7 (measured 0.94 at sf0.01, 0.82 at sf0.1). */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val approx = lshTopK(emb, probes, 10, numTables = 16, bitsPerTable = 4)
-    // measured 0.94 (sf0.01) / 0.82 (sf0.1) on Gaussian weak neighbors
-    assertRecall(approx, bruteForceTopK(emb, probes, 10), minRecall = 0.7, what = "ann_lsh")
-    approx.orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
-  }
-
-  /**
-   * Correctness-harness recall gate: `approx` must recover at least
-   * `minRecall` of the exact result's (query_id, neighbor_id) pairs, else
-   * the query throws — an eager in-query assertion (one extra job) so the
-   * driver's rows-only check cannot silently pass on drifted recall. The
-   * floors are set against the measured recall of the synthetic test
-   * embeddings (Gaussian, no planted near-dups — top-10 "neighbors" sit at
-   * cosine 0.25-0.5, the hardest regime for LSH/IVF pruning).
-   */
-  private def assertRecall(
-      approx: DataFrame, exact: DataFrame, minRecall: Double, what: String): Unit = {
-    if (!Tables.eagerAssertionsEnabled) return
-    val a = approx.select("query_id", "neighbor_id")
-    val e = exact.select("query_id", "neighbor_id").cache()
-    val total = e.count()
-    val caught = e.join(a, Seq("query_id", "neighbor_id"), "left_semi").count()
-    e.unpersist()
-    val recall = if (total == 0) 1.0 else caught.toDouble / total
-    require(recall >= minRecall,
-      f"$what recall $recall%.3f below floor $minRecall%.2f ($caught/$total)")
+    lshTopK(emb, probes, 10, numTables = 16, bitsPerTable = 4)
+      .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
   }
 
   // ---- IVF (inverted file) ----
@@ -443,11 +420,7 @@ object Similarity {
       .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
   }
 
-  /** Query entry (rows-only + recall assertion): the pruned IVF path —
-    * nprobe=8 of 16 Lloyd-refined cells searches ~half the corpus; on
-    * Gaussian test embeddings the measured recall floor is enforced
-    * in-query. */
-  /** Query entry (oracle-exact AND recall-gated): the pruned IVF path,
+  /** Query entry (oracle-exact): the pruned IVF path,
     * nprobe=8 of 16 cells. The [[knuthCentroids]] quantizer makes the whole
     * pruned search deterministic across engines, so a DuckDB CTE chain
     * replicates quantizer selection, cell assignment (dot x invNorm, tie ->
@@ -456,17 +429,17 @@ object Similarity {
     * deliberately absent here: re-centered means are `avg` reductions whose
     * summation order differs across engines, so Lloyd cells are not
     * ulp-replicable (the Lloyd path keeps its exactness proof via the
-    * exhaustive [[annIvfRefined]] entry instead). The recall gate vs brute
-    * force stays as the semantic check (measured 0.70 sampled quantizer). */
+    * exhaustive [[annIvfRefined]] entry instead). `RecallFloorsSpec` holds
+    * its recall against [[bruteForceTopK]] at 0.5 (measured 0.76 / 0.74 /
+    * 0.80 at sf0.001 / sf0.01 / sf0.1). */
   def annIvfProbe(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val approx = ivfTopK(emb, probes, 10, numCentroids = 16, nprobe = 8,
+    ivfTopK(emb, probes, 10, numCentroids = 16, nprobe = 8,
       lloydIters = 0, quantizer = knuthCentroids)
-    assertRecall(approx, bruteForceTopK(emb, probes, 10), minRecall = 0.5, what = "ann_ivf_probe")
-    approx.orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
+      .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
   }
 
   /** Query entry (oracle-checked): exhaustive search over LLOYD-REFINED
@@ -476,8 +449,8 @@ object Similarity {
     * corpus differently, and with nprobe = numCentroids the search is only
     * brute-force-equal if the refined cells still PARTITION the corpus —
     * which is exactly what the shared ann_topk oracle checks. Complements
-    * [[annIvfProbe]], which exercises refined-quantizer RECALL but is
-    * rows-only. */
+    * [[annIvfProbe]], the pruned search whose RECALL `RecallFloorsSpec`
+    * holds. */
   def annIvfRefined(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
@@ -1088,15 +1061,15 @@ object Similarity {
       .orderBy(col("src_id"), col("sim").desc, col("neighbor_id"))
   }
 
-  /** Query entry (oracle-exact AND recall-gated): the pruned graph --
+  /** Query entry (oracle-exact): the pruned graph --
     * nprobe=6 of 16 cells searches ~3/8 of the corpus per vector (was 4/16
     * under the Lloyd-refined quantizer; without refinement the sampled
     * cells are lumpier, and nprobe=4 measured recall 0.494 at sf0.01).
     * Same engine-portable determinism as [[annIvfProbe]]
     * ([[knuthCentroids]] quantizer, no Lloyd — see there for why Lloyd
     * cells can't be ulp-replicated), so the DuckDB oracle reproduces the
-    * pruned graph edge-for-edge. Gate: edge recall vs the exact graph
-    * (floor 0.5 on the Gaussian embeddings — no planted near-dups, the
+    * pruned graph edge-for-edge. `RecallFloorsSpec` holds its edge recall
+    * against the exhaustive-nprobe graph at 0.5 (Gaussian embeddings — no planted near-dups, the
     * hardest regime for IVF pruning; real embedding corpora cluster far
     * better, this entry pins the machinery and measures honestly). At the
     * synthesized sf1 decade (20k vectors, K adaptive to 160) a FIXED
@@ -1129,14 +1102,9 @@ object Similarity {
     // constant-cost (recall decays) and constant-fraction (quadratic —
     // the trap the adaptive K fixed).
     val nprobe = adaptiveNprobe(numCentroids)
-    val approx = knnGraph(emb, k = 5, numCentroids = numCentroids, nprobe = nprobe,
+    knnGraph(emb, k = 5, numCentroids = numCentroids, nprobe = nprobe,
       lloydIters = 0, quantizer = knuthCentroids, knownLiveCount = nLive)
-    assertRecall(
-      approx.withColumnRenamed("src_id", "query_id"),
-      knnGraph(emb, k = 5, numCentroids = numCentroids, nprobe = numCentroids)
-        .withColumnRenamed("src_id", "query_id"),
-      minRecall = 0.5, what = "knn_graph_probe")
-    approx.orderBy(col("src_id"), col("sim").desc, col("neighbor_id"))
+      .orderBy(col("src_id"), col("sim").desc, col("neighbor_id"))
   }
 
   // ---- hard-negative mining ----
@@ -1176,7 +1144,7 @@ object Similarity {
       .orderBy(col("anchor_id"), col("sim").desc, col("negative_id"))
   }
 
-  /** Query entry (oracle-exact AND recall-gated): the PRUNED hard-negative
+  /** Query entry (oracle-exact): the PRUNED hard-negative
     * miner — the scalable sibling of [[hardNegativesQuery]], in exactly the
     * [[knnGraphQuery]]/[[knnGraphProbe]] relationship (ADVICE r17: the
     * exhaustive entry is quadratic BY ORACLE CONTRACT, so it sits out the
@@ -1186,9 +1154,10 @@ object Similarity {
     * nprobe·N/K, linear corpus-wide), the √-law [[adaptiveNprobe]] buys
     * recall back as K grows, and the engine-portable [[knuthCentroids]]
     * quantizer (no Lloyd) lets the DuckDB oracle replay the pruned,
-    * label-filtered result edge-for-edge. Gate: different-label edge
-    * recall vs the exhaustive filtered graph, floor 0.5 on the Gaussian
-    * embeddings (no planted clusters — IVF pruning's hardest regime). */
+    * label-filtered result edge-for-edge. `RecallFloorsSpec` holds its
+    * different-label edge recall against the exhaustive filtered graph at
+    * 0.5 on the Gaussian embeddings (no planted clusters — IVF pruning's
+    * hardest regime). */
   def hardNegativesProbe(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
@@ -1196,16 +1165,9 @@ object Similarity {
     val nLive = emb.filter(col("emb").isNotNull).count()
     val numCentroids = adaptiveCentroids(nLive)
     val nprobe = adaptiveNprobe(numCentroids)
-    val approx = hardNegatives(emb, k = 5, numCentroids = numCentroids, nprobe = nprobe,
+    hardNegatives(emb, k = 5, numCentroids = numCentroids, nprobe = nprobe,
       lloydIters = 0, quantizer = knuthCentroids, knownLiveCount = nLive)
-    assertRecall(
-      approx.withColumnRenamed("anchor_id", "query_id")
-        .withColumnRenamed("negative_id", "neighbor_id"),
-      hardNegatives(emb, k = 5, numCentroids = numCentroids, nprobe = numCentroids)
-        .withColumnRenamed("anchor_id", "query_id")
-        .withColumnRenamed("negative_id", "neighbor_id"),
-      minRecall = 0.5, what = "hard_negatives_probe")
-    approx.orderBy(col("anchor_id"), col("sim").desc, col("negative_id"))
+      .orderBy(col("anchor_id"), col("sim").desc, col("negative_id"))
   }
 
   // ---- persisted IVF index ----
@@ -1520,7 +1482,7 @@ object Similarity {
   def adaptivePqRerank(n: Long, k: Int = 10): Int =
     math.max(2 * k, math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  /** Query entry (oracle-exact AND recall-gated): PQ search with exact
+  /** Query entry (oracle-exact): PQ search with exact
     * rerank (the production ADC+R shape) — encode to codes, reconstruct,
     * rank the corpus by asymmetric reconstructed cosine, keep the
     * [[adaptivePqRerank]] √N shortlist, then rerank the shortlist by
@@ -1533,7 +1495,9 @@ object Similarity {
     * curve is in BASELINE.md. At 100 TB the compressed codes are what
     * fits in memory, the PQ scan is the linear pass, and the rerank reads
     * O(√N) full vectors per query — the pruning is real, not simulated.
-    * The DuckDB oracle replays the whole lossy pipeline (same
+    * `RecallFloorsSpec` holds its recall against [[bruteForceTopK]] at 0.6
+    * (measured 0.94 / 1.00 / 0.88 at sf0.001 / sf0.01 / sf0.1 with the
+    * trained codebooks). The DuckDB oracle replays the whole lossy pipeline (same
     * count(*)-derived shape and depth), and THAT replay (hash-exact) is
     * the correctness proof. */
   def annPq(spark: SparkSession, dir: String): DataFrame =
@@ -1546,7 +1510,7 @@ object Similarity {
     * selects nothing and the band correctness row is vacuous (0 = 0 rows).
     * ORDER BY vec_id LIMIT 5 is a total order, so the DuckDB oracle
     * computes the identical set on any slice of the corpus. */
-  private def pqProbes(emb: DataFrame): DataFrame =
+  private[graft] def pqProbes(emb: DataFrame): DataFrame =
     emb.filter(col("emb").isNotNull).orderBy(col("vec_id")).limit(5)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
 
@@ -1611,8 +1575,7 @@ object Similarity {
       donors = Some(donors.take(kc)))
     val codes = live
       .select(col("vec_id"), pqEncode(col("emb"), cbs).as("codes"))
-    pqSearchCodes(emb, codes, cbs, nLive, what = "ann_pq", minRecall = 0.6,
-      knownProbes = Some(probes))
+    pqSearchCodes(emb, codes, cbs, nLive, knownProbes = Some(probes))
   }
 
   private def emptyPqResult(emb: DataFrame): DataFrame =
@@ -1650,16 +1613,14 @@ object Similarity {
     * The shortlist keeps the [[adaptivePqRerank]] √N depth per query
     * (row_number → WindowGroupLimit pre-prunes per input partition, so the
     * exchange carries ≤ L rows per query per partition), the rerank reads
-    * ONLY the shortlisted full vectors by EXACT cosine, and the published
-    * top-10 sits behind the per-entry recall gate (`what`/`minRecall` —
-    * round-20 advice: each caller reports under its own key).
+    * ONLY the shortlisted full vectors by EXACT cosine. `RecallFloorsSpec`
+    * holds each caller's top-10 recall against [[bruteForceTopK]].
     *
     * `probeCells`: the IVFPQ restriction — when set, each probe scores
     * ONLY code rows whose `centroid_id` is in its probed cell list (the
     * caller has already partition-pruned the scan to the union). */
   private def pqSearchCodes(emb: DataFrame, codes: DataFrame,
       cbs: Array[Array[Array[Double]]], nLive: Long,
-      what: String, minRecall: Double,
       probeCells: Option[Map[Long, Seq[Int]]] = None,
       knownProbes: Option[Array[(Long, Array[Double])]] = None): DataFrame = {
     val rerankL = adaptivePqRerank(nLive)
@@ -1722,17 +1683,10 @@ object Similarity {
       .withColumn("sim", round(cosine(col("emb"), col("q_emb")), 4))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    val approx = reranked.withColumn("rn", row_number().over(w))
+    reranked.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 10)
       .select(col("query_id"), col("neighbor_id"), col("sim"))
-    // ann_pq floor calibrated against the WEAKEST measured operating point
-    // across SFs with trained 16×256 codebooks (0.88 at sf0.1 over 5 probes
-    // × 10 = 50 checked pairs): 0.6 sits >3σ under it (σ ≈ 0.046 at 50
-    // pairs) while still failing loudly on any regression to the
-    // donor-codebook curve (which bottomed at 0.36); the cell-pruned
-    // ann_ivfpq_indexed caller passes its own measured floor
-    assertRecall(approx, bruteForceTopK(emb, probes, 10), minRecall, what)
-    approx.orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
+      .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
   }
 
   /**
@@ -1825,8 +1779,7 @@ object Similarity {
     val path = indexPathFor("graft-pq", dir)
     buildIndexOnce(path)(writePqIndex(emb, path))
     val (codes, cbs) = readPqIndex(spark, path)
-    pqSearchCodes(emb, codes.select(col("vec_id"), col("codes")), cbs, nLive,
-      what = "ann_pq_indexed", minRecall = 0.6)
+    pqSearchCodes(emb, codes.select(col("vec_id"), col("codes")), cbs, nLive)
   }
 
   /**
@@ -1899,7 +1852,7 @@ object Similarity {
    * fractions of the corpus, vs. the flat PQ scan's N code scores.
    */
   def ivfPqTopKIndexed(spark: SparkSession, path: String, emb: DataFrame,
-      nLive: Long, nprobe: Int, what: String, minRecall: Double): DataFrame = {
+      nLive: Long, nprobe: Int): DataFrame = {
     val (codes, centroids, cbs) = readIvfPqIndex(spark, path)
     val probeN = math.max(1, math.min(nprobe, centroids.length))
     // ONE probe collect: cells assign driver-side through the same
@@ -1920,19 +1873,20 @@ object Similarity {
     }
     val cells = byProbe.values.flatten.toSeq.distinct
     val pruned = codes.filter(col("centroid_id").isInCollection(cells))
-    pqSearchCodes(emb, pruned, cbs, nLive, what, minRecall,
+    pqSearchCodes(emb, pruned, cbs, nLive,
       probeCells = Some(byProbe), knownProbes = Some(probeRows))
   }
 
-  /** Query entry (oracle-exact AND recall-gated): the IVFPQ composition —
+  /** Query entry (oracle-exact): the IVFPQ composition —
     * build the cell-partitioned code index once per (JVM, dir) with the
     * size-adaptive cell count ([[adaptiveCentroids]], constant ~125-row
     * cells) and probe depth ([[adaptiveNprobe]], the √-law), then search
     * only the probed cells' codes. Every stage is a total order (knuth
     * coarse quantizer, fixed-point-trained codebooks, subspace-ordered LUT
     * sums), so the DuckDB oracle replays the ENTIRE pruned lossy pipeline
-    * and the result is hash-exact despite being doubly approximate. The
-    * recall gate vs brute force pins the semantics (measured recall@10
+    * and the result is hash-exact despite being doubly approximate.
+    * `RecallFloorsSpec` holds its recall against [[bruteForceTopK]] at 0.5
+    * (measured recall@10
     * 0.60 / 0.58 / 0.68 at sf0.001 / sf0.01 / sf0.1, vs the flat ann_pq
     * scan's 0.94 / 1.00 / 0.88 — probing 6 of 16 cells at every
     * correctness SF (24 of 160 at sf1, 135 of 1600 at sf10, where the
@@ -1949,8 +1903,7 @@ object Similarity {
     val nprobe = adaptiveNprobe(numCentroids)
     val path = indexPathFor("graft-ivfpq", dir)
     buildIndexOnce(path)(writeIvfPqIndex(emb, path, numCentroids))
-    ivfPqTopKIndexed(spark, path, emb, nLive, nprobe,
-      what = "ann_ivfpq_indexed", minRecall = 0.5)
+    ivfPqTopKIndexed(spark, path, emb, nLive, nprobe)
   }
 
   /** Diversity-balanced subsample (the cluster-balanced selection step of
@@ -2273,8 +2226,10 @@ object Similarity {
     embeddingNearDupsExact(emb, threshold = 0.3).orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** Query entry (rows-only + recall assertion): LSH near-pairs at cosine >=
-    * 0.3. The synthetic embeddings are Gaussian (top pair ≈ 0.51), so 0.3 is
+  /** Query entry (oracle-exact): LSH near-pairs at cosine >= 0.3;
+    * `RecallFloorsSpec` holds its pair recall against
+    * [[embeddingNearDupsExact]] at 0.75 (measured 0.93 at sf0.01, 0.91 at
+    * sf0.1). The synthetic embeddings are Gaussian (top pair ≈ 0.51), so 0.3 is
     * a deliberately weak threshold that exercises the verify path on a
     * non-empty result; the angle (72°) is the regime where hyperplane LSH
     * prunes worst, so few bits + many tables and a measured-recall floor. At
@@ -2309,16 +2264,11 @@ object Similarity {
     // knownLiveCount threads the bits census through (round 21, the
     // semanticDedup pattern): the fused-verify ceiling gate otherwise pays
     // a second limit-count job over the same live frame
-    val approx = embeddingNearDups(emb, threshold = 0.3,
+    embeddingNearDups(emb, threshold = 0.3,
       numTables = adaptiveLshTables(bits, 4),
       bitsPerTable = bits, probeFlips = adaptiveProbeFlips(bits, 4),
       knownLiveCount = nLive)
-    // measured 0.93 (sf0.01) / 0.91 (sf0.1); the exact baseline's eager
-    // census/collect must not run at all under bench — it is gate-only
-    if (Tables.eagerAssertionsEnabled)
-      assertPairRecall(approx, embeddingNearDupsExact(emb, threshold = 0.3),
-        minRecall = 0.75, what = "embed_neardup")
-    approx.orderBy(col("vec_a"), col("vec_b"))
+      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /**
@@ -2381,11 +2331,12 @@ object Similarity {
       maxIter)
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("keep"))
 
-  /** Query entry (oracle-exact + eager agreement gate): the DEFAULT
+  /** Query entry (oracle-exact): the DEFAULT
     * LSH-paired semantic dedup at cosine >= 0.4. The oracle replays the
     * hyperplane LCG + bucket join + reach tail in DuckDB, so the entry is
-    * hash-exact despite being approximate; the eager gate additionally
-    * measures KEEP-DECISION agreement against [[semanticDedupExact]] over
+    * hash-exact despite being approximate; `RecallFloorsSpec` holds its
+    * KEEP-DECISION agreement at 0.85 (measured 0.95 at sf0.01, 0.97 at
+    * sf0.1) against [[semanticDedupExact]] over
     * every doc the exact pair graph touches — the decision a user consumes,
     * stricter than pair recall in the failure direction that matters (a
     * missed bridge edge splits a cluster and flips its new minimum to
@@ -2397,13 +2348,7 @@ object Similarity {
   def semanticDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    val approx = semanticDedup(emb, threshold = 0.4)
-    // measured 0.95 (sf0.01) / 0.97 (sf0.1); the exact baseline's eager
-    // census/collect is gate-only — never constructed under bench
-    if (Tables.eagerAssertionsEnabled)
-      assertKeepAgreement(approx, semanticDedupExact(emb, threshold = 0.4),
-        minAgree = 0.85, what = "semantic_dedup")
-    approx.orderBy(col("vec_id"))
+    semanticDedup(emb, threshold = 0.4).orderBy(col("vec_id"))
   }
 
   /** Query entry (oracle-checked): the exact-pair-graph baseline, checked
@@ -2413,40 +2358,6 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
     semanticDedupExact(emb, threshold = 0.4).orderBy(col("vec_id"))
-  }
-
-  /** Keep-decision sibling of [[assertRecall]]: over the ids in `exact`
-    * (ground truth — every doc in any true pair), the approx keep verdict
-    * (docs missing from the approx pair graph are implicitly kept) must
-    * agree on at least `minAgree` of them. */
-  private def assertKeepAgreement(
-      approx: DataFrame, exact: DataFrame, minAgree: Double, what: String): Unit = {
-    if (!Tables.eagerAssertionsEnabled) return
-    val e = exact.select(col("vec_id"), col("keep").as("keep_exact")).cache()
-    val total = e.count()
-    val agreed = e
-      .join(approx.select(col("vec_id"), col("keep").as("keep_approx")),
-        Seq("vec_id"), "left")
-      .filter(coalesce(col("keep_approx"), lit(true)) === col("keep_exact"))
-      .count()
-    e.unpersist()
-    val agree = if (total == 0) 1.0 else agreed.toDouble / total
-    require(agree >= minAgree,
-      f"$what keep agreement $agree%.3f below floor $minAgree%.2f ($agreed/$total)")
-  }
-
-  /** Pair-set sibling of [[assertRecall]] on (vec_a, vec_b) keys. */
-  private def assertPairRecall(
-      approx: DataFrame, exact: DataFrame, minRecall: Double, what: String): Unit = {
-    if (!Tables.eagerAssertionsEnabled) return
-    val e = exact.select("vec_a", "vec_b").cache()
-    val total = e.count()
-    val caught = e.join(approx.select("vec_a", "vec_b"),
-      Seq("vec_a", "vec_b"), "left_semi").count()
-    e.unpersist()
-    val recall = if (total == 0) 1.0 else caught.toDouble / total
-    require(recall >= minRecall,
-      f"$what recall $recall%.3f below floor $minRecall%.2f ($caught/$total)")
   }
 
   // ---- scalar quantization ----
@@ -2507,24 +2418,19 @@ object Similarity {
         q.cast("double") / 255.0 * element_at(spanLit, i + 1))
   }
 
-  /** Query entry (rows-only + eager recall gate): brute-force top-k over
-    * the DEQUANTIZED corpus — the search a quantized index actually runs —
-    * gated on recall vs full-precision exact top-k, so the compression
-    * loss is measured, not assumed. Measured 1.00 (sf0.01) / 0.92 (sf0.1)
-    * on the Gaussian corpus; floor 0.85. */
+  /** Query entry (oracle-exact): brute-force top-k over the DEQUANTIZED
+    * corpus — the search a quantized index actually runs. `RecallFloorsSpec`
+    * holds its recall against full-precision [[bruteForceTopK]] at 0.85, so
+    * the compression loss is measured, not assumed (measured 1.00 at
+    * sf0.01, 0.92 at sf0.1 on the Gaussian corpus). */
   def annQuantized(spark: SparkSession, dir: String): DataFrame = {
     val embs = Tables.embeddings(spark, dir)
     val (q, mins, spans) = quantizeEmbeddingsWithStats(embs)
     val deq = q.select(col("vec_id"), dequantize(col("qemb"), mins, spans).as("emb"))
     val probes = deq.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val approx = bruteForceTopK(deq, probes, 10)
-    val exactEmb = embs.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    val exactProbes = exactEmb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    assertRecall(approx, bruteForceTopK(exactEmb, exactProbes, 10),
-      minRecall = 0.85, what = "ann_quantized")
-    approx.orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
+    bruteForceTopK(deq, probes, 10)
+      .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
   }
 
   /** Query entry: the quantized vectors, comma-serialized so the scalar

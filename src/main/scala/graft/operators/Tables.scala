@@ -62,11 +62,4 @@ object Tables {
       case c => col(c)
     }.toIndexedSeq: _*)
   }
-
-  /** The approximate-operator entries carry eager in-query recall
-    * assertions (extra Spark jobs) for the correctness gate. The bench main
-    * disables them via this flag so timings measure the operator, not the
-    * harness check. */
-  private[graft] def eagerAssertionsEnabled: Boolean =
-    !sys.props.get("graft.bench").contains("1")
 }

@@ -17,7 +17,6 @@ object RecallProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.props("graft.bench") = "1" // entries' own eager gates off; we measure here
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
@@ -249,7 +248,7 @@ object RecallProbe {
         println(f"[probe] knn_graph_probe nprobe=$np recall=$recall%.3f secs=$secs%.1f" +
           (if (np == shipped) " SHIPPED" else ""))
         // the calibration assertion (round 17): at the SHIPPED escalation
-        // the measured edge recall must clear the 0.50 gate floor with
+        // the measured edge recall must clear RecallFloorsSpec's 0.50 floor with
         // >= 0.05 margin at EVERY measured scale point — the law stays a
         // fitted curve (measured 0.642/0.656/0.562 at K=16/48/160 under
         // the pure sqrt-law; 0.607 at K=1600 under the (K/160)^(1/4)

@@ -11,18 +11,6 @@ package graft
  */
 class ScaleCheckSpec extends SparkSpec {
 
-  /** `body` with the eager recall gates off, as [[ScaleCheck.main]] runs:
-    * the counts are the operators' jobs alone. */
-  private def ungated[T](body: => T): T = {
-    val prev = sys.props.get("graft.bench")
-    sys.props("graft.bench") = "1"
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.bench") = v
-      case None => sys.props.remove("graft.bench")
-    }
-  }
-
   test("a flat data step is a harness-usage error, not a vacuous pass") {
     val e = intercept[IllegalArgumentException] {
       ScaleCheck.check(spark, Seq("dedup_simhash" -> "documents"),
@@ -32,9 +20,9 @@ class ScaleCheckSpec extends SparkSpec {
   }
 
   test("data-bound entries grow at most SlackFactor x the data ratio across SFs") {
-    val results = ungated(ScaleCheck.check(
+    val results = ScaleCheck.check(
       spark, Seq("dedup_minhash" -> "documents", "dedup_simhash" -> "documents"),
-      small = "/root/testdata/sf0.01", big = "/root/testdata/sf0.1"))
+      small = "/root/testdata/sf0.01", big = "/root/testdata/sf0.1")
     results.foreach { r =>
       info(f"${r.key}: shuffle ${r.small.shufW} -> ${r.big.shufW} bytes " +
         f"(${r.ratio}%.2fx, bound ${r.bound}%.2fx)")
@@ -47,7 +35,7 @@ class ScaleCheckSpec extends SparkSpec {
   test("the same key run twice at one SF writes identical shuffle bytes") {
     // the count check rests on this: a ratio of two counts that repeat
     // exactly needs no repeated samples and no noise allowance
-    def shufW() = ungated(ScaleCheck.phases(spark, "dedup_simhash", "/root/testdata/sf0.01"))
+    def shufW() = ScaleCheck.phases(spark, "dedup_simhash", "/root/testdata/sf0.01")
       .map { case (phase, c) => phase -> c.shufW }
     val first = shufW()
     assert(first.map(_._2).sum > 0)

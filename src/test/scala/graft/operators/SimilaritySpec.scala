@@ -238,8 +238,8 @@ class SimilaritySpec extends SparkSpec {
       assert(cl <= id && keep === (cl === id))
       if (!keep) assert(!exact(id), s"doc $id dropped by LSH but kept by exact")
     }
-    // the entry's eager gate already enforces the 0.85 floor; recompute the
-    // agreement here so the measured value is visible in test output
+    // RecallFloorsSpec holds the 0.85 floor; recompute the agreement here
+    // so the measured value is visible in this suite's output too
     val agreed = exact.count { case (id, k) =>
       approx.get(id).map(_._2).getOrElse(true) === k
     }
@@ -575,8 +575,7 @@ class SimilaritySpec extends SparkSpec {
     val nLive = embeddings.filter(col("emb").isNotNull).count()
     // pruned: nprobe=2 must reach the scan as a PARTITION filter — only the
     // probed cells' code files are listed, the rest never open
-    val pruned = Similarity.ivfPqTopKIndexed(spark, path, embeddings, nLive,
-      nprobe = 2, what = "ivfpq_suite", minRecall = 0.0)
+    val pruned = Similarity.ivfPqTopKIndexed(spark, path, embeddings, nLive, nprobe = 2)
     val planStr = pruned.queryExecution.executedPlan.toString
     val inList = "PartitionFilters: \\[centroid_id#\\d+ IN \\(([0-9,]+)\\)".r
       .findFirstMatchIn(planStr).map(_.group(1).split(",").length)
@@ -586,8 +585,7 @@ class SimilaritySpec extends SparkSpec {
     // with every cell probed the restriction is vacuous, and because the
     // coarse partitioning rides the SAME trained codebooks, the search must
     // equal the flat inline-trained ann_pq answer exactly
-    val exhaustive = Similarity.ivfPqTopKIndexed(spark, path, embeddings, nLive,
-        nprobe = 8, what = "ivfpq_suite", minRecall = 0.0)
+    val exhaustive = Similarity.ivfPqTopKIndexed(spark, path, embeddings, nLive, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val flat = Similarity.annPq(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -643,8 +641,7 @@ class SimilaritySpec extends SparkSpec {
       "m" -> cbs.length.toString, "k" -> cbs.head.length.toString, "iters" -> "1",
       "codebooks" -> cbs.map(graft.util.IndexSidecar.encodeMatrix).mkString("|")))
     val nLive = embeddings.filter(col("emb").isNotNull).count()
-    def ans(p: String) = Similarity.ivfPqTopKIndexed(spark, p, embeddings, nLive,
-        nprobe = 3, what = "ivfpq_suite", minRecall = 0.0)
+    def ans(p: String) = Similarity.ivfPqTopKIndexed(spark, p, embeddings, nLive, nprobe = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(ans(grown) === ans(oneShot))
     assert(ans(grown).nonEmpty)
