@@ -24,8 +24,12 @@ import graft.util.FastPaths
 class RecallFloorsSpec extends SparkSpec {
   import RecallFloorsSpec._
 
-  for (row <- Floors; dir <- Dirs; forced <- Seq(false, true)) {
-    val sf = dir.split('/').last
+  /** The three correctness SFs, beside the suites' own sf0.001 dir. */
+  private val dirs = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(sf => new java.io.File(new java.io.File(sfDir).getParentFile, sf).getPath)
+
+  for (row <- Floors; dir <- dirs; forced <- Seq(false, true)) {
+    val sf = new java.io.File(dir).getName
     val plans = if (forced) "forced-distributed" else "default"
     test(f"${row.key}: ${row.measure.name} >= ${row.floor}%.2f at $sf, $plans plans") {
       val (hit, total) = FastPaths.forcedIf(forced) {
@@ -40,9 +44,6 @@ class RecallFloorsSpec extends SparkSpec {
 }
 
 object RecallFloorsSpec {
-  val Dirs: Seq[String] =
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-
   /** (hits, total) of an approximate result against its exact baseline. */
   sealed trait Measure {
     def name: String

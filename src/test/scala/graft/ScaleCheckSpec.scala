@@ -20,9 +20,9 @@ class ScaleCheckSpec extends SparkSpec {
   }
 
   test("data-bound entries grow at most SlackFactor x the data ratio across SFs") {
-    val results = ScaleCheck.check(
+    val results = (ScaleCheck.check(
       spark, Seq("dedup_minhash" -> "documents", "dedup_simhash" -> "documents"),
-      small = "/root/testdata/sf0.01", big = "/root/testdata/sf0.1")
+      small = "/root/testdata/sf0.01", big = "/root/testdata/sf0.1"))
     results.foreach { r =>
       info(f"${r.key}: shuffle ${r.small.shufW} -> ${r.big.shufW} bytes " +
         f"(${r.ratio}%.2fx, bound ${r.bound}%.2fx)")
@@ -35,7 +35,8 @@ class ScaleCheckSpec extends SparkSpec {
   test("the same key run twice at one SF writes identical shuffle bytes") {
     // the count check rests on this: a ratio of two counts that repeat
     // exactly needs no repeated samples and no noise allowance
-    def shufW() = ScaleCheck.phases(spark, "dedup_simhash", "/root/testdata/sf0.01")
+    val dir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    def shufW() = ScaleCheck.phases(spark, "dedup_simhash", dir)
       .map { case (phase, c) => phase -> c.shufW }
     val first = shufW()
     assert(first.map(_._2).sum > 0)
